@@ -63,31 +63,68 @@ def _with_norm(emb: DataFrame) -> DataFrame:
     return emb.withColumn("_norm", F.sqrt(_dot("embedding", "embedding")))
 
 
+def _query_side(frame: DataFrame, *extra: F.Column, prefix: str = "q") -> DataFrame:
+    """(query_id, <prefix>_emb, <prefix>_norm, *extra) from a
+    (vec_id, embedding, _norm) frame — the query side every cosine
+    route ranks its candidates against."""
+    return frame.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias(f"{prefix}_emb"),
+        F.col("_norm").alias(f"{prefix}_norm"),
+        *extra,
+    )
+
+
+def _candidate_side(frame: DataFrame) -> DataFrame:
+    """(vec_id, c_emb, c_norm): the exact vectors a re-rank joins back
+    onto its candidate ids."""
+    return frame.select(
+        "vec_id",
+        F.col("embedding").alias("c_emb"),
+        F.col("_norm").alias("c_norm"),
+    )
+
+
+def _cosine_rank(
+    pairs: DataFrame,
+    k: int,
+    c_emb: str = "embedding",
+    c_norm: str = "_norm",
+    prefix: str = "q",
+) -> DataFrame:
+    """The final stage of every cosine route: (query_id, vec_id,
+    cosine, rank) for each query's ``k`` best candidates. ``pairs``
+    carries the query side's ``<prefix>_emb``/``<prefix>_norm`` and the
+    candidate side's ``c_emb``/``c_norm``. The cosine is quantized to
+    6 dp before ranking and ties go to the lowest vec_id (the module
+    docstring's determinism contract)."""
+    cos = F.round(
+        _dot(f"{prefix}_emb", c_emb)
+        / (F.col(f"{prefix}_norm") * F.col(c_norm)),
+        6,
+    )
+    return (
+        pairs.select("query_id", "vec_id", cos.alias("cosine"))
+        .withColumn(
+            "rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("cosine").desc(), F.col("vec_id")
+                )
+            ),
+        )
+        .filter(F.col("rank") <= k)
+    )
+
+
 def cosine_topk(emb: DataFrame, k: int = ANN_TOPK, query_mod: int = ANN_QUERY_MOD) -> DataFrame:
     """Brute-force cosine top-k of every query (vec_id % query_mod == 0)
     against all other vectors. Queries are the broadcast side."""
     base = _with_norm(emb)
-    q = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
+    q = _query_side(base.filter(F.col("vec_id") % query_mod == 0))
     c = base.select("vec_id", "embedding", "_norm")
     joined = c.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(
-        _dot("q_emb", "embedding") / (F.col("q_norm") * F.col("_norm")), 6
-    )
-    ranked = joined.select(
-        "query_id", "vec_id", cos.alias("cosine")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("vec_id")
-            )
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)
+    return _cosine_rank(joined, k)
 
 
 def _resolve_planes(emb: DataFrame, n_planes: int | str | None) -> int:
@@ -501,6 +538,31 @@ def _ivf_fit(
     return out, centroids
 
 
+def _probe(q: DataFrame, cents: DataFrame, nprobe: int, *keep: str) -> DataFrame:
+    """(query_id, *keep, centroid_id) for each query's ``nprobe``
+    nearest coarse centroids — the first stage of every IVF route.
+    ``q`` is a :func:`_query_side` frame; it is ranked against the
+    broadcast centroid table by cosine quantized to 9 dp, ties to the
+    lowest centroid_id (the fit's assignment contract)."""
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .withColumn(
+            "_cos",
+            F.round(_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9),
+        )
+        .withColumn(
+            "_rk",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("_cos").desc(), F.col("centroid_id")
+                )
+            ),
+        )
+        .filter(F.col("_rk") <= nprobe)
+        .select("query_id", *keep, "centroid_id")
+    )
+
+
 def ivf_topk(
     emb: DataFrame,
     k: int = ANN_LSH_TOPK,
@@ -526,46 +588,13 @@ def ivf_topk(
         )
     nprobe = _resolve_nprobe(nprobe, cents)
     members = members.cache()
-    q = members.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
+    q = _query_side(members.filter(F.col("vec_id") % query_mod == 0))
+    cand = (
+        _probe(q, cents, nprobe, "q_emb", "q_norm")
+        .join(members, "centroid_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
     )
-    # nprobe probing: rank the quantizer's own centroids against each
-    # query vector, take the top nprobe clusters.
-    qprobe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_cos",
-            F.round(_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select("query_id", "q_emb", "q_norm", "centroid_id")
-    )
-    cand = qprobe.join(members, "centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    cos = F.round(
-        _dot("q_emb", "embedding") / (F.col("q_norm") * F.col("_norm")), 6
-    )
-    ranked = cand.select("query_id", "vec_id", cos.alias("cosine")).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("vec_id")
-            )
-        ),
-    )
-    out = ranked.filter(F.col("rank") <= k)
-    return out
+    return _cosine_rank(cand, k)
 
 
 def embedding_neardup(
@@ -692,10 +721,8 @@ def lsh_topk(
     The oracle mirrors the deterministic single-probe default."""
     p = _resolve_planes(emb, n_planes)
     base = _with_norm(emb).withColumn("bucket", lsh_bucket_col(p))
-    q = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
+    q = _query_side(
+        base.filter(F.col("vec_id") % query_mod == 0),
         F.col("bucket").alias("q_bucket"),
     )
     if multi_probe:
@@ -722,20 +749,7 @@ def lsh_topk(
         F.broadcast(q),
         (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("query_id")),
     )
-    cos = F.round(
-        _dot("q_emb", "embedding") / (F.col("q_norm") * F.col("_norm")), 6
-    )
-    ranked = joined.select(
-        "query_id", "vec_id", cos.alias("cosine")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("vec_id")
-            )
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)
+    return _cosine_rank(joined, k)
 
 
 def _floor_q(col: F.Column, dp: int) -> F.Column:
@@ -1241,32 +1255,10 @@ def pq_rerank_topk(
         iters=iters,
     ).select("query_id", "vec_id")
     base = _with_norm(emb)
-    cand = base.select(
-        F.col("vec_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("c_norm"),
+    joined = sl.join(_candidate_side(base), "vec_id").join(
+        _query_side(base), "query_id"
     )
-    q = base.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
-    joined = sl.join(cand, "vec_id").join(q, "query_id")
-    cos = F.round(
-        _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    return (
-        joined.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_rank(joined, k, "c_emb", "c_norm")
 
 
 def _check_dtable_bound(
@@ -1470,6 +1462,58 @@ def recommend_quantizer(
     }
 
 
+def _corpus_shape(
+    emb: DataFrame, n_clusters: int | str | None
+) -> tuple[int, "int | None", "int | None"]:
+    """(IVF list count, corpus size, embedding dim) for an IVF×PQ fit,
+    from at most one count and one O(1) ``first()``: the auto-k
+    resolver and ``_pq_fit``'s route gate share the count, and the dim
+    probe is shared with ``_pq_fit``'s divisibility check (optimization
+    round 14, VERDICT r13 ask #2 — fewer Spark actions). Size and dim
+    are None on an empty corpus (size is 0 in auto mode)."""
+    if n_clusters == "auto":
+        n_vectors = emb.count()
+        k_ivf = kmeans_clusters_for(n_vectors)
+    else:
+        k_ivf = _resolve_clusters(emb, n_clusters)
+        n_vectors = None
+    row = emb.select(F.size("embedding").alias("d")).first()
+    dim = None if row is None or row["d"] is None else int(row["d"])
+    if n_vectors is None and dim is not None:
+        n_vectors = emb.count()
+    return k_ivf, n_vectors, dim
+
+
+def _fit_ivf_pq(
+    emb: DataFrame,
+    k_ivf: int,
+    n_vectors: "int | None",
+    dim: "int | None",
+    ivf_iters: int,
+    m: int,
+    n_centroids: int,
+    pq_iters: int,
+    fit_sample_mod: int | None,
+) -> IvfPqIndex:
+    """Both quantizer fits of an IVF×PQ index, LAZY: members and codes
+    are returned unmaterialized. :func:`fit_ivf_pq_index` caches and
+    counts them; ``ivf_pq_topk(index=None)`` searches them directly, so
+    the inline search and the prefit one run the same fit. The two fits
+    are independent (coarse IVF over the full vectors, PQ codebooks over
+    the subvectors) and run one after the other."""
+    members, cents = _ivf_fit(
+        emb, k=k_ivf, iters=ivf_iters, fit_sample_mod=fit_sample_mod
+    )
+    final, pq_cents = _pq_fit(
+        emb, m=m, k=n_centroids, iters=pq_iters,
+        fit_sample_mod=fit_sample_mod, n_vectors=n_vectors, dim=dim,
+    )
+    codes = final.select(
+        "vec_id", "sub_id", F.col("centroid_id").alias("code_id")
+    )
+    return IvfPqIndex(members, cents, codes, pq_cents, m, n_centroids)
+
+
 def fit_ivf_pq_index(
     emb: DataFrame,
     n_clusters: int | str | None = None,
@@ -1506,21 +1550,13 @@ def fit_ivf_pq_index(
     fitted on BOTH recall and serving cost (the round-9 2M-vector
     measurement) before the Lloyd rounds spend anything. Default None
     keeps the fit warning-free (the oracle-pinned path)."""
-    members, cents = _ivf_fit(
-        emb, k=_resolve_clusters(emb, n_clusters), iters=ivf_iters,
-        fit_sample_mod=fit_sample_mod,
-    )
-    members = members.cache()
-    n_vectors = members.count()
-    # one O(1) dim probe, shared by the m-budget resolver AND _pq_fit's
-    # divisibility check (ADVICE r9: m='auto' used to run its own
-    # first() and died with a bare TypeError on an empty corpus):
-    row = emb.select(F.size("embedding").alias("d")).first()
-    if row is None or row["d"] is None:
+    k_ivf, n_vectors, dim = _corpus_shape(emb, n_clusters)
+    # ADVICE r9: m='auto' on an empty corpus used to die with a bare
+    # TypeError; every m now gets this named error before any fit runs
+    if dim is None:
         raise ValueError(
             "fit_ivf_pq_index: empty embedding corpus — nothing to fit"
         )
-    dim = int(row["d"])
     if memory_budget_bytes is not None:
         rec = recommend_quantizer(
             n_vectors, dim, memory_budget_bytes, n_centroids
@@ -1536,16 +1572,13 @@ def fit_ivf_pq_index(
                 stacklevel=2,
             )
     m = _resolve_pq_m(m, n_centroids, n_vectors, dim)
-    final, pq_cents = _pq_fit(
-        emb, m=m, k=n_centroids, iters=pq_iters,
-        fit_sample_mod=fit_sample_mod,
-        n_vectors=n_vectors, dim=dim,
+    index = _fit_ivf_pq(
+        emb, k_ivf, n_vectors, dim, ivf_iters, m, n_centroids, pq_iters,
+        fit_sample_mod,
     )
-    codes = final.select(
-        "vec_id", "sub_id", F.col("centroid_id").alias("code_id")
-    ).cache()
-    codes.count()
-    return IvfPqIndex(members, cents, codes, pq_cents, m, n_centroids)
+    index.members.cache().count()
+    index.codes.cache().count()
+    return index
 
 
 def refit_ivf_pq_index(
@@ -1995,134 +2028,53 @@ def ivf_pq_topk(
     ``index``: a prefit :class:`IvfPqIndex` — skips both Lloyd fits
     (the dominant per-call cost) so repeated query batches against one
     corpus pay only probe→ADC→re-rank; ``m``/``n_centroids`` are taken
-    from the index and the fit parameters are ignored.
+    from the index and the fit parameters are ignored. Without it the
+    search fits through the same helper :func:`fit_ivf_pq_index`
+    materializes, left lazy, so both modes return the same rows.
     """
-    if index is not None:
-        members, cents = index.members, index.cents
-        codes, pq_cents = index.codes, index.pq_cents
-        m, n_centroids = index.m, index.n_centroids
-        # bound check counts the RAW filtered scan (filter-pushdown
-        # cheap), not q — counting q would force the IVF assignment.
-        _check_dtable_bound(
-            emb.filter(F.col("vec_id") % query_mod == 0), m, n_centroids
+    if index is None:
+        index = _fit_ivf_pq(
+            emb, *_corpus_shape(emb, n_clusters), ivf_iters, m,
+            n_centroids, pq_iters, fit_sample_mod,
         )
-    else:
-        # Resolve the corpus-level scalars ONCE up front (optimization
-        # round 14, VERDICT r13 ask #2 — fewer driver actions): the
-        # auto-k resolver and _pq_fit's vectorized-route gate used to
-        # run two separate emb.count() actions; one count now feeds
-        # both, and the dim probe is shared with _pq_fit's
-        # divisibility check via its n_vectors/dim parameters.
-        if n_clusters == "auto":
-            n_vectors = emb.count()
-            k_ivf = kmeans_clusters_for(n_vectors)
-        else:
-            k_ivf = _resolve_clusters(emb, n_clusters)
-            n_vectors = None
-        row = emb.select(F.size("embedding").alias("d")).first()
-        dim = None if row is None or row["d"] is None else int(row["d"])
-        if n_vectors is None and dim is not None:
-            n_vectors = emb.count()
-        # The two quantizer fits are INDEPENDENT (coarse IVF over the
-        # full vectors, PQ codebooks over the subvectors) but each is
-        # a chain of per-round driver actions, so run sequentially the
-        # cluster sits at each chain's stage tails twice (optimization
-        # round 13, guide-§2.6 job overlap): submitting them from two
-        # driver threads lets either fit's tasks back-fill executors
-        # the other's tail leaves idle. Results are unchanged — the
-        # fits share no state and each is deterministic; measured at
-        # sf0.1 the composed fit-inline query drops ~20%. The ADC
-        # bound check is independent of both fits, so it rides the
-        # pool too instead of serializing after them.
-        # inheritable_thread_target(session) requires pinned-thread
-        # mode (ADVICE r13: under PYSPARK_PIN_THREAD=false it returns
-        # the session itself and _wrap(lambda) dies with TypeError) —
-        # fall back to sequential fits there; pinned mode is the
-        # PySpark default since 3.2.
-        import os as _os
-
-        pinned = _os.environ.get(
-            "PYSPARK_PIN_THREAD", "true"
-        ).lower() != "false"
-        fit_ivf = lambda: _ivf_fit(  # noqa: E731
-            emb, k=k_ivf, iters=ivf_iters, fit_sample_mod=fit_sample_mod,
-        )
-        fit_pq = lambda: _pq_fit(  # noqa: E731
-            emb, m=m, k=n_centroids, iters=pq_iters,
-            fit_sample_mod=fit_sample_mod,
-            n_vectors=n_vectors, dim=dim,
-        )
-        check = lambda: _check_dtable_bound(  # noqa: E731
-            emb.filter(F.col("vec_id") % query_mod == 0), m, n_centroids
-        )
-        if pinned:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark import inheritable_thread_target
-
-            _wrap = inheritable_thread_target(emb.sparkSession)
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_ivf = pool.submit(_wrap(fit_ivf))
-                f_pq = pool.submit(_wrap(fit_pq))
-                f_chk = pool.submit(_wrap(check))
-                members, cents = f_ivf.result()
-                final, pq_cents = f_pq.result()
-                f_chk.result()
-        else:
-            members, cents = fit_ivf()
-            final, pq_cents = fit_pq()
-            check()
-        codes = final.select(
-            "vec_id", "sub_id", F.col("centroid_id").alias("code_id")
-        )
-    nprobe = _resolve_nprobe(nprobe, cents)
-    shortlist = _resolve_shortlist(shortlist, nprobe, k)
-    q = members.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
+    q = _query_side(index.members.filter(F.col("vec_id") % query_mod == 0))
+    return _search_ivf_pq(
+        index,
+        emb.filter(F.col("vec_id") % query_mod == 0),
+        q,
+        _with_norm(emb),
+        k,
+        shortlist,
+        nprobe,
+        exclude_self=True,
     )
-    # 1. coarse probe: each query's nprobe nearest IVF centroids.
-    qprobe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_cos",
-            F.round(_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select("query_id", "centroid_id")
+
+
+def _adc_shortlist(
+    cand: DataFrame, q_vecs: DataFrame, index: IvfPqIndex, shortlist: int
+) -> DataFrame:
+    """(query_id, vec_id) of each query's ``shortlist`` best candidates
+    by PQ asymmetric distance. ``cand`` holds (query_id, vec_id) pairs;
+    ``q_vecs`` is the raw (vec_id, embedding) query batch. The
+    Q·m·n_centroids distance table is broadcast (the :func:`pq_topk`
+    skew note) and candidates are touched only through their integer
+    (sub_id, code_id) keys."""
+    qsub = _pq_subvectors(q_vecs, index.m).select(
+        F.col("vec_id").alias("query_id"), "sub_id", "se"
     )
-    # 2. posting-list restriction: candidate ids only — no floats.
-    cand = (
-        qprobe.join(members.select("centroid_id", "vec_id"), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-    )
-    # 3. ADC over the restricted candidates.
-    qsub = _pq_subvectors(
-        emb.filter(F.col("vec_id") % query_mod == 0), m
-    ).select(F.col("vec_id").alias("query_id"), "sub_id", "se")
-    dtable = qsub.join(F.broadcast(pq_cents), "sub_id").select(
+    dtable = qsub.join(F.broadcast(index.pq_cents), "sub_id").select(
         "query_id",
         "sub_id",
         F.col("centroid_id").alias("code_id"),
         _sub_l2sq("se", "c").alias("_qd"),
     )
     scored = (
-        cand.join(codes, "vec_id")
+        cand.join(index.codes, "vec_id")
         .join(F.broadcast(dtable), ["query_id", "sub_id", "code_id"])
         .groupBy("query_id", "vec_id")
         .agg(_floor_q(F.sum("_qd"), 6).alias("adc_dist"))
     )
-    sl = (
+    return (
         scored.withColumn(
             "_rk",
             F.row_number().over(
@@ -2134,29 +2086,41 @@ def ivf_pq_topk(
         .filter(F.col("_rk") <= shortlist)
         .select("query_id", "vec_id")
     )
-    # 4. exact re-rank on the shortlist only.
-    base = _with_norm(emb)
-    cand_emb = base.select(
-        "vec_id",
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("c_norm"),
+
+
+def _search_ivf_pq(
+    index: IvfPqIndex,
+    q_vecs: DataFrame,
+    q: DataFrame,
+    cand_vecs: DataFrame,
+    k: int,
+    shortlist: "int | str",
+    nprobe: "int | str",
+    exclude_self: bool,
+) -> DataFrame:
+    """The search stages :func:`ivf_pq_topk` and :func:`ivf_pq_search`
+    share: coarse probe → posting-list restriction → ADC shortlist →
+    exact re-rank. ``q_vecs`` is the raw (vec_id, embedding) query
+    batch: it builds the ADC table, and the table bound counts it (a
+    cheap scan, where counting ``q`` would force the IVF assignment).
+    ``q`` is its :func:`_query_side` frame, and ``cand_vecs`` the
+    normed (vec_id, embedding, _norm) frame the re-rank reads exact
+    candidate vectors from. ``exclude_self`` drops each query's own row
+    (corpus queries); external queries keep an exact-duplicate hit."""
+    _check_dtable_bound(q_vecs, index.m, index.n_centroids)
+    nprobe = _resolve_nprobe(nprobe, index.cents)
+    shortlist = _resolve_shortlist(shortlist, nprobe, k)
+    # posting-list restriction: candidate ids only — no floats
+    cand = _probe(q, index.cents, nprobe).join(
+        index.members.select("centroid_id", "vec_id"), "centroid_id"
     )
-    joined = sl.join(cand_emb, "vec_id").join(q, "query_id")
-    cos = F.round(
-        _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
+    if exclude_self:
+        cand = cand.filter(F.col("vec_id") != F.col("query_id"))
+    sl = _adc_shortlist(
+        cand.select("query_id", "vec_id"), q_vecs, index, shortlist
     )
-    return (
-        joined.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    joined = sl.join(_candidate_side(cand_vecs), "vec_id").join(q, "query_id")
+    return _cosine_rank(joined, k, "c_emb", "c_norm")
 
 
 def ivf_pq_search(
@@ -2177,7 +2141,7 @@ def ivf_pq_search(
     self row; when a query does coincide with a corpus vector, the
     exact-duplicate hit at cosine 1.0 is real information).
 
-    Stage shape is identical to :func:`ivf_pq_topk` ``index=`` mode —
+    The stages are shared with :func:`ivf_pq_topk` (one search body) —
     probe (broadcast centroids) → posting-list restriction (keyed join,
     nprobe/k of the corpus) → broadcast-ADC over integer codes → exact
     re-rank on the shortlist — so every 100 TB property documented
@@ -2192,87 +2156,16 @@ def ivf_pq_search(
     idiomatic Structured Streaming pattern for query serving, since
     the probe rank + ADC aggregation + final rank are three stateful
     steps no single append-mode streaming plan can express)."""
-    members, cents = index.members, index.cents
-    codes, pq_cents = index.codes, index.pq_cents
-    m, n_centroids = index.m, index.n_centroids
-    nprobe = _resolve_nprobe(nprobe, cents)
-    shortlist = _resolve_shortlist(shortlist, nprobe, k)
-    _check_dtable_bound(queries, m, n_centroids)
-    qbase = _with_norm(
-        queries.select(F.col("query_id").alias("vec_id"), "embedding")
-    )
-    q = qbase.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
-    qprobe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_cos",
-            F.round(_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    cand = qprobe.join(
-        members.select("centroid_id", "vec_id"), "centroid_id"
-    ).select("query_id", "vec_id")
-    qsub = _pq_subvectors(
-        queries.select(F.col("query_id").alias("vec_id"), "embedding"), m
-    ).select(F.col("vec_id").alias("query_id"), "sub_id", "se")
-    dtable = qsub.join(F.broadcast(pq_cents), "sub_id").select(
-        "query_id",
-        "sub_id",
-        F.col("centroid_id").alias("code_id"),
-        _sub_l2sq("se", "c").alias("_qd"),
-    )
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(dtable), ["query_id", "sub_id", "code_id"])
-        .groupBy("query_id", "vec_id")
-        .agg(_floor_q(F.sum("_qd"), 6).alias("adc_dist"))
-    )
-    sl = (
-        scored.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("adc_dist").asc(), F.col("vec_id").asc()
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    cand_emb = members.select(
-        "vec_id",
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("c_norm"),
-    )
-    joined = sl.join(cand_emb, "vec_id").join(q, "query_id")
-    cos = F.round(
-        _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    return (
-        joined.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
+    q_vecs = queries.select(F.col("query_id").alias("vec_id"), "embedding")
+    return _search_ivf_pq(
+        index,
+        q_vecs,
+        _query_side(_with_norm(q_vecs)),
+        index.members,
+        k,
+        shortlist,
+        nprobe,
+        exclude_self=False,
     )
 
 
@@ -2297,6 +2190,22 @@ def _sq8_coded(emb: DataFrame) -> DataFrame:
             "ELSE floor(CAST(x AS DOUBLE) * 127D / s + 0.5D) END)) AS INT))"
         ).alias("codes"),
         "_scales",
+    )
+
+
+def _sq8_candidates(emb: DataFrame) -> DataFrame:
+    """(vec_id, xhat, _cnorm): the SQ8-reconstructed candidates
+    (code·s/127) and their norms, the candidate side of both SQ8
+    searches."""
+    return (
+        _sq8_coded(emb)
+        .select(
+            "vec_id",
+            F.expr(
+                "zip_with(codes, _scales, (c, s) -> CAST(c AS DOUBLE) * s / 127D)"
+            ).alias("xhat"),
+        )
+        .withColumn("_cnorm", F.sqrt(_dot("xhat", "xhat")))
     )
 
 
@@ -2326,39 +2235,12 @@ def sq8_topk(
     candidate memory traffic, recall ≈ 1 at int8 granularity —
     pinned by tests/test_r6_ops.py). Deterministic: integer codes +
     fixed-order fold dot products, so the DuckDB mirror hash-matches."""
-    cand = (
-        _sq8_coded(emb)
-        .select(
-            "vec_id",
-            F.expr(
-                "zip_with(codes, _scales, (c, s) -> CAST(c AS DOUBLE) * s / 127D)"
-            ).alias("xhat"),
-        )
-        .withColumn("_cnorm", F.sqrt(_dot("xhat", "xhat")))
-    )
-    base = _with_norm(emb)
-    q = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
+    cand = _sq8_candidates(emb)
+    q = _query_side(_with_norm(emb).filter(F.col("vec_id") % query_mod == 0))
     joined = cand.crossJoin(F.broadcast(q)).filter(
         F.col("vec_id") != F.col("query_id")
     )
-    cos = F.round(
-        _dot("q_emb", "xhat") / (F.col("q_norm") * F.col("_cnorm")), 6
-    )
-    ranked = joined.select(
-        "query_id", "vec_id", cos.alias("cosine")
-    ).withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("cosine").desc(), F.col("vec_id")
-            )
-        ),
-    )
-    return ranked.filter(F.col("rank") <= k)
+    return _cosine_rank(joined, k, "xhat", "_cnorm")
 
 
 def ivf_sq8_topk(
@@ -2400,56 +2282,14 @@ def ivf_sq8_topk(
             emb, k=_resolve_clusters(emb, n_clusters), iters=3
         )
     nprobe = _resolve_nprobe(nprobe, cents)
-    cand8 = (
-        _sq8_coded(emb)
-        .select(
-            "vec_id",
-            F.expr(
-                "zip_with(codes, _scales, (c, s) -> CAST(c AS DOUBLE) * s / 127D)"
-            ).alias("xhat"),
-        )
-        .withColumn("_cnorm", F.sqrt(_dot("xhat", "xhat")))
+    q = _query_side(members.filter(F.col("vec_id") % query_mod == 0))
+    cand = (
+        _probe(q, cents, nprobe, "q_emb", "q_norm")
+        .join(members.select("centroid_id", "vec_id"), "centroid_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
     )
-    q = members.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
-    qprobe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_cos",
-            F.round(_dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select("query_id", "q_emb", "q_norm", "centroid_id")
-    )
-    cand = qprobe.join(
-        members.select("centroid_id", "vec_id"), "centroid_id"
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.join(cand8, "vec_id")
-    cos = F.round(
-        _dot("q_emb", "xhat") / (F.col("q_norm") * F.col("_cnorm")), 6
-    )
-    return (
-        scored.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
+    return _cosine_rank(
+        cand.join(_sq8_candidates(emb), "vec_id"), k, "xhat", "_cnorm"
     )
 
 
@@ -2606,62 +2446,20 @@ def rp_ivf_topk(
     proj = _rp_float_embedding(emb, d_out)
     members, cents = _ivf_fit(proj, k=n_clusters, iters=iters)
     nprobe = _resolve_nprobe(nprobe, cents)
-    q = members.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("q_norm"),
-    )
-    qprobe = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "_cos",
-            F.round(
-                _dot("q_emb", "c_emb") / (F.col("q_norm") * F.col("c_norm")), 9
-            ),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_cos").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
+    q = _query_side(members.filter(F.col("vec_id") % query_mod == 0))
     cand = (
-        qprobe.join(members.select("centroid_id", "vec_id"), "centroid_id")
+        _probe(q, cents, nprobe)
+        .join(members.select("centroid_id", "vec_id"), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
+    # the re-rank reads the ORIGINAL vectors, not the projected ones
     base = _with_norm(emb)
-    cand_emb = base.select(
-        "vec_id",
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("c_norm"),
+    qorig = _query_side(
+        base.filter(F.col("vec_id") % query_mod == 0), prefix="qo"
     )
-    qorig = base.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qo_emb"),
-        F.col("_norm").alias("qo_norm"),
-    )
-    joined = cand.join(cand_emb, "vec_id").join(qorig, "query_id")
-    cos = F.round(
-        _dot("qo_emb", "c_emb") / (F.col("qo_norm") * F.col("c_norm")), 6
-    )
-    return (
-        joined.select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cosine").desc(), F.col("vec_id")
-                )
-            ),
-        )
-        .filter(F.col("rank") <= k)
-    )
+    joined = cand.join(_candidate_side(base), "vec_id").join(qorig, "query_id")
+    return _cosine_rank(joined, k, "c_emb", "c_norm", prefix="qo")
 
 
 def prototype_outliers(

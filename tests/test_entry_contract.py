@@ -160,6 +160,10 @@ def test_no_oracle_queries_pinned_out_of_head():
     STAY registered (dropping a query is a regression)."""
     mod = _entry()
     no_oracle = set(mod.queries()) - set(mod.oracle_sql())
+    # Equality, not a subset, on purpose: a tripwire. The rotation
+    # pins any no-oracle query out of the head by itself, but a query
+    # that no oracle can verify must be acknowledged by adding it here,
+    # not slip in unnoticed.
     assert no_oracle == {"fidelity_peaks", "fidelity_signal"}
     assert not (no_oracle & set(mod._ROTATE_FIRST)), (
         "no-oracle queries occupy driver verification slots"

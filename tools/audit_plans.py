@@ -6,11 +6,20 @@ cartesian products (must be 0), Python-eval stages (must be 0 outside
 the explicitly-fidelity routes), and TakeOrdered usage.
 
 Writes a markdown table to stdout; redirect into docs/.
+
+``--dump DIR`` instead writes each registered query's optimized
+logical plan to ``DIR/<name>.txt``, with expression ids (``#123``, ``#45L``) normalised to
+``#N`` and physical-plan ids (``plan_id=123``, printed inside cached
+relations) to ``plan_id=N``: both are per-process counters. Dumps
+taken from two trees then compare with one ``diff -r DIR_A DIR_B``:
+empty output means the change left every plan as it was.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -36,9 +45,36 @@ PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
                   "warc_extract_text", "crawl_corpus"}
 
 
+_EXPR_ID = re.compile(r"#\d+L?")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+
+
+def dump(spark, out_dir: str) -> None:
+    """Write each query's normalised optimized plan to ``out_dir``.
+    The cache is cleared before every query, so a plan never depends on
+    what an earlier query left cached."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name, fn in entry.queries().items():
+        spark.catalog.clearCache()
+        try:
+            plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        except Exception as exc:  # noqa: BLE001
+            plan = f"failed to plan: {type(exc).__name__}: {exc}"
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(_PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan)) + "\n")
+        print(name, flush=True)
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--dump", metavar="DIR",
+                    help="write normalised optimized plans to DIR")
+    args = ap.parse_args()
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.dump:
+        dump(spark, args.dump)
+        return
     rows = []
     violations = []
     for name, fn in entry.queries().items():
