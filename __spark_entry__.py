@@ -16,6 +16,7 @@ be expressible as a recursive CTE.)
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 from collections.abc import Callable
@@ -237,69 +238,24 @@ def _rotate(full: dict) -> dict:
     return {k: full[k] for k in _ROTATE_FIRST + _ROTATE_LAST}
 
 
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The full unrotated registry, in declaration order."""
-    out = {
-        "signal_frame": _q.q_signal_frame,
-        "extrema_flags": _q.q_extrema_flags,
-        "smooth": _q.q_smooth,
-        "raw_envelopes": _q.q_raw_envelopes,
-        "envelopes": _q.q_envelopes,
-        "diastolic": _q.q_diastolic,
-        "naive_peaks": _q.q_naive_peaks,
-        "threshold_peaks": _q.q_threshold_peaks,
-        "peak_attributes": _q.q_peak_attributes,
-        "crossing_points": _q.q_crossing_points,
-        "peak_averages": _q.q_peak_averages,
-        "stim_normalize": _q.q_stim_normalize,
-        "global_max": _q.q_global_max,
-        "stim_peak_mean": _q.q_stim_peak_mean,
-        "session_stats": _q.q_session_stats,
-        "funnel_counts": _q.q_funnel_counts,
-        "cohort_retention": _q.q_cohort_retention,
-        "asof_view_before_purchase": _q.q_asof_view_before_purchase,
-        "asof_tolerance": _q.q_asof_tolerance,
-        "resample_hourly": _q.q_resample_hourly,
-        "value_histogram": _q.q_value_histogram,
-        "corpus_rollup": _q.q_corpus_rollup,
-        "range_pairs": _q.q_range_pairs,
-        "json_props": _q.q_json_props,
-        "user_value_median": _q.q_user_value_median,
-        "latency_percentiles": _q.q_latency_percentiles,
-        "user_event_pivot": _q.q_user_event_pivot,
-        "user_value_zscores": _q.q_user_value_zscores,
-        "pricing_summary": _q.q_pricing_summary,
-        "priority_ship_latency": _q.q_priority_ship_latency,
-        "top_revenue_orders": _q.q_top_revenue_orders,
-        "nation_revenue": _q.q_nation_revenue,
-        "large_order_customers": _q.q_large_order_customers,
-        "cheapest_supplier": _q.q_cheapest_supplier,
-        "returned_orders_by_priority": _q.q_returned_orders_by_priority,
-        "event_transitions": _q.q_event_transitions,
-        "top_event_paths": _q.q_top_event_paths,
-        "nation_pair_volume": _q.q_nation_pair_volume,
-        "promo_revenue": _q.q_promo_revenue,
-        "brand_disjunction_revenue": _q.q_brand_disjunction_revenue,
-        "parts_never_returned": _q.q_parts_never_returned,
-        "fidelity_peaks": _q.q_fidelity_peaks,
-        "fidelity_signal": _q.q_fidelity_signal,
-        "native_find_peaks": _q.q_native_find_peaks,
-        "native_find_peaks_nodist": _q.q_native_find_peaks_nodist,
-        "constrained_peak_attributes": _q.q_constrained_peak_attributes,
-        "peak_interval_stats": _q.q_peak_interval_stats,
-        "resample_interpolate": _q.q_resample_interpolate,
-        "resample_ohlc": _q.q_resample_ohlc,
-        "top_loss_customers": _q.q_top_loss_customers,
-        "idle_customer_balance": _q.q_idle_customer_balance,
-        "forecast_revenue_change": _q.q_forecast_revenue_change,
-        "top_supplier_revenue": _q.q_top_supplier_revenue,
-        "small_quantity_revenue": _q.q_small_quantity_revenue,
-        "trailing_window_stats": _q.q_trailing_window_stats,
-        "mad_outliers": _q.q_mad_outliers,
-        "funnel_within": _q.q_funnel_within,
+def _builders(module) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The ``q_<name>`` functions *module* itself defines (an imported
+    ``q_`` name does not count), keyed by ``<name>``, in definition
+    order."""
+    return {
+        attr[2:]: fn
+        for attr, fn in vars(module).items()
+        if attr.startswith("q_")
+        and inspect.isfunction(fn)
+        and fn.__module__ == module.__name__
     }
-    out.update(_llm_q.QUERIES)
-    return out
+
+
+def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The full unrotated registry: every ``q_<name>`` builder of the
+    core query module, then of the LLM query module. Defining the
+    builder is what registers a query."""
+    return {**_builders(_q), **_builders(_llm_q)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,9 +1,28 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark registered queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
+on local[$SPARK_GRAFT_CPUS]. Prints a bookkeeping JSON line (rows and
+rep spreads per key), then the headline JSON line:
 
-    {"metric": "headline_total", "value": <sec>, "unit": "sec",
-     "queries": {...per-query sec...}, "sf": <sf>, "rows": {...}}
+    {"queries": {...per-key sec...}, "metric": "headline_total",
+     "value": <sec>, "unit": "sec", "sf": <sf>, ...}
+
+Every key is one of two kinds:
+
+- a registered query name from :data:`REGISTERED`, timed as
+  ``queries()[name](spark, stage_dir)`` — exactly the builder the
+  oracle checks;
+- a variant ``<registered>@<label>`` from :data:`VARIANTS`, which
+  declares its registered base and the one thing it measures that the
+  registered builder cannot: state amortized across reps, or a
+  production parameter the oracle cannot mirror.
+
+Warm inputs: ``documents`` and ``embeddings`` are staged once as
+``defaultParallelism``-file parquet copies in a temp dir (the other
+tables are linked there unchanged), and the staged scans are cached
+before timing. Spark's cache manager substitutes that cache into every
+builder that scans the same path, so doc/emb queries read warm input
+spread across the session's parallelism, as a many-file corpus would
+arrive, instead of one single-file scan partition.
 
 Every query is forced through a noop sink (not ``count()``) so column
 pruning cannot skip the actual compute.
@@ -13,565 +32,444 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+import __spark_entry__ as entry  # noqa: E402
 from myodish_peak_analysis_spark.api import PeakPipeline  # noqa: E402
 from myodish_peak_analysis_spark.llm import (  # noqa: E402
     bpe,
     curate,
     dedup,
-    packing,
     sampling,
     similarity,
     text,
-    urls,
 )
-from myodish_peak_analysis_spark.llm import queries as _llm_q  # noqa: E402
-from myodish_peak_analysis_spark.operators.analytics import (  # noqa: E402
-    mad_outliers,
-    range_pairs,
-    value_histogram,
-)
+from myodish_peak_analysis_spark.llm.queries import _next_snapshot  # noqa: E402
+from myodish_peak_analysis_spark.operators.attributes import peak_averages  # noqa: E402
 from myodish_peak_analysis_spark.operators.fidelity import fidelity_peaks  # noqa: E402
 from myodish_peak_analysis_spark.operators.native_peaks import (  # noqa: E402
     native_find_peaks,
 )
 from myodish_peak_analysis_spark.operators.smooth import with_fir_smooth  # noqa: E402
-from myodish_peak_analysis_spark.operators.relational import (  # noqa: E402
-    idle_customer_balance,
-    nation_pair_volume,
-    pricing_summary,
-    segment_revenue_topk,
-    top_loss_customers,
-)
-from myodish_peak_analysis_spark.operators.sessions import (  # noqa: E402
-    event_transitions,
-    funnel_counts,
-    session_stats,
-)
 from myodish_peak_analysis_spark.schema import (  # noqa: E402
+    HARNESS_TABLES,
     auto_channels,
     read_table,
     signal_frame,
-    ts_micros,
 )
 from myodish_peak_analysis_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: Tables staged as defaultParallelism-file copies and cached warm.
+STAGED = ("documents", "embeddings")
 
-def force(df) -> None:
+#: Registered queries, each timed as its registered builder.
+REGISTERED = [
+    "native_find_peaks",
+    "fidelity_peaks",
+    "session_stats",
+    "funnel_counts",
+    "value_histogram",
+    "range_pairs",
+    "stratified_sample",
+    "pack_chunks",
+    "curated_corpus",
+    "dedup_exact",
+    "dedup_clusters",
+    "minhash_pairs",
+    "unigram_logprob",
+    "simhash",
+    "text_stats",
+    "doc_fingerprints",
+    "ann_cosine_topk",
+    "ann_lsh_topk",
+    "pricing_summary",
+    "top_revenue_orders",
+    "nation_pair_volume",
+    "event_transitions",
+    "repetition_profile",
+    "ann_ivf_topk",
+    "semantic_dedup",
+    "pq_topk",
+    "pq_rerank_topk",
+    "ivf_pq_topk",
+    "rp_ivf_topk",
+    "resample_interpolate",
+    "resample_ohlc",
+    "dup_span_fraction",
+    "top_loss_customers",
+    "idle_customer_balance",
+    "rp_project",
+    "bpe_encode",
+    "incremental_neardup",
+    "token_entropy",
+    "mad_outliers",
+    "levenshtein_neardup",
+    "chunk_overlap",
+    "sq8_topk",
+    "remove_dup_spans",
+    "containment_pairs",
+    "leakage_safe_split",
+    "quality_prune",
+    "ivf_sq8_topk",
+    "training_corpus_manifest",
+    "tfidf_cosine_pairs",
+    "tfidf_verify",
+    "dup_spans_scoped",
+    "dsir_weights",
+    "dsir_sample",
+    "dsir_curated_sample",
+    "warc_extract_text",
+    "url_dedup",
+    "domain_caps",
+    "crawl_corpus",
+    "envelopes",
+    "peak_attributes",
+    "constrained_peak_attributes",
+]
+
+
+class Inputs(NamedTuple):
+    """The warm inputs every timed builder reads."""
+
+    spark: SparkSession
+    stage: str  # staged sf dir: every builder reads its tables here
+    sig: DataFrame  # cached auto-channel signal frame
+    n_channels: int  # its channel count
+
+    @property
+    def docs(self) -> DataFrame:
+        return read_table(self.spark, self.stage, "documents")
+
+    @property
+    def emb(self) -> DataFrame:
+        return read_table(self.spark, self.stage, "embeddings")
+
+
+class Variant(NamedTuple):
+    base: str  # the registered query this is a variant of
+    reason: str  # what it measures that the registered builder cannot
+    # (inputs, state) -> DataFrame; ``state`` persists across this
+    # key's reps and is unpersisted after its last one
+    build: Callable[[Inputs, dict], DataFrame]
+
+
+def _once(state: dict, fit: Callable[[], object]) -> object:
+    """Fit on the first rep (inside the timed region) and reuse on
+    later reps, so best-of-n records the amortized per-batch cost."""
+    if "fit" not in state:
+        state["fit"] = fit()
+    return state["fit"]
+
+
+def _cached(df: DataFrame) -> DataFrame:
+    df.cache()
+    df.count()
+    return df
+
+
+def _auto_index(emb: DataFrame):
+    return similarity.fit_ivf_pq_index(emb, n_clusters="auto")
+
+
+def _serve_queries(emb: DataFrame) -> DataFrame:
+    return emb.filter(F.col("vec_id") % similarity.ANN_QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def _peak_pipeline(sig: DataFrame) -> DataFrame:
+    pipe = PeakPipeline(sig).smooth().envelopes().diastolic()
+    return pipe.detect_peaks().attributes()
+
+
+def _peak_averages_marginal(i: Inputs, state: dict) -> DataFrame:
+    return peak_averages(_once(state, lambda: _cached(_peak_pipeline(i.sig))))
+
+
+def _ivf_pq_prefit(i: Inputs, state: dict) -> DataFrame:
+    idx = _once(state, lambda: _auto_index(i.emb))
+    return similarity.ivf_pq_topk(i.emb, index=idx)
+
+
+def _ivf_sq8_prefit(i: Inputs, state: dict) -> DataFrame:
+    idx = _once(state, lambda: _auto_index(i.emb))
+    return similarity.ivf_sq8_topk(i.emb, index=idx, n_clusters="auto")
+
+
+def _ann_serve(i: Inputs, state: dict) -> DataFrame:
+    idx = _once(state, lambda: _auto_index(i.emb))
+    return similarity.ivf_pq_search(_serve_queries(i.emb), idx)
+
+
+def _ann_serve_appended(i: Inputs, state: dict) -> DataFrame:
+    emb = i.emb
+    idx = _once(
+        state, lambda: _auto_index(emb.filter(F.col("vec_id") % 10 != 3))
+    )
+    # release the previous rep's per-batch append caches before building
+    # this rep's; the fitted parent index is untouched
+    if "appended" in state:
+        state["appended"].unpersist()
+    state["appended"] = similarity.ivf_pq_append(
+        idx, emb.filter(F.col("vec_id") % 10 == 3)
+    )
+    return similarity.ivf_pq_search(_serve_queries(emb), state["appended"])
+
+
+def _incremental_neardup_indexed(i: Inputs, state: dict) -> DataFrame:
+    docs = i.docs
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    idx = _once(state, lambda: dedup.corpus_band_index(corpus))
+    return dedup.incremental_neardup(
+        docs.filter(F.col("doc_id") % 10 == 0), corpus, corpus_index=idx
+    )
+
+
+def _incremental_manifest_prefit(i: Inputs, state: dict) -> DataFrame:
+    docs = i.docs
+    prefit = _once(state, lambda: curate.manifest_prefit_state(docs))
+    return curate.incremental_corpus_manifest(_next_snapshot(docs), prefit)
+
+
+def _dup_spans_prefit(i: Inputs, state: dict) -> DataFrame:
+    docs = i.docs
+    stats = _once(state, lambda: text.fit_dup_gram_stats(docs))
+    scope = docs.filter(F.col("doc_id") % 4 == 0).select("doc_id")
+    return text.remove_dup_spans_scoped(docs, scope, dup_grams=stats)
+
+
+def _dsir_prefit(i: Inputs, state: dict) -> DataFrame:
+    docs = i.docs
+    model = _once(state, lambda: sampling.fit_dsir_logratio(docs))
+    return sampling.dsir_logweights(docs, logratio=model)
+
+
+_AUTO_CHANNELS = (
+    "auto channel count over the cached signal; the oracle pins ORACLE_CHANNELS"
+)
+_AUTO_K = "n_clusters='auto' (k ~ sqrt(N)), the production scaling; the oracle pins k"
+_AMORTIZED = "auto-k index fit on rep 1: later reps time the search alone"
+
+#: Every bench key that is not a registered name, in run order.
+VARIANTS: dict[str, Variant] = {
+    "peak_attributes@auto_channels": Variant(
+        "peak_attributes", _AUTO_CHANNELS, lambda i, s: _peak_pipeline(i.sig)
+    ),
+    "peak_averages@marginal": Variant(
+        "peak_averages",
+        "auto-channel attributes cached on rep 1: later reps time the groupBy",
+        _peak_averages_marginal,
+    ),
+    "native_find_peaks@auto_channels": Variant(
+        "native_find_peaks",
+        _AUTO_CHANNELS,
+        lambda i, s: native_find_peaks(with_fir_smooth(i.sig)),
+    ),
+    "fidelity_peaks@auto_channels": Variant(
+        "fidelity_peaks", _AUTO_CHANNELS, lambda i, s: fidelity_peaks(i.sig)
+    ),
+    "ann_lsh_topk@auto_planes": Variant(
+        "ann_lsh_topk",
+        "n_planes='auto' keeps buckets bounded as N grows; the oracle pins the planes",
+        lambda i, s: similarity.lsh_topk(i.emb, n_planes="auto"),
+    ),
+    "ann_ivf_topk@auto_k": Variant(
+        "ann_ivf_topk",
+        _AUTO_K,
+        lambda i, s: similarity.ivf_topk(i.emb, n_clusters="auto"),
+    ),
+    "semantic_dedup@auto_k": Variant(
+        "semantic_dedup",
+        _AUTO_K,
+        lambda i, s: similarity.semantic_dedup(i.emb, n_clusters="auto"),
+    ),
+    "ivf_pq_topk@auto_k": Variant(
+        "ivf_pq_topk",
+        _AUTO_K,
+        lambda i, s: similarity.ivf_pq_topk(i.emb, n_clusters="auto"),
+    ),
+    "ivf_sq8_topk@auto_k": Variant(
+        "ivf_sq8_topk",
+        _AUTO_K,
+        lambda i, s: similarity.ivf_sq8_topk(i.emb, n_clusters="auto"),
+    ),
+    "ivf_pq_topk_prefit@amortized": Variant(
+        "ivf_pq_topk_prefit", _AMORTIZED, _ivf_pq_prefit
+    ),
+    "ivf_sq8_topk@amortized": Variant("ivf_sq8_topk", _AMORTIZED, _ivf_sq8_prefit),
+    "ann_serve@amortized": Variant("ann_serve", _AMORTIZED, _ann_serve),
+    "ann_serve_appended@amortized": Variant(
+        "ann_serve_appended",
+        "auto-k corpus index fit on rep 1: later reps time append + serve alone",
+        _ann_serve_appended,
+    ),
+    "incremental_neardup@amortized": Variant(
+        "incremental_neardup",
+        "corpus band index built on rep 1: later reps time batch keys + band join",
+        _incremental_neardup_indexed,
+    ),
+    "incremental_manifest@amortized": Variant(
+        "incremental_manifest",
+        "prefit state built on rep 1: later reps time what a nightly run pays",
+        _incremental_manifest_prefit,
+    ),
+    "dup_spans_scoped_prefit@amortized": Variant(
+        "dup_spans_scoped_prefit",
+        "dup-gram stats fit on rep 1: later reps time the scoped rewrite alone",
+        _dup_spans_prefit,
+    ),
+    "dsir_weights_prefit@amortized": Variant(
+        "dsir_weights_prefit",
+        "log-ratio model fit on rep 1: later reps time explode + broadcast join",
+        _dsir_prefit,
+    ),
+    "bpe_encode@batched": Variant(
+        "bpe_encode",
+        "the trainer's batched default; the oracle pins batch_merges=1",
+        lambda i, s: bpe.bpe_encode(i.docs),
+    ),
+    "bpe_vocab@batched16": Variant(
+        "bpe_vocab",
+        "16 batched merge rounds, the trainer's scale shape; the oracle pins "
+        "the default count with batch_merges=1",
+        lambda i, s: bpe.bpe_vocab(i.docs, n_merges=16),
+    ),
+    "bpe_vocab@batched16_sampled": Variant(
+        "bpe_vocab",
+        "bpe_vocab@batched16 fit on a 1/5 sample: what sample-fit buys back",
+        lambda i, s: bpe.bpe_vocab(i.docs, n_merges=16, fit_sample_mod=5),
+    ),
+}
+
+#: Keys timed with 5 reps: the slow peaks queries and the movers whose
+#: cross-run verdicts needed their own warm spread.
+FIVE_REPS = (
+    "envelopes",
+    "peak_attributes",
+    "constrained_peak_attributes",
+    "peak_attributes@auto_channels",
+    "training_corpus_manifest",
+    "ivf_pq_topk_prefit@amortized",
+    "rp_ivf_topk",
+)
+
+#: The original 25-query bench set; its subtotal keeps cross-run
+#: comparison one subtraction away.
+R4_SET = {
+    "peak_attributes@auto_channels", "peak_averages@marginal",
+    "native_find_peaks@auto_channels", "fidelity_peaks@auto_channels",
+    "session_stats", "funnel_counts", "value_histogram", "range_pairs",
+    "stratified_sample", "pack_chunks", "curated_corpus", "dedup_exact",
+    "dedup_clusters", "minhash_pairs", "unigram_logprob", "simhash",
+    "text_stats", "doc_fingerprints", "ann_cosine_topk",
+    "ann_lsh_topk@auto_planes", "pricing_summary", "top_revenue_orders",
+    "nation_pair_volume", "event_transitions", "repetition_profile",
+}
+
+
+def _family(key: str) -> str:
+    q = key.partition("@")[0]
+    if q.startswith(("ann_", "pq_", "ivf_", "sq8_", "rp_")) or q in (
+        "semantic_dedup",
+    ):
+        return "emb"
+    if q.startswith("bpe_"):
+        return "bpe"
+    if q.startswith(("native_", "fidelity_", "peak_")) or q in (
+        "envelopes", "constrained_peak_attributes",
+    ):
+        return "peaks"
+    if q in (
+        "pricing_summary", "top_revenue_orders", "nation_pair_volume",
+        "top_loss_customers", "idle_customer_balance",
+    ):
+        return "tpch"
+    if q in (
+        "session_stats", "funnel_counts", "value_histogram", "range_pairs",
+        "event_transitions", "mad_outliers",
+    ) or q.startswith("resample_"):
+        return "events"
+    return "docs"
+
+
+def force(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def stage_inputs(spark: SparkSession, stage: str) -> Inputs:
+    """Stage and warm the inputs (see the module docstring)."""
+    par = spark.sparkContext.defaultParallelism
+    for t in HARNESS_TABLES:
+        dst = os.path.join(stage, f"{t}.parquet")
+        if t in STAGED:
+            read_table(spark, SF_DIR, t).repartition(par).write.parquet(dst)
+            _cached(read_table(spark, stage, t))
+        else:
+            os.symlink(os.path.abspath(os.path.join(SF_DIR, f"{t}.parquet")), dst)
+    n_channels = auto_channels(spark, stage)
+    sig = _cached(signal_frame(spark, stage, n_channels=n_channels))
+    return Inputs(spark, stage, sig, n_channels)
 
 
 def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     sf = float(SF_DIR.rstrip("/").split("sf")[-1])
-
-    n_channels = auto_channels(spark, SF_DIR)
-    sig = signal_frame(spark, SF_DIR, n_channels=n_channels).cache()
-    sig.count()  # warm: channelization + page cache
-    # The sf0.1 documents/embeddings tables are single small parquet files
-    # (one row group -> one scan partition), which would pin every doc/emb
-    # query to ONE task on local[32]. A 100 TB corpus arrives as many
-    # files, so pre-spreading the cached input across the session's
-    # parallelism is the representative setup, not a cheat.
-    par = spark.sparkContext.defaultParallelism
-    docs = read_table(spark, SF_DIR, "documents").repartition(par).cache()
-    docs.count()
-    emb = read_table(spark, SF_DIR, "embeddings").repartition(par).cache()
-    emb.count()
-
-    # averages is benched as the MARGINAL aggregate over a materialized
-    # attributes frame (one groupBy on ~peaks rows), not a second full
-    # pipeline run — r2's headline double-paid the whole pipeline for a
-    # number that measured nothing new. The cache materializes lazily
-    # INSIDE the averages builder, i.e. only after native_peak_pipeline
-    # has been timed: caching it up front would let the CacheManager
-    # substitute the identical pipeline plan with the InMemoryRelation
-    # and turn that headline number into a cache read. Best-of-2 then
-    # records the marginal cost (iteration 1 pays the materialization,
-    # iteration 2 is the aggregate alone).
-    from myodish_peak_analysis_spark.operators.attributes import peak_averages
-
-    _attrs_cache: dict[str, object] = {}
-
-    def _marginal_averages():
-        if "df" not in _attrs_cache:
-            a = (
-                PeakPipeline(sig)
-                .smooth()
-                .envelopes()
-                .diastolic()
-                .detect_peaks()
-                .attributes()
-            ).cache()
-            a.count()
-            _attrs_cache["df"] = a
-        return peak_averages(_attrs_cache["df"])
-
-    _corpus_idx: dict[str, object] = {}
-
-    def _indexed_incremental():
-        if "idx" not in _corpus_idx:
-            _corpus_idx["idx"] = dedup.corpus_band_index(
-                docs.filter(F.col("doc_id") % 10 != 0)
-            )
-        return dedup.incremental_neardup(
-            docs.filter(F.col("doc_id") % 10 == 0),
-            docs.filter(F.col("doc_id") % 10 != 0),
-            corpus_index=_corpus_idx["idx"],
-        )
-
-    _manifest_state: dict[str, object] = {}
-
-    def _incremental_manifest():
-        if "state" not in _manifest_state:
-            _manifest_state["state"] = curate.manifest_prefit_state(docs)
-        return curate.incremental_corpus_manifest(
-            _llm_q._next_snapshot(docs), _manifest_state["state"]
-        )
-
-    _ivf_pq_idx: dict[str, object] = {}
-
-    def _prefit_ivf_pq_search():
-        if "idx" not in _ivf_pq_idx:
-            _ivf_pq_idx["idx"] = similarity.fit_ivf_pq_index(
-                emb, n_clusters="auto"
-            )
-        return similarity.ivf_pq_topk(emb, index=_ivf_pq_idx["idx"])
-
-    def _prefit_ivf_sq8():
-        if "idx" not in _ivf_pq_idx:
-            _ivf_pq_idx["idx"] = similarity.fit_ivf_pq_index(
-                emb, n_clusters="auto"
-            )
-        return similarity.ivf_sq8_topk(
-            emb, index=_ivf_pq_idx["idx"], n_clusters="auto"
-        )
-
-    _dup_stats: dict[str, object] = {}
-
-    def _prefit_dup_spans():
-        # the fit-once/rewrite-per-scope path (round 10): the first rep
-        # pays fit_dup_gram_stats, later reps time ONLY the scoped
-        # rewrite — the same amortized convention as the prefit-index
-        # entries above.
-        if "s" not in _dup_stats:
-            _dup_stats["s"] = text.fit_dup_gram_stats(docs)
-        return text.remove_dup_spans_scoped(
-            docs,
-            docs.filter(F.col("doc_id") % 4 == 0).select("doc_id"),
-            dup_grams=_dup_stats["s"],
-        )
-
-    _dsir_model: dict[str, object] = {}
-
-    def _prefit_dsir():
-        if "m" not in _dsir_model:
-            _dsir_model["m"] = sampling.fit_dsir_logratio(docs)
-        return sampling.dsir_logweights(docs, logratio=_dsir_model["m"])
-
-    def _ann_serve_appended():
-        # the between-refits ingest path (round 10): the corpus index
-        # is fit once on rep 1 (cached, the prefit convention); every
-        # rep then pays assign-new + union + serve — the daily batch's
-        # amortized cost.
-        if "aidx" not in _ivf_pq_idx:
-            _ivf_pq_idx["aidx"] = similarity.fit_ivf_pq_index(
-                emb.filter(F.col("vec_id") % 10 != 3), n_clusters="auto"
-            )
-        # release the previous rep's per-batch append caches before
-        # building this rep's (ADVICE r10: they leak otherwise; the
-        # parent aidx's fit-time caches are untouched — unpersisting
-        # the superseded index's lazy unions is a no-op on them)
-        if "aidx2" in _ivf_pq_idx:
-            _ivf_pq_idx["aidx2"].unpersist()
-        idx2 = similarity.ivf_pq_append(
-            _ivf_pq_idx["aidx"], emb.filter(F.col("vec_id") % 10 == 3)
-        )
-        _ivf_pq_idx["aidx2"] = idx2
-        qs = emb.filter(
-            F.col("vec_id") % similarity.ANN_QUERY_MOD == 0
-        ).select(F.col("vec_id").alias("query_id"), "embedding")
-        return similarity.ivf_pq_search(qs, idx2)
-
-    def _ann_serve():
-        if "idx" not in _ivf_pq_idx:
-            _ivf_pq_idx["idx"] = similarity.fit_ivf_pq_index(
-                emb, n_clusters="auto"
-            )
-        qs = emb.filter(
-            F.col("vec_id") % similarity.ANN_QUERY_MOD == 0
-        ).select((F.col("vec_id") + 10_000_000).alias("query_id"), "embedding")
-        return similarity.ivf_pq_search(qs, _ivf_pq_idx["idx"])
-
-    # bench times the REGISTERED builders (not re-derived copies, which
-    # r5 review flagged as a drift hazard: a formulation change in the
-    # verified query would leave the bench silently timing the old one)
-    from myodish_peak_analysis_spark.queries import (
-        q_resample_interpolate,
-        q_resample_ohlc,
-    )
-
-    queries = {
-        "native_peak_pipeline": lambda: (
-            PeakPipeline(sig).smooth().envelopes().diastolic().detect_peaks().attributes()
-        ),
-        "native_peak_averages": _marginal_averages,
-        "native_find_peaks": lambda: native_find_peaks(
-            with_fir_smooth(sig)
-        ),
-        "fidelity_peaks": lambda: fidelity_peaks(sig),
-        "session_stats": lambda: session_stats(
-            read_table(spark, SF_DIR, "events")
-        ),
-        "funnel_counts": lambda: funnel_counts(
-            read_table(spark, SF_DIR, "events")
-        ),
-        "value_histogram": lambda: value_histogram(
-            read_table(spark, SF_DIR, "events")
-        ),
-        "range_pairs_1h": lambda: range_pairs(
-            (lambda ev: ev.withColumn("ts_us", ts_micros(ev)))(
-                read_table(spark, SF_DIR, "events")
-            )
-        ),
-        "stratified_sample": lambda: sampling.stratified_sample(docs),
-        "pack_chunks": lambda: packing.pack_chunks(docs),
-        "curated_corpus": lambda: curate.curated_corpus(docs),
-        "dedup_exact": lambda: dedup.exact_dedup(docs),
-        "dedup_clusters": lambda: dedup.dedup_clusters(docs),
-        "minhash_pairs": lambda: dedup.minhash_pairs(docs),
-        "unigram_logprob": lambda: text.with_unigram_logprob(docs),
-        "simhash": lambda: dedup.simhash_signatures(docs),
-        "text_stats": lambda: text.with_text_stats(docs),
-        "doc_fingerprints": lambda: text.doc_fingerprints(docs),
-        "ann_cosine_topk": lambda: similarity.cosine_topk(emb),
-        # n_planes="auto" is the production path (plane count grows with
-        # log2(N) so bucket population stays bounded); the fixed-plane
-        # default remains the oracle-mirrored variant in queries(). At
-        # sf0.1's 5000 vectors the fixed 16 buckets held ~312 vectors
-        # each and the bucket join fanned out (the r3 bench regression).
-        "ann_lsh_topk": lambda: similarity.lsh_topk(emb, n_planes="auto"),
-        "pricing_summary": lambda: pricing_summary(
-            read_table(spark, SF_DIR, "lineitem")
-        ),
-        "top_revenue_orders": lambda: segment_revenue_topk(
-            read_table(spark, SF_DIR, "customer"),
-            read_table(spark, SF_DIR, "orders"),
-            read_table(spark, SF_DIR, "lineitem"),
-        ),
-        # round-4 additions: the fact⋈fact dual-nation-role join, the
-        # user-keyed Markov pair rollup, and the explode-heavy top-gram
-        # profile — three distinct shuffle shapes new this round.
-        "nation_pair_volume": lambda: nation_pair_volume(
-            read_table(spark, SF_DIR, "lineitem"),
-            read_table(spark, SF_DIR, "orders"),
-            read_table(spark, SF_DIR, "customer"),
-            read_table(spark, SF_DIR, "supplier"),
-            read_table(spark, SF_DIR, "nation"),
-        ),
-        "event_transitions": lambda: event_transitions(
-            read_table(spark, SF_DIR, "events")
-        ),
-        "repetition_profile": lambda: text.repetition_profile(docs),
-        # round-5 additions: the whole ANN/PQ/resample family was absent
-        # from the bench while the r3/r4 query surface grew — these are
-        # its distinct cost shapes (iterative Lloyd fits with per-round
-        # driver actions, broadcast-codebook integer-keyed ADC joins,
-        # cluster-scoped pair joins, dense-bucket window fills). The
-        # IVF/semantic routes use n_clusters="auto" (k ~ sqrt(N) — the
-        # production scaling) just as ann_lsh_topk benches the auto
-        # plane count; PQ keeps the deterministic (m=4, k=16) codebook
-        # the oracle mirrors.
-        "ann_ivf_topk": lambda: similarity.ivf_topk(emb, n_clusters="auto"),
-        "semantic_dedup": lambda: similarity.semantic_dedup(
-            emb, n_clusters="auto"
-        ),
-        "pq_topk": lambda: similarity.pq_topk(emb),
-        "pq_rerank_topk": lambda: similarity.pq_rerank_topk(emb),
-        "ivf_pq_topk": lambda: similarity.ivf_pq_topk(emb, n_clusters="auto"),
-        # round-6: the amortized production path — the index is fit on
-        # the FIRST rep (inside the timed region, like the marginal-
-        # averages pattern above), so best-of-3 records what the second
-        # and every later query batch pays: probe → ADC → re-rank with
-        # both Lloyd fits skipped.
-        "ivf_pq_topk_prefit": _prefit_ivf_pq_search,
-        "rp_ivf_topk": lambda: similarity.rp_ivf_topk(emb),
-        "resample_interpolate": lambda: q_resample_interpolate(spark, SF_DIR),
-        "resample_ohlc": lambda: q_resample_ohlc(spark, SF_DIR),
-        # round-5 additions: the gram-vocabulary interval-union coverage
-        # (dup_span_fraction — the heaviest new shuffle shape), the Q10
-        # TakeOrdered ranking join, the Q22 scalar-subquery + anti join,
-        # and the zero-exchange map-only projection (rp_project — pins
-        # the cost of the pure-codegen path).
-        "dup_span_fraction": lambda: text.dup_span_fraction(docs),
-        "top_loss_customers": lambda: top_loss_customers(
-            read_table(spark, SF_DIR, "customer"),
-            read_table(spark, SF_DIR, "orders"),
-            read_table(spark, SF_DIR, "lineitem"),
-            read_table(spark, SF_DIR, "nation"),
-        ),
-        "idle_customer_balance": lambda: idle_customer_balance(
-            read_table(spark, SF_DIR, "customer"),
-            read_table(spark, SF_DIR, "orders"),
-        ),
-        "rp_project": lambda: similarity.rp_project(emb),
-        # BPE is iterative (4 top-pair rounds, one driver action each —
-        # the Lloyd cost shape, benched like ann_ivf_topk); build() runs
-        # the fit inside the timed region.
-        "bpe_encode": lambda: bpe.bpe_encode(docs),
-        # round-6: the trainer's scale shape measured directly (VERDICT
-        # r5 "What's wrong #1") — 16 merge rounds with the periodic
-        # lineage checkpoint, full-fit vs the 1/5 sample-fit knob. The
-        # fit runs inside build() (driver actions per round, the Lloyd
-        # cost shape); the delta quantifies per-round cost growth and
-        # what sample-fit buys back. Round 13 (VERDICT r12 ask #5):
-        # bpe_vocab's DEFAULT is now the batched posture (batch=4 cuts
-        # driver rounds 16 -> ~4), so "bpe_vocab16" here measures what
-        # a caller actually gets; the former "bpe_vocab16_batched"
-        # entry is gone because it became identical to this one, and
-        # classic (batch_merges=1) stays measured via the registry's
-        # oracle-pinned bpe_vocab/bpe_encode queries.
-        "bpe_vocab16": lambda: bpe.bpe_vocab(docs, n_merges=16),
-        "bpe_vocab16_sampled": lambda: bpe.bpe_vocab(
-            docs, n_merges=16, fit_sample_mod=5
-        ),
-        "incremental_neardup": lambda: dedup.incremental_neardup(
-            docs.filter(F.col("doc_id") % 10 == 0),
-            docs.filter(F.col("doc_id") % 10 != 0),
-        ),
-        # the amortized daily-batch path: the corpus band index is
-        # built on the first rep (inside the timed region, like the
-        # prefit ANN pattern); best-of-3 records what every later
-        # batch pays — its own keys + the band join.
-        "incremental_neardup_indexed": _indexed_incremental,
-        "token_entropy": lambda: text.token_entropy(docs),
-        "mad_outliers": lambda: mad_outliers(
-            read_table(spark, SF_DIR, "events")
-        ),
-        # round-6 operator additions — three distinct cost shapes: the
-        # per-pair quadratic DP on bucket candidates, the map-only
-        # chunk explode, and the int8 reconstructed brute scan.
-        "levenshtein_neardup": lambda: dedup.levenshtein_neardup(docs),
-        "chunk_overlap": lambda: packing.chunk_overlap(docs),
-        "sq8_topk": lambda: similarity.sq8_topk(emb),
-        "remove_dup_spans": lambda: text.remove_dup_spans(docs),
-        "containment_pairs": lambda: dedup.containment_pairs(docs),
-        "leakage_safe_split": lambda: sampling.leakage_safe_split(docs),
-        "quality_prune": lambda: text.quality_prune(docs),
-        "ivf_sq8_topk": lambda: similarity.ivf_sq8_topk(emb, n_clusters="auto"),
-        # round-7: the SQ8 serving path (prefit index, int8 in-list
-        # scoring only) — the decade table's ivf_sq8_topk_prefit row,
-        # now driver-visible per round.
-        "ivf_sq8_topk_prefit": _prefit_ivf_sq8,
-        # the composed nightly build — the flagship LLM-pipeline plan
-        "training_corpus_manifest": lambda: curate.training_corpus_manifest(
-            docs
-        ),
-        # round-7: df-pruned shingle tf-idf cosine — the lexical
-        # similarity search's bounded-fan-out join shape.
-        "tfidf_cosine_pairs": lambda: text.tfidf_cosine_pairs(docs),
-        # round-9: the candidates-tier compositions (VERDICT r8 ask
-        # #5) — each rep pays candidate generation PLUS the scoped
-        # verifier, the honest end-to-end cost of the documented
-        # production posture the full-corpus entries above bound.
-        "tfidf_verify": lambda: text.tfidf_verify(
-            docs, dedup.minhash_pairs(docs)
-        ),
-        "dup_spans_scoped": lambda: text.remove_dup_spans_scoped(
-            docs, docs.filter(F.col("doc_id") % 4 == 0).select("doc_id")
-        ),
-        "dup_spans_scoped_prefit": _prefit_dup_spans,
-        # round-10: DSIR importance resampling — the inline-fit weights
-        # (3 passes over the exploded grams: features, bucket stats,
-        # totals) and the Gumbel top-k sample; the prefit entry times
-        # the amortized serve path (fit the <=DSIR_BUCKETS-row model on rep 1,
-        # later reps pay one explode pass + a broadcast join).
-        "dsir_weights": lambda: sampling.dsir_logweights(docs),
-        "dsir_sample": lambda: sampling.dsir_resample(docs),
-        "dsir_weights_prefit": _prefit_dsir,
-        "dsir_curated_sample": lambda: sampling.dsir_resample(
-            docs.join(curate.curated_corpus(docs).select("doc_id"), "doc_id")
-        ),
-        # round-7: external-query serving against the (cached) prefit
-        # IVF-PQ index — the production request path; reuses the same
-        # index the ivf_pq_topk_prefit entry fits, so this times ONLY
-        # probe -> posting lists -> ADC -> re-rank on a fresh batch.
-        "ann_serve": _ann_serve,
-        "ann_serve_appended": _ann_serve_appended,
-        # round-13: the crawl-shaped WARC path (encode -> parse ->
-        # JVM HTTP split -> Arrow-batched HTML extract — the one
-        # Python stage rides ~300-byte bodies, never the blobs), the
-        # URL curation ops (map-only canonicalize feeding a hash
-        # groupBy / a per-domain rank window), and the incremental
-        # nightly manifest: the prefit state is built lazily on the
-        # FIRST rep (the amortized cross-snapshot asset, same pattern
-        # as the prefit ANN entries), so best-of-3 records what a
-        # nightly actually pays — diff + fresh per-doc work + the
-        # metadata-sized global stages.
-        "warc_extract_text": lambda: _llm_q.q_warc_extract_text(
-            spark, SF_DIR
-        ),
-        "url_dedup": lambda: urls.url_dedup(urls.synth_urls(docs)),
-        "domain_caps": lambda: urls.domain_caps(
-            urls.synth_urls(docs).join(docs.select("doc_id", "text"), "doc_id")
-        ),
-        "incremental_manifest": _incremental_manifest,
-        "crawl_corpus": lambda: _llm_q.q_crawl_corpus(spark, SF_DIR),
-    }
-
-    # round-6 additions (VERDICT r5 ask #8): the heavy §2 singles,
-    # timed as the REGISTERED builders (ORACLE_CHANNELS channelization,
-    # fresh scan — exactly what the correctness sweep runs), so the
-    # sweep's slowest entry (`envelopes`, 8.2 s at sf0.01) finally has
-    # a standalone sf0.1 number instead of being visible only inside
-    # native_peak_pipeline (auto channels, cached input). The delta
-    # between `peak_attributes` here and `native_peak_pipeline` above
-    # is the cost of the channelization + caching difference, not of
-    # the operators.
-    from myodish_peak_analysis_spark.queries import (
-        q_constrained_peak_attributes,
-        q_envelopes,
-        q_peak_attributes,
-    )
-
-    queries["envelopes"] = lambda: q_envelopes(spark, SF_DIR)
-    queries["peak_attributes"] = lambda: q_peak_attributes(spark, SF_DIR)
-    queries["constrained_peak_attributes"] = lambda: (
-        q_constrained_peak_attributes(spark, SF_DIR)
-    )
-
-    times: dict[str, float] = {}
-    rows: dict[str, int] = {}
-    spread: dict[str, list[float]] = {}
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # VERDICT r10 ask #7: the two slowest window queries (plus their
-    # constrained sibling) get 5 reps — with the peaks family's 0.22
-    # relative spread, best-of-3 could not separate a 1.5x move from
-    # host noise (the r10 `envelopes` 6.9->10.8 s verdict had to run
-    # ad-hoc A/B trees); 2 extra reps cost ~90 s and give the artifact
-    # its own per-query spread to judge round-over-round deltas against.
-    _extra_reps = {
-        "envelopes": 5,
-        "peak_attributes": 5,
-        "constrained_peak_attributes": 5,
-        # VERDICT r11 ask #1: the two queries whose r11 driver readings
-        # moved 4.8x / 2.15x with zero code change join the 5-rep set so
-        # the artifact carries its own warm spread for them — the same
-        # self-attribution the peaks trio earned in r10.
-        "native_peak_pipeline": 5,
-        "training_corpus_manifest": 5,
-        # VERDICT r12 ask #4: the two emb movers (+28%/+19% vs r11,
-        # outside the 0.14 family band) join the 5-rep set alongside
-        # the r11-vs-r12-vs-r13 ab_trees --family emb attribution run.
-        "ivf_pq_topk_prefit": 5,
-        "rp_ivf_topk": 5,
-    }
-    for name, build in queries.items():
-        nrep = max(reps, _extra_reps.get(name, 0))
-        reptimes = []
-        for _ in range(nrep):  # best-of-n: shields the recorded number
-            t0 = time.time()  # from one-off JIT/GC/host-load noise
-            # (r3's best-of-2 still let a 0.2s wobble on value_histogram
-            # read as a regression; n=3 is the verdict's repeatability ask)
-            # build() is inside the timed region: for lazy queries it
-            # costs ~nothing, but iterative operators (dedup_clusters'
-            # per-round convergence actions) do real work there.
-            df = build()
-            force(df)  # the full compute through a noop sink
-            reptimes.append(time.time() - t0)
-        # 2 dp in the tail-preserved final line: the r8 artifact's
-        # final line ran 1848 bytes of a ~2000-byte tail budget at 61
-        # queries; 2 dp buys the round-9 additions their slots (full
-        # 3-dp spreads still ride the earlier rows line). ADVICE r9:
-        # sub-0.1s rows keep 3 dp — at that magnitude the third digit
-        # costs one byte on the fastest rows only and stops 8 ms
-        # queries from recording 0.0 (meaningless round-over-round
-        # ratios); slow rows keep the 2 dp budget.
-        best = min(reptimes)
-        times[name] = round(best, 3 if best < 0.1 else 2)
-        # spread over the POST-WARM-UP reps only: rep 1 pays one-time
-        # costs by design for the amortized patterns (the marginal-
-        # averages cache, the prefit index fits) plus JIT — that is
-        # intentional cost structure, not the run-to-run host noise
-        # this field exists to expose.
-        warm = reptimes[1:] if len(reptimes) > 1 else reptimes
-        spread[name] = [round(min(warm), 3), round(max(warm), 3)]
-        rows[name] = df.count()  # untimed bookkeeping
-        if name == "ann_serve_appended":
-            # ADVICE r11: the inter-rep release inside
-            # _ann_serve_appended never runs for the FINAL rep, so the
-            # last rep's per-batch append caches (and the appended-
-            # corpus fit) stayed pinned for the rest of the process —
-            # every later query competed with dead cache for memory.
-            # Released here, AFTER the rows bookkeeping count (which
-            # still reads the appended index).
-            for _k in ("aidx2", "aidx"):
-                if _k in _ivf_pq_idx:
-                    _ivf_pq_idx.pop(_k).unpersist()
+    registered = entry.queries()
+    stage = tempfile.mkdtemp(prefix="bench-stage-")
+    try:
+        inputs = stage_inputs(spark, stage)
+        times: dict[str, float] = {}
+        rows: dict[str, int] = {}
+        spread: dict[str, list[float]] = {}
+        for key in REGISTERED + list(VARIANTS):
+            state: dict = {}
+            variant = VARIANTS.get(key)
+            reptimes = []
+            for _ in range(max(reps, 5) if key in FIVE_REPS else reps):
+                # best-of-n shields the recorded number from one-off
+                # JIT/GC/host noise; building is inside the timed region
+                # because iterative operators do real work there
+                t0 = time.time()
+                if variant:
+                    df = variant.build(inputs, state)
+                else:
+                    df = registered[key](spark, stage)
+                force(df)
+                reptimes.append(time.time() - t0)
+            # sub-0.1 s rows keep 3 dp so fast queries never record 0.0;
+            # the rest keep 2 dp to fit the final line's tail budget
+            best = min(reptimes)
+            times[key] = round(best, 3 if best < 0.1 else 2)
+            # spread over the post-warm-up reps: rep 1 pays one-time
+            # costs by design (amortized fits, JIT)
+            warm = reptimes[1:] or reptimes
+            spread[key] = [round(min(warm), 3), round(max(warm), 3)]
+            rows[key] = df.count()  # untimed bookkeeping
+            for v in state.values():  # amortized state dies with its key
+                if hasattr(v, "unpersist"):
+                    v.unpersist()
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
     total = round(sum(times.values()), 3)
-    # The bench set grew from 25 (r4) to 39+ queries; this subtotal
-    # over the exact r4 set keeps cross-round comparison one
-    # subtraction away instead of buried in per-query diffs.
-    r4_set = {
-        "native_peak_pipeline", "native_peak_averages", "native_find_peaks",
-        "fidelity_peaks", "session_stats", "funnel_counts", "value_histogram",
-        "range_pairs_1h", "stratified_sample", "pack_chunks", "curated_corpus",
-        "dedup_exact", "dedup_clusters", "minhash_pairs", "unigram_logprob",
-        "simhash", "text_stats", "doc_fingerprints", "ann_cosine_topk",
-        "ann_lsh_topk", "pricing_summary", "top_revenue_orders",
-        "nation_pair_volume", "event_transitions", "repetition_profile",
-    }
-    r4_subtotal = round(sum(v for k, v in times.items() if k in r4_set), 3)
-    # r5 post-mortem: the driver records only a bounded TAIL of this
-    # process's combined output, and the single ~2.7 KB result line
-    # (queries + rows dicts together) plus Spark's console-progress
-    # noise overflowed it — BENCH_r05.json came back `parsed: null`
-    # with the object's head (headline total + first queries) cut off.
-    # Two changes keep the record parseable: the progress bar is off
-    # session-wide (session.py), and the `rows` bookkeeping moves to
-    # its own earlier line so the FINAL line — the one a tail buffer
-    # preserves — is the compact headline object.
-    # VERDICT r6 ask #5: make run-to-run variance machine-readable so
-    # the artifact itself distinguishes lockstep host noise from code
-    # regressions. Full per-query [min,max] rep spreads ride the
-    # earlier (rows) line; the tail-preserved FINAL line carries the
-    # compact per-family summary (max relative spread (max-min)/min
-    # across the family's queries) — ~150 bytes, inside the ~2.2 KB
-    # tail budget. A cross-round per-query delta smaller than its
-    # family's spread is noise by the artifact's own measurement.
-    def _family(q: str) -> str:
-        if q.startswith(("ann_", "pq_", "ivf_", "sq8_", "rp_")) or q in (
-            "semantic_dedup",
-        ):
-            return "emb"
-        if q.startswith("bpe_"):
-            return "bpe"
-        if q.startswith(("native_", "fidelity_")) or q in (
-            "envelopes", "peak_attributes", "constrained_peak_attributes",
-        ):
-            return "peaks"
-        if q in (
-            "pricing_summary", "top_revenue_orders", "nation_pair_volume",
-            "top_loss_customers", "idle_customer_balance",
-        ):
-            return "tpch"
-        if q in (
-            "session_stats", "funnel_counts", "value_histogram",
-            "range_pairs_1h", "event_transitions", "mad_outliers",
-        ) or q.startswith("resample_"):
-            return "events"
-        return "docs"
-
+    r4_subtotal = round(sum(v for k, v in times.items() if k in R4_SET), 3)
+    # per-family max relative warm spread (max-min)/min: a cross-run
+    # per-key delta smaller than its family's spread is noise by the
+    # run's own measurement
     fam_rel: dict[str, float] = {}
     for q, (lo, hi) in spread.items():
         rel = (hi - lo) / lo if lo > 0 else 0.0
@@ -580,40 +478,26 @@ def main() -> None:
     fam_rel = {f: round(v, 2) for f, v in sorted(fam_rel.items())}
 
     sys.stdout.flush()
-    # no "metric" key: this line must not pattern-match the contract
-    # object if the driver scans lines for it.
+    # Two lines. A harness may keep only a bounded tail of the output,
+    # so the bookkeeping goes first (with no "metric" key, so it never
+    # matches the headline object) and the headline line is last,
+    # ordered by survival priority from the END: scalars dead last, the
+    # spread dicts before them, per-key times first and sorted ascending
+    # so truncation eats the stable sub-second entries.
     print(json.dumps({"rows": rows, "rep_spread_sec": spread}), flush=True)
-    # VERDICT r11 ask #2: the driver preserves only the LAST ~2000
-    # chars of this final line, and r11's grown spread_5rep pushed the
-    # front-loaded headline scalars past the cut — BENCH_r11.json no
-    # longer contained its own headline number. json.dumps preserves
-    # insertion order, so the line is now ordered by survival priority
-    # FROM THE END: scalars (headline/r4/sf) dead last, the spread
-    # dicts just before them, and the per-query dict FIRST — sorted
-    # ascending by time so what truncation eats is the stable
-    # sub-second entries, never the slow movers cross-round
-    # comparison actually needs.
     print(
         json.dumps(
             {
                 "queries": dict(sorted(times.items(), key=lambda kv: kv[1])),
-                # per-query warm-rep [min,max] for the 5-rep set only
-                # (VERDICT r10 ask #7, r11 ask #1) — full spreads for
-                # every query ride the earlier rows line; these earn a
-                # slot on the tail-preserved line because their round-
-                # over-round verdicts kept needing ad-hoc A/B
-                # attribution.
                 "spread_rel_fam": fam_rel,
-                "spread_5rep": {
-                    q: spread[q] for q in _extra_reps if q in spread
-                },
+                "spread_5rep": {q: spread[q] for q in FIVE_REPS if q in spread},
                 "metric": "headline_total",
                 "value": total,
                 "unit": "sec",
                 "r4_subset_total": r4_subtotal,
                 "runs": reps,
                 "sf": sf,
-                "n_channels": n_channels,
+                "n_channels": inputs.n_channels,
                 "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
             }
         ),

@@ -1,6 +1,9 @@
 """Driver-facing LLM-pipeline queries over documents/embeddings.
-Each entry in QUERIES has a matching DuckDB mirror in ``llm.oracle``
-(except where noted); column names and rounding are matched exactly.
+
+Every ``q_<name>`` function defined here is the registered query
+``<name>`` (``__spark_entry__.queries()`` collects them); each has a
+matching DuckDB mirror in ``llm.oracle.ORACLES`` with column names and
+rounding matched exactly.
 """
 
 from __future__ import annotations
@@ -280,67 +283,16 @@ def q_training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.training_order(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES = {
-    "dedup_exact": q_dedup_exact,
-    "text_stats": q_text_stats,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "token_counts": q_token_counts,
-    "vocab_top100": q_vocab_top100,
-    "gopher_quality": q_gopher_quality,
-    "pii_scrub": q_pii_scrub,
-    "doc_fingerprints": q_doc_fingerprints,
-    "minhash_signatures": q_minhash_signatures,
-    "minhash_pairs": q_minhash_pairs,
-    "simhash": q_simhash,
-    "jaccard_pairs": q_jaccard_pairs,
-    "neardup_verified": q_neardup_verified,
-    "dedup_clusters": q_dedup_clusters,
-    "embedding_neardup": q_embedding_neardup,
-    "embedding_norms": q_embedding_norms,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "stratified_sample": q_stratified_sample,
-    "mixture_weights": q_mixture_weights,
-    "topk_per_source": q_topk_per_source,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-    "contamination": q_contamination,
-    "media_metadata": q_media_metadata,
-    "inverted_index": q_inverted_index,
-    "term_cooccurrence": q_term_cooccurrence,
-    "lm_quality_buckets": q_lm_quality_buckets,
-    "bigram_logprob": q_bigram_logprob,
-    "blocklist_filter": q_blocklist_filter,
-    "unigram_logprob": q_unigram_logprob,
-    "pack_chunks": q_pack_chunks,
-    "packing_stats": q_packing_stats,
-    "curated_corpus": q_curated_corpus,
-    "duplicated_spans": q_duplicated_spans,
-    "semantic_dedup": q_semantic_dedup,
-    "sketch_profile": q_sketch_profile,
-    "per_source_profile": q_per_source_profile,
-    "training_order": q_training_order,
-}
-
-
 def q_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher top-n-gram repetition metrics (explode → two keyed
     map-side-combinable aggregates; no window, no per-doc sort)."""
     return text.repetition_profile(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["repetition_profile"] = q_repetition_profile
-
-
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization code words over embeddings (deterministic
     per-subspace k-means; broadcast codebook, map-side assignment)."""
     return similarity.pq_codes(read_table(spark, sf_dir, "embeddings"))
-
-
-QUERIES["pq_codes"] = q_pq_codes
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,17 +302,11 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "rank")
 
 
-QUERIES["pq_topk"] = q_pq_topk
-
-
 def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC shortlist -> exact cosine re-rank (the IVF+PQ production
     pattern; exact math touches Q*shortlist pairs only)."""
     out = similarity.pq_rerank_topk(read_table(spark, sf_dir, "embeddings"))
     return _long(out, "rank")
-
-
-QUERIES["pq_rerank_topk"] = q_pq_rerank_topk
 
 
 def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,9 +315,6 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pattern as one operator)."""
     out = similarity.ivf_pq_topk(read_table(spark, sf_dir, "embeddings"))
     return _long(out, "rank")
-
-
-QUERIES["ivf_pq_topk"] = q_ivf_pq_topk
 
 
 def q_ivf_pq_topk_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,17 +329,11 @@ def q_ivf_pq_topk_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "rank")
 
 
-QUERIES["ivf_pq_topk_prefit"] = q_ivf_pq_topk_prefit
-
-
 def q_levenshtein_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-level (edit-distance) verification of the MinHash-LSH
     candidates — the near-dup check Jaccard is blind to; per-pair DP
     only on band-bucket candidates, never all-pairs."""
     return dedup.levenshtein_neardup(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["levenshtein_neardup"] = q_levenshtein_neardup
 
 
 def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -405,16 +342,10 @@ def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packing.chunk_overlap(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["chunk_overlap"] = q_chunk_overlap
-
-
 def q_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar int8 quantization codes (FAISS SQ8 pattern): one per-dim
     max agg -> broadcast scale vector -> zero-shuffle code pass."""
     return similarity.sq8_codes(read_table(spark, sf_dir, "embeddings"))
-
-
-QUERIES["sq8_codes"] = q_sq8_codes
 
 
 def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,17 +355,11 @@ def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "rank")
 
 
-QUERIES["sq8_topk"] = q_sq8_topk
-
-
 def q_remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The span-CUT step (Lee et al.): corpus re-emitted with every
     token covered by a corpus-duplicated 8-gram removed; map-only
     nested-HOF cut after a sparse starts gather."""
     return text.remove_dup_spans(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["remove_dup_spans"] = q_remove_dup_spans
 
 
 def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,16 +368,10 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_report(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["dedup_report"] = q_dedup_report
-
-
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source OOV rate against the corpus top-100 vocabulary —
     the tokenizer-fit-by-domain report."""
     return text.vocab_coverage(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["vocab_coverage"] = q_vocab_coverage
 
 
 def q_training_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,18 +382,12 @@ def q_training_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate.training_corpus_manifest(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["training_corpus_manifest"] = q_training_corpus_manifest
-
-
 def q_ivf_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed IVF×SQ8 search (the FAISS IVFx,SQ8 pattern): nprobe
     posting lists scored against int8-reconstructed candidates — the
     fit-free compressed search."""
     out = similarity.ivf_sq8_topk(read_table(spark, sf_dir, "embeddings"))
     return _long(out, "rank")
-
-
-QUERIES["ivf_sq8_topk"] = q_ivf_sq8_topk
 
 
 def q_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,16 +397,10 @@ def q_quality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.quality_prune(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["quality_prune"] = q_quality_prune
-
-
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-keyed train/val/test assignment: near-dup families never
     straddle a split boundary (the Lee-et-al. contamination guard)."""
     return sampling.leakage_safe_split(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["leakage_safe_split"] = q_leakage_safe_split
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,16 +409,10 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.containment_pairs(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["containment_pairs"] = q_containment_pairs
-
-
 def q_encode_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary encoding: top-V token ids per document (distributed
     TakeOrdered vocab, broadcast encode join, bounded per-doc fold)."""
     return text.encode_token_ids(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["encode_token_ids"] = q_encode_token_ids
 
 
 def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,16 +422,10 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.dup_span_fraction(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["dup_span_fraction"] = q_dup_span_fraction
-
-
 def q_rp_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Achlioptas sparse random projection to 8 dims (map-only HOF,
     closed-form ±1/0 coefficients, exact integer-micro arithmetic)."""
     return similarity.rp_project(read_table(spark, sf_dir, "embeddings"))
-
-
-QUERIES["rp_project"] = q_rp_project
 
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,9 +448,6 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["bpe_vocab"] = q_bpe_vocab
-
-
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus re-tokenized under the learned BPE merges (per-row LTR
     fold inside codegen — no UDF, no shuffle in the apply).
@@ -566,9 +458,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe.bpe_encode(
         read_table(spark, sf_dir, "documents"), batch_merges=1
     )
-
-
-QUERIES["bpe_encode"] = q_bpe_encode
 
 
 def q_blocklist_filter_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,18 +476,12 @@ def q_blocklist_filter_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source", "n_chars")
 
 
-QUERIES["blocklist_filter_bloom"] = q_blocklist_filter_bloom
-
-
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE serving path: fixed pre-trained merge rules inlined as one
     chained codegen fold - map-only, no fit, no shuffle."""
     from . import bpe
 
     return bpe.bpe_apply(read_table(spark, sf_dir, "documents"), bpe.APPLY_MERGES)
-
-
-QUERIES["bpe_apply"] = q_bpe_apply
 
 
 def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,16 +494,10 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.incremental_neardup(new_docs, corpus)
 
 
-QUERIES["incremental_neardup"] = q_incremental_neardup
-
-
 def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc Shannon entropy of the token distribution (two
     doc-keyed map-combinable aggregates; quantized log2 sums)."""
     return text.token_entropy(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["token_entropy"] = q_token_entropy
 
 
 def q_rp_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -629,9 +506,6 @@ def q_rp_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank over the probed posting lists in the original space."""
     out = similarity.rp_ivf_topk(read_table(spark, sf_dir, "embeddings"))
     return _long(out, "rank")
-
-
-QUERIES["rp_ivf_topk"] = q_rp_ivf_topk
 
 
 def q_hybrid_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,16 +518,10 @@ def q_hybrid_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["hybrid_neardup"] = q_hybrid_neardup
-
-
 def q_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware final corpus: longest doc per cluster (ties ->
     lowest doc_id), singletons kept."""
     return dedup.canonical_corpus(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["canonical_corpus"] = q_canonical_corpus
 
 
 def q_prototype_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -663,16 +531,10 @@ def q_prototype_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "rank")
 
 
-QUERIES["prototype_outliers"] = q_prototype_outliers
-
-
 def q_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Square-root temperature sampling mixture over sources (exact
     integer-ppb normalization - no cross-engine float-sum order)."""
     return sampling.temperature_weights(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["temperature_weights"] = q_temperature_weights
 
 
 def q_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,10 +575,6 @@ def q_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "n_tracks")
 
 
-QUERIES["audio_metadata"] = q_audio_metadata
-QUERIES["video_metadata"] = q_video_metadata
-
-
 def q_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """External-query serving against the prefit IVF×PQ index
     (:func:`similarity.ivf_pq_search`): the same query batch the
@@ -731,9 +589,6 @@ def q_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("query_id"), "embedding")
     out = similarity.ivf_pq_search(qs, idx)
     return _long(out, "rank")
-
-
-QUERIES["ann_serve"] = q_ann_serve
 
 
 def q_ivf_list_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,9 +608,6 @@ def q_ivf_list_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "list_size")
 
 
-QUERIES["ivf_list_sizes"] = q_ivf_list_sizes
-
-
 def q_tfidf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidates-tier tf-idf verification (VERDICT r8 ask #5): score
     MinHash-LSH candidate pairs with the full-corpus tf-idf cosine —
@@ -768,9 +620,6 @@ def q_tfidf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _long(out, "shared_terms")
 
 
-QUERIES["tfidf_verify"] = q_tfidf_verify
-
-
 def q_dup_spans_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scoped span-cut (VERDICT r8 ask #5): rewrite only a doc subset
     (deterministic doc_id % 4 slice here; production passes dedup
@@ -779,9 +628,6 @@ def q_dup_spans_scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     scope = docs.filter(F.col("doc_id") % 4 == 0).select("doc_id")
     return text.remove_dup_spans_scoped(docs, scope)
-
-
-QUERIES["dup_spans_scoped"] = q_dup_spans_scoped
 
 
 def q_dup_spans_scoped_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,9 +643,6 @@ def q_dup_spans_scoped_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.remove_dup_spans_scoped(docs, scope, dup_grams=stats)
 
 
-QUERIES["dup_spans_scoped_prefit"] = q_dup_spans_scoped_prefit
-
-
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR log importance weights (Xie et al. 2023) of every document
     toward the 'src0' target slice: hashed unigram+bigram bag-of-words
@@ -810,17 +653,11 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.dsir_logweights(read_table(spark, sf_dir, "documents"))
 
 
-QUERIES["dsir_weights"] = q_dsir_weights
-
-
 def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Gumbel top-k DSIR resample (k=100): the weight
     plan plus a map-side md5-derived Gumbel key; top-k compiles to
     TakeOrderedAndProject (no global sort materializes)."""
     return sampling.dsir_resample(read_table(spark, sf_dir, "documents"))
-
-
-QUERIES["dsir_sample"] = q_dsir_sample
 
 
 def q_dsir_weights_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,9 +671,6 @@ def q_dsir_weights_prefit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.dsir_logweights(docs, logratio=model)
 
 
-QUERIES["dsir_weights_prefit"] = q_dsir_weights_prefit
-
-
 def q_dsir_curated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR composed into the curation pipeline: fit the hashed-ngram
     model on the CURATED pool (dedup + quality + Gopher survivors) and
@@ -848,9 +682,6 @@ def q_dsir_curated_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = curate.curated_corpus(docs).select("doc_id")
     pool = docs.join(kept, "doc_id")
     return sampling.dsir_resample(pool)
-
-
-QUERIES["dsir_curated_sample"] = q_dsir_curated_sample
 
 
 def q_ann_serve_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -871,9 +702,6 @@ def q_ann_serve_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("vec_id").alias("query_id"), "embedding")
     out = similarity.ivf_pq_search(qs, idx2)
     return _long(out, "rank")
-
-
-QUERIES["ann_serve_appended"] = q_ann_serve_appended
 
 
 def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -902,9 +730,6 @@ def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return warc_documents(parse_warc(blobs)).select(
         "doc_id", "text", "lang", "source"
     )
-
-
-QUERIES["warc_roundtrip"] = q_warc_roundtrip
 
 
 def q_warc_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,9 +762,6 @@ def q_warc_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl_documents(parse_warc(blobs))
 
 
-QUERIES["warc_extract_text"] = q_warc_extract_text
-
-
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization (round 13): the RFC 3986 §6 syntax rules +
     tracking-param strip over the deterministic messy-URL fabric
@@ -954,9 +776,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["url_canonicalize"] = q_url_canonicalize
-
-
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-level exact dedup: one hash-groupBy on the canonical URL —
     variants 0-2 of each doc_id%200 class collide by construction, so
@@ -967,9 +786,6 @@ def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return urls.url_dedup(
         urls.synth_urls(read_table(spark, sf_dir, "documents"))
     )
-
-
-QUERIES["url_dedup"] = q_url_dedup
 
 
 def q_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,9 +800,6 @@ def q_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
         urls.synth_urls(docs).join(docs.select("doc_id", "text"), "doc_id"),
         max_per_domain=100,
     )
-
-
-QUERIES["domain_caps"] = q_domain_caps
 
 
 def _next_snapshot(docs: DataFrame) -> DataFrame:
@@ -1019,9 +832,6 @@ def q_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     state = curate.manifest_prefit_state(docs)
     return curate.incremental_corpus_manifest(_next_snapshot(docs), state)
-
-
-QUERIES["incremental_manifest"] = q_incremental_manifest
 
 
 def q_crawl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,9 +871,6 @@ def q_crawl_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl.crawl_curated_corpus(parse_warc(blobs), max_per_domain=8)
 
 
-QUERIES["crawl_corpus"] = q_crawl_corpus
-
-
 def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff (round 12): simulate tomorrow's crawl snapshot
     deterministically from the documents table — doc_id%10==0 removed,
@@ -1086,9 +893,6 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return curate.corpus_diff(docs, new)
-
-
-QUERIES["corpus_diff"] = q_corpus_diff
 
 
 def q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1123,4 +927,3 @@ def q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text")
 
 
-QUERIES["bpe_roundtrip"] = q_bpe_roundtrip

@@ -8,32 +8,67 @@ checks catch that class of wiring bug at pytest time.
 from __future__ import annotations
 
 import importlib.util
+import inspect
 import os
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: queries() keys that intentionally have no oracle_sql() entry
-#: (non-SQL-expressible; the driver records a rows-only check).
-ROWS_ONLY = {
-    "fidelity_peaks",
-    "fidelity_signal",
-    "native_find_peaks",
-    "sketch_profile",
-    "constrained_peak_attributes",
-}
+#: (the reference-exact pandas twins; the driver records a rows-only
+#: check). Exact, so losing any other query's oracle fails here.
+ROWS_ONLY = {"fidelity_peaks", "fidelity_signal"}
+
+
+def _load(name: str):
+    if name in sys.modules:
+        return sys.modules[name]
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(REPO_ROOT, f"{name}.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[name] = mod
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def _entry():
-    if "__spark_entry__" in sys.modules:
-        return sys.modules["__spark_entry__"]
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO_ROOT, "__spark_entry__.py")
+    return _load("__spark_entry__")
+
+
+def test_queries_are_exactly_the_q_builders():
+    """Defining ``q_<name>`` in either query module registers ``<name>``
+    and nothing else does: an imported ``q_`` function never counts."""
+    from myodish_peak_analysis_spark import queries as core
+    from myodish_peak_analysis_spark.llm import queries as llm
+
+    builders = {}
+    for module in (core, llm):
+        for attr, fn in inspect.getmembers(module, inspect.isfunction):
+            if attr.startswith("q_") and fn.__module__ == module.__name__:
+                assert attr[2:] not in builders, f"{attr} defined twice"
+                builders[attr[2:]] = fn
+    assert _entry().queries() == builders
+
+
+def test_bench_keys_are_registered_queries_or_declared_variants():
+    """bench.py times a registered name only through its registered
+    builder; every other key is a ``<registered>@<label>`` variant that
+    declares its base and why the registered builder cannot measure it."""
+    registered = set(_entry().queries())
+    bench = _load("bench")
+    assert len(set(bench.REGISTERED)) == len(bench.REGISTERED)
+    assert set(bench.REGISTERED) <= registered, (
+        set(bench.REGISTERED) - registered
     )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["__spark_entry__"] = mod
-    spec.loader.exec_module(mod)
-    return mod
+    for key, variant in bench.VARIANTS.items():
+        base, _, label = key.partition("@")
+        assert label, f"variant {key} has no @label"
+        assert base == variant.base, key
+        assert base in registered, f"variant {key} of unregistered {base}"
+        assert variant.reason.strip(), f"variant {key} gives no reason"
+    assert set(bench.FIVE_REPS) <= set(bench.REGISTERED) | set(bench.VARIANTS)
+    assert bench.R4_SET <= set(bench.REGISTERED) | set(bench.VARIANTS)
 
 
 def test_queries_registry_is_well_formed():

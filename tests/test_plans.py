@@ -9,13 +9,14 @@ baseline — plan as BroadcastNestedLoopJoin and are allowed.)
 
 from __future__ import annotations
 
+import os
 import sys
 
 from tests.conftest import SF001
 
 
 def test_no_cartesian_product_in_any_registered_query(spark):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from tools.audit_plans import PYTHON_ALLOWED
 

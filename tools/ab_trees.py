@@ -197,7 +197,7 @@ print("ABRESULT " + json.dumps(out), flush=True)
 # a real fixed cost on the prefit path rather than host noise. Exact
 # bench formulations: repartition+cache warm-up outside the timed
 # region; the prefit index fits lazily on the FIRST rep so min-of-3
-# records the search-only cost (bench.py's _prefit_ivf_pq_search).
+# records the search-only cost (bench.py's ivf_pq_topk_prefit@amortized).
 CHILD_EMB = r'''
 import json, os, sys, time
 tree = sys.argv[1]

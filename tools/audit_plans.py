@@ -9,8 +9,9 @@ Writes a markdown table to stdout; redirect into docs/.
 
 ``--dump DIR`` instead writes each registered query's optimized
 logical plan to ``DIR/<name>.txt``, with expression ids (``#123``, ``#45L``) normalised to
-``#N`` and physical-plan ids (``plan_id=123``, printed inside cached
-relations) to ``plan_id=N``: both are per-process counters. Dumps
+``#N``, physical-plan ids (``plan_id=123``, printed inside cached
+relations) to ``plan_id=N`` and lambda variables (``lambda x_49``) to
+``lambda x_N``: all three are per-process counters. Dumps
 taken from two trees then compare with one ``diff -r DIR_A DIR_B``:
 empty output means the change left every plan as it was.
 """
@@ -47,6 +48,7 @@ PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
 
 _EXPR_ID = re.compile(r"#\d+L?")
 _PLAN_ID = re.compile(r"plan_id=\d+")
+_LAMBDA_VAR = re.compile(r"lambda ([xyz])_\d+")
 
 
 def dump(spark, out_dir: str) -> None:
@@ -61,7 +63,8 @@ def dump(spark, out_dir: str) -> None:
         except Exception as exc:  # noqa: BLE001
             plan = f"failed to plan: {type(exc).__name__}: {exc}"
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
-            f.write(_PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan)) + "\n")
+            plan = _LAMBDA_VAR.sub(r"lambda \1_N", _EXPR_ID.sub("#N", plan))
+            f.write(_PLAN_ID.sub("plan_id=N", plan) + "\n")
         print(name, flush=True)
 
 

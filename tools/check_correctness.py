@@ -8,6 +8,7 @@ Usage: python tools/check_correctness.py [name ...]   (default: all)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -15,7 +16,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from myodish_peak_analysis_spark.schema import HARNESS_TABLES  # noqa: E402
