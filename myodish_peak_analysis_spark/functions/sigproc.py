@@ -23,6 +23,7 @@ import numpy as np
 
 __all__ = [
     "savgol_coeffs",
+    "shifted_add_fold",
     "savgol_filter_nearest",
     "local_maxima_plateau",
     "peak_prominences",
@@ -51,6 +52,35 @@ def savgol_coeffs(window_length: int, polyorder: int) -> np.ndarray:
     return np.linalg.pinv(a)[0]
 
 
+def shifted_add_fold(
+    xpad: np.ndarray, coeffs: np.ndarray, start: float | None = None
+) -> np.ndarray:
+    """FIR correlation ``out[i] = sum_k coeffs[k] * xpad[i + k]`` as a
+    shifted-add fold over the whole array, ``len(xpad) - len(coeffs) + 1``
+    outputs at once.
+
+    Every output is summed in the same order a sequential per-row loop
+    would use, ``k = 0, 1, ..., len(coeffs) - 1``, so the result is
+    bit-identical to a left-to-right fold (np.convolve and np.dot promise
+    no order). ``start=None`` starts each sum from its first term;
+    ``start=0.0`` starts from ``0.0``, as an ``aggregate(..., 0.0, ...)``
+    fold does. The two differ only in the sign of an all-zero sum
+    (``0.0 + -0.0`` is ``0.0``). NaN propagates like any IEEE sum.
+    """
+    xpad = np.asarray(xpad, dtype=np.float64)
+    n = xpad.size - coeffs.size + 1
+    if n <= 0:
+        return np.empty(0)
+    acc = xpad[:n] * coeffs[0]
+    if start is not None:
+        acc = start + acc
+    term = np.empty(n)
+    for k in range(1, coeffs.size):
+        np.multiply(xpad[k : k + n], coeffs[k], out=term)
+        acc += term
+    return acc
+
+
 def savgol_filter_nearest(
     y: np.ndarray, window_length: int, polyorder: int
 ) -> np.ndarray:
@@ -66,8 +96,7 @@ def savgol_filter_nearest(
     if y.size == 0:
         return y.copy()
     ypad = np.concatenate([np.full(half, y[0]), y, np.full(half, y[-1])])
-    # sum_k c[k] * ypad[i + k]  == correlation; np.convolve flips, so flip c.
-    return np.convolve(ypad, c[::-1], mode="valid")
+    return shifted_add_fold(ypad, c)
 
 
 def local_maxima_plateau(y: np.ndarray):

@@ -11,48 +11,56 @@ SG-smoothed (301/3, mode='nearest') WITHOUT stripping, so for the defaults
 (``2*pad == window``) the output has exactly length ``n`` again but is a
 *shifted* view: ``out[j]`` smooths ``raw[j-pad]`` for interior ``j``.
 
-Spark decomposition. A frame extremum of ``y[i:i+w]`` is exactly a global
-per-channel extremum whose plateau lies strictly inside the frame
-(``i+1 <= j <= i+w-2``) — a conditional rolling aggregate. Expanding
-``padded[j]`` gives three zones, each a frame aggregate at a different
-offset:
+A frame extremum of ``y[i:i+w]`` is exactly a global per-channel extremum
+whose plateau lies strictly inside the frame (``i+1 <= j <= i+w-2``), so
+``raw`` is a conditional rolling min/max over the plateau-midpoint flags
+of :func:`.windows.with_extrema_flags`, which stays a Spark window stage.
+Expanding ``padded[j]`` gives three zones, each that rolling aggregate at
+a different offset:
 
     j < pad:            padded[j] = raw[j]       -> frame [j+1,     j+w-2]
     pad <= j < m+pad:   padded[j] = raw[j-pad]   -> frame [j+1-pad, j+w-2-pad]
     j >= m+pad:         padded[j] = raw[j-2pad]  -> frame [j+1-2pad, j+w-2-2pad]
 
-NULL when no extremum in frame == the reference's NaN, for free. The SG
-smooth of ``padded`` (nearest mode over the channel domain) is ONE
-``collect_list`` over a ±150-row frame + an ``aggregate`` dot product with
-the coefficient literals — a single window expression per envelope rather
-than 301 ``lag``/``lead`` terms (a Catalyst plan-size hazard observed in
-round 1). NULLs ride through the array as NaN sentinels and poison the
-dot product exactly like the reference's NaN propagation; they convert
-back to NULL on output.
+:func:`smoothed_envelope` builds ``padded`` per channel in NumPy and runs
+the 301-tap SG smooth as :func:`..functions.sigproc.shifted_add_fold` from
+``0.0``, one channel per :func:`.windows.map_channels` call for both
+envelopes. The aggregates follow Spark SQL's rules, which the DuckDB
+oracle (:func:`smoothed_envelopes_sql_cte`) mirrors: ``max`` treats NaN as
+the largest value, ``min`` ignores NaN unless the frame holds nothing
+else, and a frame with no extremum is NULL. NULL and NaN both poison the
+smooth, and a poisoned output is NULL, never NaN.
 
-Scale: everything is window functions over one (channel_id, sample_idx)
-sort — no joins, no UDFs, no Python. Channels shorter than
-``window + pad`` rows yield NULL envelopes (the reference itself
-misbehaves below that length: its padding arithmetic needs ``m >= pad``).
-The native route requires ``2*pad == window`` (true for the reference
-defaults 350/301); other combinations break the reference's own
-length-restoration trick — use the fidelity route for those.
+A kernel rather than Spark SQL: as window expressions the smooth is a
+±150-row ``collect_list`` window per envelope folded by a
+``zip_with``/``aggregate`` higher-order function, and the window buffer
+alone was most of the pipeline's envelope stage.
+
+Channels shorter than ``window + pad`` rows yield NULL envelopes (the
+reference itself misbehaves below that length: its padding arithmetic
+needs ``m >= pad``). The native route requires ``2*pad == window`` (true
+for the reference defaults 350/301); other combinations break the
+reference's own length-restoration trick — use the fidelity route for
+those.
 """
 
 from __future__ import annotations
 
-import math
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
-
-from ..functions.sigproc import savgol_coeffs
-from .windows import CHANNEL, IDX, channel_window, with_extrema_flags
+from ..functions.sigproc import savgol_coeffs, shifted_add_fold
+from .windows import channel_window, column_values, map_channels, with_extrema_flags
 
 DEFAULT_WINDOW = 350  # aux_window_size, /root/reference/peak_detection.py:15
 DEFAULT_SMOOTH = 301  # aux_smoothing_window
 DEFAULT_POLY = 3  # aux_polyorder
 DEFAULT_REL = 0.1  # relative_to_baseline, /root/reference/peak_detection.py:16
+
+#: output column -> (flag column, extremum kind) of each envelope
+ENVELOPES = {"baseline": ("is_valley", "valley"), "ceiling": ("is_peak", "peak")}
 
 
 def with_raw_envelopes(
@@ -76,86 +84,34 @@ def with_raw_envelopes(
     ).withColumn(ceil_col, F.max(F.when(F.col("is_peak"), v)).over(w))
 
 
-def _padded_envelope_col(
-    value_col: str,
+def smoothed_envelope(
+    x: np.ndarray,
+    is_null: np.ndarray,
+    flag: np.ndarray,
     kind: str,
     window_size: int,
-    pad: int,
-) -> Column:
-    """The reference's block-padded raw envelope as a three-zone CASE of
-    conditional frame aggregates. Requires ``_n`` per-channel row count."""
-    flag = F.col("is_peak" if kind == "peak" else "is_valley")
-    v = F.when(flag, F.col(value_col))
-    agg = F.max if kind == "peak" else F.min
-    w = channel_window()
-    hi = window_size - 2
-    zone_a = agg(v).over(w.rowsBetween(1, hi))
-    # zone_b's frame [j+1-pad, j+hi-pad] is zone_a's frame evaluated at
-    # row j-pad, and in zone_b's whole usage range (pad <= j <
-    # n-window+pad) that row exists and its frame is never clipped — so
-    # an O(n) lag of zone_a replaces a second O(n·w) sliding aggregate
-    # with bit-identical values (min/max are order-insensitive). zone_c
-    # (tail rows only) can NOT use lag(zone_a, 2*pad): for
-    # n < window+2*pad its true frame clips at the partition start,
-    # which the lag would turn into NULL instead of the clipped extreme.
-    zone_b = F.lag(zone_a, pad).over(w)
-    if 2 * pad == window_size:
-        # zone_c's frame [j+1-2pad, j+hi-2pad] is zone_a's frame at row
-        # j-2pad. Under the native route's 2*pad == window invariant the
-        # lag is bit-identical ON EVERY USAGE ROW (the CASE's otherwise
-        # branch: j >= n-pad with n >= 3pad, so j-2pad >= 0 exists and
-        # the frame neither start- nor end-clips — verified empirically
-        # across channel lengths 525..1200 straddling all boundary
-        # regimes), replacing the second O(n·w) sliding aggregate with
-        # an O(n) lag, exactly like zone_b.
-        zone_c = F.lag(zone_a, 2 * pad).over(w)
-    else:
-        zone_c = agg(v).over(w.rowsBetween(1 - 2 * pad, hi - 2 * pad))
-    n, idx = F.col("_n"), F.col(IDX)
-    return (
-        F.when(n < window_size + pad, F.lit(None).cast("double"))
-        .when(idx < pad, zone_a)
-        .when(idx < n - window_size + pad, zone_b)
-        .otherwise(zone_c)
+    coeffs: np.ndarray,
+) -> np.ndarray:
+    """One padded + SG-smoothed envelope of a channel of ``n >= window +
+    pad`` rows, with NaN where the output is NULL. ``x``/``is_null`` are
+    the smoothed signal, ``flag`` its is_peak (``kind="peak"``) or
+    is_valley flags."""
+    n, hi, half = x.size, window_size - 2, coeffs.size // 2
+    pad, m = window_size // 2, x.size - window_size
+    nan = flag & ~is_null & np.isnan(x)
+    v = np.where(flag & ~is_null & ~nan, x, np.nan)[1:]
+    roll = pd.Series(v).rolling(hi, min_periods=1)
+    # raw[i] aggregates rows [i+1, i+hi], the trailing window ending at
+    # v[i+hi-1]; for i < m the frame never reaches past the channel end.
+    raw = (roll.max() if kind == "peak" else roll.min()).to_numpy()[hi - 1 : hi - 1 + m]
+    if kind == "peak":
+        n_nan = np.concatenate([[0], np.cumsum(nan[1:])])
+        raw[n_nan[hi : hi + m] > n_nan[:m]] = np.nan
+    padded = np.concatenate([raw[:pad], raw, raw[m - pad :]])
+    ypad = np.concatenate(
+        [np.full(half, padded[0]), padded, np.full(half, padded[n - 1])]
     )
-
-
-def _sg_smooth_array_col(
-    value_col: str,
-    smoothing_window_length: int,
-    polyorder: int,
-) -> Column:
-    """SG smooth with 'nearest' edges as ONE collect_list window + an
-    aggregate dot product. NULL inputs ride as NaN sentinels (collect_list
-    drops NULLs, NaN keeps alignment) and poison the sum; the caller maps
-    NaN back to NULL. Requires ``_max_idx`` helper column."""
-    coeffs = savgol_coeffs(smoothing_window_length, polyorder)
-    half = smoothing_window_length // 2
-    w = channel_window()
-    nan = F.lit(float("nan"))
-    nanv = F.coalesce(F.col(value_col), nan)
-    arr = F.collect_list(nanv).over(w.rowsBetween(-half, half))
-    first_v = F.first(nanv).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    # nanv is never NULL (coalesced to NaN), so the channel-tail value is
-    # the last row of the WHOLE partition — the unbounded-both frame is
-    # Spark's O(n) entire-partition path, vs the O(n^2) per-row rescan an
-    # UnboundedFollowing frame ((0, unboundedFollowing)) would cost.
-    last_v = F.last(nanv).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    idx = F.col(IDX)
-    left_miss = F.greatest(F.lit(0), F.lit(half) - idx).cast("int")
-    right_miss = F.greatest(F.lit(0), idx + half - F.col("_max_idx")).cast("int")
-    full = F.concat(
-        F.array_repeat(first_v, left_miss), arr, F.array_repeat(last_v, right_miss)
-    )
-    coeff_arr = F.array(*[F.lit(float(c)) for c in coeffs])
-    dot = F.aggregate(
-        F.zip_with(full, coeff_arr, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(F.isnan(dot), F.lit(None).cast("double")).otherwise(dot)
+    return shifted_add_fold(ypad, coeffs, start=0.0)
 
 
 def with_smoothed_envelopes(
@@ -169,12 +125,7 @@ def with_smoothed_envelopes(
     """baseline/ceiling = the reference's padded + SG-smoothed envelopes
     (defaults 350/301/3, ``/root/reference/peak_detection.py:15``),
     reproduced exactly — including the ~``pad``-sample shift its padding
-    introduces for interior rows (see module docstring).
-
-    (A merged formulation sharing one collect_list of (floor, ceil)
-    structs between the two smooths was measured at sf0.1 and rejected:
-    2.16 s vs 2.18 s — the cost lives in the two 301-term dot products,
-    not the window buffer, so the struct plumbing bought nothing.)"""
+    introduces for interior rows (see module docstring)."""
     pad = max(window_size, smoothing_window_length) // 2
     if 2 * pad != window_size:
         raise ValueError(
@@ -184,18 +135,20 @@ def with_smoothed_envelopes(
         )
     if not flags_present:
         df = with_extrema_flags(df, value_col=value_col)
-    wall = Window.partitionBy(CHANNEL)
-    df = df.withColumn("_n", F.count(F.lit(1)).over(wall)).withColumn(
-        "_max_idx", F.max(IDX).over(wall)
-    )
-    for kind, out in (("valley", "baseline"), ("peak", "ceiling")):
-        padded = _padded_envelope_col(value_col, kind, window_size, pad)
-        df = df.withColumn(f"_pad_{out}", padded)
-        df = df.withColumn(
-            out,
-            _sg_smooth_array_col(f"_pad_{out}", smoothing_window_length, polyorder),
-        ).drop(f"_pad_{out}")
-    return df.drop("_n", "_max_idx")
+    coeffs = savgol_coeffs(smoothing_window_length, polyorder)
+
+    def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        if t.num_rows < window_size + pad:
+            return {c: pa.nulls(t.num_rows, pa.float64()) for c in ENVELOPES}
+        x, null = column_values(t, value_col)
+        out = {}
+        for name, (flag_col, kind) in ENVELOPES.items():
+            flag = t.column(flag_col).fill_null(False).to_numpy()
+            env = smoothed_envelope(x, null, flag, kind, window_size, coeffs)
+            out[name] = pa.array(env, mask=np.isnan(env))
+        return out
+
+    return map_channels(df, kernel, tuple(ENVELOPES))
 
 
 def with_diastolic(
@@ -264,13 +217,14 @@ def smoothed_envelopes_sql_cte(
     polyorder: int = DEFAULT_POLY,
 ) -> str:
     """CTE chain ending in ``envsmooth`` with baseline/ceiling columns,
-    mirroring :func:`with_smoothed_envelopes` construct-for-construct:
-    NaN-sentinel values collected by a windowed ``list()`` (frame order,
-    NULLs preserved as NaN), nearest-clamp edge repair via
-    ``list_transform(range(missing), …)`` repeats, and one
-    ``list_dot_product`` against the coefficient literal — 2 window
-    expressions total instead of 602 lag/lead terms (which were both a
-    binder-recursion hazard and a memory hog in DuckDB)."""
+    computing what :func:`with_smoothed_envelopes` computes, in SQL:
+    the three zones as framed MIN/MAX windows, NaN-sentinel values
+    collected by a windowed ``list()`` (frame order, NULLs preserved as
+    NaN), nearest-clamp edge repair via ``list_transform(range(missing),
+    …)`` repeats, and one ``list_dot_product`` against the coefficient
+    literal — 2 window expressions total instead of 602 lag/lead terms
+    (which were both a binder-recursion hazard and a memory hog in
+    DuckDB)."""
     pad = max(window_size, smoothing_window_length) // 2
     hi = window_size - 2
     min_n = window_size + pad

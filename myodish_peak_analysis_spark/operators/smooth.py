@@ -1,4 +1,4 @@
-"""Savitzky–Golay smoothing as a pure-Spark FIR window expression.
+"""Savitzky–Golay smoothing as a per-channel NumPy fold.
 
 The reference smooths with ``scipy.signal.savgol_filter(..., mode='nearest')``
 after duplicating the first/last ``window//2`` samples as padding
@@ -12,70 +12,49 @@ stripped convolution gives, for output row ``j`` and tap offset
                  y[j+d-h]      if j+d >= n           (tail: block pad)
 
 (the 'nearest' extension of ``ypad`` is never consulted for the stripped
-outputs). All three branches are plain ``lag``/``lead`` reads within the
-channel, so the EXACT reference smooth — edges included — is expressible
-as one window projection that stays inside Tungsten whole-stage codegen:
-no Python boundary, no Arrow hop, reusing the single
-``(channel_id, sample_idx)`` sort every other stage needs. NULL inputs
-poison every output within ``window//2`` taps, matching NumPy NaN
-propagation through a convolution. Channels shorter than ``window//2 + 1``
-rows produce NULL edge outputs (the reference would misbehave there too).
+outputs), so the EXACT reference smooth — edges included — is the FIR
+correlation of ``ypad`` with the SG weights. It runs once per channel in
+:func:`.windows.map_channels` as :func:`..functions.sigproc.shifted_add_fold`,
+which sums every row's 51 terms in tap order, the order the DuckDB oracle
+(:func:`fir_smooth_sql_expr`) uses too. A NULL input poisons every output
+within ``window//2`` taps to NULL; a NaN input makes them NaN, as in the
+reference's NumPy convolution. A channel shorter than ``window//2`` rows
+smooths to all NULL (its head pad reads past the channel end; the
+reference would misbehave there too).
+
+A kernel rather than Spark SQL: as window expressions the 51 taps and
+their edge branches are ~100 ``lag``/``lead`` functions per row, the
+most expensive step of the pipeline.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.window import Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 
-from ..functions.sigproc import savgol_coeffs
-from .windows import CHANNEL, IDX, channel_window
-
-
-def _tap(value_col: str, offset: int, w) -> Column:
-    """Read ``value_col`` at ``sample_idx + offset`` within the channel."""
-    if offset == 0:
-        return F.col(value_col)
-    if offset > 0:
-        return F.lead(value_col, offset).over(w)
-    return F.lag(value_col, -offset).over(w)
+from ..functions.sigproc import savgol_coeffs, shifted_add_fold
+from .windows import column_values, map_channels
 
 
-def fir_smooth_col(
-    value_col: str,
-    window_length: int,
-    polyorder: int,
-    idx_col: str = IDX,
-    max_idx_col: str = "_max_idx",
-) -> Column:
-    """Exact reference Savitzky–Golay smoothing column (block-pad edges).
+def fir_smooth(
+    x: np.ndarray, is_null: np.ndarray, coeffs: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block-padded SG smooth of one channel as (values, is_null).
 
-    Requires a per-channel ``max_idx_col`` helper column (see
-    :func:`with_fir_smooth`). The out-of-range guard tests the row *index*,
-    not the lag result, so genuine NULL values still propagate
-    (NaN-poisoning parity with the reference's NumPy convolution).
+    Pad slot ``j`` of ``ypad`` reads row ``j`` (head), ``j - h``
+    (interior) or ``j - 2h`` (tail); a slot whose row falls outside the
+    channel is NULL, and so is every output whose taps touch a NULL slot.
     """
-    coeffs = savgol_coeffs(window_length, polyorder)
-    half = window_length // 2
-    w = channel_window()
-    idx = F.col(idx_col)
-    terms = []
-    for k, ck in enumerate(coeffs):
-        d = k - half
-        if d < 0:
-            tap = F.when(idx + d < 0, _tap(value_col, d + half, w)).otherwise(
-                F.lag(value_col, -d).over(w)
-            )
-        elif d > 0:
-            tap = F.when(
-                idx + d > F.col(max_idx_col), _tap(value_col, d - half, w)
-            ).otherwise(F.lead(value_col, d).over(w))
-        else:
-            tap = F.col(value_col)
-        terms.append(F.lit(float(ck)) * tap)
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = expr + t
-    return expr
+    n, half = x.size, coeffs.size // 2
+    j = np.arange(n + 2 * half)
+    src = np.where(j < half, j, np.where(j < n + half, j - half, j - 2 * half))
+    inside = (src >= 0) & (src < n)
+    src = src.clip(0, n - 1)
+    xpad = np.where(inside, x[src], 0.0)
+    null_pad = np.concatenate([[0], np.cumsum(~inside | is_null[src])])
+    out = shifted_add_fold(xpad, coeffs)
+    return out, null_pad[coeffs.size :] > null_pad[:n]
 
 
 def with_fir_smooth(
@@ -87,9 +66,13 @@ def with_fir_smooth(
 ) -> DataFrame:
     """Add a smoothed column (reference defaults 51/7,
     ``/root/reference/peak_detection.py:14``)."""
-    df = df.withColumn("_max_idx", F.max(IDX).over(Window.partitionBy(CHANNEL)))
-    df = df.withColumn(out_col, fir_smooth_col(value_col, window_length, polyorder))
-    return df.drop("_max_idx")
+    coeffs = savgol_coeffs(window_length, polyorder)
+
+    def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        out, null = fir_smooth(*column_values(t, value_col), coeffs)
+        return {out_col: pa.array(out, mask=null)}
+
+    return map_channels(df, kernel, (out_col,))
 
 
 def _tap_sql(value_col: str, offset: int) -> str:
@@ -106,9 +89,9 @@ def fir_smooth_sql_expr(
     polyorder: int,
     max_idx_expr: str = "_max_idx",
 ) -> str:
-    """DuckDB SQL expression mirroring :func:`fir_smooth_col` term-for-term
-    (same coefficient literals, same left-to-right addition order, so both
-    engines produce matching doubles up to FP contraction)."""
+    """DuckDB SQL expression of :func:`with_fir_smooth` as 51 ``lag``/``lead``
+    taps (same coefficient literals, same left-to-right addition order, so
+    both engines produce matching doubles up to FP contraction)."""
     coeffs = savgol_coeffs(window_length, polyorder)
     half = window_length // 2
     terms = []

@@ -1,4 +1,5 @@
-"""Canonical per-channel window specs + plateau-aware local-extrema flags.
+"""Canonical per-channel window specs, plateau-aware local-extrema flags,
+and the per-channel grouped map the NumPy kernels run in.
 
 The reference finds local extrema with ``scipy.signal.find_peaks`` inside
 each rolling frame (``/root/reference/peak_detection.py:95,153``). SciPy
@@ -12,14 +13,20 @@ construction below reproduces the midpoint rule in pure Spark SQL:
    SciPy, which never marks the first/last sample),
 3. flag the run's midpoint row ``(start + end) DIV 2``.
 
-Everything is window functions over one (channel_id, sample_idx) sort —
-no joins, no UDFs; at 100 TB this is a single hash-partition by channel
-with an in-partition sort that AQE sizes.
+The flags are window functions over one (channel_id, sample_idx) sort —
+no joins, no UDFs. :func:`map_channels` is the one place a whole channel
+crosses into Python: the two Savitzky–Golay smooths
+(:mod:`.smooth`, :mod:`.envelopes`) run there as NumPy folds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from typing import Callable
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 from pyspark.sql.window import Window
 
 CHANNEL = "channel_id"
@@ -28,6 +35,77 @@ IDX = "sample_idx"
 
 def channel_window() -> Window:
     return Window.partitionBy(CHANNEL).orderBy(IDX)
+
+
+def column_values(t: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """A double column as (values, is_null). NULL and NaN stay distinct:
+    NULL rows are flagged in ``is_null`` (their value slot is NaN), a NaN
+    value is a NaN with ``is_null`` False."""
+    col = t.column(name)
+    return (
+        col.to_numpy().astype(np.float64, copy=False),
+        col.is_null().to_numpy(),
+    )
+
+
+def map_channels(
+    df: DataFrame,
+    kernel: Callable[[pa.Table], dict[str, pa.Array]],
+    out_cols: tuple[str, ...],
+) -> DataFrame:
+    """Run ``kernel`` on each whole channel and add its double columns.
+
+    The kernel gets one channel as an Arrow table sorted by ``sample_idx``
+    and returns ``{name: array}`` for the ``out_cols``; every input column
+    passes through unchanged, an existing column of the same name is
+    replaced in place and new ones are appended (``withColumn``'s column
+    order). Arrow, not pandas, carries the rows, so NULL and NaN stay
+    distinct in both directions.
+
+    Precondition: per-channel ``sample_idx`` is exactly 0..n-1 (in any row
+    order), as ``signal_frame`` and the ABF sources produce it. A gapped,
+    shifted or duplicated index raises ``ValueError`` (GAPPED_SIGNAL_INDEX)
+    instead of computing taps across the gap.
+
+    The Python node emits new attributes, so Spark no longer knows the
+    output is clustered by channel: the output is RANGE-partitioned on
+    ``channel_id`` again (never hash — the round-12 straggler fix), and
+    the windows and grouped maps downstream reuse that exchange. Its
+    partition count is left to AQE, so a kernel stage runs in as few
+    tasks as the data allows: every Python task pays a fixed cost before
+    any work (the worker re-reads the zip and jar files on its import
+    path; ~0.2 s of CPU per task with Spark 4.1.2 on a 4-vCPU host).
+    """
+    fields = list(df.schema.fields)
+    names = [f.name for f in fields]
+    for c in out_cols:
+        f = StructField(c, DoubleType())
+        if c in names:
+            fields[names.index(c)] = f
+        else:
+            fields.append(f)
+            names.append(c)
+
+    def fn(t: pa.Table) -> pa.Table:
+        idx = t.column(IDX).to_numpy()
+        dense = np.arange(idx.size)
+        if not np.array_equal(idx, dense):
+            order = np.argsort(idx, kind="stable")
+            t, idx = t.take(order), idx[order]
+            if not np.array_equal(idx, dense):
+                raise ValueError(
+                    "GAPPED_SIGNAL_INDEX: per-channel sample_idx must be "
+                    f"exactly 0..n-1; channel_id={t.column(CHANNEL)[0].as_py()} has "
+                    f"{idx.size} rows with sample_idx from {idx[0]} to "
+                    f"{idx[-1]}. Re-index with row_number() after filtering."
+                )
+        for name, arr in kernel(t).items():
+            i = t.schema.get_field_index(name)
+            t = t.set_column(i, name, arr) if i >= 0 else t.append_column(name, arr)
+        return t.select(names)
+
+    out = df.groupBy(CHANNEL).applyInArrow(fn, StructType(fields))
+    return out.repartitionByRange(CHANNEL)
 
 
 def with_extrema_flags(
@@ -79,15 +157,6 @@ def with_extrema_flags(
         ),
     )
     return df.drop("_pl", "_nl", "_run_id", "_prev_run_val", "_next_run_val", "_run_start", "_run_end")
-
-
-def with_channel_bounds(df: DataFrame) -> DataFrame:
-    """Attach per-channel n (row count) and max_idx columns via an
-    unordered partition window (no extra shuffle beyond the channel one)."""
-    wall = Window.partitionBy(CHANNEL)
-    return df.withColumn("_n", F.count(F.lit(1)).over(wall)).withColumn(
-        "_max_idx", F.max(IDX).over(wall)
-    )
 
 
 def extrema_flags_sql(

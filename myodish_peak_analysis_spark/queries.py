@@ -4,8 +4,9 @@ match the DuckDB oracle in :mod:`.oracle` exactly.
 
 These are also the canonical usage examples of the operator library —
 every function is the idiomatic Spark formulation (window functions over
-one (channel_id, sample_idx) sort; no collect, no Python in the hot
-path) that the oracle SQL mirrors.
+one (channel_id, sample_idx) sort, per-channel NumPy folds for the two
+Savitzky–Golay smooths; no collect) whose result the oracle SQL
+reproduces.
 
 Cache lifetime: some builders (``q_native_find_peaks*``, the PQ/IVF
 family) persist intermediates that OUTLIVE the call by design — see

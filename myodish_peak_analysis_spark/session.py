@@ -51,7 +51,7 @@ def get_spark(
         # AQE's parallelism-first coalescing floors partitions at
         # max(minPartitionSize, shuffleBytes / parallelism). The 1 MB
         # default is a bytes-proxy for cost; the signal operators are
-        # CPU-bound (301-tap FIR HOFs, prominence walks) at ~100 B/row,
+        # CPU-bound (window chains, prominence walks) at ~100 B/row,
         # so small-SF shuffles collapse to 2 tasks on 32 cores. A 64 KB
         # floor restores CPU parallelism locally and is inert at scale,
         # where shuffleBytes/parallelism dominates the max().

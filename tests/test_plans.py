@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 from tests.conftest import SF001
 
 
@@ -30,7 +32,7 @@ def test_no_cartesian_product_in_any_registered_query(spark):
             continue
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct in plan")
-        n_py = plan.count("EvalPython") + plan.count("InPandas")
+        n_py = plan.count("EvalPython") + plan.count("InPandas") + plan.count("InArrow")
         if n_py and name not in PYTHON_ALLOWED:
             failures.append(f"{name}: unexpected Python/Arrow stage")
     assert not failures, "\n".join(failures)
@@ -40,48 +42,62 @@ def _plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pipeline_plan_has_exactly_one_channel_exchange(spark):
-    """PLANS.md's headline claim, pinned: the whole native pipeline
-    (smooth → envelopes → diastolic → peaks → attributes) shares ONE
-    channel exchange; every window stage reuses or in-partition
-    re-sorts that distribution. Since round 12 that single exchange is
-    RANGE partitioning (one channel per partition — the straggler fix,
-    PLANS.md "Round-12 channel partitioning"); rangepartitioning
-    satisfies the windows' ClusteredDistribution, so ANY
-    hashpartitioning exchange appearing means someone broke the
-    shared-partitioning discipline."""
+def _shuffles(plan: str) -> int:
+    return (
+        plan.count("Exchange")
+        - plan.count("BroadcastExchange")
+        - plan.count("ReusedExchange")
+    )
+
+
+def test_pipeline_plan_has_one_channel_exchange_per_kernel(spark):
+    """The native pipeline (smooth → envelopes → diastolic → peaks →
+    attributes) shuffles once to cluster the signal by channel and once
+    after each of its two per-channel NumPy kernels (the FIR smooth and
+    the envelope smooth): a Python node emits new attributes, so Spark
+    forgets the channel clustering and the kernel re-partitions its
+    output. Every window stage reuses or in-partition re-sorts the
+    latest exchange. All of them are RANGE partitioning on channel_id
+    (the round-12 straggler fix, PLANS.md "Round-12 channel
+    partitioning"); rangepartitioning satisfies the windows'
+    ClusteredDistribution, so ANY hashpartitioning exchange appearing
+    means someone broke the shared-partitioning discipline."""
     from myodish_peak_analysis_spark.api import PeakPipeline
     from myodish_peak_analysis_spark.schema import signal_frame
     from tests.conftest import SF001
 
     sig = signal_frame(spark, SF001, n_channels=1)
-    pipe = (
-        PeakPipeline(sig)
-        .smooth()
-        .envelopes()
-        .diastolic()
-        .detect_peaks()
-        .attributes()
+    plan = _plan_of(
+        PeakPipeline(sig).smooth().envelopes().diastolic().detect_peaks().attributes()
     )
-    plan = _plan_of(pipe.df if hasattr(pipe, "df") else pipe)
-    n_ex = (
-        plan.count("Exchange")
-        - plan.count("BroadcastExchange")
-        - plan.count("ReusedExchange")
-    )
-    # n_channels=1 degenerates rangepartitioning(1) to SinglePartition,
-    # so the pin is structural: ONE shuffle total, and it is never the
-    # hash partitioner the round-12 fix replaced.
-    assert n_ex == 1, plan[:2000]
+    # n_channels=1 degenerates the signal frame's rangepartitioning(1)
+    # to SinglePartition; the kernels' exchanges stay ranged.
+    assert _shuffles(plan) == 3, plan[:2000]
+    assert plan.count("Exchange SinglePartition") == 1, plan[:2000]
+    assert plan.count("Exchange rangepartitioning(channel_id") == 2, plan[:2000]
     assert plan.count("Exchange hashpartitioning") == 0, plan[:2000]
     multi = signal_frame(spark, SF001, n_channels=2)
-    mplan = _plan_of(
-        (lambda p: p.df if hasattr(p, "df") else p)(
-            PeakPipeline(multi).smooth().envelopes()
-        )
-    )
-    assert mplan.count("Exchange rangepartitioning") == 1, mplan[:2000]
+    mplan = _plan_of(PeakPipeline(multi).smooth().envelopes().df)
+    assert _shuffles(mplan) == 3, mplan[:2000]
+    assert mplan.count("Exchange rangepartitioning(channel_id") == 3, mplan[:2000]
     assert mplan.count("Exchange hashpartitioning") == 0, mplan[:2000]
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["smooth", "envelopes", "diastolic", "threshold_peaks", "peak_attributes"],
+)
+def test_peaks_plans_have_no_collect_list_window(spark, name):
+    """The envelope smooth is a NumPy fold, not a ±150-row collect_list
+    window folded by a zip_with/aggregate higher-order function: neither
+    the collect_list nor any lambda may come back into these plans."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    plan = entry.queries()[name](spark, SF001)._jdf.queryExecution()
+    plan = plan.optimizedPlan().toString()
+    assert "collect_list" not in plan, plan[:2000]
+    assert "lambda" not in plan, plan[:2000]
 
 
 def test_stratified_sample_plan_is_exchange_free(spark):

@@ -10,6 +10,7 @@ from myodish_peak_analysis_spark.functions.sigproc import (
     peak_prominences,
     savgol_coeffs,
     savgol_filter_nearest,
+    shifted_add_fold,
 )
 
 
@@ -84,3 +85,24 @@ def test_width_filters_narrow_peaks():
     wide = np.array([0.0, 4.0, 5.0, 4.0, 0.0])
     assert find_peaks(narrow, prominence=0.1, width=2).size == 0
     assert list(find_peaks(wide, prominence=0.1, width=2)) == [2]
+
+
+@pytest.mark.parametrize("start", [None, 0.0])
+def test_shifted_add_fold_equals_sequential_loop(start):
+    """Every output is summed in tap order, bit for bit like a per-row
+    Python loop; NaN propagates; only the fold start decides the sign of
+    an all-(-0.0) sum."""
+    rng = np.random.default_rng(3)
+    x = rng.normal(size=120)
+    x[40] = np.nan
+    c = savgol_coeffs(21, 4)
+    got = shifted_add_fold(x, c, start=start)
+    assert got.size == x.size - c.size + 1
+    for i in range(got.size):
+        acc = x[i] * c[0] if start is None else start + x[i] * c[0]
+        for k in range(1, c.size):
+            acc = acc + x[i + k] * c[k]
+        assert (np.isnan(acc) and np.isnan(got[i])) or got[i].hex() == acc.hex()
+    neg = np.full(3, -0.0)
+    one = np.ones(1)
+    assert np.signbit(shifted_add_fold(neg, one, start=start)).all() == (start is None)

@@ -37,13 +37,23 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # HTML text extraction over crawl response bodies (round 13: entity
 # tables + a real HTML tokenizer are not JVM-expressible) —
 # mapInPandas/pandas_udf over opaque binary columns, the places a JVM
-# expression genuinely cannot express the work. Every other query
-# must be Python-free.
+# expression genuinely cannot express the work. The native peaks chain
+# runs its two Savitzky–Golay smooths (51-tap FIR, 301-tap envelope
+# smooth) as per-channel NumPy folds in applyInArrow: as Spark SQL they
+# were ~100 lag/lead window functions and two ±150-row collect_list
+# windows folded by a higher-order function, the most expensive work
+# per row of the pipeline (benchmark recordings pass CPU 11.54 ->
+# 5.21 s when they moved), so every query that smooths carries one.
+# Every other query must be Python-free.
 PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
                   "native_find_peaks_nodist", "constrained_peak_attributes",
                   "peak_interval_stats", "media_metadata",
                   "audio_metadata", "video_metadata", "warc_roundtrip",
-                  "warc_extract_text", "crawl_corpus"}
+                  "warc_extract_text", "crawl_corpus",
+                  # the per-channel smooth kernels
+                  "smooth", "raw_envelopes", "envelopes", "diastolic",
+                  "threshold_peaks", "crossing_points", "peak_attributes",
+                  "peak_averages"}
 
 
 _EXPR_ID = re.compile(r"#\d+L?")
@@ -100,10 +110,10 @@ def main() -> None:
         )
         n_cart = plan.count("CartesianProduct")
         # Spark's Python-execution nodes are BatchEvalPython /
-        # ArrowEvalPython (scalar UDFs) and *InPandas (grouped/map
-        # Arrow) — "EvalPython" + "InPandas" covers all of them;
-        # the old "PythonEval" substring matched NONE.
-        n_py = plan.count("EvalPython") + plan.count("InPandas")
+        # ArrowEvalPython (scalar UDFs), *InPandas and *InArrow
+        # (grouped/map Arrow) — "EvalPython" + "InPandas" + "InArrow"
+        # covers all of them; the old "PythonEval" substring matched NONE.
+        n_py = plan.count("EvalPython") + plan.count("InPandas") + plan.count("InArrow")
         n_tko = plan.count("TakeOrderedAndProject")
         n_ims = plan.count("InMemoryTableScan")
         rows.append((name, n_ex, n_bc, n_cart, n_py, n_tko, n_ims))
