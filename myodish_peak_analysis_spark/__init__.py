@@ -13,12 +13,25 @@ Public surface:
   operators (dedup, similarity, text stats).
 """
 
-from .schema import (  # noqa: F401
-    DEFAULT_FS,
-    MIN_CHANNEL_ROWS,
-    SIGNAL_SCHEMA,
-    auto_channels,
-    read_table,
-    signal_frame,
-)
-from .session import get_spark  # noqa: F401
+import importlib
+
+# Resolved on first access (PEP 562) so that importing a submodule, such
+# as the worker daemon ``_daemon``, imports no pyspark on the way.
+_EXPORTS = {
+    "DEFAULT_FS": "schema",
+    "MIN_CHANNEL_ROWS": "schema",
+    "SIGNAL_SCHEMA": "schema",
+    "auto_channels": "schema",
+    "read_table": "schema",
+    "signal_frame": "schema",
+    "get_spark": "session",
+}
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f".{_EXPORTS[name]}", __name__), name)
+    globals()[name] = value
+    return value

@@ -4,6 +4,16 @@ Local testing runs on ``local[N]``; the configs below are the ones that
 matter identically on a 1000-executor cluster: AQE (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow for pandas-UDF
 exchange, and a shuffle-partition count sized to the environment.
+
+Two settings concern the Python workers:
+
+* ``spark.executorEnv.PYTHONPATH`` starts with the directory that holds
+  this package, so the workers import the same package as the driver
+  whatever the driver's working directory.
+* ``spark.python.daemon.module`` is :mod:`._daemon`, which has the
+  workers import pyspark from its installed copy instead of Spark's
+  ``pyspark.zip`` when the two are the same version (see its docstring:
+  that saves ~0.2 s of worker CPU per Python task).
 """
 
 from __future__ import annotations
@@ -11,6 +21,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
 
 
 def release_caches(spark: SparkSession) -> None:
@@ -40,7 +53,11 @@ def get_spark(
     """``extra_conf`` entries are applied to the builder and therefore
     only take effect when THIS call creates the session (configs like
     ``spark.sql.warehouse.dir`` are fixed at session creation);
-    standalone tools that need one (bench_bucketing) call this first."""
+    standalone tools that need one (bench_bucketing) call this first.
+    A ``spark.executorEnv.PYTHONPATH`` in it is appended to the
+    package's directory, not replaced by it."""
+    conf = dict(extra_conf or {})
+    pythonpath = os.pathsep.join(filter(None, [_PACKAGE_PARENT, conf.pop(_PYTHONPATH, "")]))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -71,7 +88,9 @@ def get_spark(
         # null because the tail was truncated mid-JSON). Nothing in
         # this repo reads the bar, so disable it session-wide.
         .config("spark.ui.showConsoleProgress", "false")
+        .config(_PYTHONPATH, pythonpath)
+        .config("spark.python.daemon.module", f"{__package__}._daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
