@@ -42,19 +42,7 @@ def entry(spark: SparkSession) -> DataFrame:
     a min-length guard: each channel must keep >= MIN_CHANNEL_ROWS rows
     for the native envelope route, so at sf0.001 (1000 events) this
     resolves to 1 channel and grows with the data from there."""
-    from pyspark.sql import functions as F
-
-    from myodish_peak_analysis_spark.operators.attributes import (
-        peak_attributes,
-        with_crossings,
-    )
-    from myodish_peak_analysis_spark.operators.envelopes import (
-        with_diastolic,
-        with_smoothed_envelopes,
-    )
-    from myodish_peak_analysis_spark.operators.peaks import with_threshold_keep
-    from myodish_peak_analysis_spark.operators.smooth import with_fir_smooth
-    from myodish_peak_analysis_spark.operators.windows import with_extrema_flags
+    from myodish_peak_analysis_spark.api import PeakPipeline
     from myodish_peak_analysis_spark.schema import (
         MIN_CHANNEL_ROWS,
         auto_channels,
@@ -69,12 +57,9 @@ def entry(spark: SparkSession) -> DataFrame:
         max(1, n_rows // MIN_CHANNEL_ROWS),
     )
     sig = signal_frame(spark, sf_dir, n_channels=n_ch)
-    df = with_extrema_flags(with_fir_smooth(sig), value_col="smooth")
-    df = with_diastolic(with_smoothed_envelopes(df, flags_present=True))
-    df = with_threshold_keep(df, value_col="smooth")
-    df = df.withColumn("_keep", F.col("is_peak") & F.col("keep_peak"))
-    df = with_crossings(df)
-    return peak_attributes(df, keep_col="_keep")
+    return (
+        PeakPipeline(sig).smooth().envelopes().diastolic().detect_peaks().attributes()
+    )
 
 
 # The driver's correctness pass records at most the FIRST 50 registered
@@ -117,43 +102,25 @@ def entry(spark: SparkSession) -> DataFrame:
 #: section (a)). Updated by hand each round alongside the code; if it
 #: goes stale the head degrades to pure backlog+filler coverage, which
 #: is still policy-valid (the generator, not this list, guarantees the
-#: staleness bound). Round 13: the WARC encoder grew Target-URI +
-#: injection guards (warc_roundtrip), the BPE trainer default flipped
-#: to batched with the registry queries pinning classic explicitly
-#: (bpe_vocab/bpe_encode) and bpe_roundtrip grew the NULL-text guard,
-#: and ivf_pq_append's dim probe now refuses NULL embeddings
-#: (ann_serve_appended). The five NEW round-13 queries
-#: (warc_extract_text, url_canonicalize, url_dedup, domain_caps,
-#: incremental_manifest) are never-verified and therefore lead the
-#: computed backlog automatically.
+#: staleness bound). The list is exactly the queries whose normalised
+#: optimized plan (``tools/audit_plans.py --dump``) differs from the
+#: parent commit's. This round: the peaks family's FIR smooth, extrema
+#: flags and envelope smooth run as one per-channel NumPy stage, and the
+#: flags (also standalone, for the raw signal) are a NumPy step instead
+#: of a lag/lead/run-id window stage.
 _CHANGED_THIS_ROUND = [
-    # optimization round 14: single-slice literal centroid/codebook
-    # tables + NaN-safe literals + explicit PQ join-drop semantics in
-    # the ANN fits; batched append lifecycle guards; lazy-checkpoint
-    # round fusion in the connected-components loops; one fewer eager
-    # count in the incremental manifest; BPE trainer round fusion.
-    "ann_ivf_topk",
-    "ivf_pq_topk",
-    "ivf_pq_topk_prefit",
-    "pq_codes",
-    "pq_topk",
-    "pq_rerank_topk",
-    "semantic_dedup",
-    "ivf_sq8_topk",
-    "rp_ivf_topk",
-    "ann_serve",
-    "ann_serve_appended",
-    "dedup_clusters",
-    "canonical_corpus",
-    "dedup_report",
-    "leakage_safe_split",
-    "training_corpus_manifest",
-    "incremental_manifest",
-    "bpe_vocab",
-    "bpe_encode",
-    "bpe_roundtrip",
-    "vocab_coverage",
-    "encode_token_ids",
+    "extrema_flags",
+    "naive_peaks",
+    "stim_peak_mean",
+    "raw_envelopes",
+    "envelopes",
+    "diastolic",
+    "threshold_peaks",
+    "crossing_points",
+    "peak_attributes",
+    "peak_averages",
+    "peak_interval_stats",
+    "constrained_peak_attributes",
 ]
 
 #: The driver records only this many correctness rows per round.

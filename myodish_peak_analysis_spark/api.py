@@ -30,14 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .operators.attributes import peak_attributes, peak_averages, with_crossings
-from .operators.envelopes import (
-    with_diastolic,
-    with_smoothed_envelopes,
-)
+from .operators.envelopes import envelope_step, with_diastolic
 from .operators.fidelity import fidelity_peaks, fidelity_signal_columns
 from .operators.peaks import naive_peaks, with_threshold_keep
-from .operators.smooth import with_fir_smooth
-from .operators.windows import with_extrema_flags
+from .operators.smooth import fir_smooth_step
+from .operators.windows import extrema_step, map_channels
 from .schema import DEFAULT_FS
 
 
@@ -89,6 +86,7 @@ class PeakPipeline:
             "fs": fs,
         }
         self._value_col = signal_column
+        self._smoothed_from = None
 
     def _next(self, df: DataFrame) -> "PeakPipeline":
         out = PeakPipeline.__new__(PeakPipeline)
@@ -96,6 +94,7 @@ class PeakPipeline:
         out.stim = self.stim
         out.p = self.p
         out._value_col = self._value_col
+        out._smoothed_from = None
         return out
 
     def cache(self) -> "PeakPipeline":
@@ -131,15 +130,11 @@ class PeakPipeline:
             smoothing_window_length = self.p["smooth_window"]
         if polyorder is None:  # `is None`, not `or`: polyorder 0 is valid
             polyorder = self.p["smooth_poly"]
-        out = self._next(
-            with_fir_smooth(
-                self.df,
-                value_col=self.p["signal_column"],
-                out_col="smooth",
-                window_length=smoothing_window_length,
-                polyorder=polyorder,
-            )
+        step = fir_smooth_step(
+            self.p["signal_column"], "smooth", smoothing_window_length, polyorder
         )
+        out = self._next(map_channels(self.df, step))
+        out._smoothed_from = (self.df, step)
         if self.p["compute_from"] == "smooth":
             out._value_col = "smooth"
         return out
@@ -150,22 +145,26 @@ class PeakPipeline:
         smoothing_window_length: int | None = None,
         polyorder: int | None = None,
     ) -> "PeakPipeline":
+        """Extrema flags + baseline/ceiling envelopes. Directly after
+        ``smooth()`` (not after ``cache()``) the FIR smooth, the flags and
+        the envelopes run in one per-channel Python stage."""
         if window_size is None:
             window_size = self.p["window_size"]
         if smoothing_window_length is None:
             smoothing_window_length = self.p["aux_smoothing"]
         if polyorder is None:  # `is None`, not `or`: polyorder 0 is valid
             polyorder = self.p["aux_poly"]
-        df = with_extrema_flags(self.df, value_col=self._value_col)
-        df = with_smoothed_envelopes(
-            df,
-            value_col=self._value_col,
-            window_size=window_size,
-            smoothing_window_length=smoothing_window_length,
-            polyorder=polyorder,
-            flags_present=True,
-        )
-        return self._next(df)
+        v = self._value_col
+        steps = [
+            extrema_step(v),
+            envelope_step(v, window_size, smoothing_window_length, polyorder),
+        ]
+        df = self.df
+        if self._smoothed_from is not None:
+            # directly on smooth(): the smooth joins the same per-channel call
+            df, smooth = self._smoothed_from
+            steps.insert(0, smooth)
+        return self._next(map_channels(df, *steps))
 
     def diastolic(self, relative_to_baseline: float | None = None) -> "PeakPipeline":
         rel = (

@@ -14,9 +14,8 @@ SG-smoothed (301/3, mode='nearest') WITHOUT stripping, so for the defaults
 A frame extremum of ``y[i:i+w]`` is exactly a global per-channel extremum
 whose plateau lies strictly inside the frame (``i+1 <= j <= i+w-2``), so
 ``raw`` is a conditional rolling min/max over the plateau-midpoint flags
-of :func:`.windows.with_extrema_flags`, which stays a Spark window stage.
-Expanding ``padded[j]`` gives three zones, each that rolling aggregate at
-a different offset:
+of :func:`.windows.extrema_flags`. Expanding ``padded[j]`` gives three
+zones, each that rolling aggregate at a different offset:
 
     j < pad:            padded[j] = raw[j]       -> frame [j+1,     j+w-2]
     pad <= j < m+pad:   padded[j] = raw[j-pad]   -> frame [j+1-pad, j+w-2-pad]
@@ -24,10 +23,11 @@ a different offset:
 
 :func:`smoothed_envelope` builds ``padded`` per channel in NumPy and runs
 the 301-tap SG smooth as :func:`..functions.sigproc.shifted_add_fold` from
-``0.0``, one channel per :func:`.windows.map_channels` call for both
-envelopes. The aggregates follow Spark SQL's rules, which the DuckDB
-oracle (:func:`smoothed_envelopes_sql_cte`) mirrors: ``max`` treats NaN as
-the largest value, ``min`` ignores NaN unless the frame holds nothing
+``0.0``, in a :func:`.windows.map_channels` step (:func:`envelope_step`)
+that ``PeakPipeline.envelopes`` runs in one call with the FIR smooth and
+the flags. The aggregates follow Spark SQL's rules, which the DuckDB
+oracle (:func:`smoothed_envelopes_sql_cte`) mirrors: ``max`` treats NaN
+as the largest value, ``min`` ignores NaN unless the frame holds nothing
 else, and a frame with no extremum is NULL. NULL and NaN both poison the
 smooth, and a poisoned output is NULL, never NaN.
 
@@ -50,9 +50,11 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField
 
 from ..functions.sigproc import savgol_coeffs, shifted_add_fold
-from .windows import channel_window, column_values, map_channels, with_extrema_flags
+from .windows import Step, channel_window, column_values, extrema_step, map_channels
+from .windows import require_dense, with_extrema_flags
 
 DEFAULT_WINDOW = 350  # aux_window_size, /root/reference/peak_detection.py:15
 DEFAULT_SMOOTH = 301  # aux_smoothing_window
@@ -114,18 +116,10 @@ def smoothed_envelope(
     return shifted_add_fold(ypad, coeffs, start=0.0)
 
 
-def with_smoothed_envelopes(
-    df: DataFrame,
-    value_col: str = "smooth",
-    window_size: int = DEFAULT_WINDOW,
-    smoothing_window_length: int = DEFAULT_SMOOTH,
-    polyorder: int = DEFAULT_POLY,
-    flags_present: bool = False,
-) -> DataFrame:
-    """baseline/ceiling = the reference's padded + SG-smoothed envelopes
-    (defaults 350/301/3, ``/root/reference/peak_detection.py:15``),
-    reproduced exactly — including the ~``pad``-sample shift its padding
-    introduces for interior rows (see module docstring)."""
+def envelope_step(
+    value_col: str, window_size: int, smoothing_window_length: int, polyorder: int
+) -> Step:
+    """baseline/ceiling from ``value_col`` and its is_valley/is_peak flags."""
     pad = max(window_size, smoothing_window_length) // 2
     if 2 * pad != window_size:
         raise ValueError(
@@ -133,11 +127,10 @@ def with_smoothed_envelopes(
             f"(got window={window_size}, smooth={smoothing_window_length}); "
             "use operators.fidelity for non-default parameters"
         )
-    if not flags_present:
-        df = with_extrema_flags(df, value_col=value_col)
     coeffs = savgol_coeffs(smoothing_window_length, polyorder)
 
     def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        require_dense(t)
         if t.num_rows < window_size + pad:
             return {c: pa.nulls(t.num_rows, pa.float64()) for c in ENVELOPES}
         x, null = column_values(t, value_col)
@@ -148,7 +141,25 @@ def with_smoothed_envelopes(
             out[name] = pa.array(env, mask=np.isnan(env))
         return out
 
-    return map_channels(df, kernel, tuple(ENVELOPES))
+    return Step(kernel, tuple(StructField(c, DoubleType()) for c in ENVELOPES))
+
+
+def with_smoothed_envelopes(
+    df: DataFrame,
+    value_col: str = "smooth",
+    window_size: int = DEFAULT_WINDOW,
+    smoothing_window_length: int = DEFAULT_SMOOTH,
+    polyorder: int = DEFAULT_POLY,
+    flags_present: bool = False,
+) -> DataFrame:
+    """baseline/ceiling = the reference's padded + SG-smoothed envelopes
+    (defaults 350/301/3, the reference's ``peak_detection.py:15``),
+    reproduced exactly — including the ~``pad``-sample shift its padding
+    introduces for interior rows (see module docstring). The flags are
+    computed in the same call unless ``flags_present``."""
+    flags = () if flags_present else (extrema_step(value_col),)
+    step = envelope_step(value_col, window_size, smoothing_window_length, polyorder)
+    return map_channels(df, *flags, step)
 
 
 def with_diastolic(

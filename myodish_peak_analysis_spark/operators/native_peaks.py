@@ -203,13 +203,8 @@ def native_find_peaks(
 
     Requires gap-free per-channel ``idx_col`` values (module docstring):
     both the plateau RLE and the wlen-bucket join are index-arithmetic.
-    Since round 8 the precondition is ENFORCED at runtime
-    (``check_dense``, default on): the candidate stage — which every
-    configuration runs, over the same frame both branches consume —
-    raises a loud ``GAPPED_SIGNAL_INDEX`` error on gapped or duplicated
-    indices instead of silently mis-computing plateau midpoints and
-    wlen bounds. The check rides the existing per-channel window pass
-    (one extra ``lag``), so it costs no shuffle, scan, or job.
+    ``check_dense`` (default on) enforces it in the candidate stage, which
+    every configuration runs (:func:`candidate_maxima`).
 
     ``persist_input``: when prominence/width are requested the plan
     consumes ``signal`` TWICE (candidate RLE branch + neighborhood

@@ -13,10 +13,11 @@ stripped convolution gives, for output row ``j`` and tap offset
 
 (the 'nearest' extension of ``ypad`` is never consulted for the stripped
 outputs), so the EXACT reference smooth — edges included — is the FIR
-correlation of ``ypad`` with the SG weights. It runs once per channel in
-:func:`.windows.map_channels` as :func:`..functions.sigproc.shifted_add_fold`,
-which sums every row's 51 terms in tap order, the order the DuckDB oracle
-(:func:`fir_smooth_sql_expr`) uses too. A NULL input poisons every output
+correlation of ``ypad`` with the SG weights. It runs once per channel as
+a :func:`.windows.map_channels` step (:func:`fir_smooth_step`) folded by
+:func:`..functions.sigproc.shifted_add_fold`, which sums every row's 51
+terms in tap order, the order the DuckDB oracle (:func:`fir_smooth_sql_expr`)
+uses too. A NULL input poisons every output
 within ``window//2`` taps to NULL; a NaN input makes them NaN, as in the
 reference's NumPy convolution. A channel shorter than ``window//2`` rows
 smooths to all NULL (its head pad reads past the channel end; the
@@ -32,9 +33,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, StructField
 
 from ..functions.sigproc import savgol_coeffs, shifted_add_fold
-from .windows import column_values, map_channels
+from .windows import Step, column_values, map_channels, require_dense
 
 
 def fir_smooth(
@@ -57,6 +59,20 @@ def fir_smooth(
     return out, null_pad[coeffs.size :] > null_pad[:n]
 
 
+def fir_smooth_step(
+    value_col: str, out_col: str, window_length: int, polyorder: int
+) -> Step:
+    """:func:`fir_smooth` of ``value_col`` into ``out_col``."""
+    coeffs = savgol_coeffs(window_length, polyorder)
+
+    def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        require_dense(t)
+        out, null = fir_smooth(*column_values(t, value_col), coeffs)
+        return {out_col: pa.array(out, mask=null)}
+
+    return Step(kernel, (StructField(out_col, DoubleType()),))
+
+
 def with_fir_smooth(
     df: DataFrame,
     value_col: str = "signal_value",
@@ -66,13 +82,8 @@ def with_fir_smooth(
 ) -> DataFrame:
     """Add a smoothed column (reference defaults 51/7,
     ``/root/reference/peak_detection.py:14``)."""
-    coeffs = savgol_coeffs(window_length, polyorder)
-
-    def kernel(t: pa.Table) -> dict[str, pa.Array]:
-        out, null = fir_smooth(*column_values(t, value_col), coeffs)
-        return {out_col: pa.array(out, mask=null)}
-
-    return map_channels(df, kernel, (out_col,))
+    step = fir_smooth_step(value_col, out_col, window_length, polyorder)
+    return map_channels(df, step)
 
 
 def _tap_sql(value_col: str, offset: int) -> str:

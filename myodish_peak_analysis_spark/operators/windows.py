@@ -1,32 +1,27 @@
-"""Canonical per-channel window specs, plateau-aware local-extrema flags,
-and the per-channel grouped map the NumPy kernels run in.
+"""Canonical per-channel window spec, the per-channel grouped map the
+NumPy steps run in, and the plateau-midpoint extrema flag step.
 
-The reference finds local extrema with ``scipy.signal.find_peaks`` inside
-each rolling frame (``/root/reference/peak_detection.py:95,153``). SciPy
-marks a flat-top plateau's *midpoint* as the single extremum; a naive
-``lag``/``lead`` flag marks none (SURVEY.md §2.3 caveat). The run-length
-construction below reproduces the midpoint rule in pure Spark SQL:
+SciPy's ``find_peaks`` (the reference's extremum finder, its
+``peak_detection.py:95,153``) marks a flat-top plateau's
+*midpoint* as the single extremum; a naive ``lag``/``lead`` flag marks
+none (SURVEY.md §2.3 caveat). :func:`extrema_flags` is that rule in NumPy
+with Spark SQL's comparison semantics; the DuckDB oracle
+:func:`extrema_flags_sql` states it as window functions.
 
-1. assign a run id to each maximal stretch of equal values,
-2. a run is a peak-run iff the previous run's value is lower AND the next
-   run's value is lower (nulls at channel borders disqualify — matching
-   SciPy, which never marks the first/last sample),
-3. flag the run's midpoint row ``(start + end) DIV 2``.
-
-The flags are window functions over one (channel_id, sample_idx) sort —
-no joins, no UDFs. :func:`map_channels` is the one place a whole channel
-crosses into Python: the two Savitzky–Golay smooths
-(:mod:`.smooth`, :mod:`.envelopes`) run there as NumPy folds.
+:func:`map_channels` is the one place a whole channel crosses into
+Python. It runs a chain of :class:`Step` s per channel, so the FIR smooth
+(:mod:`.smooth`), the flags and the envelope smooth (:mod:`.envelopes`)
+cross once when they run together (``PeakPipeline.smooth().envelopes()``).
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, StructField, StructType
 from pyspark.sql.window import Window
 
 CHANNEL = "channel_id"
@@ -48,123 +43,109 @@ def column_values(t: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def map_channels(
-    df: DataFrame,
-    kernel: Callable[[pa.Table], dict[str, pa.Array]],
-    out_cols: tuple[str, ...],
-) -> DataFrame:
-    """Run ``kernel`` on each whole channel and add its double columns.
+def require_dense(t: pa.Table) -> None:
+    """Raise GAPPED_SIGNAL_INDEX unless the sorted channel's ``sample_idx``
+    is exactly 0..n-1: a step that reads taps by position calls this."""
+    idx = t.column(IDX).to_numpy()
+    if not np.array_equal(idx, np.arange(idx.size)):
+        raise ValueError(
+            "GAPPED_SIGNAL_INDEX: per-channel sample_idx must be "
+            f"exactly 0..n-1; channel_id={t.column(CHANNEL)[0].as_py()} has "
+            f"{idx.size} rows with sample_idx from {idx[0]} to "
+            f"{idx[-1]}. Re-index with row_number() after filtering."
+        )
 
-    The kernel gets one channel as an Arrow table sorted by ``sample_idx``
-    and returns ``{name: array}`` for the ``out_cols``; every input column
-    passes through unchanged, an existing column of the same name is
-    replaced in place and new ones are appended (``withColumn``'s column
-    order). Arrow, not pandas, carries the rows, so NULL and NaN stay
-    distinct in both directions.
 
-    Precondition: per-channel ``sample_idx`` is exactly 0..n-1 (in any row
-    order), as ``signal_frame`` and the ABF sources produce it. A gapped,
-    shifted or duplicated index raises ``ValueError`` (GAPPED_SIGNAL_INDEX)
-    instead of computing taps across the gap.
+class Step(NamedTuple):
+    # kernel: a channel sorted by sample_idx, with the earlier steps'
+    # columns -> this step's fields as {name: array}
+    kernel: Callable[[pa.Table], dict[str, pa.Array]]
+    fields: tuple[StructField, ...]
 
-    The Python node emits new attributes, so Spark no longer knows the
-    output is clustered by channel: the output is RANGE-partitioned on
-    ``channel_id`` again (never hash — the round-12 straggler fix), and
-    the windows and grouped maps downstream reuse that exchange. Its
-    partition count is left to AQE, so a kernel stage runs in as few
-    tasks as the data allows: every Python task pays a fixed cost before
-    any work (the worker re-reads the zip and jar files on its import
-    path; ~0.2 s of CPU per task with Spark 4.1.2 on a 4-vCPU host).
+
+def map_channels(df: DataFrame, *steps: Step) -> DataFrame:
+    """Run ``steps`` in order on each whole channel and add their columns
+    (``withColumn``'s order: a step column replaces an input column of the
+    same name in place, new ones are appended). Arrow, not pandas, carries
+    the rows, so NULL and NaN stay distinct in both directions.
+
+    A Python node emits new attributes, so Spark forgets the channel
+    clustering: the output is range-partitioned on ``channel_id`` again
+    (never hash: hash partitioning straggles), with the partition count
+    left to AQE. The range sampler runs the steps once more in a job of
+    its own, so a chain of steps belongs in one call.
     """
-    fields = list(df.schema.fields)
-    names = [f.name for f in fields]
-    for c in out_cols:
-        f = StructField(c, DoubleType())
-        if c in names:
-            fields[names.index(c)] = f
-        else:
-            fields.append(f)
-            names.append(c)
+    fields = {f.name: f for f in df.schema.fields}
+    fields.update((f.name, f) for step in steps for f in step.fields)
+    names = list(fields)
 
     def fn(t: pa.Table) -> pa.Table:
         idx = t.column(IDX).to_numpy()
-        dense = np.arange(idx.size)
-        if not np.array_equal(idx, dense):
-            order = np.argsort(idx, kind="stable")
-            t, idx = t.take(order), idx[order]
-            if not np.array_equal(idx, dense):
-                raise ValueError(
-                    "GAPPED_SIGNAL_INDEX: per-channel sample_idx must be "
-                    f"exactly 0..n-1; channel_id={t.column(CHANNEL)[0].as_py()} has "
-                    f"{idx.size} rows with sample_idx from {idx[0]} to "
-                    f"{idx[-1]}. Re-index with row_number() after filtering."
-                )
-        for name, arr in kernel(t).items():
-            i = t.schema.get_field_index(name)
-            t = t.set_column(i, name, arr) if i >= 0 else t.append_column(name, arr)
+        if np.any(idx[1:] < idx[:-1]):
+            t = t.take(np.argsort(idx, kind="stable"))
+        for step in steps:
+            for name, arr in step.kernel(t).items():
+                i = t.schema.get_field_index(name)
+                t = t.set_column(i, name, arr) if i >= 0 else t.append_column(name, arr)
         return t.select(names)
 
-    out = df.groupBy(CHANNEL).applyInArrow(fn, StructType(fields))
+    out = df.groupBy(CHANNEL).applyInArrow(fn, StructType(list(fields.values())))
     return out.repartitionByRange(CHANNEL)
 
 
-def with_extrema_flags(
-    df: DataFrame,
-    value_col: str = "signal_value",
-    peak_col: str = "is_peak",
-    valley_col: str = "is_valley",
-) -> DataFrame:
-    """Add boolean plateau-midpoint local-max/min flags per channel.
+def _lt(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a < b`` in Spark SQL order: NaN is above every number."""
+    return (a < b) | (np.isnan(b) & ~np.isnan(a))
 
-    Matches SciPy ``find_peaks``'s maxima rule: strictly greater than the
-    previous differing sample and the next differing sample; plateaus
-    flag ``(left_edge + right_edge) DIV 2``; channel edges never flag.
+
+def extrema_flags(
+    x: np.ndarray, is_null: np.ndarray, idx: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """(is_peak, is_valley) of one channel sorted by ``idx``.
+
+    The channel splits into runs: a row starts one when the row before it
+    is NULL or absent, or when both are non-NULL and differ (NaN equals
+    NaN, ``0.0 == -0.0``); a NULL row joins the non-NULL run before it. A
+    run is a peak (valley) iff the values just before and just after it
+    are both lower (higher); NaN is above every number, and a NULL or the
+    channel edge disqualifies. The flag goes on the row whose ``idx`` is
+    ``(idx[first] + idx[last]) DIV 2`` — none if that falls in a gap.
     """
-    w = channel_window()
-    v = F.col(value_col)
-    df = df.withColumn("_pl", F.lag(value_col).over(w)).withColumn(
-        "_nl", F.lead(value_col).over(w)
-    )
-    run_change = F.when(F.col("_pl").isNull() | (v != F.col("_pl")), 1).otherwise(0)
-    df = df.withColumn(
-        "_run_id", F.sum(run_change).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    wrun = Window.partitionBy(CHANNEL, "_run_id")
-    wrun_ord = wrun.orderBy(IDX)
-    df = (
-        df.withColumn("_prev_run_val", F.first("_pl").over(wrun_ord))
-        .withColumn(
-            "_next_run_val",
-            F.last("_nl").over(
-                wrun_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ),
-        )
-        .withColumn("_run_start", F.min(IDX).over(wrun))
-        .withColumn("_run_end", F.max(IDX).over(wrun))
-    )
-    is_mid = F.col(IDX) == F.expr("(_run_start + _run_end) DIV 2")
-    df = df.withColumn(
-        peak_col,
-        F.coalesce(
-            (F.col("_prev_run_val") < v) & (F.col("_next_run_val") < v) & is_mid,
-            F.lit(False),
-        ),
-    ).withColumn(
-        valley_col,
-        F.coalesce(
-            (F.col("_prev_run_val") > v) & (F.col("_next_run_val") > v) & is_mid,
-            F.lit(False),
-        ),
-    )
-    return df.drop("_pl", "_nl", "_run_id", "_prev_run_val", "_next_run_val", "_run_start", "_run_end")
+    nan = np.isnan(x) & ~is_null
+    same = (x[1:] == x[:-1]) | (nan[1:] & nan[:-1])
+    starts = np.concatenate([[True], is_null[:-1] | ~(is_null[1:] | same)])
+    run = np.cumsum(starts) - 1
+    first = np.flatnonzero(starts)
+    last = np.append(first[1:], x.size) - 1
+    before, after = (first - 1).clip(0), (last + 1).clip(max=x.size - 1)
+    fenced = (first > 0) & ~is_null[before] & (last < x.size - 1) & ~is_null[after]
+    mid = np.trunc((idx[first] + idx[last]) / 2)
+    ok = fenced[run] & ~is_null & (idx == mid[run])
+    prev, nxt = x[before][run], x[after][run]
+    return ok & _lt(prev, x) & _lt(nxt, x), ok & _lt(x, prev) & _lt(x, nxt)
 
 
-def extrema_flags_sql(
-    src: str,
-    value_col: str = "signal_value",
-    extra_cols: str = "",
-) -> str:
-    """DuckDB SQL mirroring :func:`with_extrema_flags` over CTE ``src``.
+def extrema_step(value_col: str) -> Step:
+    """is_peak/is_valley of ``value_col`` (:func:`extrema_flags`). It reads
+    no taps, so any ``sample_idx`` is allowed."""
+
+    def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        idx = t.column(IDX).to_numpy()
+        peak, valley = extrema_flags(*column_values(t, value_col), idx)
+        return {"is_peak": pa.array(peak), "is_valley": pa.array(valley)}
+
+    flags = ("is_peak", "is_valley")
+    return Step(kernel, tuple(StructField(c, BooleanType(), False) for c in flags))
+
+
+def with_extrema_flags(df: DataFrame, value_col: str = "signal_value") -> DataFrame:
+    """Add the boolean plateau-midpoint local-max/min flags
+    (:func:`extrema_flags`) per channel."""
+    return map_channels(df, extrema_step(value_col))
+
+
+def extrema_flags_sql(src: str, value_col: str = "signal_value") -> str:
+    """DuckDB SQL mirroring :func:`extrema_flags` over CTE ``src``.
 
     Returns a chain of CTE definitions ending in a relation named
     ``flagged`` with is_peak / is_valley columns added.

@@ -4,9 +4,9 @@ match the DuckDB oracle in :mod:`.oracle` exactly.
 
 These are also the canonical usage examples of the operator library —
 every function is the idiomatic Spark formulation (window functions over
-one (channel_id, sample_idx) sort, per-channel NumPy folds for the two
-Savitzky–Golay smooths; no collect) whose result the oracle SQL
-reproduces.
+one (channel_id, sample_idx) sort, one per-channel NumPy stage for the
+two Savitzky–Golay smooths and the extrema flags; no collect) whose
+result the oracle SQL reproduces.
 
 Cache lifetime: some builders (``q_native_find_peaks*``, the PQ/IVF
 family) persist intermediates that OUTLIVE the call by design — see
@@ -18,18 +18,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .api import PeakPipeline
 from .operators.attributes import (
     peak_attributes,
     peak_averages,
     with_crossings,
 )
-from .operators.envelopes import (
-    with_diastolic,
-    with_raw_envelopes,
-    with_smoothed_envelopes,
-)
+from .operators.envelopes import with_diastolic, with_raw_envelopes
 from .operators.fidelity import fidelity_peaks, fidelity_signal_columns
-from .operators.peaks import with_threshold_keep
+from .operators.peaks import naive_peaks, with_threshold_keep
 from .operators.smooth import with_fir_smooth
 from .operators.windows import with_extrema_flags
 from .oracle import ORACLE_CHANNELS, ROUND_DP
@@ -58,23 +55,16 @@ def q_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _smoothed_flagged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = q_signal_frame(spark, sf_dir)
-    return with_extrema_flags(with_fir_smooth(sig), value_col="smooth")
+def _enveloped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return PeakPipeline(q_signal_frame(spark, sf_dir)).smooth().envelopes().df
 
 
 def q_raw_envelopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = with_raw_envelopes(
-        _smoothed_flagged(spark, sf_dir), value_col="smooth", flags_present=True
+        _enveloped(spark, sf_dir), value_col="smooth", flags_present=True
     )
     return df.select(
         "channel_id", "sample_idx", _r("smooth"), _r("floor_raw"), _r("ceil_raw")
-    )
-
-
-def _enveloped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_smoothed_envelopes(
-        _smoothed_flagged(spark, sf_dir), value_col="smooth", flags_present=True
     )
 
 
@@ -92,14 +82,7 @@ def q_diastolic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_naive_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = q_signal_frame(spark, sf_dir)
-    flagged = with_extrema_flags(sig, value_col="signal_value")
-    return flagged.filter(F.col("is_peak")).select(
-        "channel_id",
-        F.col("sample_idx").alias("peak_idx"),
-        F.col("time_index").alias("timestamp"),
-        F.col("signal_value").alias("peak_value"),
-    )
+    return naive_peaks(q_signal_frame(spark, sf_dir))
 
 
 def q_threshold_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,11 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .api import PeakPipeline
 from .operators.attributes import peak_attributes, peak_averages, with_crossings
-from .operators.envelopes import with_diastolic, with_smoothed_envelopes
 from .operators.peaks import with_threshold_keep
-from .operators.smooth import with_fir_smooth
-from .operators.windows import with_extrema_flags
 from .schema import HARNESS_TABLES, auto_channels, read_table, signal_frame
 
 
@@ -38,8 +36,7 @@ def pipeline_frames(
     if n_channels is None:
         n_channels = auto_channels(spark, sf_dir)
     sig = signal_frame(spark, sf_dir, n_channels=n_channels)
-    enriched = with_extrema_flags(with_fir_smooth(sig), value_col="smooth")
-    enriched = with_diastolic(with_smoothed_envelopes(enriched, flags_present=True))
+    enriched = PeakPipeline(sig).smooth().envelopes().diastolic().df
     enriched = with_threshold_keep(enriched, value_col="smooth")
     crossed = with_crossings(
         enriched.withColumn("_keep", F.col("is_peak") & F.col("keep_peak"))

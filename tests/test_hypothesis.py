@@ -1,9 +1,14 @@
 """Hypothesis property tests for the NumPy signal kernels: each kernel
-is compared against an independent brute-force formulation on random
-inputs (no SciPy in this environment, so the brute versions ARE the
-spec — written straight from the documented behavior)."""
+is compared against an independent formulation on random inputs — a
+brute-force loop written straight from the documented behavior (no
+SciPy in this environment, so the brute versions ARE the spec), or the
+DuckDB oracle SQL the query hashes are checked against."""
 
+import math
+
+import duckdb
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from myodish_peak_analysis_spark.functions.sigproc import (
@@ -11,6 +16,11 @@ from myodish_peak_analysis_spark.functions.sigproc import (
     local_maxima_plateau,
     savgol_coeffs,
     savgol_filter_nearest,
+)
+from myodish_peak_analysis_spark.operators.windows import (
+    column_values,
+    extrema_flags,
+    extrema_flags_sql,
 )
 
 signals = st.lists(
@@ -409,3 +419,40 @@ def test_remove_dup_spans_keep_filter_model(starts, gram):
     ]
     assert set(kept).isdisjoint(covered & set(range(1, n + 1)))
     assert set(kept) | (covered & set(range(1, n + 1))) == set(range(1, n + 1))
+
+
+@st.composite
+def flag_channels(draw):
+    """A channel of few distinct values, so plateaus are common, with
+    NULLs, NaN and both zeros; its sample_idx is dense, shifted or
+    gapped."""
+    pool = [0.0, -0.0, 1.0, -1.0, 2.0, 3.0, math.nan, None]
+    vals = draw(st.lists(st.sampled_from(pool), min_size=1, max_size=60))
+    n = len(vals)
+    gaps = draw(
+        st.one_of(
+            st.just([0] * n),
+            st.lists(st.integers(0, 2), min_size=n, max_size=n),
+        )
+    )
+    start = draw(st.integers(0, 5))
+    return vals, [start + i + g for i, g in enumerate(np.cumsum(gaps))]
+
+
+@given(flag_channels())
+@settings(max_examples=300, deadline=None)
+def test_extrema_flags_match_duckdb_oracle(channel):
+    vals, idx = channel
+    t = pa.table(
+        {
+            "channel_id": pa.array([0] * len(vals), pa.int64()),
+            "sample_idx": pa.array(idx, pa.int64()),
+            "v": pa.array(vals, pa.float64()),
+        }
+    )
+    want = duckdb.connect().execute(
+        f"WITH src AS (SELECT * FROM t), {extrema_flags_sql('src', 'v')} "
+        "SELECT is_peak, is_valley FROM flagged ORDER BY sample_idx"
+    ).fetchall()
+    peak, valley = extrema_flags(*column_values(t, "v"), np.asarray(idx))
+    assert list(zip(peak.tolist(), valley.tolist())) == want

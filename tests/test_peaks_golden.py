@@ -153,9 +153,8 @@ def test_fixture_inputs_are_the_builders(golden):
     assert golden["inputs_sha256"] == inputs_digest()
 
 
-def test_kernels_bit_identical_to_window_formulation(spark, golden):
-    got = encode_outputs(run_chain(_frame(spark, golden_inputs())).collect())
-    want = golden["outputs"]
+def _assert_golden(df, want):
+    got = encode_outputs(df.collect())
     assert sorted(got) == sorted(want)
     for ch, cols in want.items():
         for c, expected in cols.items():
@@ -165,6 +164,30 @@ def test_kernels_bit_identical_to_window_formulation(spark, golden):
             assert len(got[ch][c]) == len(expected) and not bad, (
                 f"channel {ch} {c}: {len(bad)} rows differ, first at {bad[:5]}"
             )
+
+
+def test_kernels_bit_identical_to_window_formulation(spark, golden):
+    _assert_golden(run_chain(_frame(spark, golden_inputs())), golden["outputs"])
+
+
+def test_fused_pipeline_bit_identical(spark, golden):
+    """``PeakPipeline.smooth().envelopes()`` runs all three steps in one
+    per-channel Python stage; after ``cache()`` the envelopes read the
+    cached smooth instead, with the same bits."""
+    from myodish_peak_analysis_spark.api import PeakPipeline
+
+    df = _frame(spark, golden_inputs())
+    fused = PeakPipeline(df).smooth().envelopes().df
+    plan = fused._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    _assert_golden(fused, golden["outputs"])
+
+    smoothed = PeakPipeline(df).smooth().cache()
+    cached = smoothed.envelopes().df
+    plan = cached._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan, plan
+    _assert_golden(cached, golden["outputs"])
+    smoothed.df.unpersist()
 
 
 def test_channel_row_order_does_not_matter(spark, golden):

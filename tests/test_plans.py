@@ -53,9 +53,9 @@ def _shuffles(plan: str) -> int:
 def test_pipeline_plan_has_one_channel_exchange_per_kernel(spark):
     """The native pipeline (smooth → envelopes → diastolic → peaks →
     attributes) shuffles once to cluster the signal by channel and once
-    after each of its two per-channel NumPy kernels (the FIR smooth and
-    the envelope smooth): a Python node emits new attributes, so Spark
-    forgets the channel clustering and the kernel re-partitions its
+    after its one per-channel NumPy stage (FIR smooth → extrema flags →
+    envelope smooth): a Python node emits new attributes, so Spark
+    forgets the channel clustering and the stage re-partitions its
     output. Every window stage reuses or in-partition re-sorts the
     latest exchange. All of them are RANGE partitioning on channel_id
     (the round-12 straggler fix, PLANS.md "Round-12 channel
@@ -71,16 +71,41 @@ def test_pipeline_plan_has_one_channel_exchange_per_kernel(spark):
         PeakPipeline(sig).smooth().envelopes().diastolic().detect_peaks().attributes()
     )
     # n_channels=1 degenerates the signal frame's rangepartitioning(1)
-    # to SinglePartition; the kernels' exchanges stay ranged.
-    assert _shuffles(plan) == 3, plan[:2000]
+    # to SinglePartition; the kernel's exchange stays ranged.
+    assert _shuffles(plan) == 2, plan[:2000]
     assert plan.count("Exchange SinglePartition") == 1, plan[:2000]
-    assert plan.count("Exchange rangepartitioning(channel_id") == 2, plan[:2000]
+    assert plan.count("Exchange rangepartitioning(channel_id") == 1, plan[:2000]
     assert plan.count("Exchange hashpartitioning") == 0, plan[:2000]
     multi = signal_frame(spark, SF001, n_channels=2)
     mplan = _plan_of(PeakPipeline(multi).smooth().envelopes().df)
-    assert _shuffles(mplan) == 3, mplan[:2000]
-    assert mplan.count("Exchange rangepartitioning(channel_id") == 3, mplan[:2000]
+    assert _shuffles(mplan) == 2, mplan[:2000]
+    assert mplan.count("Exchange rangepartitioning(channel_id") == 2, mplan[:2000]
     assert mplan.count("Exchange hashpartitioning") == 0, mplan[:2000]
+
+
+def test_pipeline_noop_write_job_count(spark):
+    """One PeakPipeline noop write over two channels runs exactly 5 jobs,
+    counted through ``StatusTracker`` under a job group: for each of the
+    two range exchanges (the signal frame's and the kernel output's) a
+    range-sampling job and an adaptive query stage that writes the
+    shuffle, then the write itself. Splitting the kernel into two Python
+    stages adds a range exchange and so 2 jobs (7)."""
+    from myodish_peak_analysis_spark.api import PeakPipeline
+    from myodish_peak_analysis_spark.schema import signal_frame
+    from tests.conftest import SF001
+
+    sc = spark.sparkContext
+    out = (
+        PeakPipeline(signal_frame(spark, SF001, n_channels=2))
+        .smooth().envelopes().diastolic().detect_peaks().attributes()
+    )
+    sc.setJobGroup("pipeline_noop_write", "pipeline_noop_write")
+    try:
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pipeline_noop_write")
+    assert len(jobs) == 5, jobs
 
 
 @pytest.mark.parametrize(

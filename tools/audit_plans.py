@@ -44,16 +44,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # windows folded by a higher-order function, the most expensive work
 # per row of the pipeline (benchmark recordings pass CPU 11.54 ->
 # 5.21 s when they moved), so every query that smooths carries one.
+# The plateau-midpoint extrema flags run in the same per-channel stage
+# (one Python boundary for smooth -> flags -> envelopes, and one
+# implementation of the plateau rule), so the queries that flag the raw
+# signal (extrema_flags, naive_peaks, stim_peak_mean) carry one too.
 # Every other query must be Python-free.
 PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
                   "native_find_peaks_nodist", "constrained_peak_attributes",
                   "peak_interval_stats", "media_metadata",
                   "audio_metadata", "video_metadata", "warc_roundtrip",
                   "warc_extract_text", "crawl_corpus",
-                  # the per-channel smooth kernels
+                  # the per-channel smooth / extrema-flag kernels
                   "smooth", "raw_envelopes", "envelopes", "diastolic",
                   "threshold_peaks", "crossing_points", "peak_attributes",
-                  "peak_averages"}
+                  "peak_averages", "extrema_flags", "naive_peaks",
+                  "stim_peak_mean"}
 
 
 _EXPR_ID = re.compile(r"#\d+L?")
