@@ -104,23 +104,23 @@ def entry(spark: SparkSession) -> DataFrame:
 #: is still policy-valid (the generator, not this list, guarantees the
 #: staleness bound). The list is exactly the queries whose normalised
 #: optimized plan (``tools/audit_plans.py --dump``) differs from the
-#: parent commit's. This round: the peaks family's FIR smooth, extrema
-#: flags and envelope smooth run as one per-channel NumPy stage, and the
-#: flags (also standalone, for the raw signal) are a NumPy step instead
-#: of a lag/lead/run-id window stage.
+#: parent commit's. This round: the IVF and PQ k-means fits assign
+#: vectors to centroids with one NumPy kernel per quantizer (mapInArrow)
+#: instead of a higher-order-function argmax or a broadcast join with a
+#: max_by/min_by reduce.
 _CHANGED_THIS_ROUND = [
-    "extrema_flags",
-    "naive_peaks",
-    "stim_peak_mean",
-    "raw_envelopes",
-    "envelopes",
-    "diastolic",
-    "threshold_peaks",
-    "crossing_points",
-    "peak_attributes",
-    "peak_averages",
-    "peak_interval_stats",
-    "constrained_peak_attributes",
+    "ann_ivf_topk",
+    "ann_serve",
+    "ann_serve_appended",
+    "ivf_list_sizes",
+    "ivf_pq_topk",
+    "ivf_pq_topk_prefit",
+    "ivf_sq8_topk",
+    "pq_codes",
+    "pq_rerank_topk",
+    "pq_topk",
+    "rp_ivf_topk",
+    "semantic_dedup",
 ]
 
 #: The driver records only this many correctness rows per round.

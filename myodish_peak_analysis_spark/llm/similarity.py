@@ -13,9 +13,11 @@ threaded through every bucketed entry point as ``n_planes`` (or
 ``LSH_PLANES`` default remains the oracle-mirrored deterministic path.
 Raising the count strictly refines buckets (bucket bits are a prefix),
 so recall only moves through the documented knob: multi-probe
-(flipping low-margin bits). All dot products are
-``zip_with``+``aggregate`` higher-order functions — JVM-side, no
-Python, no UDF.
+(flipping low-margin bits). The search-side dot products are
+``zip_with``+``aggregate`` higher-order functions (JVM-side, no UDF);
+the k-means fits (IVF centroids, PQ codebooks) assign vectors to
+centroids with the NumPy kernels of :mod:`.lloyd`, one ``mapInArrow``
+step per assign, bit-identical to the same folds in Spark SQL.
 
 Ranking determinism: cosine is quantized to 6 dp BEFORE ranking in both
 engines, then tie-broken by vec_id, so cross-engine FP drift (~1e-15)
@@ -29,6 +31,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from . import lloyd
 from .params import (
     ANN_LSH_TOPK,
     ANN_QUERY_MOD,
@@ -219,46 +222,11 @@ def lsh_buckets(emb: DataFrame, n_planes: int | str | None = None) -> DataFrame:
     return emb.select("vec_id", lsh_bucket_col(p).alias("bucket"))
 
 
-def _array_sql_lit(values) -> str:
-    """A double-array SQL literal from collected floats. ``repr`` emits
-    the shortest round-trip decimal and Spark parses the ``D`` suffix
-    via Double.parseDouble, so the literal is bit-identical to the
-    collected value. One textual literal keeps expression CONSTRUCTION
-    driver-side cheap: building the same array via per-element
-    ``F.lit``/lambda-HOF Column calls cost 3-5 s of py4j round trips
-    per Lloyd assign (measured, optimization round 13) — the whole
-    assign expression is therefore assembled as one SQL string and
-    parsed once. (Round 14 measured the alternative of shipping the
-    values as ONE broadcast array<struct> row with a transform()-based
-    argmax: plan construction got cheaper but EXECUTION was 15× slower
-    — 4.1 s vs 0.25 s per sf0.1 assign pass — because the literal
-    arrays are constant-folded into flat primitive arrays while the
-    struct-field accesses re-extract and box per element. Literals
-    stay.) Non-finite doubles serialize as CAST('NaN'/'Infinity' AS
-    DOUBLE) — `repr` would emit nan/inf tokens Spark SQL cannot parse
-    (ADVICE r13), turning a NaN-polluted centroid into a ParseException
-    where the broadcast-join form evaluated it normally."""
-    return "array(" + ",".join(_double_sql_lit(v) for v in values) + ")"
-
-
-def _double_sql_lit(v) -> str:
-    """One double as a Spark SQL literal; NaN/Infinity via CAST
-    (``repr`` emits nan/inf tokens the SQL parser rejects)."""
-    import math
-
-    v = float(v)
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{v!r}D"
-
-
 def _literal_df(spark, rows, schema: str) -> DataFrame:
     """A model-sized literal table as ONE partition. Plain
     ``createDataFrame(rows)`` parallelizes local rows into
-    defaultParallelism pickled slices, so every consumer job (broadcast
-    builds, per-round collects) schedules ~cores near-empty
+    defaultParallelism pickled slices, so every consumer job (the
+    search probes' broadcast builds) schedules ~cores near-empty
     Python-fed tasks; a ``coalesce(1)`` on top is WORSE — it funnels
     all those slices sequentially through one Python worker (measured
     round 14: 5.1 s vs 0.56 s per final assign at sf0.1). One slice at
@@ -270,174 +238,64 @@ def _literal_df(spark, rows, schema: str) -> DataFrame:
     )
 
 
-def _centroid_assign_reduce(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid per vector as a broadcast fanout + max_by
-    reduce — the round-7 formulation, kept for the FINAL assignment of
-    a fit (optimization round 13): its output feeds MANY downstream
-    consumers (searches derive the query batch and the posting lists
-    from it; prefit indexes cache it), and the compact aggregate plan
-    keeps every consumer's per-action analysis cheap while the
-    exchange doubles as the ReusedExchange sharing point. Identical
-    cosine (9 dp) and (cosine desc, lowest-id) tie-break as
-    :func:`_centroid_assign`, which the per-round Lloyd passes use
-    instead — there the single-consumer means update makes the
-    map-only form strictly better (no corpus exchange per round).
-    Measured at sf0.1: a prefit ivf_pq_search rep over members rooted
-    in the map-only plan ran 2.1-2.9 s vs 1.6-1.8 s over this form —
-    pure driver-side analysis of the embedded k×dim argmax."""
-    joined = vecs.crossJoin(F.broadcast(centroids))
-    cos = F.round(
-        _dot("embedding", "c_emb") / (F.col("_norm") * F.col("c_norm")), 9
-    )
+def _list_rows(values) -> "lloyd.Rows":
+    """:class:`lloyd.Rows` of collected arrays (None for a NULL array
+    or element)."""
+    import pyarrow as pa
+
+    return lloyd.dense_rows(pa.array(values, pa.list_(pa.float64())))
+
+
+def _doubles(col) -> tuple:
+    """(values with NaN for NULL, NULL mask) of an Arrow or Python
+    sequence of doubles."""
+    import numpy as np
+    import pyarrow as pa
+
+    col = pa.array(col, pa.float64()) if isinstance(col, list) else col
     return (
-        joined.withColumn("_cos", cos)
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("embedding", "_norm", "centroid_id"),
-                F.struct(
-                    F.col("_cos").alias("c"),
-                    (-F.col("centroid_id")).alias("nid"),
-                ),
-            ).alias("_b")
-        )
-        .select("vec_id", "_b.embedding", "_b._norm", "_b.centroid_id")
+        col.to_numpy(zero_copy_only=False).astype(np.float64),
+        col.is_null().to_numpy(zero_copy_only=False),
     )
 
 
 def _centroid_assign(vecs: DataFrame, cent_rows) -> DataFrame:
-    """Nearest centroid per vector by cosine, as a MAP-ONLY projection
-    over the collected centroid rows (k×dim doubles — model-sized,
-    already on the driver from the Lloyd round's collect). Quantized +
-    id-tie-broken for determinism (ties in the 9-dp cosine go to the
-    LOWEST centroid_id).
-
-    Plan-shape history: the round-7 fix replaced a window-rank over the
-    broadcast crossJoin (an O(N×k)-row exchange with both embedding
-    arrays attached — measured 169 s / ~49 GB shuffled at 200k×447)
-    with a ``groupBy(vec_id).agg(max_by)`` reduce, cutting the exchange
-    to N rows. Optimization round 13 removes that exchange too: the
-    crossJoin fanout is task-local (broadcast), so grouping by vec_id
-    never moves data between keys — the shuffle existed only because
-    aggregation plans one. Expressing the argmax as
-    ``array_max(array(struct(cosine_i, -id_i, id_i)...))`` over one
-    array-literal per centroid keeps the identical cosine expression
-    (same casts/fold as :func:`_dot`), the identical (cosine desc,
-    lowest-id) tie-break via struct ordering, and ZERO exchanges: every
-    Lloyd round previously shuffled the full corpus (embeddings
-    attached) once — at 100 TB that is iters corpus-sized exchanges
-    gone; the per-round shuffle is now only the metadata-sized centroid
-    update. The whole argmax is ONE SQL string parsed once (see
-    :func:`_array_sql_lit` — round 14 re-measured the literal-free
-    broadcast-struct alternative and kept the literals: 15× faster
-    execution), with the dot product textually identical to
-    :func:`_dot` so both routes produce the same doubles."""
-    rows = sorted(cent_rows, key=lambda r: r["centroid_id"])
-    if not rows:
-        # empty centroid set (empty fit corpus): the former crossJoin
-        # produced zero rows; mirror that so downstream guards (the
-        # fit entry points' empty-corpus ValueError) fire unchanged
-        return vecs.filter(F.lit(False)).select(
-            "vec_id",
-            "embedding",
-            "_norm",
-            F.lit(None).cast("int").alias("centroid_id"),
-        )
-    structs = []
-    for r in rows:
-        dot = (
-            f"aggregate(zip_with(embedding, {_array_sql_lit(r['c_emb'])}, "
-            f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        cid = int(r["centroid_id"])
-        structs.append(
-            f"named_struct('c', round({dot} / (_norm * "
-            f"{_double_sql_lit(r['c_norm'])}), 9), 'nid', {-cid}, "
-            f"'centroid_id', {cid})"
-        )
-    best = F.expr(f"array_max(array({','.join(structs)})).centroid_id")
-    return vecs.select(
-        "vec_id", "embedding", "_norm", best.alias("centroid_id")
-    )
-
-
-#: Above this centroid count the Lloyd assign dispatches to the
-#: Arrow-batched BLAS kernel; at or below it the broadcast-join HOF
-#: route keeps the whole plan JVM-side. The oracle defaults (k = 16)
-#: and every sf0.01/sf0.1 auto-k (≤ 44) sit under it — registered
-#: query plans stay Python-free (tools/audit_plans.py gates that) —
-#: while the decade-scale fits (auto-k = √N > 64 ⇔ N > 4096) take the
-#: vectorized kernel, where the N·k·D flops dominate everything else.
-VECTORIZED_ASSIGN_MIN_K = 64
-
-
-def _centroid_assign_vectorized(vecs: DataFrame, cent_rows) -> DataFrame:
-    """Large-k twin of :func:`_centroid_assign`: one N·k·D dense
-    matmul per Arrow batch (numpy/BLAS) instead of N·k higher-order
-    fold evaluations. HOF lambdas evaluate interpreted per element —
-    measured 37 s for a single 200k×447×64 assign — while the same
-    flops are <1 s in BLAS; this is the FAISS-shaped division of
-    labor (Spark distributes the batches, a vectorized kernel does
-    the dense arithmetic). Same contract as the JVM route: cosine
-    quantized to 9 dp, ties to the LOWEST centroid_id (``argmax``
-    returns the first maximum and centroids are sorted by id) —
-    parity on real data is pinned by tests/test_r7_ops.py.
-
-    Known divergence window (documented, judged acceptable): the 9-dp
-    quantization here is ``np.round`` (IEEE half-to-EVEN) while the JVM
-    route uses Spark ``ROUND`` (HALF_UP), and BLAS sums the dot product
-    in a different order than the JVM fold — so two cosines that are
-    exactly-representable ties at the 9th decimal, or that straddle a
-    rounding boundary by less than the ~1e-16-relative accumulation
-    difference, can assign to different centroids across routes. Both
-    assignments are valid Lloyd steps (k-means is robust to either),
-    the routes are never mixed within one fit (the dispatch at
-    :data:`VECTORIZED_ASSIGN_MIN_K` is a static k threshold, so a
-    given fit sees one route for all its iterations), and the
-    registered oracle queries all take the JVM route. Implementing
-    HALF_UP in numpy (floor(x*1e9+0.5) with sign handling) would close
-    the window but introduce its own double-rounding error at the
-    scaled-by-1e9 step; the tie probability on real-valued embeddings
-    is measure-zero, so the parity test on real data stands."""
+    """Nearest centroid per vector by cosine: (vec_id, embedding,
+    _norm, centroid_id) over the collected centroid rows (k×dim values,
+    already on the driver from the Lloyd round's collect). One
+    ``mapInArrow`` step runs :func:`lloyd.cosine_argmax` per Arrow
+    batch: the cosine is the fold of :func:`_dot` over ``_norm *
+    c_norm``, quantized to 9 dp as Spark's ``ROUND`` does, and ties go
+    to the LOWEST centroid_id, bit-identical to the Spark SQL argmax
+    that tests/test_similarity.py keeps as the reference. No exchange:
+    the assign is map-only, so each Lloyd round shuffles only the
+    metadata-sized centroid update. An empty centroid set (empty fit
+    corpus) assigns no rows, so the fit entry points' empty-corpus
+    errors fire."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     rows = sorted(cent_rows, key=lambda r: r["centroid_id"])
-    C = np.array([r["c_emb"] for r in rows], dtype=np.float64)
-    cn = np.array([r["c_norm"] for r in rows], dtype=np.float64)
     ids = np.array([r["centroid_id"] for r in rows], dtype=np.int32)
+    cents = _list_rows([r["c_emb"] for r in rows])
+    c_norm = _doubles([r["c_norm"] for r in rows])
+    ansi = vecs.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
 
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array([np.asarray(e, dtype=np.float64) for e in pdf["embedding"]])
-            cos = np.round(
-                (X @ C.T) / (pdf["_norm"].to_numpy()[:, None] * cn[None, :]), 9
-            )
-            out = pdf[["vec_id", "embedding", "_norm"]].copy()
-            out["centroid_id"] = ids[cos.argmax(axis=1)]
-            yield out
+    def assign(batches):
+        for b in batches:
+            if len(ids) and b.num_rows:
+                best = lloyd.cosine_argmax(
+                    lloyd.dense_rows(b.column("embedding")),
+                    *_doubles(b.column("_norm")),
+                    cents,
+                    *c_norm,
+                    ansi=ansi,
+                )
+                yield b.append_column("centroid_id", pa.array(ids[best]))
 
-    return vecs.mapInPandas(
-        fn, "vec_id bigint, embedding array<float>, _norm double, centroid_id int"
+    return vecs.select("vec_id", "embedding", "_norm").mapInArrow(
+        assign, "vec_id bigint, embedding array<float>, _norm double, centroid_id int"
     )
-
-
-def _assign(
-    vecs: DataFrame, cent_rows, centroids: DataFrame, final: bool = False
-) -> DataFrame:
-    """Route one Lloyd assign: JVM map-only argmax for small-k
-    per-round passes (zero exchanges — the means update is the only
-    consumer), the compact broadcast+reduce form for the FINAL
-    multi-consumer assignment (``final=True``), and the BLAS kernel
-    past :data:`VECTORIZED_ASSIGN_MIN_K` (map-only either way)."""
-    if len(cent_rows) > VECTORIZED_ASSIGN_MIN_K:
-        return _centroid_assign_vectorized(vecs, cent_rows)
-    if final:
-        return _centroid_assign_reduce(vecs, centroids)
-    return _centroid_assign(vecs, cent_rows)
 
 
 def ivf_index(
@@ -453,13 +311,12 @@ def ivf_index(
     SemDeDup-style scale path — fixed k makes each posting list grow
     linearly with N).
 
-    Scale shape: centroids are always broadcast (k vectors); assignment
-    is a map-side broadcast join; the centroid update is one shuffle
-    keyed by (centroid, dim) with map-side partial sums. Each round's k
-    centroids are collected to the driver and re-emitted as a literal
-    table (exactly what Spark MLlib's KMeans does) — k × dim doubles,
-    not data — so the per-iteration plan stays flat instead of
-    compounding into an exponentially re-executed lazy DAG. At 100 TB
+    Scale shape: each round's k centroids are collected to the driver
+    (exactly what Spark MLlib's KMeans does) — k × dim doubles, not
+    data — and shipped to a map-only assign kernel, so the
+    per-iteration plan stays flat instead of compounding into an
+    exponentially re-executed lazy DAG; the centroid update is one
+    shuffle keyed by (centroid, dim) with map-side partial sums. At 100 TB
     run the update on a uniform sample — the quantizer only needs
     cluster geometry, not every point.
     """
@@ -499,15 +356,8 @@ def _ivf_fit(
             F.col("_norm").alias("c_norm"),
         )
     )
-    schema = "centroid_id int, c_emb array<float>, c_norm double"
     for _ in range(iters):
-        cent_rows = centroids.collect()
-        # model-sized literal (k rows): one partition, not the
-        # defaultParallelism slices createDataFrame would give it —
-        # every broadcast build over it otherwise schedules ~cores
-        # near-empty tasks (optimization round 14, VERDICT r13 ask #5)
-        centroids = _literal_df(spark, cent_rows, schema)
-        assigned = _assign(fit_base, cent_rows, centroids)
+        assigned = _centroid_assign(fit_base, centroids.collect())
         dims = assigned.select(
             "centroid_id", F.posexplode("embedding").alias("dim", "x")
         )
@@ -525,12 +375,14 @@ def _ivf_fit(
             "c_norm", F.sqrt(_dot("c_emb", "c_emb"))
         )
     cent_rows = centroids.collect()
-    centroids = _literal_df(spark, cent_rows, schema)
-    # final=True: the multi-consumer full-corpus assignment keeps the
-    # compact reduce plan (see _centroid_assign_reduce) — the per-round
-    # map-only assigns above already removed the iters corpus
-    # exchanges, which is where the scale win lives.
-    out = _assign(base, cent_rows, centroids, final=True)
+    # model-sized literal (k rows): one partition, not the
+    # defaultParallelism slices createDataFrame would give it — every
+    # broadcast build over it (the search probes) otherwise schedules
+    # ~cores near-empty tasks
+    centroids = _literal_df(
+        spark, cent_rows, "centroid_id int, c_emb array<float>, c_norm double"
+    )
+    out = _centroid_assign(base, cent_rows)
     # NO base.unpersist(): `out` is lazy and its full-corpus assignment
     # scan (the expensive consumer pass) still reads the cache —
     # releasing it here would force that pass to re-read from source.
@@ -765,101 +617,60 @@ def _floor_q(col: F.Column, dp: int) -> F.Column:
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
 
-def _pq_code_reduce(source: DataFrame, cdf: DataFrame) -> DataFrame:
-    """Nearest PQ centroid per (vec, sub) row as a broadcast join +
-    min_by reduce — the compact-plan twin of :func:`_pq_code_argmin`,
-    kept for FINAL/encode passes whose output feeds many downstream
-    consumers (the `_centroid_assign_reduce` rationale). Identical
-    distances (:func:`_sub_l2sq`) and (min d, lowest centroid_id)
-    tie-break."""
-    j = source.join(F.broadcast(cdf), "sub_id")
-    d = _sub_l2sq("se", "c")
-    return (
-        j.withColumn("_d", d)
-        .groupBy("vec_id", "sub_id")
-        .agg(
-            F.min_by(
-                F.struct("se", "centroid_id", "_d"),
-                F.struct(F.col("_d").alias("d"), F.col("centroid_id").alias("i")),
-            ).alias("_b")
-        )
-        .select("vec_id", "sub_id", "_b.se", "_b.centroid_id", "_b._d")
-    )
-
-
 def _pq_code_argmin(source: DataFrame, cent_rows) -> DataFrame:
-    """Nearest PQ centroid per (vec, sub) row as a MAP-ONLY projection
-    over the collected codebook (optimization round 13): the former
-    broadcast-join + ``groupBy(vec_id, sub_id).agg(min_by)`` reduce
-    fanned out task-locally but still paid an N·m-row exchange
-    (subvector arrays attached) per pass purely because aggregation
-    plans one — the PQ twin of the `_centroid_assign` shuffle removal.
-    One sub_id-dispatched CASE of ``array_min(array(struct(d, id)))``
-    literals keeps the distance textually identical to
-    :func:`_sub_l2sq` (same zip_with fold, same floor-based 9-dp
-    half-up quantizer) and the identical (min d, lowest centroid_id)
-    tie-break via struct ordering, with ZERO exchanges; each centroid
-    rides as one array literal and the whole expression is one SQL
-    string parsed once (see :func:`_array_sql_lit`; round 14
-    re-measured the literal-free broadcast-struct alternative and kept
-    the literals — 15× faster execution, the `_centroid_assign` note).
-    A source row whose sub_id is absent from the codebook is DROPPED
-    (the CASE's ELSE NULL filtered out) — the former broadcast inner
-    join's semantics made explicit (ADVICE r13); unreachable while fit
-    sampling covers all sub_ids, but no longer silent if it ever
-    doesn't.
+    """Nearest PQ centroid per (vec, sub) row over the collected
+    codebook: ``source`` carries (vec_id, sub_id, se) and the output
+    appends (centroid_id, _d). One ``mapInArrow`` step runs
+    :func:`lloyd.l2_argmin` per sub_id in each Arrow batch: the
+    distance is :func:`_sub_l2sq`'s fold and floor-based 9-dp half-up
+    quantizer, ties to the lowest centroid_id, bit-identical to the
+    Spark SQL argmin that tests/test_similarity.py keeps as the
+    reference, with no exchange. A source row whose sub_id has no
+    codebook entry is DROPPED, as an inner join on sub_id would drop
+    it; unreachable while fit sampling covers all sub_ids. Shared by the
+    Lloyd passes and the final assignment of ``_pq_fit`` and the
+    frozen-codebook batch encode of :func:`ivf_pq_append`."""
+    import numpy as np
+    import pyarrow as pa
 
-    ``source`` must carry (vec_id, sub_id, se); output appends
-    (centroid_id, _d). Shared by the Lloyd passes of ``_pq_fit`` and
-    the frozen-codebook batch encode of :func:`ivf_pq_append`."""
     by_sub: dict = {}
     for r in sorted(cent_rows, key=lambda r: (r["sub_id"], r["centroid_id"])):
         by_sub.setdefault(int(r["sub_id"]), []).append(r)
-    if not by_sub:
-        # empty codebook (empty fit corpus): the former broadcast
-        # join produced zero rows; mirror that
-        return source.filter(F.lit(False)).select(
-            "vec_id",
-            "sub_id",
-            "se",
-            F.lit(None).cast("int").alias("centroid_id"),
-            F.lit(None).cast("double").alias("_d"),
+    books = {
+        s: (
+            np.array([r["centroid_id"] for r in rows], dtype=np.int32),
+            _list_rows([r["c"] for r in rows]),
         )
-    branches = []
-    for s, rows in sorted(by_sub.items()):
-        structs = []
-        for r in rows:
-            dist = (
-                f"floor(aggregate(zip_with(se, "
-                f"{_array_sql_lit(r['c'])}, "
-                f"(x, y) -> (x - y) * (x - y)), "
-                f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) "
-                f"* 1000000000.0D + 0.5D) / 1000000000.0D"
-            )
-            structs.append(
-                f"named_struct('d', {dist}, 'i', {int(r['centroid_id'])})"
-            )
-        branches.append(
-            f"WHEN sub_id = {s} THEN array_min(array({','.join(structs)}))"
-        )
-    best = F.expr(f"CASE {' '.join(branches)} END")
-    # join-drop semantics for a sub_id with no codebook entry (ADVICE
-    # r13): filter on sub_id MEMBERSHIP (a cheap integer check) BEFORE
-    # the CASE — filtering on the CASE result itself would make the
-    # optimizer evaluate the whole k-literal argmin twice per row
-    # (filter + project), the guide-§4.4 duplication (measured +100%
-    # on every PQ assign pass when round 14 first tried it).
-    covered = sorted(by_sub)
-    return (
-        source.filter(F.col("sub_id").isin(covered))
-        .withColumn("_b", best)
-        .select(
-            "vec_id",
-            "sub_id",
-            "se",
-            F.col("_b.i").alias("centroid_id"),
-            F.col("_b.d").alias("_d"),
-        )
+        for s, rows in by_sub.items()
+    }
+
+    def assign(batches):
+        for b in batches:
+            sub = b.column("sub_id")
+            valid = sub.is_valid().to_numpy(zero_copy_only=False)
+            sub = sub.fill_null(0).to_numpy(zero_copy_only=False)
+            x = lloyd.dense_rows(b.column("se"))
+            keep = np.zeros(b.num_rows, dtype=bool)
+            code = np.zeros(b.num_rows, dtype=np.int32)
+            dist = np.zeros(b.num_rows)
+            dist_null = np.zeros(b.num_rows, dtype=bool)
+            for s, (ids, book) in books.items():
+                at = np.flatnonzero(valid & (sub == s))
+                best, dist[at], dist_null[at] = lloyd.l2_argmin(
+                    lloyd.Rows(x.vals[at], x.lens[at], x.null[at]), book
+                )
+                code[at] = ids[best]
+                keep[at] = True
+            if keep.any():
+                out = b.filter(pa.array(keep))
+                out = out.append_column("centroid_id", pa.array(code[keep]))
+                yield out.append_column(
+                    "_d", pa.array(dist[keep], mask=dist_null[keep])
+                )
+
+    return source.select("vec_id", "sub_id", "se").mapInArrow(
+        assign,
+        "vec_id bigint, sub_id int, se array<double>, centroid_id int, _d double",
     )
 
 
@@ -893,12 +704,11 @@ def pq_codes(
     order-insensitive compare —, qerr = total squared quantization
     error, rounded).
 
-    Scale shape: the codebook is always broadcast (m·k subvectors);
-    assignment is a map-side broadcast join keyed on ``sub_id``; the
+    Scale shape: per round the m·k centroids are collected and shipped
+    to a map-only assign kernel keyed on ``sub_id`` (the MLlib pattern —
+    the flat plan beats an exponentially recompounding lazy DAG); the
     codebook update is one shuffle keyed by (sub, centroid, dim) with
-    map-side partial sums. Per round the m·k centroids are collected
-    and re-emitted as a literal table (the MLlib pattern — the flat
-    plan beats an exponentially recompounding lazy DAG); at 100 TB fit
+    map-side partial sums. At 100 TB fit
     the codebook on a uniform sample and apply assignment to the full
     data — quantizer geometry doesn't need every point.
 
@@ -955,75 +765,9 @@ def _pq_subvectors(emb: DataFrame, m: int, expect_dim: int | None = None) -> Dat
     ).select("vec_id", "_s.sub_id", "_s.se")
 
 
-#: Above this many HOF element-ops per assign pass (subvector rows ×
-#: centroids × subdim) the PQ Lloyd assign dispatches to the
-#: Arrow-batched numpy kernel — the PQ twin of
-#: :data:`VECTORIZED_ASSIGN_MIN_K`, which keys on k alone and so never
-#: fires for PQ codebooks (k=16 always). Measured round 9: the m=16
-#: fit at 2M vectors (2e9 element-ops/pass across ~50 passes) ran
-#: 1311 s with all 32 cores inside interpreted ``ZipWith``/
-#: ``ArrayAggregate`` evaluation; the same flops are BLAS-trivial.
-#: Every registered oracle corpus (≤ 20k vectors → ≤ 5e6 ops) stays
-#: orders of magnitude under the threshold, so their plans remain
-#: JVM-only (audited); one fit sees one route for all its passes.
-PQ_VECTORIZED_MIN_WORK = 1_000_000_000
-
-
-def _pq_assign_vectorized(source: DataFrame, cent_rows) -> DataFrame:
-    """numpy twin of ``_pq_fit``'s broadcast-join assign: per Arrow
-    batch, group by sub_id and take one (n, k, subdim) squared-L2
-    reduction per group. Contract-identical to the JVM route: the
-    distance is quantized to 9 dp with the same floor(x·1e9+0.5)
-    half-up BEFORE the argmin, and centroids are sorted by id so
-    numpy's first-minimum argmin equals min_by's (d, centroid_id)
-    tie-break. Residual divergence window (same as
-    :func:`_centroid_assign_vectorized`, documented there): the
-    pre-quantization sum order differs for subdims above numpy's
-    unrolled-8 boundary, so a raw distance straddling a 1e-9 rounding
-    boundary by the ~1e-16 accumulation difference can flip — ties on
-    real-valued embeddings are measure-zero, the routes are never
-    mixed within a fit, and small-corpus parity is pinned by test."""
-    import numpy as np
-    import pandas as pd
-
-    by_sub: dict = {}
-    for r in sorted(cent_rows, key=lambda r: (r["sub_id"], r["centroid_id"])):
-        ids, cs = by_sub.setdefault(r["sub_id"], ([], []))
-        ids.append(r["centroid_id"])
-        cs.append(np.asarray(r["c"], dtype=np.float64))
-    mats = {
-        s: (np.asarray(ids, dtype=np.int32), np.stack(cs))
-        for s, (ids, cs) in by_sub.items()
-    }
-
-    def fn(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for s, g in pdf.groupby("sub_id", sort=False):
-                ids, C = mats[int(s)]
-                X = np.array(g["se"].tolist(), dtype=np.float64)
-                d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
-                dq = np.floor(d * 1e9 + 0.5) / 1e9
-                j = dq.argmin(axis=1)
-                out = g[["vec_id", "sub_id", "se"]].copy()
-                out["centroid_id"] = ids[j]
-                out["_d"] = dq[np.arange(len(j)), j]
-                outs.append(out)
-            yield pd.concat(outs)
-
-    return source.mapInPandas(
-        fn,
-        "vec_id bigint, sub_id int, se array<double>, "
-        "centroid_id int, _d double",
-    )
-
-
 def _pq_fit(
     emb: DataFrame, m: int, k: int, iters: int,
     fit_sample_mod: int | None = None,
-    n_vectors: int | None = None,
     dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd rounds for :func:`pq_codes`; returns (final assignment —
@@ -1036,10 +780,9 @@ def _pq_fit(
     ``_ivf_fit``); the final code assignment always covers the full
     corpus. Default None keeps the full-data fit the oracles mirror.
 
-    ``n_vectors``/``dim``: callers that already know the corpus count
-    (``fit_ivf_pq_index`` counts its cached members) or the embedding
-    dim thread them here so the route gate and the divisibility check
-    cost zero extra actions.
+    ``dim``: callers that already know the embedding dim
+    (``fit_ivf_pq_index``) pass it so the divisibility check costs no
+    extra action.
 
     The subvector cache stays persisted when this returns: the returned
     assignment is LAZY and its full-corpus scan (the most expensive
@@ -1070,21 +813,6 @@ def _pq_fit(
         if fit_sample_mod
         else subs
     )
-    # One route per fit, chosen by the work of the LARGEST assign pass —
-    # the final full-corpus assignment (N·m subvector rows × k centroids
-    # × dim/m subdim = N·k·dim element-ops; the per-iteration fit passes
-    # are that divided by fit_sample_mod, so the full pass is the max
-    # and dominates the fit's total assign cost). The count scans the
-    # NARROW source table, never the exploded subvector cache: forcing
-    # that cache here coincided with pq_topk/pq_rerank_topk going
-    # +149%/+142% in the r9 driver bench (BENCH_r09.json) — the
-    # exploded rows materialize lazily on the first assign instead.
-    if n_vectors is None and dim0 is not None:
-        n_vectors = emb.count()
-    vectorized = (
-        dim0 is not None
-        and n_vectors * k * dim0 > PQ_VECTORIZED_MIN_WORK
-    )
     low_ids = (
         emb.filter(F.col("vec_id") % fit_sample_mod == 0)
         if fit_sample_mod
@@ -1100,29 +828,8 @@ def _pq_fit(
             F.col("se").alias("c"),
         )
     )
-    schema = "sub_id int, centroid_id int, c array<double>"
-
-    def assign(
-        cdf: DataFrame,
-        source: DataFrame = subs,
-        cent_rows=None,
-        final: bool = False,
-    ) -> DataFrame:
-        # per-round passes: map-only argmin (zero exchanges — the
-        # means update is the only consumer); final pass: compact
-        # reduce plan for the many downstream consumers (the
-        # _centroid_assign_reduce rationale).
-        if vectorized and cent_rows is not None:
-            return _pq_assign_vectorized(source, cent_rows)
-        if final:
-            return _pq_code_reduce(source, cdf)
-        return _pq_code_argmin(source, cent_rows)
-
     for _ in range(iters):
-        cent_rows = cents.collect()
-        # model-sized literal (m·k rows): one partition (see _ivf_fit)
-        cents = _literal_df(spark, cent_rows, schema)
-        a = assign(cents, fit_subs, cent_rows)
+        a = _pq_code_argmin(fit_subs, cents.collect())
         cents = (
             a.select("sub_id", "centroid_id", F.posexplode("se").alias("dim", "x"))
             .groupBy("sub_id", "centroid_id", "dim")
@@ -1138,8 +845,11 @@ def _pq_fit(
             )
         )
     cent_rows = cents.collect()
-    cents = _literal_df(spark, cent_rows, schema)
-    final = assign(cents, subs, cent_rows, final=True)
+    # model-sized literal (m·k rows): one partition (see _ivf_fit)
+    cents = _literal_df(
+        spark, cent_rows, "sub_id int, centroid_id int, c array<double>"
+    )
+    final = _pq_code_argmin(subs, cent_rows)
     # deliberately NO subs.unpersist() here — see docstring
     return final, cents
 
@@ -1466,11 +1176,10 @@ def _corpus_shape(
     emb: DataFrame, n_clusters: int | str | None
 ) -> tuple[int, "int | None", "int | None"]:
     """(IVF list count, corpus size, embedding dim) for an IVF×PQ fit,
-    from at most one count and one O(1) ``first()``: the auto-k
-    resolver and ``_pq_fit``'s route gate share the count, and the dim
-    probe is shared with ``_pq_fit``'s divisibility check (optimization
-    round 14, VERDICT r13 ask #2 — fewer Spark actions). Size and dim
-    are None on an empty corpus (size is 0 in auto mode)."""
+    from at most one count and one O(1) ``first()``: the size is the
+    auto-k resolver's count (None unless ``n_clusters="auto"``), and the
+    dim probe is shared with ``_pq_fit``'s divisibility check. Dim is
+    None on an empty corpus."""
     if n_clusters == "auto":
         n_vectors = emb.count()
         k_ivf = kmeans_clusters_for(n_vectors)
@@ -1479,15 +1188,12 @@ def _corpus_shape(
         n_vectors = None
     row = emb.select(F.size("embedding").alias("d")).first()
     dim = None if row is None or row["d"] is None else int(row["d"])
-    if n_vectors is None and dim is not None:
-        n_vectors = emb.count()
     return k_ivf, n_vectors, dim
 
 
 def _fit_ivf_pq(
     emb: DataFrame,
     k_ivf: int,
-    n_vectors: "int | None",
     dim: "int | None",
     ivf_iters: int,
     m: int,
@@ -1506,7 +1212,7 @@ def _fit_ivf_pq(
     )
     final, pq_cents = _pq_fit(
         emb, m=m, k=n_centroids, iters=pq_iters,
-        fit_sample_mod=fit_sample_mod, n_vectors=n_vectors, dim=dim,
+        fit_sample_mod=fit_sample_mod, dim=dim,
     )
     codes = final.select(
         "vec_id", "sub_id", F.col("centroid_id").alias("code_id")
@@ -1557,6 +1263,8 @@ def fit_ivf_pq_index(
         raise ValueError(
             "fit_ivf_pq_index: empty embedding corpus — nothing to fit"
         )
+    if n_vectors is None:
+        n_vectors = emb.count()
     if memory_budget_bytes is not None:
         rec = recommend_quantizer(
             n_vectors, dim, memory_budget_bytes, n_centroids
@@ -1573,8 +1281,7 @@ def fit_ivf_pq_index(
             )
     m = _resolve_pq_m(m, n_centroids, n_vectors, dim)
     index = _fit_ivf_pq(
-        emb, k_ivf, n_vectors, dim, ivf_iters, m, n_centroids, pq_iters,
-        fit_sample_mod,
+        emb, k_ivf, dim, ivf_iters, m, n_centroids, pq_iters, fit_sample_mod
     )
     index.members.cache().count()
     index.codes.cache().count()
@@ -1691,9 +1398,10 @@ def ivf_pq_append(
     """Append new vectors to a prefit index WITHOUT refitting — the
     between-refits ingest path (FAISS ``add`` semantics; the batch twin
     of ``incremental_neardup``'s daily-crawl posture): each new vector
-    is assigned to its nearest FROZEN coarse centroid (the same
-    cosine/max_by assign as the fit's final pass) and encoded against
-    the FROZEN per-subspace PQ codebooks (the same L2/min_by assign),
+    is assigned to its nearest FROZEN coarse centroid (the fit's cosine
+    assign, :func:`_centroid_assign`) and encoded against the FROZEN
+    per-subspace PQ codebooks (the fit's L2 assign,
+    :func:`_pq_code_argmin`),
     then unioned into the posting lists and code table. Searches over
     the appended index therefore return EXACTLY what an index whose fit
     had produced these centroids/codebooks over (corpus ∪ new) would —
@@ -1702,11 +1410,9 @@ def ivf_pq_append(
     mass shifts the true distribution; refit on snapshot cadence (the
     documented ``fit_dup_gram_stats``/``fit_dsir_logratio`` posture).
 
-    Scale: assignment is one broadcast crossJoin + max_by reduce per
-    new vector (N_new rows shuffled, never N_new×k — the
-    `_centroid_assign` shape), encoding is m broadcast-joined min_by
-    reduces; the corpus-side frames are reused as-is, so a daily batch
-    pays O(batch), not O(corpus). Duplicate vec_ids would silently
+    Scale: assignment and encoding are map-only kernel passes over the
+    batch (no exchange); the corpus-side frames are reused as-is, so a
+    daily batch pays O(batch), not O(corpus). Duplicate vec_ids would silently
     shadow posting-list rows, so they are refused loudly — that check
     is the one corpus-touching step (a narrow vec_id scan of the
     cached members, no shuffle); ingest pipelines whose ids are fresh
@@ -1717,7 +1423,6 @@ def ivf_pq_append(
     delta (+1.7 s at a 20k corpus, +2.4 s at 200k — linear-in-corpus
     would be ~10x, not 1.5x).
     """
-    spark = new_emb.sparkSession
     cent_rows = index.cents.collect()
     # the index's embedding dim, read off the already-collected coarse
     # centroids (free — no corpus touch): a batch whose dim differs
@@ -1794,11 +1499,7 @@ def ivf_pq_append(
             f"dim {index_dim} — assignment and PQ encoding against the "
             "frozen centroids/codebooks would be silently wrong"
         )
-    new_base = _with_norm(new_emb).select("vec_id", "embedding", "_norm")
-    cents = _literal_df(
-        spark, cent_rows, "centroid_id int, c_emb array<float>, c_norm double"
-    )
-    new_members = _assign(new_base, cent_rows, cents, final=True).cache()
+    new_members = _centroid_assign(_with_norm(new_emb), cent_rows).cache()
     n_new = new_members.count()  # materialize ONLY the batch side — O(batch)
     # the union stays a lazy view over two cached frames: re-caching it
     # would copy the whole corpus-side members again, an O(corpus) pass
@@ -1806,17 +1507,8 @@ def ivf_pq_append(
     # instead of the batch (measured: +1.5 s at 10x vs +2.1 s at 100x
     # before the fix)
     members = index.members.unionByName(new_members)
-    pq_rows = index.pq_cents.collect()
-    pq_cents = _literal_df(
-        spark, pq_rows, "sub_id int, centroid_id int, c array<double>"
-    )
     subs = _pq_subvectors(new_emb, index.m, expect_dim=index_dim)
-    # frozen-codebook encode via the compact reduce form: the encoded
-    # batch is unioned into every later serve plan (many consumers), so
-    # the small aggregate plan beats embedding the argmin literals
-    # (the _centroid_assign_reduce rationale); the exchange is
-    # batch-sized.
-    new_codes = _pq_code_reduce(subs, pq_cents).select(
+    new_codes = _pq_code_argmin(subs, index.pq_cents.collect()).select(
         "vec_id", "sub_id", F.col("centroid_id").alias("code_id")
     )
     new_codes = new_codes.cache()
@@ -2033,9 +1725,10 @@ def ivf_pq_topk(
     materializes, left lazy, so both modes return the same rows.
     """
     if index is None:
+        k_ivf, _, dim = _corpus_shape(emb, n_clusters)
         index = _fit_ivf_pq(
-            emb, *_corpus_shape(emb, n_clusters), ivf_iters, m,
-            n_centroids, pq_iters, fit_sample_mod,
+            emb, k_ivf, dim, ivf_iters, m, n_centroids, pq_iters,
+            fit_sample_mod,
         )
     q = _query_side(index.members.filter(F.col("vec_id") % query_mod == 0))
     return _search_ivf_pq(

@@ -120,16 +120,16 @@ def test_fit_ivf_pq_index_raises_loudly_on_empty_corpus(spark):
 
 
 def test_pq_fit_threaded_count_and_dim_matches_discovered(spark):
-    """fit_ivf_pq_index threads (n_vectors, dim) into _pq_fit so the
-    route gate runs zero extra actions; the threaded fit must be
+    """fit_ivf_pq_index threads the embedding dim into _pq_fit so the
+    divisibility check runs no extra action; the threaded fit must be
     code-identical to the self-discovering one."""
     from myodish_peak_analysis_spark.llm.similarity import _pq_fit
     from myodish_peak_analysis_spark.schema import read_table
 
     emb = read_table(spark, SF001, "embeddings")
-    n, d = emb.count(), len(emb.select("embedding").first()[0])
+    d = len(emb.select("embedding").first()[0])
     base, _ = _pq_fit(emb, m=4, k=8, iters=1)
-    threaded, _ = _pq_fit(emb, m=4, k=8, iters=1, n_vectors=n, dim=d)
+    threaded, _ = _pq_fit(emb, m=4, k=8, iters=1, dim=d)
     cols = ["vec_id", "sub_id", "centroid_id"]
     assert sorted(map(tuple, base.select(*cols).collect())) == sorted(
         map(tuple, threaded.select(*cols).collect())

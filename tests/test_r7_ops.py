@@ -180,42 +180,6 @@ def test_replicate_emb_preserves_within_copy_geometry(spark):
         assert not np.array_equal(by_copy[1][vid], by_copy[2][vid])
 
 
-def test_vectorized_assign_matches_jvm_route(spark):
-    """The BLAS Lloyd-assign kernel (engaged past
-    VECTORIZED_ASSIGN_MIN_K centroids) must agree with the JVM
-    broadcast-join route vector-for-vector — same 9-dp quantization,
-    same lowest-id tie-break — on real embedding data."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from myodish_peak_analysis_spark.llm import similarity as S
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.01", "embeddings")
-    vecs = S._with_norm(emb).select("vec_id", "embedding", "_norm").cache()
-    k = 80  # > VECTORIZED_ASSIGN_MIN_K so the dispatch WOULD vectorize
-    cents = vecs.orderBy("vec_id").limit(k).select(
-        F.row_number().over(Window.orderBy("vec_id")).alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("c_norm"),
-    )
-    rows = cents.collect()
-
-    jvm = {
-        r.vec_id: r.centroid_id
-        for r in S._centroid_assign(vecs, rows).collect()
-    }
-    vec = {
-        r.vec_id: r.centroid_id
-        for r in S._centroid_assign_vectorized(vecs, rows).collect()
-    }
-    assert jvm == vec
-    assert len(jvm) == vecs.count()
-    # and the dispatcher picks the right route on each side of the gate
-    assert k > S.VECTORIZED_ASSIGN_MIN_K
-    assert 16 <= S.VECTORIZED_ASSIGN_MIN_K  # oracle default stays JVM
-
-
 # --- ISOBMFF (AVIF/HEIF images, MP4 video) ---------------------------
 
 

@@ -312,29 +312,3 @@ def test_abf1_allow_trailing_truncates_with_warning(tmp_path):
     worse.write_bytes(bytes(raw))
     with pytest.raises(ValueError, match="exceeds it"):
         read_abf1_sweeps(str(worse), allow_trailing=True)
-
-
-# --- vectorized PQ assign (work-gated Arrow kernel, round 9) -------------
-
-
-def test_pq_vectorized_assign_parity(spark, monkeypatch):
-    """The PQ Lloyd assign's numpy kernel (fires above
-    PQ_VECTORIZED_MIN_WORK element-ops — measured: the m=16 fit at 2M
-    vectors spent 22 min in interpreted HOF eval; the kernel cut the
-    m=8 fit to 382 s) must be contract-identical to the JVM route on
-    the oracle corpus: same 9-dp floor-quantized distances, same
-    (d, centroid_id) tie-break, so codes and the downstream search are
-    bit-equal."""
-    from myodish_peak_analysis_spark.llm import similarity as S
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, SF001, "embeddings")
-    want_codes = sorted(map(tuple, S.pq_codes(emb).collect()))
-    want_topk = sorted(map(tuple, S.ivf_pq_topk(emb).collect()))
-    spark.catalog.clearCache()  # drop the HOF fit's cached subvectors
-    monkeypatch.setattr(S, "PQ_VECTORIZED_MIN_WORK", 0)
-    got_codes = sorted(map(tuple, S.pq_codes(emb).collect()))
-    got_topk = sorted(map(tuple, S.ivf_pq_topk(emb).collect()))
-    spark.catalog.clearCache()
-    assert got_codes == want_codes and len(want_codes) > 0
-    assert got_topk == want_topk and len(want_topk) > 0

@@ -48,7 +48,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # (one Python boundary for smooth -> flags -> envelopes, and one
 # implementation of the plateau rule), so the queries that flag the raw
 # signal (extrema_flags, naive_peaks, stim_peak_mean) carry one too.
-# Every other query must be Python-free.
+# The IVF and PQ k-means fits assign vectors to centroids with a NumPy
+# kernel in mapInArrow (llm/lloyd.py): as Spark SQL each assign was a
+# k-literal higher-order-function argmax whose planning and interpreted
+# evaluation were most of the fit's cost (benchmark llm pass CPU, see
+# CHANGES.md), so every query that fits, or serves a fitted index,
+# carries one. Every other query must be Python-free.
 PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
                   "native_find_peaks_nodist", "constrained_peak_attributes",
                   "peak_interval_stats", "media_metadata",
@@ -58,7 +63,12 @@ PYTHON_ALLOWED = {"fidelity_peaks", "fidelity_signal", "native_find_peaks",
                   "smooth", "raw_envelopes", "envelopes", "diastolic",
                   "threshold_peaks", "crossing_points", "peak_attributes",
                   "peak_averages", "extrema_flags", "naive_peaks",
-                  "stim_peak_mean"}
+                  "stim_peak_mean",
+                  # the IVF / PQ Lloyd-assign kernels
+                  "ann_ivf_topk", "ann_serve", "ann_serve_appended",
+                  "ivf_list_sizes", "ivf_pq_topk", "ivf_pq_topk_prefit",
+                  "ivf_sq8_topk", "pq_codes", "pq_rerank_topk", "pq_topk",
+                  "rp_ivf_topk", "semantic_dedup"}
 
 
 _EXPR_ID = re.compile(r"#\d+L?")
