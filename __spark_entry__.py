@@ -83,7 +83,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # hard slot priority over (a): with ceil(140/50) = 3 this bounds any
 # query's driver-row staleness at 3 rounds structurally, ~2 in
 # practice; the full local HEAD sweep
-# (docs/CORRECTNESS_LOCAL_r{N}.md) re-verifies all 140 every round
+# (docs/CORRECTNESS_LOCAL.md) re-verifies all of them every round
 # regardless. tests/test_entry_contract.py validates the GENERATOR
 # (coverage of the stale backlog, cap fill, disjointness) rather than
 # a frozen list — the checked property can't go stale.

@@ -497,7 +497,7 @@ def tfidf_verify(
     # driver row paid candidate generation ~3×). cache() is lazy (no
     # action here); the CacheManager dedups across calls on the same
     # input and clearCache()/eviction bounds residency, the same
-    # posture as _pq_fit's subvector cache.
+    # posture as _lloyd_fit's quantizer source caches.
     cand = (
         pairs.select(
             F.least(F.col(a_col), F.col(b_col)).alias("doc_a"),

@@ -35,7 +35,8 @@ def release_caches(spark: SparkSession) -> None:
     before returning, because the returned DataFrame is lazy and its
     most expensive consumer pass still reads the cache —
     ``native_find_peaks(persist_input=True)`` (slim input projection),
-    ``_pq_fit`` (subvector explosion), ``_ivf_fit`` (normed base).
+    ``llm.similarity._lloyd_fit`` (each quantizer's source: the PQ
+    subvector explosion, the IVF normed base, and their fit samples).
     Spark's CacheManager dedups identical canonicalized plans, so
     repeated calls on the SAME input share one entry — but a long
     session calling them across many DISTINCT inputs accumulates

@@ -110,25 +110,27 @@ def test_pipeline_noop_write_job_count(spark):
 
 def test_fit_ivf_pq_index_job_count(spark):
     """One ``fit_ivf_pq_index`` of the sf0.001 embeddings (k = 16 IVF
-    lists, 3 IVF and 2 PQ Lloyd rounds) runs exactly 30 jobs, counted
-    through ``StatusTracker`` under a job group with the cache cleared:
+    lists, 3 IVF and 2 PQ Lloyd rounds in one loop) runs exactly 23
+    jobs, counted through ``StatusTracker`` under a job group with the
+    cache cleared:
 
     - 1: the dim probe (``first``);
     - 2: the corpus count (its exchange stage, then the result);
-    - 11: the IVF fit's collects: the initial centroids (2: filling the
-      normed-corpus cache, then the ordered limit), then the means of
-      each of the 3 rounds (3 each: the (centroid, dim) and centroid
-      aggregation exchanges, then the result);
-    - 10: the PQ fit's collects: the initial codebook (4: filling the
-      subvector cache, the broadcast of the lowest ids, the sub_id
-      window exchange, the result), then the means of each of the 2
-      rounds (3 each, as for IVF);
+    - 5: the one union init of both quantizers: filling the
+      normed-corpus and the subvector caches, the broadcast of the 16
+      lowest ids (both quantizers take k = 16, so the two broadcasts
+      are one reused exchange), the (q, sub_id) window exchange, the
+      result;
+    - 9: the 3 rounds (3 each: the (q, sub_id, centroid, dim) and
+      centroid aggregation exchanges, then the result; rounds 1-2
+      update both quantizers' means in one action, round 3 the IVF's);
     - 6: caching and counting members and codes (3 each: filling the
       cache, the count's exchange, the result).
 
     The assign kernels add no job: they run inside the stages that
     read their input. An assign that shuffles (a reduce over vec_id)
-    adds 2 jobs to each cached count (34)."""
+    adds 2 jobs to each cached count; a PQ k other than the IVF k adds
+    one broadcast; one Lloyd loop per quantizer made it 30."""
     from myodish_peak_analysis_spark.llm.similarity import fit_ivf_pq_index
     from myodish_peak_analysis_spark.schema import read_table
     from tests.conftest import SF001
@@ -143,7 +145,7 @@ def test_fit_ivf_pq_index_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     index.unpersist()
     jobs = sc.statusTracker().getJobIdsForGroup("fit_ivf_pq_index")
-    assert len(jobs) == 30, jobs
+    assert len(jobs) == 23, jobs
 
 
 @pytest.mark.parametrize(

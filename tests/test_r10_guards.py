@@ -12,9 +12,6 @@ the artifact-derived rotation generator.
   these tests pin the generator's edge cases against synthetic
   artifact states (the live-artifact check stays in
   test_entry_contract.py).
-- VERDICT r9 ask #2 support: ``_pq_fit`` accepts a threaded
-  n_vectors/dim so the route gate costs zero actions for callers that
-  already know them; threaded and discovered fits are code-identical.
 """
 
 import warnings
@@ -114,35 +111,6 @@ def test_fit_ivf_pq_index_raises_loudly_on_empty_corpus(spark):
     empty = read_table(spark, SF001, "embeddings").filter(F.lit(False))
     with pytest.raises(ValueError, match="empty embedding corpus"):
         S.fit_ivf_pq_index(empty, n_clusters=4, m="auto")
-
-
-# --- _pq_fit count/dim threading -----------------------------------------
-
-
-def test_pq_fit_threaded_count_and_dim_matches_discovered(spark):
-    """fit_ivf_pq_index threads the embedding dim into _pq_fit so the
-    divisibility check runs no extra action; the threaded fit must be
-    code-identical to the self-discovering one."""
-    from myodish_peak_analysis_spark.llm.similarity import _pq_fit
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, SF001, "embeddings")
-    d = len(emb.select("embedding").first()[0])
-    base, _ = _pq_fit(emb, m=4, k=8, iters=1)
-    threaded, _ = _pq_fit(emb, m=4, k=8, iters=1, dim=d)
-    cols = ["vec_id", "sub_id", "centroid_id"]
-    assert sorted(map(tuple, base.select(*cols).collect())) == sorted(
-        map(tuple, threaded.select(*cols).collect())
-    )
-
-
-def test_pq_fit_rejects_indivisible_threaded_dim(spark):
-    from myodish_peak_analysis_spark.llm.similarity import _pq_fit
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, SF001, "embeddings")
-    with pytest.raises(ValueError, match="not divisible"):
-        _pq_fit(emb, m=5, k=8, iters=1, dim=64)
 
 
 # --- fit_dup_gram_stats (fit-once span-cut stats) -------------------------

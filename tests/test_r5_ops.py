@@ -301,37 +301,6 @@ def test_blocklist_filter_bloom_exactness(spark):
     assert want == [i for i in range(40) if i % 7 != 0]
 
 
-def test_ivf_fit_sample_mod_recall(spark):
-    """The sampled Lloyd fit must (a) assign EVERY corpus vector, and
-    (b) keep IVF top-1 recall vs brute force close to the full fit's."""
-    from myodish_peak_analysis_spark.llm.similarity import (
-        cosine_topk,
-        ivf_index,
-        ivf_topk,
-    )
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    n = emb.count()
-    assigned = ivf_index(emb, k=8, fit_sample_mod=3)
-    assert assigned.count() == n  # full corpus assigned
-    assert assigned.select("centroid_id").distinct().count() > 1
-
-    def top1(df):
-        return {
-            r.query_id: r.vec_id for r in df.filter("rank = 1").collect()
-        }
-
-    brute = top1(cosine_topk(emb, k=1))
-    sampled = top1(ivf_topk(emb, k=1, n_clusters=8, fit_sample_mod=3))
-    full = top1(ivf_topk(emb, k=1, n_clusters=8))
-    recall_sampled = sum(sampled.get(q) == v for q, v in brute.items()) / len(brute)
-    recall_full = sum(full.get(q) == v for q, v in brute.items()) / len(brute)
-    # sampled fit loses little geometry: stay within 0.25 of full fit
-    assert recall_sampled >= recall_full - 0.25
-    spark.catalog.clearCache()
-
-
 def test_bpe_apply_chained_rules_and_map_only(spark):
     from myodish_peak_analysis_spark.llm.bpe import bpe_apply
 
@@ -460,20 +429,6 @@ def test_rp_ivf_topk_recall_vs_brute(spark):
     # projected quantizer; top-1 recall collapses only if the
     # projection destroyed neighborhood structure
     assert recall >= 0.6, recall
-    spark.catalog.clearCache()
-
-
-def test_pq_fit_sample_mod_assigns_full_corpus(spark):
-    from myodish_peak_analysis_spark.llm.similarity import _pq_fit
-    from myodish_peak_analysis_spark.schema import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    final, cents = _pq_fit(emb, m=4, k=8, iters=1, fit_sample_mod=3)
-    n = emb.count()
-    # every vector coded in every subspace, codebook ids in range
-    assert final.count() == n * 4
-    ids = {r.centroid_id for r in final.select("centroid_id").distinct().collect()}
-    assert ids <= set(range(1, 9))
     spark.catalog.clearCache()
 
 

@@ -1,9 +1,11 @@
-"""Unit tests for the Lloyd-assign kernels under the ANN fits
-(``llm.lloyd``, run by ``llm.similarity._centroid_assign`` and
-``_pq_code_argmin``). The reference is the Spark SQL form of each
-assign, the higher-order-function argmax the fits evaluated before the
-kernels replaced it; it is kept here, as ``extrema_flags_sql`` is kept
-for the peaks flags, and Spark evaluates it.
+"""Unit tests for the ANN fits: the Lloyd-assign kernels (``llm.lloyd``,
+run by ``llm.similarity._centroid_assign`` and ``_pq_code_argmin``) and
+the one Lloyd loop that runs them (``_lloyd_fit``). The kernels'
+reference is the Spark SQL form of each assign, the
+higher-order-function argmax the fits evaluated before the kernels
+replaced it; it is kept here, as ``extrema_flags_sql`` is kept for the
+peaks flags, and Spark evaluates it. The loop's references are the
+one-quantizer fits and the DuckDB oracle's unrolled k-means.
 """
 
 from __future__ import annotations
@@ -435,3 +437,162 @@ def test_pq_code_argmin_drops_sub_id_missing_from_codebook(spark):
     )
     assert got == [(1, 1, 1, 0.0), (2, 1, 2, 0.0), (3, 1, 1, 0.5)]
     assert out.filter(F.col("sub_id") == 2).count() == 0
+
+
+# --- the Lloyd loop (one init, one means update, one collect a round) --
+
+
+def _fit_rows(fits):
+    """Sorted rows of each (assignment, centroid table) pair, floats as
+    exact hex strings: assignments as (vec_id, sub_id, centroid_id)."""
+
+    def exact(v):
+        if isinstance(v, float):
+            return v.hex()
+        if isinstance(v, list):
+            return tuple(exact(x) for x in v)
+        return v
+
+    out = []
+    for final, cents in fits:
+        sub = "sub_id" if "sub_id" in final.columns else F.lit(0)
+        out.append((
+            sorted(map(tuple, final.select("vec_id", sub, "centroid_id").collect())),
+            sorted(tuple(exact(x) for x in r) for r in cents.collect()),
+        ))
+    return out
+
+
+def _duckdb_oracle(sql: str) -> list:
+    import duckdb
+
+    from tests.conftest import SF001
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{SF001}/embeddings.parquet'")
+    return sorted(con.sql(sql).fetchall())
+
+
+@pytest.mark.parametrize(
+    "ivf_iters, pq_iters, fit_sample_mod",
+    [(3, 2, None), (1, 2, None), (3, 2, 3)],
+)
+def test_joint_lloyd_fit_equals_single_quantizer_fits(
+    spark, ivf_iters, pq_iters, fit_sample_mod
+):
+    """The two-quantizer fit (IVF k=8 and PQ m=4 k=16 in one loop, one
+    collect a round) returns bit for bit what each quantizer's own fit
+    returns: members and IVF centroids equal the IVF fit's, codes and
+    codebooks the PQ fit's. Without sampling, both also equal the
+    DuckDB oracle's unrolled k-means with the same round counts, so an
+    off-by-one in the rounds fails even when the loop runs it for every
+    fit alike."""
+    from myodish_peak_analysis_spark.llm import oracle as O, similarity as S
+    from myodish_peak_analysis_spark.schema import read_table
+    from tests.conftest import SF001
+
+    emb = read_table(spark, SF001, "embeddings")
+
+    def ivf():
+        return S._ivf_quantizer(emb, 8, ivf_iters)
+
+    def pq():
+        return S._pq_quantizer(emb, 4, 16, pq_iters)
+
+    joint = _fit_rows(S._lloyd_fit(emb, ivf(), pq(), fit_sample_mod=fit_sample_mod))
+    single = _fit_rows(
+        S._lloyd_fit(emb, ivf(), fit_sample_mod=fit_sample_mod)
+        + S._lloyd_fit(emb, pq(), fit_sample_mod=fit_sample_mod)
+    )
+    assert joint[0] == single[0]
+    assert joint[1] == single[1]
+    if fit_sample_mod is None:
+        base = f"WITH {O._BASE_CTE}, "
+        members = _duckdb_oracle(
+            base + O._kmeans_member_ctes(8, ivf_iters)
+            + " SELECT vec_id, 0, CAST(centroid_id AS INT) FROM members"
+        )
+        codes = _duckdb_oracle(
+            base + O._pq_member_ctes(4, 16, pq_iters)
+            + " SELECT vec_id, sub_id, centroid_id FROM pq_members"
+        )
+        assert joint[0][0] == members
+        assert joint[1][0] == codes
+    spark.catalog.clearCache()
+
+
+def test_pq_fit_threaded_dim_matches_discovered(spark):
+    """fit_ivf_pq_index threads the embedding dim into _pq_quantizer so
+    the divisibility check runs no extra action; the threaded fit must
+    be code-identical to the self-discovering one."""
+    from myodish_peak_analysis_spark.llm.similarity import _lloyd_fit, _pq_quantizer
+    from myodish_peak_analysis_spark.schema import read_table
+    from tests.conftest import SF001
+
+    emb = read_table(spark, SF001, "embeddings")
+    d = len(emb.select("embedding").first()[0])
+    ((base, _),) = _lloyd_fit(emb, _pq_quantizer(emb, m=4, k=8, iters=1))
+    ((threaded, _),) = _lloyd_fit(emb, _pq_quantizer(emb, m=4, k=8, iters=1, dim=d))
+    cols = ["vec_id", "sub_id", "centroid_id"]
+    assert sorted(map(tuple, base.select(*cols).collect())) == sorted(
+        map(tuple, threaded.select(*cols).collect())
+    )
+
+
+def test_pq_fit_rejects_indivisible_threaded_dim(spark):
+    from myodish_peak_analysis_spark.llm.similarity import _pq_quantizer
+    from myodish_peak_analysis_spark.schema import read_table
+    from tests.conftest import SF001
+
+    emb = read_table(spark, SF001, "embeddings")
+    with pytest.raises(ValueError, match="not divisible"):
+        _pq_quantizer(emb, m=5, k=8, iters=1, dim=64)
+
+
+def test_pq_fit_sample_mod_assigns_full_corpus(spark):
+    from myodish_peak_analysis_spark.llm.similarity import _lloyd_fit, _pq_quantizer
+    from myodish_peak_analysis_spark.schema import read_table
+    from tests.conftest import SF001
+
+    emb = read_table(spark, SF001, "embeddings")
+    ((final, cents),) = _lloyd_fit(
+        emb, _pq_quantizer(emb, m=4, k=8, iters=1), fit_sample_mod=3
+    )
+    n = emb.count()
+    # every vector coded in every subspace, codebook ids in range
+    assert final.count() == n * 4
+    ids = {r.centroid_id for r in final.select("centroid_id").distinct().collect()}
+    assert ids <= set(range(1, 9))
+    spark.catalog.clearCache()
+
+
+def test_ivf_fit_sample_mod_recall(spark):
+    """The sampled Lloyd fit must (a) assign EVERY corpus vector, and
+    (b) keep IVF top-1 recall vs brute force close to the full fit's."""
+    from myodish_peak_analysis_spark.llm.similarity import (
+        cosine_topk,
+        ivf_index,
+        ivf_topk,
+    )
+    from myodish_peak_analysis_spark.schema import read_table
+    from tests.conftest import SF001
+
+    emb = read_table(spark, SF001, "embeddings")
+    n = emb.count()
+    assigned = ivf_index(emb, k=8, fit_sample_mod=3)
+    assert assigned.count() == n  # full corpus assigned
+    assert assigned.select("centroid_id").distinct().count() > 1
+
+    def top1(df):
+        return {
+            r.query_id: r.vec_id for r in df.filter("rank = 1").collect()
+        }
+
+    brute = top1(cosine_topk(emb, k=1))
+    sampled = top1(ivf_topk(emb, k=1, n_clusters=8, fit_sample_mod=3))
+    full = top1(ivf_topk(emb, k=1, n_clusters=8))
+    recall_sampled = sum(sampled.get(q) == v for q, v in brute.items()) / len(brute)
+    recall_full = sum(full.get(q) == v for q, v in brute.items()) / len(brute)
+    # sampled fit loses little geometry: stay within 0.25 of full fit
+    assert recall_sampled >= recall_full - 0.25
+    spark.catalog.clearCache()

@@ -1,13 +1,18 @@
 #!/usr/bin/env python
 """Driver-mimic correctness checker: run every ``queries()`` entry on
-Spark and its ``oracle_sql()`` on DuckDB at sf0.01, compare row count,
-schema (column names), and order-insensitive values.
+Spark and its ``oracle_sql()`` on DuckDB over one data directory
+(default sf0.01), compare row count, schema (column names), and
+order-insensitive values.
 
-Usage: python tools/check_correctness.py [name ...]   (default: all)
+Usage: python tools/check_correctness.py [--data DIR] [name ...]
+(default: all queries over the sf0.01 tables). ``--data`` points both
+engines at another directory of harness parquet (e.g. sf0.001 or sf0.1);
+the checker only reads it.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -25,14 +30,14 @@ from myodish_peak_analysis_spark.session import get_spark  # noqa: E402
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def _oracle_child(sql: str, out_path: str) -> None:
+def _oracle_child(sql: str, out_path: str, data: str) -> None:
     con = duckdb.connect()
     for t in HARNESS_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{data}/{t}.parquet'")
     con.sql(sql).df().to_parquet(out_path)
 
 
-def run_oracle(sql: str) -> pd.DataFrame:
+def run_oracle(sql: str, data: str) -> pd.DataFrame:
     """Run the oracle in a forked subprocess: the heavy 301-tap windowed
     FIR queries leave allocator-retained memory behind; in-process they
     cumulatively OOM later queries sharing the process with the JVM."""
@@ -41,7 +46,7 @@ def run_oracle(sql: str) -> pd.DataFrame:
 
     with tempfile.NamedTemporaryFile(suffix=".parquet") as f:
         ctx = mp.get_context("fork")
-        p = ctx.Process(target=_oracle_child, args=(sql, f.name))
+        p = ctx.Process(target=_oracle_child, args=(sql, f.name, data))
         p.start()
         p.join()
         if p.exitcode != 0:
@@ -97,7 +102,11 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> dict:
 
 
 def main() -> None:
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    ap.add_argument("--data", default=SF_DIR, help="directory of the harness parquet tables")
+    args = ap.parse_args()
+    only = set(args.names)
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
@@ -108,7 +117,7 @@ def main() -> None:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            sdf = fn(spark, args.data).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
             n_bad += 1
@@ -120,7 +129,7 @@ def main() -> None:
             continue
         t0 = time.time()
         try:
-            odf = run_oracle(oracles[name])
+            odf = run_oracle(oracles[name], args.data)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {str(e)[:300]}")
             n_bad += 1
