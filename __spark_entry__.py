@@ -104,23 +104,38 @@ def entry(spark: SparkSession) -> DataFrame:
 #: is still policy-valid (the generator, not this list, guarantees the
 #: staleness bound). The list is exactly the queries whose normalised
 #: optimized plan (``tools/audit_plans.py --dump``) differs from the
-#: parent commit's. This round: the IVF and PQ k-means fits assign
-#: vectors to centroids with one NumPy kernel per quantizer (mapInArrow)
-#: instead of a higher-order-function argmax or a broadcast join with a
-#: max_by/min_by reduce.
+#: parent commit's. This round: word n-gram builders split each
+#: document once and slice the token array (``llm.text.word_ngrams``)
+#: instead of re-splitting the text inside the lambda once per gram.
+#: Queries that run those builders eagerly while they are built
+#: (dedup_clusters and its dependents) keep their plans; the local
+#: sweep (docs/CORRECTNESS_LOCAL.md) checks them.
 _CHANGED_THIS_ROUND = [
-    "ann_ivf_topk",
-    "ann_serve",
-    "ann_serve_appended",
-    "ivf_list_sizes",
-    "ivf_pq_topk",
-    "ivf_pq_topk_prefit",
-    "ivf_sq8_topk",
-    "pq_codes",
-    "pq_rerank_topk",
-    "pq_topk",
-    "rp_ivf_topk",
-    "semantic_dedup",
+    "bigram_logprob",
+    "containment_pairs",
+    "contamination",
+    "crawl_corpus",
+    "curated_corpus",
+    "doc_fingerprints",
+    "dsir_curated_sample",
+    "dsir_sample",
+    "dsir_weights",
+    "dsir_weights_prefit",
+    "dup_span_fraction",
+    "dup_spans_scoped",
+    "dup_spans_scoped_prefit",
+    "duplicated_spans",
+    "gopher_quality",
+    "hybrid_neardup",
+    "incremental_neardup",
+    "levenshtein_neardup",
+    "minhash_pairs",
+    "minhash_signatures",
+    "neardup_verified",
+    "remove_dup_spans",
+    "repetition_profile",
+    "tfidf_cosine_pairs",
+    "tfidf_verify",
 ]
 
 #: The driver records only this many correctness rows per round.

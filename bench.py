@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark registered queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Prints a bookkeeping JSON line (rows and
-rep spreads per key), then the headline JSON line:
+on local[$SPARK_GRAFT_CPUS]. Prints a bookkeeping JSON line (rows, rep
+spreads and warm-rep codegen compiles per key), then the headline JSON
+line:
 
     {"queries": {...per-key sec...}, "metric": "headline_total",
      "value": <sec>, "unit": "sec", "sf": <sf>, ...}
@@ -67,7 +68,7 @@ from myodish_peak_analysis_spark.schema import (  # noqa: E402
     read_table,
     signal_frame,
 )
-from myodish_peak_analysis_spark.session import get_spark  # noqa: E402
+from myodish_peak_analysis_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -435,11 +436,14 @@ def main() -> None:
         times: dict[str, float] = {}
         rows: dict[str, int] = {}
         spread: dict[str, list[float]] = {}
+        compiles: dict[str, int] = {}
         for key in REGISTERED + list(VARIANTS):
             state: dict = {}
             variant = VARIANTS.get(key)
             reptimes = []
-            for _ in range(max(reps, 5) if key in FIVE_REPS else reps):
+            for rep in range(max(reps, 5) if key in FIVE_REPS else reps):
+                if rep == 1:
+                    warm_c0 = codegen_compiles(spark)
                 # best-of-n shields the recorded number from one-off
                 # JIT/GC/host noise; building is inside the timed region
                 # because iterative operators do real work there
@@ -458,6 +462,9 @@ def main() -> None:
             # costs by design (amortized fits, JIT)
             warm = reptimes[1:] or reptimes
             spread[key] = [round(min(warm), 3), round(max(warm), 3)]
+            # classes the JVM compiled during the warm reps: 0 when the
+            # key's generated code stays in the codegen cache
+            compiles[key] = codegen_compiles(spark) - warm_c0 if len(reptimes) > 1 else 0
             rows[key] = df.count()  # untimed bookkeeping
             for v in state.values():  # amortized state dies with its key
                 if hasattr(v, "unpersist"):
@@ -484,7 +491,10 @@ def main() -> None:
     # ordered by survival priority from the END: scalars dead last, the
     # spread dicts before them, per-key times first and sorted ascending
     # so truncation eats the stable sub-second entries.
-    print(json.dumps({"rows": rows, "rep_spread_sec": spread}), flush=True)
+    print(
+        json.dumps({"rows": rows, "rep_spread_sec": spread, "codegen_compiles": compiles}),
+        flush=True,
+    )
     print(
         json.dumps(
             {

@@ -32,6 +32,7 @@ from .params import (
     SHINGLE_K,
     SIMHASH_BITS,
 )
+from .text import word_ngrams
 
 _TOKENS = "split(text, ' ')"
 
@@ -65,10 +66,7 @@ def _shingles(docs: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(1, size({_TOKENS}) - {k - 1}), "
-                    f"i -> concat_ws(' ', slice({_TOKENS}, i, {k}))))"
-                )
+                F.expr(f"array_distinct({word_ngrams(k)})")
             ).alias("shingle"),
         )
         .withColumn(
@@ -824,10 +822,7 @@ def with_minhash_signatures(docs: DataFrame) -> DataFrame:
     exchange doubles as the shuffle the banded join reuses; this form
     is for streams and for map-only composition."""
     k = SHINGLE_K
-    sh = (
-        f"array_distinct(transform(sequence(1, size({_TOKENS}) - {k - 1}), "
-        f"i -> concat_ws(' ', slice({_TOKENS}, i, {k}))))"
-    )
+    sh = f"array_distinct({word_ngrams(k)})"
     hs = (
         f"transform({sh}, s -> "
         f"CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"

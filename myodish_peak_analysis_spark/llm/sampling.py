@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .text import word_ngrams
+
 #: Knuth's multiplicative hash constant (2654435761 = 2^32 * phi^-1,
 #: public domain — TAOCP vol. 3 §6.4); doc_id * C % 1000 is a cheap,
 #: well-mixed per-mille bucket that any SQL engine evaluates identically.
@@ -368,9 +370,7 @@ _DSIR_TK = "split(text, ' ')"
 #: empty array; sequence(1,0) would count DOWN in Spark).
 _DSIR_GRAMS = (
     f"concat({_DSIR_TK}, "
-    f"CASE WHEN size({_DSIR_TK}) >= 2 THEN "
-    f"transform(sequence(1, size({_DSIR_TK}) - 1), "
-    f"i -> concat_ws(' ', slice({_DSIR_TK}, i, 2))) "
+    f"CASE WHEN size({_DSIR_TK}) >= 2 THEN {word_ngrams(2)} "
     f"ELSE slice({_DSIR_TK}, 1, 0) END)"
 )
 

@@ -30,6 +30,41 @@ from .params import (
 _TOKENS = "split(text, ' ')"
 
 
+def over_tokens(body: str) -> str:
+    """SQL for ``body`` with ``tk`` bound to the whitespace tokens of
+    ``text``. The split runs once per row, as the argument of a
+    one-element ``transform``, so a lambda inside ``body`` indexes or
+    slices ``tk``. Splitting ``text`` inside that lambda instead would
+    re-split the whole document once per element, which is quadratic
+    in its length; ``tests/test_plans.py`` keeps every registered plan
+    free of that. (A ``_tk`` column does not do it: predicate pushdown
+    inlines the split back into a filter's lambda.)"""
+    return f"element_at(transform(array({_TOKENS}), tk -> {body}), 1)"
+
+
+def word_ngrams(n: int, last: str | None = None, pos: bool = False) -> str:
+    """SQL array of the word ``n``-grams of ``text`` (see
+    :func:`over_tokens`): gram ``i`` joins tokens ``i .. i+n-1`` with a
+    space, for ``i`` in ``1 .. last`` (default ``size(tk) - n + 1``).
+    ``pos=True`` makes each element ``struct(i AS pos, gram)``."""
+    last = last or f"size(tk) - {n - 1}"
+    gram = f"concat_ws(' ', slice(tk, i, {n}))"
+    if pos:
+        gram = f"struct(i AS pos, {gram} AS gram)"
+    return over_tokens(f"transform(sequence(1, {last}), i -> {gram})")
+
+
+def _pos_grams(docs: DataFrame, gram: int) -> DataFrame:
+    """(doc_id, pos, gram): every word ``gram``-gram of each document
+    with its 1-based start token; documents shorter than ``gram`` have
+    none."""
+    return (
+        docs.filter(F.expr(f"size({_TOKENS}) >= {gram}"))
+        .select("doc_id", F.explode(F.expr(word_ngrams(gram, pos=True))).alias("pg"))
+        .select("doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram"))
+    )
+
+
 def _hits_expr(words) -> str:
     return f"size(filter({_TOKENS}, x -> x IN {sql_in_list(words)}))"
 
@@ -128,10 +163,7 @@ def with_gopher_quality(docs: DataFrame) -> DataFrame:
     punct = F.length(F.regexp_replace("text", "[a-z0-9 ]", ""))
     symbol_ratio = punct.cast("double") / F.length("text")
     # duplicate 2-gram fraction: 1 - distinct/total
-    grams2 = (
-        f"transform(sequence(1, greatest(size({_TOKENS}) - 1, 1)), "
-        f"i -> concat_ws(' ', slice({_TOKENS}, i, 2)))"
-    )
+    grams2 = word_ngrams(2, last="greatest(size(tk) - 1, 1)")
     rep = (
         F.lit(1.0)
         - F.expr(f"size(array_distinct({grams2}))").cast("double")
@@ -220,13 +252,7 @@ def doc_fingerprints(docs: DataFrame) -> DataFrame:
     """
     g, w = FINGERPRINT_GRAM, FINGERPRINT_WINDOW
     grams = docs.filter(F.expr(f"size({_TOKENS}) >= {g}")).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {g - 1}), "
-                f"i -> concat_ws(' ', slice({_TOKENS}, i, {g})))"
-            )
-        ).alias("pos", "gram"),
+        "doc_id", F.posexplode(F.expr(word_ngrams(g))).alias("pos", "gram")
     )
     hashed = grams.select(
         "doc_id",
@@ -323,9 +349,7 @@ def _tfidf_rare_weights(
             F.expr(
                 # guard: sequence(1, 0) DESCENDS in Spark, so short docs
                 # must hit the empty branch, not a degenerate sequence
-                f"CASE WHEN size({_TOKENS}) >= {gram} THEN "
-                f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                f"i -> concat_ws(' ', slice({_TOKENS}, i, {gram}))) "
+                f"CASE WHEN size({_TOKENS}) >= {gram} THEN {word_ngrams(gram)} "
                 f"ELSE array() END"
             )
         ).alias("term"),
@@ -576,10 +600,7 @@ def contamination_pairs(
             .select(
                 F.col("doc_id").alias(id_alias),
                 F.explode(
-                    F.expr(
-                        f"array_distinct(transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                        f"i -> concat_ws(' ', slice({_TOKENS}, i, {gram}))))"
-                    )
+                    F.expr(f"array_distinct({word_ngrams(gram)})")
                 ).alias("gram"),
             )
         )
@@ -714,16 +735,7 @@ def duplicated_spans(
     """
     from pyspark.sql import Window
 
-    pos_grams = docs.filter(F.expr(f"size({_TOKENS}) >= {gram}")).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                f"i -> struct(i AS pos, "
-                f"concat_ws(' ', slice({_TOKENS}, i, {gram})) AS gram))"
-            )
-        ).alias("pg"),
-    ).select("doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram"))
+    pos_grams = _pos_grams(docs, gram)
     dup_grams = (
         pos_grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -806,16 +818,7 @@ def dup_span_fraction(
     """
     from pyspark.sql import Window
 
-    pos_grams = docs.filter(F.expr(f"size({_TOKENS}) >= {gram}")).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                f"i -> struct(i AS pos, "
-                f"concat_ws(' ', slice({_TOKENS}, i, {gram})) AS gram))"
-            )
-        ).alias("pg"),
-    ).select("doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram"))
+    pos_grams = _pos_grams(docs, gram)
     dup_grams = (
         pos_grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1123,9 +1126,10 @@ def with_bigram_logprob(docs: DataFrame) -> DataFrame:
             "doc_id",
             F.explode(
                 F.expr(
-                    f"transform(sequence(1, size({_TOKENS}) - 1), "
-                    f"i -> struct(element_at({_TOKENS}, i) AS a, "
-                    f"element_at({_TOKENS}, i + 1) AS b))"
+                    over_tokens(
+                        "transform(sequence(1, size(tk) - 1), "
+                        "i -> struct(element_at(tk, i) AS a, element_at(tk, i + 1) AS b))"
+                    )
                 )
             ).alias("bg"),
         )
@@ -1204,10 +1208,7 @@ def repetition_profile(docs: DataFrame, ns: tuple[int, ...] = (2, 3)) -> DataFra
     gram_arrays = [
         F.when(
             F.expr(f"size({_TOKENS})") >= n,
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {n} + 1), "
-                f"i -> concat_ws(' ', slice({_TOKENS}, i, {n})))"
-            ),
+            F.expr(word_ngrams(n)),
         )
         .otherwise(F.array().cast("array<string>"))
         .alias(f"_g{n}")
@@ -1377,6 +1378,26 @@ def token_entropy_sql() -> str:
     """
 
 
+def _span_rewrite_exprs(gram: int) -> list[str]:
+    """``selectExpr`` list of the span rewrite: doc_id, clean_text (the
+    tokens that no duplicated ``gram``-token span covers; ``_starts``
+    holds the spans' 1-based starts), n_tokens_kept, n_tokens_removed."""
+
+    def kept(tokens: str) -> str:
+        return (
+            f"filter(sequence(1, size({tokens})), "
+            f"i -> NOT exists(_starts, s -> s <= i AND i < s + {gram}))"
+        )
+
+    clean = over_tokens(f"concat_ws(' ', transform({kept('tk')}, i -> tk[i - 1]))")
+    return [
+        "doc_id",
+        f"{clean} AS clean_text",
+        f"CAST(size({kept(_TOKENS)}) AS BIGINT) AS n_tokens_kept",
+        f"CAST(size({_TOKENS}) - size({kept(_TOKENS)}) AS BIGINT) AS n_tokens_removed",
+    ]
+
+
 def remove_dup_spans(
     docs: DataFrame, gram: int = 8, min_count: int = 2
 ) -> DataFrame:
@@ -1396,16 +1417,7 @@ def remove_dup_spans(
     Output: (doc_id, clean_text, n_tokens_kept, n_tokens_removed);
     clean_text is '' when everything was duplicated.
     """
-    pos_grams = docs.filter(F.expr(f"size({_TOKENS}) >= {gram}")).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                f"i -> struct(i AS pos, "
-                f"concat_ws(' ', slice({_TOKENS}, i, {gram})) AS gram))"
-            )
-        ).alias("pg"),
-    ).select("doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram"))
+    pos_grams = _pos_grams(docs, gram)
     dup_grams = (
         pos_grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1417,22 +1429,13 @@ def remove_dup_spans(
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("_starts"))
     )
-    kept = (
-        f"filter(sequence(1, size({_TOKENS})), "
-        f"i -> NOT exists(_starts, s -> s <= i AND i < s + {gram}))"
-    )
     return (
         docs.join(starts, "doc_id", "left")
         .withColumn(
             "_starts",
             F.coalesce("_starts", F.expr("CAST(array() AS ARRAY<INT>)")),
         )
-        .selectExpr(
-            "doc_id",
-            f"concat_ws(' ', transform({kept}, i -> {_TOKENS}[i - 1])) AS clean_text",
-            f"CAST(size({kept}) AS BIGINT) AS n_tokens_kept",
-            f"CAST(size({_TOKENS}) - size({kept}) AS BIGINT) AS n_tokens_removed",
-        )
+        .selectExpr(*_span_rewrite_exprs(gram))
     )
 
 
@@ -1461,16 +1464,7 @@ def fit_dup_gram_stats(
     corpus snapshot and read it per scope batch — it is one row per
     DISTINCT duplicated gram, orders of magnitude smaller than the
     corpus."""
-    pos_grams = docs.filter(F.expr(f"size({_TOKENS}) >= {gram}")).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                f"i -> struct(i AS pos, "
-                f"concat_ws(' ', slice({_TOKENS}, i, {gram})) AS gram))"
-            )
-        ).alias("pg"),
-    ).select("doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram"))
+    pos_grams = _pos_grams(docs, gram)
     dup_grams = (
         pos_grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1515,23 +1509,9 @@ def remove_dup_spans_scoped(
     reuse the fit's ``gram``/``min_count``)."""
     scope_ids = scope.select(F.col(scope.columns[0]).alias("doc_id")).distinct()
 
-    def _pos_grams(src: DataFrame) -> DataFrame:
-        return src.filter(F.expr(f"size({_TOKENS}) >= {gram}")).select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, size({_TOKENS}) - {gram - 1}), "
-                    f"i -> struct(i AS pos, "
-                    f"concat_ws(' ', slice({_TOKENS}, i, {gram})) AS gram))"
-                )
-            ).alias("pg"),
-        ).select(
-            "doc_id", F.col("pg.pos").alias("pos"), F.col("pg.gram").alias("gram")
-        )
-
     if dup_grams is None:
         dup_grams = (
-            _pos_grams(docs)
+            _pos_grams(docs, gram)
             .groupBy("gram")
             .agg(F.count(F.lit(1)).alias("_n"))
             .filter(F.col("_n") >= min_count)
@@ -1543,14 +1523,10 @@ def remove_dup_spans_scoped(
     # entire point of fit_dup_gram_stats is to make this the only
     # non-trivial pass per scope)
     starts = (
-        _pos_grams(docs.join(scope_ids, "doc_id", "left_semi"))
+        _pos_grams(docs.join(scope_ids, "doc_id", "left_semi"), gram)
         .join(dup_grams, "gram")
         .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("_starts"))
-    )
-    kept = (
-        f"filter(sequence(1, size({_TOKENS})), "
-        f"i -> NOT exists(_starts, s -> s <= i AND i < s + {gram}))"
     )
     return (
         docs.join(scope_ids, "doc_id", "left_semi")
@@ -1559,12 +1535,7 @@ def remove_dup_spans_scoped(
             "_starts",
             F.coalesce("_starts", F.expr("CAST(array() AS ARRAY<INT>)")),
         )
-        .selectExpr(
-            "doc_id",
-            f"concat_ws(' ', transform({kept}, i -> {_TOKENS}[i - 1])) AS clean_text",
-            f"CAST(size({kept}) AS BIGINT) AS n_tokens_kept",
-            f"CAST(size({_TOKENS}) - size({kept}) AS BIGINT) AS n_tokens_removed",
-        )
+        .selectExpr(*_span_rewrite_exprs(gram))
     )
 
 

@@ -14,6 +14,20 @@ Two settings concern the Python workers:
   workers import pyspark from its installed copy instead of Spark's
   ``pyspark.zip`` when the two are the same version (see its docstring:
   that saves ~0.2 s of worker CPU per Python task).
+
+Two settings concern the JVM's generated code, so that a warm pass
+compiles none of it:
+
+* ``spark.sql.codegen.cache.maxEntries`` holds the whole surface's
+  compiled classes. Spark's default keeps 100, and one pass of the
+  LLM pipeline (manifest, IVF-PQ fit and search) generates ~230
+  distinct classes, so the least-recently-used eviction dropped each
+  class before its reuse and every pass re-ran Janino for nearly all of
+  them. Every registered query together compiles 1,712 classes.
+* ``spark.sql.codegen.useIdInClassName`` is off. AQE numbers
+  whole-stage codegen pipelines in the order it plans their query
+  stages, which depends on which stage finishes first; with the number
+  in the class name the same pipeline compiles again under a new name.
 """
 
 from __future__ import annotations
@@ -45,6 +59,14 @@ def release_caches(spark: SparkSession) -> None:
     ``persist_input=False`` / pre-cache inputs yourself to opt out
     per call."""
     spark.catalog.clearCache()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes this JVM has compiled from generated code so far: the
+    count of Spark's ``CodegenMetrics`` compilation-time histogram. A
+    warm repeat of a workload that fits the codegen cache adds 0."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -91,6 +113,20 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config(_PYTHONPATH, pythonpath)
         .config("spark.python.daemon.module", f"{__package__}._daemon")
+        # Static conf, read once per JVM (executors read it from the
+        # SparkConf). Measured working set: the 151 registered queries
+        # at sf0.01 compile 1,712 distinct classes (4096 is ~2x that);
+        # one LLM pass on sf0.001 compiles ~230, more than the default
+        # 100 holds. Cost: metaspace, 185 -> 198 MB after two sweeps of
+        # the whole surface (docs/SCALE.md).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Generated classes are named GeneratedIterator instead of
+        # GeneratedIteratorForCodegenStage<N>, so equal code is one
+        # cache entry whatever number AQE gave its stage (the plan's
+        # *(N) markers still name it). Warm repeats of the sf0.001 LLM
+        # composition compiled 2-10 classes in 3 of 7 with the number,
+        # 0 in 7 of 7 without.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in conf.items():
         builder = builder.config(k, v)

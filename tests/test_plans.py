@@ -1,10 +1,11 @@
 """Plan-shape regression net over the whole registered query surface.
 
-Builds the physical plan of every ``queries()`` entry at sf0.001 and
-asserts no unpartitioned cartesian product sneaks in — the one join
-shape that is always wrong at scale. (Bounded broadcast cross joins —
-the 1-row scalar in stim_normalize, the documented brute-force ANN
-baseline — plan as BroadcastNestedLoopJoin and are allowed.)
+Builds the plans of every ``queries()`` entry at sf0.001 and asserts
+no unpartitioned cartesian product sneaks in — the one join shape that
+is always wrong at scale — and no lambda re-splits a string per array
+element. (Bounded broadcast cross joins — the 1-row scalar in
+stim_normalize, the documented brute-force ANN baseline — plan as
+BroadcastNestedLoopJoin and are allowed.)
 """
 
 from __future__ import annotations
@@ -13,29 +14,96 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 from tests.conftest import SF001
 
 
-def test_no_cartesian_product_in_any_registered_query(spark):
+@pytest.fixture(scope="module")
+def registered_plans(spark):
+    """name -> (optimized plan, executed plan) of every registered query
+    at sf0.001, or the exception that stopped it planning."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+
+    plans = {}
+    for name, fn in entry.queries().items():
+        try:
+            qe = fn(spark, SF001)._jdf.queryExecution()
+            plans[name] = (qe.optimizedPlan().toString(), qe.executedPlan().toString())
+        except Exception as exc:  # a query that cannot even plan is a bug
+            plans[name] = exc
+    return plans
+
+
+def test_no_cartesian_product_in_any_registered_query(registered_plans):
     from tools.audit_plans import PYTHON_ALLOWED
 
     failures = []
-    for name, fn in entry.queries().items():
-        try:
-            df = fn(spark, SF001)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # a query that cannot even plan is a bug
-            failures.append(f"{name}: failed to plan ({exc})")
+    for name, plans in registered_plans.items():
+        if isinstance(plans, Exception):
+            failures.append(f"{name}: failed to plan ({plans})")
             continue
+        plan = plans[1]
         if "CartesianProduct" in plan:
             failures.append(f"{name}: CartesianProduct in plan")
         n_py = plan.count("EvalPython") + plan.count("InPandas") + plan.count("InArrow")
         if n_py and name not in PYTHON_ALLOWED:
             failures.append(f"{name}: unexpected Python/Arrow stage")
     assert not failures, "\n".join(failures)
+
+
+def test_no_registered_query_splits_inside_a_lambda(registered_plans):
+    """No optimized plan evaluates ``split(`` inside a lambda: a word
+    n-gram builder that re-splits ``text`` per gram is quadratic in the
+    document's length; ``llm.text.word_ngrams`` slices the row's
+    tokens, split once, instead."""
+    from tools.audit_plans import split_in_lambda
+
+    found = {
+        name: split_in_lambda(plans[0])
+        for name, plans in registered_plans.items()
+        if not isinstance(plans, Exception) and split_in_lambda(plans[0])
+    }
+    assert not found, found
+
+
+def test_warm_llm_composition_compiles_no_classes(spark):
+    """A warm repeat of the LLM composition — training-corpus manifest,
+    ``fit_ivf_pq_index`` and ``ivf_pq_search`` on sf0.001, the shape of
+    one ``llm`` benchmark pass — compiles no generated class: its
+    working set (~230 classes) fits the codegen cache that
+    ``session.get_spark`` sizes, and class names carry no AQE stage
+    number. With Spark's default of 100 entries the least-recently-used
+    eviction drops every class before its reuse and each repeat re-runs
+    Janino a few hundred times; with the stage number in the name, some
+    repeats recompile a few classes that AQE numbered differently."""
+    from myodish_peak_analysis_spark.llm import curate
+    from myodish_peak_analysis_spark.llm import similarity as S
+    from myodish_peak_analysis_spark.schema import read_table
+    from myodish_peak_analysis_spark.session import codegen_compiles, release_caches
+
+    docs = read_table(spark, SF001, "documents")
+    emb = read_table(spark, SF001, "embeddings")
+    qs = emb.filter(F.col("vec_id") % 50 == 0).select(
+        (F.col("vec_id") + 100000).alias("query_id"), "embedding"
+    )
+
+    def composition():
+        release_caches(spark)
+        manifest = curate.training_corpus_manifest(docs).collect()
+        release_caches(spark)
+        index = S.fit_ivf_pq_index(emb)
+        found = S.ivf_pq_search(qs, index, k=5).collect()
+        codes = index.codes.collect()
+        index.unpersist()
+        return sorted(manifest), sorted(found), sorted(codes)
+
+    first = composition()
+    c0 = codegen_compiles(spark)
+    again = composition()
+    assert codegen_compiles(spark) - c0 == 0
+    assert again == first
 
 
 def _plan_of(df) -> str:

@@ -3,9 +3,13 @@
 registered ``queries()`` entry at sf0.01 and tabulate the shape
 signals that matter at 100 TB — exchange count, broadcast joins,
 cartesian products (must be 0), Python-eval stages (must be 0 outside
-the explicitly-fidelity routes), and TakeOrdered usage.
+the explicitly-fidelity routes), TakeOrdered usage, and string splits
+evaluated inside a higher-order function's lambda (must be 0).
 
-Writes a markdown table to stdout; redirect into docs/.
+Writes a markdown table to stdout; the current audit is
+``docs/PLAN_AUDIT.md``:
+
+    python tools/audit_plans.py > docs/PLAN_AUDIT.md
 
 ``--dump DIR`` instead writes each registered query's optimized
 logical plan to ``DIR/<name>.txt``, with expression ids (``#123``, ``#45L``) normalised to
@@ -76,6 +80,24 @@ _PLAN_ID = re.compile(r"plan_id=\d+")
 _LAMBDA_VAR = re.compile(r"lambda ([xyz])_\d+")
 
 
+def split_in_lambda(plan: str) -> int:
+    """Number of ``split(`` calls inside a ``lambdafunction(...)`` of a
+    printed plan. Such a split runs once per array element: a lambda
+    that re-splits ``text`` per token is quadratic in the document's
+    length, so n-gram builders slice the row's tokens, split once
+    (``llm.text.over_tokens``)."""
+    n, i = 0, plan.find("lambdafunction(")
+    while i >= 0:
+        depth = 0
+        for j in range(i + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        n += plan.count("split(", i, j)
+        i = plan.find("lambdafunction(", j)
+    return n
+
+
 def dump(spark, out_dir: str) -> None:
     """Write each query's normalised optimized plan to ``out_dir``.
     The cache is cleared before every query, so a plan never depends on
@@ -107,8 +129,9 @@ def main() -> None:
     violations = []
     for name, fn in entry.queries().items():
         try:
-            df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            qe = fn(spark, SF_DIR)._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            n_split = split_in_lambda(qe.optimizedPlan().toString())
         except Exception as exc:  # noqa: BLE001
             violations.append(f"{name}: failed to plan ({exc})")
             continue
@@ -131,18 +154,20 @@ def main() -> None:
         n_py = plan.count("EvalPython") + plan.count("InPandas") + plan.count("InArrow")
         n_tko = plan.count("TakeOrderedAndProject")
         n_ims = plan.count("InMemoryTableScan")
-        rows.append((name, n_ex, n_bc, n_cart, n_py, n_tko, n_ims))
+        rows.append((name, n_ex, n_bc, n_cart, n_py, n_tko, n_ims, n_split))
         if n_cart:
             violations.append(f"{name}: CartesianProduct")
         if n_py and name not in PYTHON_ALLOWED:
             violations.append(f"{name}: unexpected Python stage")
+        if n_split:
+            violations.append(f"{name}: split inside a lambda")
     print(
         "| query | shuffles | bcast joins | cartesian | python |"
-        " takeOrdered | cache hits |"
+        " takeOrdered | cache hits | split in lambda |"
     )
-    print("|---|---|---|---|---|---|---|")
+    print("|---|---|---|---|---|---|---|---|")
     for r in sorted(rows):
-        print("| {} | {} | {} | {} | {} | {} | {} |".format(*r))
+        print("| {} | {} | {} | {} | {} | {} | {} | {} |".format(*r))
     print()
     print(
         "NOTE: `shuffles` counts Exchange nodes in the PRINTED plan,"
