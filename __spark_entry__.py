@@ -104,38 +104,13 @@ def entry(spark: SparkSession) -> DataFrame:
 #: is still policy-valid (the generator, not this list, guarantees the
 #: staleness bound). The list is exactly the queries whose normalised
 #: optimized plan (``tools/audit_plans.py --dump``) differs from the
-#: parent commit's. This round: word n-gram builders split each
-#: document once and slice the token array (``llm.text.word_ngrams``)
-#: instead of re-splitting the text inside the lambda once per gram.
-#: Queries that run those builders eagerly while they are built
-#: (dedup_clusters and its dependents) keep their plans; the local
-#: sweep (docs/CORRECTNESS_LOCAL.md) checks them.
+#: parent commit's. This round: constrained peak detection is one
+#: per-channel NumPy step (``operators/native_peaks``) instead of a
+#: window / bucket-join / higher-order-function route.
 _CHANGED_THIS_ROUND = [
-    "bigram_logprob",
-    "containment_pairs",
-    "contamination",
-    "crawl_corpus",
-    "curated_corpus",
-    "doc_fingerprints",
-    "dsir_curated_sample",
-    "dsir_sample",
-    "dsir_weights",
-    "dsir_weights_prefit",
-    "dup_span_fraction",
-    "dup_spans_scoped",
-    "dup_spans_scoped_prefit",
-    "duplicated_spans",
-    "gopher_quality",
-    "hybrid_neardup",
-    "incremental_neardup",
-    "levenshtein_neardup",
-    "minhash_pairs",
-    "minhash_signatures",
-    "neardup_verified",
-    "remove_dup_spans",
-    "repetition_profile",
-    "tfidf_cosine_pairs",
-    "tfidf_verify",
+    "constrained_peak_attributes",
+    "native_find_peaks",
+    "native_find_peaks_nodist",
 ]
 
 #: The driver records only this many correctness rows per round.

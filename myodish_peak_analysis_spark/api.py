@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 from .operators.attributes import peak_attributes, peak_averages, with_crossings
 from .operators.envelopes import envelope_step, with_diastolic
 from .operators.fidelity import fidelity_peaks, fidelity_signal_columns
+from .operators.native_peaks import KEPT, constrained_peaks_step
 from .operators.peaks import naive_peaks, with_threshold_keep
 from .operators.smooth import fir_smooth_step
 from .operators.windows import extrema_step, map_channels
@@ -178,40 +179,26 @@ class PeakPipeline:
         self, threshold: float | None = None, constrained: bool = False
     ) -> "PeakPipeline":
         """Native route: plateau-midpoint maxima + envelope threshold
-        filter (P2/P3). With ``constrained=True`` the maxima first pass
-        the reference's SciPy constraints (distance / prominence / width,
-        peak_detection.py:251) via the JVM-side
-        :func:`~.operators.native_peaks.native_find_peaks` before the
-        threshold filter — the fully-native P1+P2 chain; for
-        reference-EXACT edge behavior (block-pad smoothing) use
-        :meth:`fidelity_peaks`."""
+        filter (P2/P3). With ``constrained=True`` the maxima must also
+        pass the reference's SciPy constraints (distance / prominence /
+        width, peak_detection.py:251), computed per channel by
+        :func:`~.operators.native_peaks.constrained_peaks_step` — the
+        fully-native P1+P2 chain; for reference-EXACT edge behavior
+        (block-pad smoothing) use :meth:`fidelity_peaks`."""
         th = self.p["threshold"] if threshold is None else threshold
-        df = with_threshold_keep(self.df, value_col=self._value_col, threshold=th)
-        if not constrained:
-            return self._next(
-                df.withColumn("_keep", F.col("is_peak") & F.col("keep_peak"))
+        df, flag = self.df, "is_peak"
+        if constrained:
+            step = constrained_peaks_step(
+                self._value_col,
+                distance=self.p["min_distance"],
+                prominence=self.p["prominence"],
+                width=self.p["width"],
+                rel_height=self.p["rel_height"],
+                wlen=self.p["wlen"],
             )
-        from .operators.native_peaks import native_find_peaks
-
-        kept = native_find_peaks(
-            self.df,
-            value_col=self._value_col,
-            distance=self.p["min_distance"],
-            prominence=self.p["prominence"],
-            width=self.p["width"],
-            rel_height=self.p["rel_height"],
-            wlen=self.p["wlen"],
-        ).select(
-            "channel_id",
-            F.col("peak_idx").alias("sample_idx"),
-            F.lit(True).alias("_cand"),
-        )
-        df = df.join(kept, ["channel_id", "sample_idx"], "left")
-        return self._next(
-            df.withColumn(
-                "_keep", F.coalesce(F.col("_cand"), F.lit(False)) & F.col("keep_peak")
-            ).drop("_cand")
-        )
+            df, flag = map_channels(df, step), KEPT
+        df = with_threshold_keep(df, value_col=self._value_col, threshold=th)
+        return self._next(df.withColumn("_keep", F.col(flag) & F.col("keep_peak")))
 
     def crossing_points(self) -> DataFrame:
         """The reference's ttp_points/ttr_points per peak."""

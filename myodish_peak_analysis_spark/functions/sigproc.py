@@ -12,6 +12,8 @@ routines the reference library leans on:
   ``rel_height``) conditions, matching the documented behaviour of
   ``scipy.signal.find_peaks`` used at
   ``/root/reference/peak_detection.py:95,153,251,296``.
+* ``constrain_peaks`` — those conditions applied to any candidate list
+  (the native route's come from ``operators.windows.extrema_flags``).
 
 Everything here is plain NumPy so it can run inside Arrow-batched pandas
 UDFs on executors (the per-channel "fidelity route" of SURVEY.md §2.3/2.4).
@@ -28,6 +30,7 @@ __all__ = [
     "local_maxima_plateau",
     "peak_prominences",
     "peak_widths",
+    "constrain_peaks",
     "find_peaks",
 ]
 
@@ -251,6 +254,40 @@ def peak_widths(
     return widths
 
 
+def constrain_peaks(
+    y: np.ndarray,
+    peaks: np.ndarray,
+    distance: int | None,
+    prominence: float | None,
+    width: float | None,
+    rel_height: float,
+    wlen: int | None,
+) -> tuple[np.ndarray, np.ndarray | None, np.ndarray | None]:
+    """The candidate maxima ``peaks`` (ascending) that pass the
+    distance / prominence / width conditions, in SciPy's order: distance
+    → prominence → width. Returns (peaks, prominences, widths) of the
+    survivors; prominences are None unless prominence or width was
+    requested (the width needs them), widths None unless width was."""
+    y = np.asarray(y, dtype=np.float64)
+    if distance is not None and peaks.size:
+        # SciPy rounds a non-integer distance UP (np.ceil), keeping the
+        # suppression at least as strict as requested.
+        keep = _select_by_distance(peaks, y[peaks], int(np.ceil(distance)))
+        peaks = peaks[keep]
+    proms = widths = None
+    if prominence is not None or width is not None:
+        proms, left_bases, right_bases = peak_prominences(y, peaks, wlen)
+        if prominence is not None:
+            keep = proms >= prominence
+            peaks, proms = peaks[keep], proms[keep]
+            left_bases, right_bases = left_bases[keep], right_bases[keep]
+    if width is not None:
+        widths = peak_widths(y, peaks, rel_height, proms, left_bases, right_bases)
+        keep = widths >= width
+        peaks, proms, widths = peaks[keep], proms[keep], widths[keep]
+    return peaks, proms, widths
+
+
 def find_peaks(
     y: np.ndarray,
     distance: int | None = None,
@@ -259,32 +296,12 @@ def find_peaks(
     rel_height: float = 0.5,
     wlen: int | None = None,
 ) -> np.ndarray:
-    """Local maxima subject to distance/prominence/width conditions.
-
-    Condition order matches the documented SciPy evaluation order:
-    plateau maxima → distance → prominence → width. Returns the indices
-    (plateau midpoints) of the surviving peaks.
-    """
-    y = np.asarray(y, dtype=np.float64)
+    """Local maxima subject to distance/prominence/width conditions:
+    plateau maxima (:func:`local_maxima_plateau`), then
+    :func:`constrain_peaks`. Returns the indices (plateau midpoints) of
+    the surviving peaks."""
     if distance is not None and distance < 1:
         # SciPy validates distance up front, before looking for maxima.
         raise ValueError("`distance` must be greater or equal to 1")
     peaks, _, _ = local_maxima_plateau(y)
-    if distance is not None and peaks.size:
-        # SciPy rounds a non-integer distance UP (np.ceil), keeping the
-        # suppression at least as strict as requested.
-        keep = _select_by_distance(peaks, y[peaks], int(np.ceil(distance)))
-        peaks = peaks[keep]
-    proms = left_bases = right_bases = None
-    if (prominence is not None or width is not None) and peaks.size:
-        proms, left_bases, right_bases = peak_prominences(y, peaks, wlen)
-        if prominence is not None:
-            keep = proms >= prominence
-            peaks = peaks[keep]
-            proms = proms[keep]
-            left_bases = left_bases[keep]
-            right_bases = right_bases[keep]
-    if width is not None and peaks.size:
-        widths = peak_widths(y, peaks, rel_height, proms, left_bases, right_bases)
-        peaks = peaks[widths >= width]
-    return peaks
+    return constrain_peaks(y, peaks, distance, prominence, width, rel_height, wlen)[0]

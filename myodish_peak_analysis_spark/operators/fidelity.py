@@ -229,14 +229,12 @@ def _fit_to(a: np.ndarray, n: int) -> np.ndarray:
     return out
 
 
-def _analyze_channel(pdf: pd.DataFrame, params: dict) -> pd.DataFrame:
-    pdf = pdf.sort_values("sample_idx")
-    y = pdf["signal_value"].to_numpy(dtype=np.float64)
-    t = pdf["time_index"].to_numpy(dtype=np.float64)
+def _signal_columns(y: np.ndarray, params: dict):
+    """smooth → envelopes → diastolic of one channel, each aligned on its
+    n rows, plus the length the reference's unfitted envelopes share
+    (its ``len(diastolic)``)."""
     n = y.size
-    smooth = smooth_signal_ref(
-        y, params["smooth_window"], params["smooth_poly"]
-    )
+    smooth = smooth_signal_ref(y, params["smooth_window"], params["smooth_poly"])
     baseline_raw = envelope_ref(
         smooth, "valley", params["window_size"], params["aux_smoothing"], params["aux_poly"]
     )
@@ -247,6 +245,14 @@ def _analyze_channel(pdf: pd.DataFrame, params: dict) -> pd.DataFrame:
     baseline = _fit_to(baseline_raw, n)
     ceiling = _fit_to(ceiling_raw, n)
     diastolic = baseline + params["relative_to_baseline"] * (ceiling - baseline)
+    return smooth, baseline, ceiling, diastolic, dia_len
+
+
+def _analyze_channel(pdf: pd.DataFrame, params: dict) -> pd.DataFrame:
+    pdf = pdf.sort_values("sample_idx")
+    y = pdf["signal_value"].to_numpy(dtype=np.float64)
+    t = pdf["time_index"].to_numpy(dtype=np.float64)
+    smooth, baseline, ceiling, diastolic, dia_len = _signal_columns(y, params)
     peaks = detect_peaks_ref(
         smooth,
         baseline,
@@ -313,22 +319,7 @@ def fidelity_signal_columns(signal: DataFrame, **overrides) -> DataFrame:
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("sample_idx")
         y = pdf["signal_value"].to_numpy(dtype=np.float64)
-        n = y.size
-        smooth = smooth_signal_ref(y, params["smooth_window"], params["smooth_poly"])
-        baseline = envelope_ref(
-            smooth, "valley", params["window_size"], params["aux_smoothing"], params["aux_poly"]
-        )
-        ceiling = envelope_ref(
-            smooth, "peak", params["window_size"], params["aux_smoothing"], params["aux_poly"]
-        )
-
-        def fit(a):
-            out = np.full(n, np.nan)
-            out[: min(n, a.size)] = a[: min(n, a.size)]
-            return out
-
-        baseline, ceiling = fit(baseline), fit(ceiling)
-        dia = baseline + params["relative_to_baseline"] * (ceiling - baseline)
+        smooth, baseline, ceiling, dia, _ = _signal_columns(y, params)
         return pd.DataFrame(
             {
                 "channel_id": pdf["channel_id"].to_numpy(),

@@ -1,186 +1,91 @@
-"""Constrained peak finder with the heavy lifting JVM-side.
+"""Constrained peak detection as one per-channel NumPy step.
 
-SURVEY.md §2.4 P1 maps the reference's ``find_peaks(smooth, width=1,
-distance=20, rel_height=0.3, prominence=0.3, wlen=250)`` call
-(``/root/reference/peak_detection.py:251``) to a per-channel
-``applyInPandas`` fidelity route (:mod:`.fidelity`) and names a pure-Spark
-formulation as future work. This module is that formulation: the full
-signal never crosses the Python boundary.
+The reference's P1 step is ``find_peaks(smooth, distance=20,
+prominence=0.3, width=1, rel_height=0.3, wlen=250)`` (its
+``peak_detection.py:251``). :func:`constrained_peaks_step` computes it
+on each whole channel inside a :func:`.windows.map_channels` call, from
+two existing rules:
 
-Stage layout (and what each costs at scale):
+* the candidates are the ``is_peak`` rows of :func:`.windows.extrema_flags`,
+  the engine's one plateau-midpoint rule (Spark SQL comparison order; a
+  NULL row or the channel edge next to a run disqualifies it);
+* :func:`..functions.sigproc.constrain_peaks` then applies SciPy's
+  conditions in SciPy's order, distance → prominence → width, the kernel
+  the reference-exact route (:mod:`.fidelity`) runs too.
 
-1. **Plateau-aware candidate maxima** — run-length encode equal-value
-   runs with one ``lag`` window, keep run-start rows, and flag a run as
-   a maximum when both neighboring runs are strictly lower (SciPy's
-   ``_local_maxima_1d`` midpoint semantics). Window-only: a single
-   exchange on ``channel_id`` shared by both window passes; the filtered
-   run frame reuses the partitioning (no second shuffle).
-2. **Greedy distance suppression** — keep-highest-first within
-   ``distance`` samples is inherently priority-order sequential, so it
-   runs in ``applyInPandas`` — but over the *candidate list only*, not
-   the signal: ~16 bytes per candidate cross Arrow (≤ n/2 candidates,
-   in practice ~n/40 for SG-smoothed data), vs the whole channel on the
-   fidelity route. Reuses the tested
-   :func:`..functions.sigproc._select_by_distance` kernel.
-3. **Prominence + width** — each survivor's ±``wlen//2`` neighborhood is
-   gathered with a bucketed equi-join (bucket = ``sample_idx DIV
-   (half+1)``; a survivor probes 3 buckets, so the join is an equi-join
-   on ``(channel_id, bucket)`` — never a range cross join; AQE
-   broadcasts the exploded survivor side when it fits, falling back to a
-   co-partitioned hash join). The SciPy base-walk, the interpolated
-   width crossings, and both filters then run as array HOFs
-   (``aggregate``/``filter``/``transform``) inside whole-stage codegen —
-   one pass per survivor over ≤ ``wlen+1`` structs.
-
-Filter order note: SciPy applies ``distance`` *before* ``prominence`` /
-``width``, but prominence and width are per-peak functions of the raw
-signal only (suppressed candidates are not bases), so computing them for
-survivors-only here yields identical results with strictly less work.
-
-Semantics mirrored (and property-tested) against
-:func:`..functions.sigproc.find_peaks`, the NumPy kernel already
-golden-matched to the reference behavior. Assumes non-NaN signal values
-(Spark's NaN ordering differs from NumPy's; the fidelity route owns the
-NaN edge cases).
-
-Precondition — contiguous per-channel indices: ``idx_col`` must be dense
-0..n-1 (or at least gap-free) within each channel, as produced by the
-``row_number``-derived ``sample_idx`` every current caller feeds. The
-plateau right edge is ``lead(run_start) - 1`` and the wlen neighborhood
-is an index-bucket equi-join — with gapped indices (e.g. a pre-FILTERED
-signal frame) plateau midpoints and wlen bounds silently diverge from
-SciPy, which sees only positions. Re-index with ``row_number`` before
-calling if the frame was filtered.
+A NULL row enters the kernel as NaN, which compares false, so a
+prominence base walk stops at it as at a higher sample. NaN values are
+outside the contract (SciPy's and Spark's comparisons disagree on them).
+The conditions read rows by position, so the step requires each channel's
+``sample_idx`` to be exactly 0..n-1 and raises ``GAPPED_SIGNAL_INDEX``
+otherwise; re-index a filtered frame with ``row_number`` first.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BooleanType, DoubleType, StructField
 
-from ..functions.sigproc import _select_by_distance
+from ..functions.sigproc import constrain_peaks
+from .windows import CHANNEL, IDX, Step, column_values, extrema_flags
+from .windows import map_channels, require_dense
 
-__all__ = ["candidate_maxima", "native_find_peaks"]
+__all__ = ["KEPT", "constrained_peaks_step", "native_find_peaks"]
 
-_SUPPRESS_SCHEMA = StructType(
-    [
-        StructField("channel_id", LongType()),
-        StructField("peak_idx", LongType()),
-        StructField("peak_value", DoubleType()),
-    ]
-)
+#: the step's per-row flag: the row is a peak that passed every condition
+KEPT = "is_constrained_peak"
 
 
-def candidate_maxima(
-    signal: DataFrame,
-    value_col: str = "smooth",
-    idx_col: str = "sample_idx",
-    check_dense: bool = True,
-) -> DataFrame:
-    """Strict local maxima with plateau-midpoint handling, window-only.
+def constrained_peaks_step(
+    value_col: str,
+    distance: int | None,
+    prominence: float | None,
+    width: float | None,
+    rel_height: float,
+    wlen: int | None,
+) -> Step:
+    """:data:`KEPT` plus the ``prominence`` and ``width`` of each kept
+    peak of ``value_col``; both are NULL off the kept peaks, prominence
+    also when neither prominence nor width was requested, width when it
+    was not requested."""
+    if distance is not None and distance < 1:
+        raise ValueError("`distance` must be greater or equal to 1")
+    if wlen is not None and wlen <= 1:
+        raise ValueError(f"`wlen` must be larger than 1, got {wlen}")
 
-    Returns ``(channel_id, peak_idx, peak_value)`` where ``peak_idx`` is
-    the plateau midpoint ``(left + right) DIV 2`` — SciPy's
-    ``_local_maxima_1d`` contract (see
-    :func:`..functions.sigproc.local_maxima_plateau`).
-
-    Requires gap-free per-channel ``idx_col`` values (module docstring):
-    the plateau right edge is derived as ``lead(run_start) - 1``.
-
-    ``check_dense`` (default on) enforces that precondition AT RUNTIME:
-    an extra ``lag(idx)`` over the window pass this stage already runs
-    (zero additional shuffle or scan) raises a loud
-    ``GAPPED_SIGNAL_INDEX`` error on the first non-consecutive or
-    duplicated per-channel index — e.g. a pre-FILTERED signal frame —
-    instead of silently diverging from SciPy's position-based plateau
-    midpoints and wlen bounds. Re-index with ``row_number`` before
-    calling, or pass ``check_dense=False`` if the input is known-dense
-    and the caller wants the check elided from the plan. The check is
-    embedded in the run-length-encode column (not a droppable side
-    effect), so column pruning cannot optimize it away.
-    """
-    sig = signal.select(
-        "channel_id",
-        F.col(idx_col).alias("_idx"),
-        F.col(value_col).alias("_v"),
-    )
-    w = Window.partitionBy("channel_id").orderBy("_idx")
-    prev = F.lag("_v").over(w)
-    is_new = prev.isNull() | (F.col("_v") != prev)
-    if check_dense:
-        prev_idx = F.lag("_idx").over(w)
-        gap_free = prev_idx.isNull() | (F.col("_idx") - prev_idx == 1)
-        is_new = F.when(gap_free, is_new).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "GAPPED_SIGNAL_INDEX: native_find_peaks requires "
-                        "gap-free per-channel indices; channel_id="
-                    ),
-                    F.col("channel_id").cast("string"),
-                    F.lit(" jumps "),
-                    prev_idx.cast("string"),
-                    F.lit(" -> "),
-                    F.col("_idx").cast("string"),
-                    F.lit(
-                        ". Re-index with row_number() after filtering, "
-                        "or pass check_dense=False."
-                    ),
-                )
-            ).cast("boolean")
+    def kernel(t: pa.Table) -> dict[str, pa.Array]:
+        require_dense(t)
+        y, is_null = column_values(t, value_col)
+        cand = np.flatnonzero(extrema_flags(y, is_null, np.arange(y.size))[0])
+        peaks, proms, widths = constrain_peaks(
+            y, cand, distance, prominence, width, rel_height, wlen
         )
-    runs = (
-        sig.withColumn("_new", is_new)
-        .filter(F.col("_new"))
-        .drop("_new")
+        kept = np.zeros(y.size, dtype=bool)
+        kept[peaks] = True
+
+        def at_peaks(v: np.ndarray | None) -> pa.Array:
+            if v is None:
+                return pa.nulls(y.size, pa.float64())
+            out = np.zeros(y.size)
+            out[peaks] = v
+            return pa.array(out, mask=~kept)
+
+        return {
+            KEPT: pa.array(kept),
+            "prominence": at_peaks(proms),
+            "width": at_peaks(widths),
+        }
+
+    return Step(
+        kernel,
+        (
+            StructField(KEPT, BooleanType(), False),
+            StructField("prominence", DoubleType()),
+            StructField("width", DoubleType()),
+        ),
     )
-    # Run-start rows reuse the channel partitioning: lo = this start,
-    # hi = next start − 1 (last run: no next → cannot be a peak anyway,
-    # mirroring SciPy's edge exclusion).
-    wr = Window.partitionBy("channel_id").orderBy("_idx")
-    runs = runs.select(
-        "channel_id",
-        F.col("_idx").alias("_lo"),
-        (F.lead("_idx").over(wr) - F.lit(1)).alias("_hi"),
-        F.col("_v"),
-        F.lag("_v").over(wr).alias("_prev_v"),
-        F.lead("_v").over(wr).alias("_next_v"),
-    )
-    return runs.filter(
-        F.col("_prev_v").isNotNull()
-        & F.col("_next_v").isNotNull()
-        & (F.col("_prev_v") < F.col("_v"))
-        & (F.col("_next_v") < F.col("_v"))
-    ).select(
-        "channel_id",
-        ((F.col("_lo") + F.col("_hi")) / 2).cast("long").alias("peak_idx"),
-        F.col("_v").alias("peak_value"),
-    )
-
-
-def _suppress_by_distance(candidates: DataFrame, distance: int) -> DataFrame:
-    """Greedy keep-highest-first suppression over the sparse candidate
-    set (channel_id, peak_idx, peak_value) — the only Python stage."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("peak_idx")
-        peaks = pdf["peak_idx"].to_numpy(dtype=np.intp)
-        vals = pdf["peak_value"].to_numpy(dtype=np.float64)
-        keep = _select_by_distance(peaks, vals, distance)
-        return pd.DataFrame(
-            {
-                "channel_id": pdf["channel_id"].to_numpy()[keep],
-                "peak_idx": peaks[keep].astype(np.int64),
-                "peak_value": vals[keep],
-            }
-        )
-
-    return candidates.groupBy("channel_id").applyInPandas(fn, _SUPPRESS_SCHEMA)
 
 
 def native_find_peaks(
@@ -192,189 +97,27 @@ def native_find_peaks(
     width: float | None = 1.0,
     rel_height: float = 0.3,
     wlen: int | None = 250,
-    persist_input: bool = True,
-    check_dense: bool = True,
 ) -> DataFrame:
-    """SciPy-ordered constrained peak detection, JVM-side.
-
-    Returns ``(channel_id, peak_idx, peak_value, prominence, width)``
-    for peaks surviving all requested conditions; ``prominence`` /
-    ``width`` are null when that condition was not requested.
-
-    Requires gap-free per-channel ``idx_col`` values (module docstring):
-    both the plateau RLE and the wlen-bucket join are index-arithmetic.
-    ``check_dense`` (default on) enforces it in the candidate stage, which
-    every configuration runs (:func:`candidate_maxima`).
-
-    ``persist_input``: when prominence/width are requested the plan
-    consumes ``signal`` TWICE (candidate RLE branch + neighborhood
-    gather branch), and Spark reuses exchanges, not arbitrary subplans —
-    an expensive upstream (e.g. the 301-tap FIR smooth) would execute
-    once per branch. The default persists the three-column projection
-    (``MEMORY_AND_DISK``, ~24 B/row, spills gracefully; measured 3.8×
-    on the sf0.1 bench) so upstream runs once. Spark's CacheManager
-    keys entries by canonicalized plan, so repeated calls on the same
-    input share one materialization. Pass ``False`` if the input is
-    already cached/checkpointed or the caller manages its own lifecycle;
-    ``spark.catalog.clearCache()`` releases everything either way.
-    """
-    if distance is not None and distance < 1:
-        raise ValueError("`distance` must be greater or equal to 1")
-    if wlen is not None and wlen <= 1:
-        raise ValueError(f"`wlen` must be larger than 1, got {wlen}")
-
-    if persist_input and (prominence is not None or width is not None):
-        from pyspark import StorageLevel
-
-        signal = signal.select("channel_id", idx_col, value_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    cands = candidate_maxima(signal, value_col, idx_col, check_dense=check_dense)
-    if distance is not None:
-        # The UDF carries peak_value through so no join back onto the
-        # candidate lineage (which would re-execute the upstream plan).
-        cands = _suppress_by_distance(cands, int(math.ceil(distance)))
-    if prominence is None and width is None:
-        return cands.select(
-            "channel_id",
-            "peak_idx",
-            "peak_value",
-            F.lit(None).cast("double").alias("prominence"),
-            F.lit(None).cast("double").alias("width"),
-        )
-
-    # SciPy rounds wlen up to the next odd integer; half-window bounds
-    # the base walk on each side (None → unbounded within the channel,
-    # implemented as a larger-than-any-channel bucket).
-    if wlen is not None:
-        odd = int(np.ceil(wlen))
-        half = (odd + 1) // 2 if odd % 2 == 0 else odd // 2
-    else:
-        half = None
-
+    """SciPy-ordered constrained peak detection per channel
+    (:func:`constrained_peaks_step`). Returns ``(channel_id, peak_idx,
+    peak_value, prominence, width)`` for the peaks passing every
+    requested condition."""
+    step = constrained_peaks_step(
+        "peak_value", distance, prominence, width, rel_height, wlen
+    )
     sig = signal.select(
-        "channel_id",
-        F.col(idx_col).alias("j"),
-        F.col(value_col).cast("double").alias("s"),
+        CHANNEL,
+        F.col(idx_col).alias(IDX),
+        F.col(value_col).cast("double").alias("peak_value"),
     )
-    if half is not None:
-        bucket = F.lit(int(half) + 1)
-        surv = cands.withColumn(
-            "_b",
-            F.explode(
-                F.array(
-                    (F.col("peak_idx") / bucket).cast("long") - 1,
-                    (F.col("peak_idx") / bucket).cast("long"),
-                    (F.col("peak_idx") / bucket).cast("long") + 1,
-                )
-            ),
-        )
-        nb = (
-            sig.withColumn("_b", (F.col("j") / bucket).cast("long"))
-            .join(surv, ["channel_id", "_b"])
-            .filter(F.abs(F.col("j") - F.col("peak_idx")) <= F.lit(int(half)))
-        )
-    else:
-        nb = sig.join(cands, "channel_id")
-    nb = nb.groupBy("channel_id", "peak_idx", "peak_value").agg(
-        F.array_sort(F.collect_list(F.struct("j", "s"))).alias("nb")
-    )
-
-    # Base walk (sigproc.peak_prominences): from the peak outward, visit
-    # samples while s <= peak_value, tracking the minimum (ties keep the
-    # first-encountered = nearest-to-peak index); stop at the first
-    # strictly higher sample or the wlen/channel bound.
-    walk = """
-        aggregate(
-          {arr},
-          named_struct('minv', peak_value, 'minj', peak_idx, 'stop', false),
-          (acc, x) -> CASE
-            WHEN acc.stop OR x.s > peak_value
-              THEN named_struct('minv', acc.minv, 'minj', acc.minj, 'stop', true)
-            WHEN x.s < acc.minv
-              THEN named_struct('minv', x.s, 'minj', x.j, 'stop', false)
-            ELSE acc END
-        )
-    """
-    walk_l = walk.format(arr="reverse(filter(nb, x -> x.j < peak_idx))")
-    walk_r = walk.format(arr="filter(nb, x -> x.j > peak_idx)")
-
-    if width is None:
-        nb = nb.withColumn(
-            "prominence",
-            F.col("peak_value")
-            - F.greatest(F.expr(f"{walk_l}.minv"), F.expr(f"{walk_r}.minv")),
-        )
-        if prominence is not None:
-            nb = nb.filter(F.col("prominence") >= F.lit(float(prominence)))
-        return nb.select(
-            "channel_id",
-            "peak_idx",
+    return (
+        map_channels(sig, step)
+        .filter(F.col(KEPT))
+        .select(
+            CHANNEL,
+            F.col(IDX).alias("peak_idx"),
             "peak_value",
             "prominence",
-            F.lit(None).cast("double").alias("width"),
+            "width",
         )
-
-    # Width at rel_height (sigproc.peak_widths): evaluation height
-    # h = peak − rel_height·prominence; scan from the peak toward each
-    # base until s <= h, then linearly interpolate the crossing.
-    #
-    # The whole prominence+width derivation is ONE expression built from
-    # HOF let-bindings (`transform(array(v), x -> body)` binds v to x):
-    # naming intermediates as DataFrame columns instead would let
-    # CollapseProject inline the walk aggregate into every downstream
-    # reference — an exponentially growing tree the optimizer chokes on.
-    def let(val: str, var: str, body: str) -> str:
-        return f"element_at(transform(array({val}), {var} -> {body}), 1)"
-
-    # Crossing scan: the first sample at-or-below h walking from the
-    # peak toward the base (== the extreme qualifying index), falling
-    # through to the base itself; interpolate when strictly below h.
-    stop_l = (
-        "coalesce(array_max(transform(filter(nb, x -> "
-        "x.j >= b.lb.minj AND x.j <= peak_idx AND x.s <= ph.h), "
-        "x -> x.j)), b.lb.minj)"
     )
-    stop_r = (
-        "coalesce(array_min(transform(filter(nb, x -> "
-        "x.j >= peak_idx AND x.j <= b.rb.minj AND x.s <= ph.h), "
-        "x -> x.j)), b.rb.minj)"
-    )
-    at = "element_at(filter(nb, x -> x.j = {j}), 1).s"
-    prom = "peak_value - greatest(b.lb.minv, b.rb.minv)"
-    pw = let(
-        f"named_struct('lb', {walk_l}, 'rb', {walk_r})",
-        "b",
-        let(
-            f"named_struct('prom', {prom}, "
-            f"'h', peak_value - {float(rel_height)!r}D * ({prom}))",
-            "ph",
-            let(
-                f"named_struct('slj', {stop_l}, 'srj', {stop_r})",
-                "st",
-                let(
-                    f"named_struct('sly', {at.format(j='st.slj')}, "
-                    f"'sry', {at.format(j='st.srj')}, "
-                    f"'slyn', {at.format(j='st.slj + 1')}, "
-                    f"'sryn', {at.format(j='st.srj - 1')})",
-                    "ys",
-                    "named_struct('prom', ph.prom, 'width', "
-                    "(st.srj - CASE WHEN ys.sry < ph.h THEN "
-                    "(ph.h - ys.sry) / (ys.sryn - ys.sry) ELSE 0D END) "
-                    "- (st.slj + CASE WHEN ys.sly < ph.h THEN "
-                    "(ph.h - ys.sly) / (ys.slyn - ys.sly) ELSE 0D END))",
-                ),
-            ),
-        ),
-    )
-    out = nb.withColumn("_pw", F.expr(pw)).select(
-        "channel_id",
-        "peak_idx",
-        "peak_value",
-        F.col("_pw.prom").alias("prominence"),
-        F.col("_pw.width").alias("width"),
-    )
-    if prominence is not None:
-        out = out.filter(F.col("prominence") >= F.lit(float(prominence)))
-    return out.filter(F.col("width") >= F.lit(float(width)))

@@ -45,14 +45,17 @@ def column_values(t: pa.Table, name: str) -> tuple[np.ndarray, np.ndarray]:
 
 def require_dense(t: pa.Table) -> None:
     """Raise GAPPED_SIGNAL_INDEX unless the sorted channel's ``sample_idx``
-    is exactly 0..n-1: a step that reads taps by position calls this."""
+    is exactly 0..n-1, naming the first index off it: a step that reads
+    rows by position calls this."""
     idx = t.column(IDX).to_numpy()
-    if not np.array_equal(idx, np.arange(idx.size)):
+    bad = np.flatnonzero(idx != np.arange(idx.size))
+    if bad.size:
+        k = bad[0]
+        jump = f"jumps {idx[k - 1]} -> {idx[k]}" if k else f"starts at {idx[0]}"
         raise ValueError(
-            "GAPPED_SIGNAL_INDEX: per-channel sample_idx must be "
-            f"exactly 0..n-1; channel_id={t.column(CHANNEL)[0].as_py()} has "
-            f"{idx.size} rows with sample_idx from {idx[0]} to "
-            f"{idx[-1]}. Re-index with row_number() after filtering."
+            "GAPPED_SIGNAL_INDEX: per-channel sample_idx must be exactly "
+            f"0..n-1; channel_id={t.column(CHANNEL)[0].as_py()} {jump}. "
+            "Re-index with row_number() after filtering."
         )
 
 

@@ -8,8 +8,7 @@ one (channel_id, sample_idx) sort, one per-channel NumPy stage for the
 two Savitzky–Golay smooths and the extrema flags; no collect) whose
 result the oracle SQL reproduces.
 
-Cache lifetime: some builders (``q_native_find_peaks*``, the PQ/IVF
-family) persist intermediates that OUTLIVE the call by design — see
+Cache lifetime: some builders (the PQ/IVF family) persist intermediates that OUTLIVE the call by design — see
 :func:`..session.release_caches` for the contract and the one-call
 release.
 """
@@ -429,13 +428,12 @@ def q_fidelity_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_native_find_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1 constrained find_peaks, JVM-side route (operators/native_peaks):
-    plateau candidates and prominence/width run as window + array-HOF
-    expressions; only the sparse candidate list crosses Arrow for greedy
-    distance suppression. Hash-checked since round 5: the greedy
-    suppression is a recursive CTE in the DuckDB mirror
-    (oracle.native_find_peaks_oracle); exact parity with the NumPy
-    kernel is additionally pinned by tests/test_native_peaks.py."""
+    """P1 constrained find_peaks (operators/native_peaks): one
+    per-channel NumPy step over the FIR-smoothed signal. Hash-checked
+    since round 5: the greedy suppression is a recursive CTE in the
+    DuckDB mirror (oracle.native_find_peaks_oracle); exact parity with
+    the NumPy kernels is additionally pinned by
+    tests/test_native_peaks.py."""
     from .operators.native_peaks import native_find_peaks
 
     sig = with_fir_smooth(signal_frame(spark, sf_dir, n_channels=ORACLE_CHANNELS))
@@ -456,7 +454,7 @@ def q_native_find_peaks_nodist(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible, so this variant is hash-checked against a full
     DuckDB mirror (oracle.native_find_peaks_nodist_oracle). Greedy
     distance suppression — the one genuinely sequential constraint —
-    stays covered by the rows-only ``native_find_peaks`` entry."""
+    is covered by the ``native_find_peaks`` entry's recursive CTE."""
     from .operators.native_peaks import native_find_peaks
 
     sig = with_fir_smooth(signal_frame(spark, sf_dir, n_channels=ORACLE_CHANNELS))
@@ -503,10 +501,10 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_constrained_peak_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end NATIVE constrained chain: smooth → envelopes →
-    diastolic → SciPy-constraint detection (JVM-side native_find_peaks)
-    → envelope threshold → crossings → per-peak attributes. Rows-only
-    (constraint semantics are non-SQL-expressible); the kept-set
-    contract is pinned by tests/test_api.py."""
+    diastolic → SciPy-constraint detection (native_peaks' per-channel
+    step) → envelope threshold → crossings → per-peak attributes.
+    Hash-checked against oracle.constrained_peak_attributes_oracle; the
+    kept-set contract is pinned by tests/test_api.py."""
     from .api import PeakPipeline
 
     sig = signal_frame(spark, sf_dir, n_channels=ORACLE_CHANNELS)

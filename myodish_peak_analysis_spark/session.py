@@ -48,16 +48,13 @@ def release_caches(spark: SparkSession) -> None:
     intermediates BY DESIGN and deliberately do not unpersist them
     before returning, because the returned DataFrame is lazy and its
     most expensive consumer pass still reads the cache —
-    ``native_find_peaks(persist_input=True)`` (slim input projection),
     ``llm.similarity._lloyd_fit`` (each quantizer's source: the PQ
     subvector explosion, the IVF normed base, and their fit samples).
     Spark's CacheManager dedups identical canonicalized plans, so
     repeated calls on the SAME input share one entry — but a long
     session calling them across many DISTINCT inputs accumulates
     entries (bounded by MEMORY_AND_DISK eviction, not released).
-    Call this between unrelated workloads, or pass
-    ``persist_input=False`` / pre-cache inputs yourself to opt out
-    per call."""
+    Call this between unrelated workloads."""
     spark.catalog.clearCache()
 
 

@@ -1,10 +1,11 @@
-"""JVM-side constrained peak finder vs the NumPy sigproc kernels.
+"""Per-channel constrained peak finder vs the NumPy sigproc kernels.
 
 The sigproc kernels are themselves golden-matched to the reference's
-SciPy usage (tests/test_sigproc.py), so equality here transitively pins
+SciPy usage (tests/test_sigproc.py), so equality here pins
 operators/native_peaks.py to /root/reference/peak_detection.py:251
 semantics — plateau midpoints, greedy distance suppression, wlen-bounded
-prominence bases, and interpolated widths at rel_height.
+prominence bases, and interpolated widths at rel_height — and to the
+engine's one plateau rule (windows.extrema_flags) beside NULL rows.
 """
 
 from __future__ import annotations
@@ -12,12 +13,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from myodish_peak_analysis_spark.functions import sigproc
-from myodish_peak_analysis_spark.operators.native_peaks import (
-    candidate_maxima,
-    native_find_peaks,
-)
+from myodish_peak_analysis_spark.operators.native_peaks import native_find_peaks
+from myodish_peak_analysis_spark.operators.windows import with_extrema_flags
 
 
 def _frame(spark, channels: dict[int, np.ndarray]):
@@ -46,15 +47,6 @@ def _signals(seed: int = 7, n_channels: int = 6) -> dict[int, np.ndarray]:
     return out
 
 
-def test_candidate_maxima_matches_plateau_kernel(spark):
-    channels = _signals()
-    got = candidate_maxima(_frame(spark, channels)).toPandas()
-    for ch, y in channels.items():
-        mids, _, _ = sigproc.local_maxima_plateau(y)
-        sub = np.sort(got[got.channel_id == ch].peak_idx.to_numpy())
-        assert np.array_equal(sub, mids), f"channel {ch}"
-
-
 @pytest.mark.parametrize(
     "kwargs",
     [
@@ -63,6 +55,7 @@ def test_candidate_maxima_matches_plateau_kernel(spark):
         dict(distance=None, prominence=0.3, width=1.0),
         dict(distance=None, prominence=None, width=1.0),
         dict(distance=20, prominence=0.3, width=1.0),
+        dict(distance=None, prominence=None, width=None),
     ],
 )
 def test_native_find_peaks_matches_numpy(spark, kwargs):
@@ -96,12 +89,10 @@ def test_prominence_and_width_values_match_numpy(spark):
         mask = (proms >= 0.3) & (widths >= 1.0)
         sub = got[got.channel_id == ch]
         assert np.array_equal(sub.peak_idx.to_numpy(), peaks[mask])
-        np.testing.assert_allclose(
-            sub.prominence.to_numpy(), proms[mask], rtol=0, atol=1e-9
+        assert list(map(float.hex, sub.prominence)) == list(
+            map(float.hex, proms[mask])
         )
-        np.testing.assert_allclose(
-            sub.width.to_numpy(), widths[mask], rtol=0, atol=1e-9
-        )
+        assert list(map(float.hex, sub.width)) == list(map(float.hex, widths[mask]))
 
 
 def test_unbounded_wlen(spark):
@@ -161,13 +152,87 @@ def test_edge_case_battery(spark):
         assert np.array_equal(sub, exp), f"channel {ch}: got {sub} exp {exp}"
 
 
-def test_persist_flag_does_not_change_results(spark):
-    """persist_input=True (default) must be a pure performance knob."""
-    frame = _frame(spark, _signals(seed=13))
-    a = native_find_peaks(frame, persist_input=True).collect()
-    b = native_find_peaks(frame, persist_input=False).collect()
-    assert sorted(
-        [(r.channel_id, r.peak_idx, r.peak_value, r.prominence, r.width) for r in a]
-    ) == sorted(
-        [(r.channel_id, r.peak_idx, r.peak_value, r.prominence, r.width) for r in b]
+def _nullable_frame(spark, values):
+    return spark.createDataFrame(
+        [(0, i, v) for i, v in enumerate(values)],
+        "channel_id long, sample_idx long, smooth double",
     )
+
+
+def test_null_neighbour_disqualifies_like_extrema_flags(spark):
+    """A run beside a NULL row is no candidate: the finder keeps exactly
+    the rows ``with_extrema_flags`` flags (index 4 sits right after the
+    NULL and is not a peak)."""
+    df = _nullable_frame(spark, [0.0, 5.0, 1.0, None, 3.0, 2.0, 0.0])
+    got = native_find_peaks(df, distance=None, prominence=None, width=None)
+    flagged = with_extrema_flags(df, value_col="smooth").filter("is_peak")
+    assert [r.peak_idx for r in got.collect()] == [1]
+    assert [r.sample_idx for r in flagged.collect()] == [1]
+
+
+def test_null_row_stops_the_base_walk(spark):
+    """A NULL row ends a prominence base walk as a higher sample does.
+    The peak at 9 (3.0) walks left to the NULL at 6, so its left base is
+    the 2.0 at 7: prominence 1.0, width 0.9 < 1. Walks past the NULLs
+    would reach the 0.0 at each end (prominence 3.0, width 2.7) and keep
+    it.
+    The NULL at 21 joins the run of 20 (extrema_flags), which stays a
+    candidate but has prominence 0."""
+    vals = [0, 1, 2, 1.5, 0.2, 1.0, None, 2.0, 2.5, 3.0, 2.0, 1.0, 0.5, 1.4,
+            1.2, 0.8, 1.9, 2.6, 2.2, 1.8, 2.9, None, 1.0, 0.1, 0.0]
+    df = _nullable_frame(spark, [None if v is None else float(v) for v in vals])
+    proms = {
+        r.peak_idx: r.prominence
+        for r in native_find_peaks(
+            df, distance=None, prominence=0.0, width=None
+        ).collect()
+    }
+    assert proms[9] == 1.0 and proms[20] == 0.0
+    kept = native_find_peaks(df, distance=None, prominence=0.3, width=1.0)
+    assert sorted(r.peak_idx for r in kept.collect()) == [2, 13]
+
+
+def _signal(spark, n=400, channels=2, gap_at=None, dup_at=None):
+    rows = []
+    for ch in range(channels):
+        rng = np.random.default_rng(ch + 1)
+        vals = np.cumsum(rng.uniform(-1, 1, size=n))
+        for i in range(n):
+            if gap_at is not None and ch == channels - 1 and i == gap_at:
+                continue
+            rows.append((ch, i, float(vals[i])))
+        if dup_at is not None and ch == 0:
+            rows.append((ch, dup_at, float(vals[dup_at]) + 0.5))
+    return spark.createDataFrame(
+        rows, "channel_id long, sample_idx long, smooth double"
+    )
+
+
+def test_native_find_peaks_rejects_gapped_index(spark):
+    dense = _signal(spark)
+    assert native_find_peaks(dense).count() > 0
+
+    gapped = _signal(spark, gap_at=200)  # e.g. a pre-filtered frame
+    with pytest.raises(Exception, match="GAPPED_SIGNAL_INDEX"):
+        native_find_peaks(gapped).count()
+    # the error names the offending channel and jump
+    with pytest.raises(Exception, match="channel_id=1 jumps 199 -> 201"):
+        native_find_peaks(gapped).count()
+
+    duped = _signal(spark, dup_at=50)
+    with pytest.raises(Exception, match="GAPPED_SIGNAL_INDEX"):
+        native_find_peaks(duped).count()
+
+
+def test_native_find_peaks_accepts_reindexed_frame(spark):
+    """Re-indexing a filtered frame with row_number is the documented
+    fix and runs clean through the dense-index check."""
+    gapped = _signal(spark, gap_at=200)
+    reindexed = gapped.withColumn(
+        "sample_idx",
+        F.row_number().over(
+            Window.partitionBy("channel_id").orderBy("sample_idx")
+        )
+        - 1,
+    )
+    assert native_find_peaks(reindexed).count() > 0

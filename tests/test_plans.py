@@ -176,6 +176,30 @@ def test_pipeline_noop_write_job_count(spark):
     assert len(jobs) == 5, jobs
 
 
+def test_constrained_peak_attributes_noop_write_job_count(spark):
+    """A noop write of the registered ``constrained_peak_attributes`` at
+    sf0.001 runs exactly 7 jobs: a range-sampling job and an adaptive
+    query stage for each of the three range exchanges (the signal
+    frame's, the smooth → envelopes kernel's and the constrained peak
+    step's), then the write. The window / bucket-join / higher-order
+    function route it replaced ran 16 (its plateau windows, distance
+    step and neighbourhood join each shuffled, and it persisted its
+    input)."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    out = entry.queries()["constrained_peak_attributes"](spark, SF001)
+    spark.catalog.clearCache()
+    sc.setJobGroup("constrained_noop_write", "constrained_noop_write")
+    try:
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("constrained_noop_write")
+    assert len(jobs) == 7, jobs
+
+
 def test_fit_ivf_pq_index_job_count(spark):
     """One ``fit_ivf_pq_index`` of the sf0.001 embeddings (k = 16 IVF
     lists, 3 IVF and 2 PQ Lloyd rounds in one loop) runs exactly 23

@@ -4,10 +4,6 @@
   CODE now (idf-numerator cap + DECIMAL accumulators), property-tested
   at adversarial corpus sizes where the old BIGINT math provably
   overflowed int64.
-- VERDICT r7 ask #4: native_find_peaks' dense-index precondition is
-  ENFORCED at runtime — a gapped (pre-filtered) or duplicated index
-  raises a loud GAPPED_SIGNAL_INDEX error instead of silently
-  diverging from SciPy's position-based semantics.
 - ADVICE r7: AVI dwStreams truncation guard, AVIF zero-body pitm
   bounds, episodic ABF1 trailing-sample refusal.
 """
@@ -17,7 +13,6 @@ import struct
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 # --- tfidf overflow guard ---------------------------------------------
@@ -132,91 +127,6 @@ def test_tfidf_default_path_unchanged_and_cap_is_noop_below_1e8(spark):
     for k, (sh, cos) in got.items():
         assert sh == want[k][0]
         assert cos == pytest.approx(round(want[k][1], 6), abs=2e-6)
-
-
-# --- native_find_peaks dense-index runtime guard ----------------------
-
-
-def _signal(spark, n=400, channels=2, gap_at=None, dup_at=None):
-    rows = []
-    for ch in range(channels):
-        rng = np.random.default_rng(ch + 1)
-        vals = np.cumsum(rng.uniform(-1, 1, size=n))
-        for i in range(n):
-            if gap_at is not None and ch == channels - 1 and i == gap_at:
-                continue
-            rows.append((ch, i, float(vals[i])))
-        if dup_at is not None and ch == 0:
-            rows.append((ch, dup_at, float(vals[dup_at]) + 0.5))
-    return spark.createDataFrame(
-        rows, "channel_id long, sample_idx long, smooth double"
-    )
-
-
-def test_native_find_peaks_rejects_gapped_index(spark):
-    from myodish_peak_analysis_spark.operators.native_peaks import (
-        native_find_peaks,
-    )
-
-    dense = _signal(spark)
-    assert native_find_peaks(dense, persist_input=False).count() > 0
-
-    gapped = _signal(spark, gap_at=200)  # e.g. a pre-filtered frame
-    with pytest.raises(Exception, match="GAPPED_SIGNAL_INDEX"):
-        native_find_peaks(gapped, persist_input=False).count()
-    # the error names the offending channel and jump
-    with pytest.raises(Exception, match="channel_id=1 jumps 199 -> 201"):
-        native_find_peaks(gapped, persist_input=False).count()
-
-    duped = _signal(spark, dup_at=50)
-    with pytest.raises(Exception, match="GAPPED_SIGNAL_INDEX"):
-        native_find_peaks(duped, persist_input=False).count()
-
-
-def test_native_find_peaks_guard_opt_out_and_reindex(spark):
-    """check_dense=False elides the guard (caller-asserted density);
-    re-indexing a filtered frame with row_number is the documented fix
-    and must run clean through the default guard."""
-    from pyspark.sql import Window
-
-    from myodish_peak_analysis_spark.operators.native_peaks import (
-        native_find_peaks,
-    )
-
-    gapped = _signal(spark, gap_at=200)
-    # opt-out executes (results are caller's responsibility)
-    native_find_peaks(gapped, persist_input=False, check_dense=False).count()
-
-    reindexed = gapped.withColumn(
-        "sample_idx",
-        F.row_number().over(
-            Window.partitionBy("channel_id").orderBy("sample_idx")
-        )
-        - 1,
-    )
-    assert native_find_peaks(reindexed, persist_input=False).count() > 0
-
-
-def test_guard_matches_dense_results_exactly(spark):
-    """The guard must not perturb results on valid input: identical
-    peaks with check_dense on and off."""
-    from myodish_peak_analysis_spark.operators.native_peaks import (
-        native_find_peaks,
-    )
-
-    dense = _signal(spark, n=600)
-    on = sorted(
-        map(tuple, native_find_peaks(dense, persist_input=False).collect())
-    )
-    off = sorted(
-        map(
-            tuple,
-            native_find_peaks(
-                dense, persist_input=False, check_dense=False
-            ).collect(),
-        )
-    )
-    assert on == off and len(on) > 0
 
 
 # --- nprobe="auto" (constant-coverage dial, round 8) -------------------

@@ -237,12 +237,55 @@ for name, b in builders.items():
 print("ABRESULT " + json.dumps(out), flush=True)
 '''
 
+# The constrained peak finder: native_find_peaks over the FIR smooth
+# and the constrained pipeline. Caches are cleared (and the signal
+# frame re-warmed) outside the timed region before every rep, so a
+# tree whose finder persists its input pays that cost on each rep as a
+# fresh query would.
+CHILD_CONSTRAINED = r'''
+import json, sys, time
+tree = sys.argv[1]
+sys.path.insert(0, tree)
+from myodish_peak_analysis_spark.session import get_spark
+from myodish_peak_analysis_spark.api import PeakPipeline
+from myodish_peak_analysis_spark.operators.native_peaks import native_find_peaks
+from myodish_peak_analysis_spark.operators.smooth import with_fir_smooth
+from myodish_peak_analysis_spark.schema import auto_channels, signal_frame
+from bench import SF_DIR as SF
+
+spark = get_spark("ab-constrained")
+spark.sparkContext.setLogLevel("ERROR")
+n = auto_channels(spark, SF)
+sig = signal_frame(spark, SF, n_channels=n)
+
+def force(df):
+    df.write.format("noop").mode("overwrite").save()
+
+builders = {
+    "native_find_peaks": lambda: native_find_peaks(with_fir_smooth(sig)),
+    "constrained_peak_attributes": lambda: PeakPipeline(sig).smooth()
+        .envelopes().diastolic().detect_peaks(constrained=True).attributes(),
+}
+out = {}
+for name, b in builders.items():
+    reps = []
+    for _ in range(3):
+        spark.catalog.clearCache()
+        sig.cache().count()
+        t0 = time.time()
+        force(b())
+        reps.append(time.time() - t0)
+    out[name] = [round(min(reps), 3), round(max(reps), 3)]
+print("ABRESULT " + json.dumps(out), flush=True)
+'''
+
 CHILDREN = {
     "peaks": CHILD,
     "pq": CHILD_PQ,
     "env": CHILD_ENV,
     "manifest": CHILD_MANIFEST,
     "emb": CHILD_EMB,
+    "constrained": CHILD_CONSTRAINED,
 }
 
 

@@ -35,9 +35,9 @@ from myodish_peak_analysis_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 # Arrow/pandas stages are allowed ONLY where they are the design:
-# the reference-exact fidelity twins (applyInPandas), the sparse
-# candidate-suppression step of the constrained peak family, the
-# multimodal decode plumbing, the WARC byte-walk (round 12), and the
+# the reference-exact fidelity twins (applyInPandas), the constrained
+# peak step (sequential SciPy conditions per channel, one applyInArrow
+# over sigproc's kernels), the multimodal decode plumbing, the WARC byte-walk (round 12), and the
 # HTML text extraction over crawl response bodies (round 13: entity
 # tables + a real HTML tokenizer are not JVM-expressible) —
 # mapInPandas/pandas_udf over opaque binary columns, the places a JVM

@@ -104,7 +104,7 @@ def _pipeline_seconds(events: DataFrame, n_rows: int) -> float:
 
 
 def _find_peaks_seconds(events: DataFrame, n_rows: int) -> float:
-    """Best-of-2 wall seconds for the JVM-side constrained find_peaks."""
+    """Best-of-2 wall seconds for the per-channel constrained find_peaks."""
     from myodish_peak_analysis_spark.operators.native_peaks import (
         native_find_peaks,
     )
@@ -1030,11 +1030,11 @@ def main() -> None:
             prev[name] = (k, tpk)
         if not args.uncached:
             big.unpersist()
-        # native_find_peaks persists its slim input projection
-        # internally (persist_input=True); each factor's replicated
-        # plan is a distinct cache entry, so without this the 1x/10x
-        # projections stay resident while the 100x run is measured and
-        # their eviction pressure can spuriously trip --min-ratio.
+        # Some operators persist intermediates by design (the ANN fits'
+        # Lloyd sources, session.release_caches); each factor's
+        # replicated plan is a distinct cache entry, so without this the
+        # 1x/10x entries stay resident while the 100x run is measured
+        # and their eviction pressure can spuriously trip --min-ratio.
         spark.catalog.clearCache()
         base.cache().count()  # re-warm the shared 1x input
     if failed:
