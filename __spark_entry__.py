@@ -104,13 +104,19 @@ def entry(spark: SparkSession) -> DataFrame:
 #: is still policy-valid (the generator, not this list, guarantees the
 #: staleness bound). The list is exactly the queries whose normalised
 #: optimized plan (``tools/audit_plans.py --dump``) differs from the
-#: parent commit's. This round: constrained peak detection is one
-#: per-channel NumPy step (``operators/native_peaks``) instead of a
-#: window / bucket-join / higher-order-function route.
+#: parent commit's. This round: the MinHash signatures are the
+#: map-only fold (``llm/dedup.with_minhash_signatures``) instead of
+#: explode + groupBy-min, and the verify Jaccard counts shared tokens
+#: with ``array_intersect``.
 _CHANGED_THIS_ROUND = [
-    "constrained_peak_attributes",
-    "native_find_peaks",
-    "native_find_peaks_nodist",
+    "hybrid_neardup",
+    "incremental_neardup",
+    "jaccard_pairs",
+    "levenshtein_neardup",
+    "minhash_pairs",
+    "minhash_signatures",
+    "neardup_verified",
+    "tfidf_verify",
 ]
 
 #: The driver records only this many correctness rows per round.

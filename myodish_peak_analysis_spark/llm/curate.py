@@ -312,12 +312,12 @@ def incremental_corpus_manifest(
     from pyspark import StorageLevel
 
     from .dedup import (
-        _TOKENS,
-        _jaccard_expr,
+        _jaccard_verified,
         minhash_band_keys,
         minhash_signatures,
         star_components,
     )
+    from .params import NEARDUP_MIN_JACCARD
 
     new_dig = new_docs.select(
         "doc_id", F.md5(F.encode("text", "UTF-8")).alias("_nh")
@@ -369,48 +369,8 @@ def incremental_corpus_manifest(
             F.greatest("_fid", "_oid").alias("doc_id_b"),
         )
         .distinct()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cand.count()  # eager: id-list + both verify joins consume it
-    # tokenize AFTER the candidate-member semi-join (round 13, the
-    # neardup_verified shape): the exact-Jaccard verify only ever
-    # needs token arrays for candidate-pair members, so the full
-    # corpus scans stream doc_id against the broadcastable id list
-    # and split+array_distinct runs on candidates alone.
-    ids = (
-        cand.select(F.col("doc_id_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
-        .distinct()
     )
-    # persisted + eager like every multiply-consumed frame here: both
-    # verify-join sides launch as concurrent stages, and on an
-    # exchange-reuse miss each re-ran the ids semi-join + tokenize
-    # (the neardup_verified shape, optimization round 13).
-    t = (
-        new_docs.join(ids, "doc_id")
-        .select("doc_id", F.expr(f"array_distinct({_TOKENS})").alias("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    t.count()
-    j = (
-        cand.join(
-            t.select(
-                F.col("doc_id").alias("doc_id_a"),
-                F.col("toks").alias("toks_a"),
-            ),
-            "doc_id_a",
-        )
-        .join(
-            t.select(
-                F.col("doc_id").alias("doc_id_b"),
-                F.col("toks").alias("toks_b"),
-            ),
-            "doc_id_b",
-        )
-    )
-    jac = _jaccard_expr("toks_a", "toks_b")
-    fresh_edges = j.select(
-        "doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= 0.5)
+    fresh_edges = _jaccard_verified(cand, new_docs, NEARDUP_MIN_JACCARD)
     carried_edges = (
         state["edges"]
         .join(unchanged.withColumnRenamed("doc_id", "doc_id_a"), "doc_id_a")

@@ -6,9 +6,9 @@ exact n-gram Jaccard.
 
 * Exact dedup: hash-groupBy — one shuffle keyed by md5(text); skew-free
   (hash keys are uniform), map-side combinable.
-* MinHash: shingle explode → per-doc min-aggregation (map-side partial
-  min, tiny state: PERMS longs/doc) → banded signature keys →
-  ``groupBy(band, key)`` bucket join. Candidate pairs only ever form
+* MinHash: a per-row fold over the doc's own shingle array (map-only,
+  no shuffle; PERMS longs/doc) → banded signature keys →
+  ``(band, band_key)`` bucket join. Candidate pairs only ever form
   WITHIN a bucket — never an all-pairs cross join. Expected bucket sizes
   are O(duplicate-cluster size); a pathological hot bucket is capped by
   AQE skew-join splitting.
@@ -29,6 +29,7 @@ from .params import (
     MINHASH_COEFFS,
     MINHASH_PRIME,
     MINHASH_ROWS,
+    NEARDUP_MIN_JACCARD,
     SHINGLE_K,
     SIMHASH_BITS,
 )
@@ -40,8 +41,10 @@ _TOKENS = "split(text, ' ')"
 def _jaccard_expr(toks_a: str, toks_b: str):
     """Exact distinct-token Jaccard of two (already-distinct) token
     array columns — shared by the sampled and the LSH-verified variants
-    so thresholds/tokenization can never diverge between them."""
-    inter = F.expr(f"size(filter({toks_a}, x -> array_contains({toks_b}, x)))")
+    so thresholds/tokenization can never diverge between them. Both
+    inputs are distinct, so the size of their ``array_intersect`` is
+    the shared-token count."""
+    inter = F.expr(f"size(array_intersect({toks_a}, {toks_b}))")
     return inter.cast("double") / (
         F.expr(f"size({toks_a})") + F.expr(f"size({toks_b})") - inter
     )
@@ -59,35 +62,43 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(docs: DataFrame) -> DataFrame:
+def with_minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Append sig_0..sig_{PERMS-1} to each row: sig_j = min over the
+    row's distinct SHINGLE_K-token shingles of (a_j*h + b_j) mod PRIME,
+    h = the shingle's md5 prefix. The min is a higher-order fold over
+    the row's own shingle array, so the operator is map-only: no
+    shuffle, no aggregation state, and therefore streaming-safe. Input
+    columns are preserved, so stream metadata (ts, tokens) rides along.
+    Docs with < SHINGLE_K tokens (or NULL text) have no shingle and are
+    dropped. ``tests/test_llm.py`` keeps the explode + groupBy-min form
+    as the reference and checks the two row for row."""
     k = SHINGLE_K
-    return (
-        docs.filter(F.expr(f"size({_TOKENS}) >= {k}"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(f"array_distinct({word_ngrams(k)})")
-            ).alias("shingle"),
-        )
-        .withColumn(
-            "h",
-            F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long"),
-        )
+    sh = f"array_distinct({word_ngrams(k)})"
+    hs = (
+        f"transform({sh}, s -> "
+        f"CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
     )
+    out = docs.filter(F.expr(f"size({_TOKENS}) >= {k}")).withColumn(
+        "_hs", F.expr(hs)
+    )
+    for j, (a, b) in enumerate(MINHASH_COEFFS):
+        out = out.withColumn(
+            f"sig_{j}",
+            F.expr(
+                f"array_min(transform(_hs, h -> "
+                f"({a}L * h + {b}L) % {MINHASH_PRIME}L))"
+            ),
+        )
+    return out.drop("_hs")
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """One row per doc: sig_0..sig_{PERMS-1} = min over shingles of
-    (a_j*h + b_j) mod PRIME. Documents with < SHINGLE_K tokens are
-    excluded (no shingles)."""
-    sh = _shingles(docs)
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
-            f"sig_{j}"
-        )
-        for j, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    """(doc_id, sig_0..sig_{PERMS-1}): :func:`with_minhash_signatures`
+    projected to the key. One row per input row — ``doc_id`` is the
+    ``documents`` key, so a corpus that repeats an id gets one row per
+    copy. Documents with < SHINGLE_K tokens are excluded (no
+    shingles)."""
+    return with_minhash_signatures(docs.select("doc_id", "text")).drop("text")
 
 
 def band_structs() -> list:
@@ -181,54 +192,74 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def neardup_verified(docs: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
-    """The production near-dup pipeline: MinHash-LSH candidates verified
-    by exact distinct-token Jaccard. Candidates come only from band
-    buckets (O(cluster size) join), the exact check touches only those
-    pairs — never all-pairs.
+def _candidate_tokens(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """(doc_id_a, doc_id_b, toks_a, toks_b): each candidate pair with
+    both members' distinct-token arrays — the verify input shared by
+    :func:`neardup_verified`, :func:`containment_pairs` and the
+    incremental manifest.
 
-    The token arrays are computed AFTER a semi-join against the
-    candidate-member ids (round 13): tokenizing before the pair join
-    ran split+array_distinct over the ENTIRE corpus twice (once per
-    join side) to verify a candidate set that is near-dup-rate-sized —
-    at 100 TB that is two full-corpus tokenize passes for a per-mille
-    subset. With the join-first shape the full scans only read/hash
-    doc_id against the broadcastable id list and tokenization touches
-    candidate members alone; ``cand`` is persisted (candidate-pair-
-    sized, package cache contract) because the id list and both verify
-    joins consume it. Persisted frames with multiple consumers are
-    materialized EAGERLY throughout (the minhash_pairs race note)."""
+    Tokens are computed AFTER a semi-join against the candidate-member
+    ids (round 13): tokenizing before the pair join ran
+    split+array_distinct over the ENTIRE corpus once per join side to
+    verify a near-dup-rate-sized candidate set. With the join-first
+    shape the full scans only read/hash doc_id against the
+    broadcastable id list, and tokenization touches candidate members
+    alone.
+
+    ``cand`` and the token frame are persisted (candidate-sized,
+    package cache contract, :func:`...session.release_caches`) and
+    pinned with an eager count each: the id list and both verify joins
+    consume ``cand``, both verify joins consume the tokens, and those
+    consumers launch as concurrent stages. On an exchange-reuse miss a
+    cold cache is computed once per consumer (the race
+    :func:`minhash_pairs` notes for its band keys); one bounded count
+    fills it before any of them reads it."""
     from pyspark import StorageLevel
 
-    cand = minhash_pairs(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
     cand.count()
     ids = (
         cand.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
         .distinct()
     )
-    # the token frame is persisted + pinned eagerly too (optimization
-    # round 13): both verify-join sides consume it, and those sides
-    # launch as concurrent stages — on an exchange-reuse miss each
-    # re-ran the ids semi-join + tokenize (the minhash_pairs race,
-    # one level down). Candidate-member-sized, package cache contract.
     t = (
         docs.join(ids, "doc_id")
         .select("doc_id", F.expr(f"array_distinct({_TOKENS})").alias("toks"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     t.count()
-    j = (
-        cand.join(t.withColumnRenamed("doc_id", "doc_id_a"), "doc_id_a")
-        .withColumnRenamed("toks", "toks_a")
-        .join(t.withColumnRenamed("doc_id", "doc_id_b"), "doc_id_b")
-        .withColumnRenamed("toks", "toks_b")
+    return cand.join(
+        t.select(F.col("doc_id").alias("doc_id_a"), F.col("toks").alias("toks_a")),
+        "doc_id_a",
+    ).join(
+        t.select(F.col("doc_id").alias("doc_id_b"), F.col("toks").alias("toks_b")),
+        "doc_id_b",
     )
-    jac = _jaccard_expr("toks_a", "toks_b")
+
+
+def _jaccard_verified(
+    cand: DataFrame, docs: DataFrame, min_jaccard: float
+) -> DataFrame:
+    """(doc_id_a, doc_id_b, jaccard) of the candidate pairs whose exact
+    distinct-token Jaccard reaches ``min_jaccard``."""
+    jac = F.round(_jaccard_expr("toks_a", "toks_b"), 6).alias("jaccard")
     return (
-        j.select("doc_id_a", "doc_id_b", F.round(jac, 6).alias("jaccard"))
+        _candidate_tokens(cand, docs)
+        .select("doc_id_a", "doc_id_b", jac)
         .filter(F.col("jaccard") >= min_jaccard)
     )
+
+
+def neardup_verified(
+    docs: DataFrame, min_jaccard: float = NEARDUP_MIN_JACCARD
+) -> DataFrame:
+    """The production near-dup pipeline: MinHash-LSH candidates verified
+    by exact distinct-token Jaccard. Candidates come only from band
+    buckets (O(cluster size) join), the exact check touches only those
+    pairs — never all-pairs. Building the frame runs the eager cache
+    pins of :func:`minhash_pairs` and :func:`_candidate_tokens`."""
+    return _jaccard_verified(minhash_pairs(docs), docs, min_jaccard)
 
 
 def levenshtein_neardup(
@@ -326,42 +357,11 @@ def containment_pairs(
             F.col("fb.doc_id").alias("doc_id_b"),
         )
         .distinct()
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cand.count()
-    # tokenize after the candidate-member semi-join (round 13, the
-    # neardup_verified shape): split+array_distinct runs on candidate
-    # members only, not the whole corpus per join side.
-    ids = (
-        cand.select(F.col("doc_id_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
-        .distinct()
     )
-    # persisted + eager (optimization round 13): both verify-join
-    # sides consume `t` as concurrent stages — the neardup_verified
-    # race, one level down. Candidate-member-sized.
-    t = (
-        docs.join(ids, "doc_id")
-        .select("doc_id", F.expr(f"array_distinct({_TOKENS})").alias("toks"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    t.count()
+    inter = F.expr("size(array_intersect(toks_a, toks_b))").cast("double")
     j = (
-        cand.join(
-            t.select(
-                F.col("doc_id").alias("doc_id_a"), F.col("toks").alias("toks_a")
-            ),
-            "doc_id_a",
-        )
-        .join(
-            t.select(
-                F.col("doc_id").alias("doc_id_b"), F.col("toks").alias("toks_b")
-            ),
-            "doc_id_b",
-        )
-        .withColumn(
-            "_inter",
-            F.expr("size(array_intersect(toks_a, toks_b))").cast("double"),
-        )
+        _candidate_tokens(cand, docs)
+        .withColumn("_inter", inter)
         .select(
             "doc_id_a",
             "doc_id_b",
@@ -496,9 +496,7 @@ def star_components(edges: DataFrame, nodes: DataFrame, max_iters: int = 64) -> 
     return out
 
 
-def dedup_clusters(
-    docs: DataFrame, max_iters: int = 64, method: str = "label"
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, max_iters: int = 64) -> DataFrame:
     """Connected components over the verified near-dup graph: every doc
     gets a ``cluster_id`` = the smallest doc_id reachable through
     near-dup edges (itself if it has none). The canonical "keep one per
@@ -520,24 +518,15 @@ def dedup_clusters(
     DuckDB mirror computes the exact transitive closure). The edge set
     is computed ONCE and cached (it contains the whole MinHash+Jaccard
     subplan); per-round labels are unpersisted as soon as the next
-    round materializes. At 100 TB pass ``method="star"``: the same
-    near-dup edge set then runs through :func:`star_components`
+    round materializes. At 100 TB, or when components can chain, run
+    :func:`star_components` on :func:`neardup_verified`'s edges instead
     (large-star/small-star, O(log^2 n) rounds independent of component
-    diameter) and returns the identical (doc_id, cluster_id) frame —
-    the default stays the oracle-checked propagation-to-fixpoint form.
+    diameter): it returns the identical (doc_id, cluster_id) frame.
     Measured head-to-head at sf0.1 (docs/PLANS.md): label-prop ~2.3 s,
     star ~2.3 s at diameter <= 3 — the star route's advantage is the
     round COUNT bound on deep graphs, not per-round cost.
     """
     pairs = neardup_verified(docs)
-    if method == "star":
-        return star_components(
-            pairs.select(
-                F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-            ),
-            docs.select("doc_id"),
-            max_iters=max_iters,
-        )
     # Lineage discipline (optimization round 13): every per-round frame
     # is localCheckpoint-ed, not cache()-d, matching star_components.
     # cache() shares COMPUTATION but not the LOGICAL PLAN — each round's
@@ -745,7 +734,7 @@ def corpus_band_index(corpus: DataFrame) -> DataFrame:
 def incremental_neardup(
     new_docs: DataFrame,
     corpus: DataFrame,
-    min_jaccard: float = 0.5,
+    min_jaccard: float = NEARDUP_MIN_JACCARD,
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup: screen an incoming batch against the
@@ -807,38 +796,6 @@ def incremental_neardup(
         )
         .filter(F.col("jaccard") >= min_jaccard)
     )
-
-
-def with_minhash_signatures(docs: DataFrame) -> DataFrame:
-    """Map-only twin of :func:`minhash_signatures`: the per-doc min is a
-    HOF fold over the row's own shingle array instead of explode +
-    groupBy — IDENTICAL output columns (parity pinned in tests), zero
-    shuffle, and therefore STREAMING-SAFE (no aggregation state). Input
-    columns are preserved (appended sig_0..sig_{PERMS-1}), so stream
-    metadata (ts, tokens) rides along. Docs with < SHINGLE_K tokens are
-    dropped, as in the batch twin.
-
-    The batch pipeline keeps the explode+groupBy form because its
-    exchange doubles as the shuffle the banded join reuses; this form
-    is for streams and for map-only composition."""
-    k = SHINGLE_K
-    sh = f"array_distinct({word_ngrams(k)})"
-    hs = (
-        f"transform({sh}, s -> "
-        f"CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
-    )
-    out = docs.filter(F.expr(f"size({_TOKENS}) >= {k}")).withColumn(
-        "_hs", F.expr(hs)
-    )
-    for j, (a, b) in enumerate(MINHASH_COEFFS):
-        out = out.withColumn(
-            f"sig_{j}",
-            F.expr(
-                f"array_min(transform(_hs, h -> "
-                f"({a}L * h + {b}L) % {MINHASH_PRIME}L))"
-            ),
-        )
-    return out.drop("_hs")
 
 
 def hybrid_neardup(

@@ -49,6 +49,10 @@ MINHASH_PERMS = 16
 MINHASH_BANDS = 4
 MINHASH_ROWS = MINHASH_PERMS // MINHASH_BANDS
 MINHASH_PRIME = 536870909  # largest prime < 2^29; a*h+b stays < 2^58
+#: Exact-Jaccard floor of a verified near-dup edge. The full manifest
+#: (``neardup_verified``) and the incremental one verify at this one
+#: value, which their output-equality contract needs.
+NEARDUP_MIN_JACCARD = 0.5
 
 
 def _h(s: str, hexdigits: int) -> int:

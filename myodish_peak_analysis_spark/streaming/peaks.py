@@ -1040,9 +1040,10 @@ def streaming_neardup_gate(
 ) -> DataFrame:
     """Streaming twin of ``llm.dedup.incremental_neardup``: gate an
     INCOMING document stream against the static ingested corpus. Each
-    arriving doc's MinHash signature is computed STATELESSLY
-    (``with_minhash_signatures`` — a per-row HOF fold, no aggregation
-    state), its band keys probe the corpus band-key index via a
+    arriving doc's MinHash signature is computed STATELESSLY by
+    ``with_minhash_signatures`` — the per-row HOF fold, no aggregation
+    state, that also computes the corpus side's ``minhash_signatures``
+    — and its band keys probe the corpus band-key index via a
     stream-static broadcast join, and candidates are verified with
     exact Jaccard against the corpus token frame. The only stateful
     stage is ``dropDuplicatesWithinWatermark`` collapsing the same

@@ -2,9 +2,16 @@
 with known ground truth."""
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from myodish_peak_analysis_spark.llm import dedup, multimodal, similarity, text
+from myodish_peak_analysis_spark.llm.params import (
+    MINHASH_COEFFS,
+    MINHASH_PERMS,
+    MINHASH_PRIME,
+    SHINGLE_K,
+)
 
 
 @pytest.fixture(scope="module")
@@ -31,6 +38,95 @@ def test_minhash_identical_docs_share_signature(docs):
     assert sigs[0] == sigs[1]
     assert sigs[0] != sigs[3]
     assert 4 not in sigs  # too short for shingles
+
+
+def minhash_signatures_reference(docs):
+    """The explode + groupBy-min MinHash that the map-only fold
+    replaced: one row per shingle, hashed, then 16 ``min`` aggregates
+    per ``doc_id``."""
+    k = SHINGLE_K
+    sh = (
+        docs.filter(F.expr(f"size(split(text, ' ')) >= {k}"))
+        .select(
+            "doc_id",
+            F.explode(F.expr(f"array_distinct({text.word_ngrams(k)})")).alias("shingle"),
+        )
+        .withColumn("h", F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long"))
+    )
+    aggs = [
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"sig_{j}")
+        for j, (a, b) in enumerate(MINHASH_COEFFS)
+    ]
+    return sh.groupBy("doc_id").agg(*aggs)
+
+
+def jaccard_reference(toks_a: str, toks_b: str):
+    """The ``filter`` / ``array_contains`` Jaccard that
+    ``dedup._jaccard_expr`` replaced."""
+    inter = F.expr(f"size(filter({toks_a}, x -> array_contains({toks_b}, x)))")
+    return inter.cast("double") / (
+        F.expr(f"size({toks_a})") + F.expr(f"size({toks_b})") - inter
+    )
+
+
+# a small vocabulary, so shingles repeat inside and across documents;
+# "" is the token a double space splits out
+_VOCAB = ["a", "b", "the", "é", "straße", "日本", "🙂", ""]
+
+
+@st.composite
+def _minhash_docs(draw):
+    texts = st.one_of(
+        st.lists(st.sampled_from(_VOCAB), max_size=9).map(" ".join),
+        st.sampled_from(["", "a b", "日本 語", None]),
+    )
+    return [(i, draw(texts)) for i in range(draw(st.integers(1, 12)))]
+
+
+def _sig_rows(df):
+    cols = ["doc_id"] + [f"sig_{j}" for j in range(MINHASH_PERMS)]
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@given(_minhash_docs())
+@settings(max_examples=25, deadline=None)
+def test_minhash_signatures_match_reference(spark, rows):
+    """``minhash_signatures`` and ``with_minhash_signatures`` equal the
+    explode + groupBy reference row for row on docs shorter than
+    SHINGLE_K tokens, repeated shingles, empty and NULL text and
+    non-ASCII tokens."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _sig_rows(minhash_signatures_reference(docs))
+    assert _sig_rows(dedup.minhash_signatures(docs)) == want
+    assert _sig_rows(dedup.with_minhash_signatures(docs)) == want
+
+
+_distinct_tokens = st.one_of(st.lists(st.sampled_from(_VOCAB), unique=True), st.none())
+
+
+@given(
+    st.lists(
+        st.tuples(_distinct_tokens, _distinct_tokens).filter(lambda p: p != ([], [])),
+        min_size=1,
+        max_size=12,
+    )
+)
+@settings(max_examples=25, deadline=None)
+def test_jaccard_expr_matches_reference(spark, pairs):
+    """``_jaccard_expr`` (``array_intersect``) equals the ``filter`` /
+    ``array_contains`` reference on distinct token arrays, empty and
+    NULL ones included. Both empty (0 / 0) cannot occur: the split of a
+    non-NULL text has at least one token."""
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pairs)],
+        "i int, toks_a array<string>, toks_b array<string>",
+    )
+    got = df.select(
+        "i",
+        dedup._jaccard_expr("toks_a", "toks_b").alias("j"),
+        jaccard_reference("toks_a", "toks_b").alias("ref"),
+    ).collect()
+    assert all(r.j == r.ref for r in got), got
 
 
 def test_minhash_pairs_finds_duplicates(docs):
@@ -547,9 +643,12 @@ def test_star_components_match_label_propagation(spark):
     label = {
         r.doc_id: r.cluster_id for r in dedup.dedup_clusters(docs).collect()
     }
+    edges = dedup.neardup_verified(docs).select(
+        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
+    )
     star = {
         r.doc_id: r.cluster_id
-        for r in dedup.dedup_clusters(docs, method="star").collect()
+        for r in dedup.star_components(edges, docs.select("doc_id")).collect()
     }
     assert star == label
 

@@ -240,6 +240,42 @@ def test_fit_ivf_pq_index_job_count(spark):
     assert len(jobs) == 23, jobs
 
 
+def test_minhash_signatures_plan_is_exchange_free(spark):
+    """``minhash_signatures`` folds each document's own shingle array:
+    its executed plan has no exchange. The explode + groupBy-min form
+    it replaced shuffled the shingles by ``doc_id``."""
+    from myodish_peak_analysis_spark.llm import dedup
+    from myodish_peak_analysis_spark.schema import read_table
+
+    docs = read_table(spark, SF001, "documents")
+    plan = _plan_of(dedup.minhash_signatures(docs))
+    assert "Exchange" not in plan, plan[:2000]
+
+
+def test_neardup_verified_noop_write_job_count(spark):
+    """Building ``neardup_verified`` on the sf0.001 documents and
+    writing it to noop runs exactly 16 jobs, counted through
+    ``StatusTracker`` under a job group with the cache cleared. The
+    build pins three caches with an eager count each (the band keys,
+    the candidate pairs, the candidate members' tokens); the write
+    joins the pairs with both members' tokens. The explode + groupBy
+    MinHash also ran 16 jobs, with 30 stages instead of 26."""
+    from myodish_peak_analysis_spark.llm import dedup
+    from myodish_peak_analysis_spark.schema import read_table
+
+    sc = spark.sparkContext
+    docs = read_table(spark, SF001, "documents")
+    spark.catalog.clearCache()
+    sc.setJobGroup("neardup_noop_write", "neardup_noop_write")
+    try:
+        dedup.neardup_verified(docs).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    spark.catalog.clearCache()
+    jobs = sc.statusTracker().getJobIdsForGroup("neardup_noop_write")
+    assert len(jobs) == 16, jobs
+
+
 @pytest.mark.parametrize(
     "name",
     ["smooth", "envelopes", "diastolic", "threshold_peaks", "peak_attributes"],

@@ -200,6 +200,8 @@ def test_convergence_rounds_observability(spark):
     """dedup_clusters/star_components publish the last run's
     rounds-to-converge — the scaling harness's per-decade evidence that
     the iterative routes stay round-bounded as the corpus grows."""
+    from pyspark.sql import functions as F
+
     from myodish_peak_analysis_spark.llm import dedup
 
     texts = [
@@ -211,7 +213,12 @@ def test_convergence_rounds_observability(spark):
     lab = dedup.dedup_clusters(docs)
     lab.count()
     assert dedup.CONVERGENCE_ROUNDS.get("label", 0) >= 1
-    star = dedup.dedup_clusters(docs, method="star")
+    star = dedup.star_components(
+        dedup.neardup_verified(docs).select(
+            F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
+        ),
+        docs.select("doc_id"),
+    )
     assert dedup.CONVERGENCE_ROUNDS.get("star", 0) >= 1
     # the two routes agree (existing contract, re-checked post-hook)
     assert sorted(map(tuple, lab.collect())) == sorted(

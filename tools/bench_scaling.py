@@ -190,12 +190,17 @@ def _docs_ops():
             d.filter(FF.col("doc_id") % 10 != 0),
         )
 
-    def clusters_with_rounds(name: str, **kw):
+    def star_clusters(d: DataFrame) -> DataFrame:
+        edges = dedup.neardup_verified(d).select(
+            FF.col("doc_id_a").alias("src"), FF.col("doc_id_b").alias("dst")
+        )
+        return dedup.star_components(edges, d.select("doc_id"))
+
+    def clusters_with_rounds(name: str, route: str, build):
         def run(d: DataFrame, _n: int) -> float:
-            s = _timed_build(lambda: dedup.dedup_clusters(d, **kw))
-            method = kw.get("method", "label")
+            s = _timed_build(lambda: build(d))
             _EXTRA_FIELDS[name] = {
-                "rounds_to_converge": dedup.CONVERGENCE_ROUNDS.get(method)
+                "rounds_to_converge": dedup.CONVERGENCE_ROUNDS.get(route)
             }
             return s
 
@@ -216,10 +221,13 @@ def _docs_ops():
             ),
         ),
         ("minhash_pairs", lambda d, _n: _timed_build(lambda: dedup.minhash_pairs(d))),
-        ("dedup_clusters_label", clusters_with_rounds("dedup_clusters_label")),
+        (
+            "dedup_clusters_label",
+            clusters_with_rounds("dedup_clusters_label", "label", dedup.dedup_clusters),
+        ),
         (
             "dedup_clusters_star",
-            clusters_with_rounds("dedup_clusters_star", method="star"),
+            clusters_with_rounds("dedup_clusters_star", "star", star_clusters),
         ),
         (
             "canonical_corpus",
