@@ -70,19 +70,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # moment a new CORRECTNESS_r{N}.json landed, because the artifact
 # itself aged every not-yet-rotated row): every round the 50-slot head
 # is EXACTLY
-#   (a) queries whose module code changed this round (or are new) —
-#       the hand-maintained _CHANGED_THIS_ROUND list below, then
-#   (b) every query whose newest driver row is >= 2 rounds behind the
+#   (a) every query whose newest driver row is >= 2 rounds behind the
 #       newest CORRECTNESS_r{N}.json artifact (never-verified counts
 #       as infinitely stale), oldest row first, then
-#   (c) freshness filler — remaining queries oldest-row-first — up to
+#   (b) freshness filler — remaining queries oldest-row-first — up to
 #       the cap.
-# Sections (b) and (c) are COMPUTED from the committed artifacts at
-# import time, so a landed driver round re-rotates the head by itself
-# and `pytest tests/` can never go red between rounds. Backlog has
-# hard slot priority over (a): with ceil(140/50) = 3 this bounds any
-# query's driver-row staleness at 3 rounds structurally, ~2 in
-# practice; the full local HEAD sweep
+# Both sections are COMPUTED from the committed artifacts at import
+# time, so a landed driver round re-rotates the head by itself and
+# `pytest tests/` can never go red between rounds. With
+# ceil(140/50) = 3 this bounds any query's driver-row staleness at 3
+# rounds structurally, ~2 in practice; the full local HEAD sweep
 # (docs/CORRECTNESS_LOCAL.md) re-verifies all of them every round
 # regardless. tests/test_entry_contract.py validates the GENERATOR
 # (coverage of the stale backlog, cap fill, disjointness) rather than
@@ -97,27 +94,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # 1e-9 parity pin in tests/test_golden.py; the freed slots go to
 # hash-verifiable backlog. The pin is COMPUTED (registry minus
 # oracle_sql keys), so a future no-oracle query inherits it.
-
-#: Queries whose implementation changed in the CURRENT round (rotation
-#: section (a)). Updated by hand each round alongside the code; if it
-#: goes stale the head degrades to pure backlog+filler coverage, which
-#: is still policy-valid (the generator, not this list, guarantees the
-#: staleness bound). The list is exactly the queries whose normalised
-#: optimized plan (``tools/audit_plans.py --dump``) differs from the
-#: parent commit's. This round: the MinHash signatures are the
-#: map-only fold (``llm/dedup.with_minhash_signatures``) instead of
-#: explode + groupBy-min, and the verify Jaccard counts shared tokens
-#: with ``array_intersect``.
-_CHANGED_THIS_ROUND = [
-    "hybrid_neardup",
-    "incremental_neardup",
-    "jaccard_pairs",
-    "levenshtein_neardup",
-    "minhash_pairs",
-    "minhash_signatures",
-    "neardup_verified",
-    "tfidf_verify",
-]
 
 #: The driver records only this many correctness rows per round.
 _DRIVER_CAP = 50
@@ -160,8 +136,8 @@ def _compute_rotation(names: list[str]) -> tuple[list[str], list[str]]:
     """Derive (head, tail) for the registry order per the policy above.
 
     Deterministic given the committed artifacts: backlog and filler are
-    ordered (newest-round, name) ascending, section (a) keeps its
-    declared order. If the backlog alone exceeds the cap, the head is
+    ordered (newest-round, name) ascending. If the backlog alone exceeds
+    the cap, the head is
     entirely backlog (oldest first) — the policy's degraded-but-maximal
     mode. No-oracle queries never take a head slot (see the round-14
     policy note above): they are excluded from every section and always
@@ -178,16 +154,9 @@ def _compute_rotation(names: list[str]) -> tuple[list[str], list[str]]:
         return head, [q for q in all_names if q not in set(head)]
     by_age = sorted(names, key=lambda q: (newest.get(q, 0), q))
     backlog = [q for q in by_age if newest.get(q, 0) <= latest - 2]
-    if len(backlog) >= cap:
-        head = backlog[:cap]
-    else:
-        changed = [
-            q for q in _CHANGED_THIS_ROUND if q in set(names)
-            and q not in set(backlog)
-        ][: cap - len(backlog)]
-        head = changed + backlog
-        filler = [q for q in by_age if q not in set(head)]
-        head += filler[: cap - len(head)]
+    head = backlog[:cap]
+    filler = [q for q in by_age if q not in set(head)]
+    head += filler[: cap - len(head)]
     head_set = set(head)
     tail = [q for q in all_names if q not in head_set]
     return head, tail

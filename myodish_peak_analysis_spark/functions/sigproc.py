@@ -223,12 +223,16 @@ def peak_widths(
     proms: np.ndarray,
     left_bases: np.ndarray,
     right_bases: np.ndarray,
+    origin: int = 0,
 ):
     """Peak widths at a relative height, with linear interpolation.
 
     Evaluation height per peak = height − rel_height * prominence; the
     width is the distance between the interpolated crossings of that
-    height on each side, searched within the prominence bases.
+    height on each side, searched within the prominence bases. The
+    crossings are placed at ``origin`` + their index in ``y``: a slice
+    of a channel passes its first sample's index, so its widths round
+    as the whole channel's do.
     """
     y = np.asarray(y, dtype=np.float64)
     widths = np.empty(peaks.size, dtype=np.float64)
@@ -239,7 +243,7 @@ def peak_widths(
         i_min = left_bases[p]
         while i_min < i and h < y[i]:
             i -= 1
-        left_ip = float(i)
+        left_ip = float(i + origin)
         if y[i] < h:
             left_ip += (h - y[i]) / (y[i + 1] - y[i])
         # Right intersection point.
@@ -247,7 +251,7 @@ def peak_widths(
         i_max = right_bases[p]
         while i < i_max and h < y[i]:
             i += 1
-        right_ip = float(i)
+        right_ip = float(i + origin)
         if y[i] < h:
             right_ip -= (h - y[i]) / (y[i - 1] - y[i])
         widths[p] = right_ip - left_ip

@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .text import _TOKENS
+
 BPE_MERGES = 4
 
 #: Default non-interfering merges learned per driver round (round 13,
@@ -383,7 +385,7 @@ def bpe_apply(
     ``bpe_vocab`` (or a sampled fit) having produced ``merges`` once.
 
     Output schema matches :func:`bpe_encode`."""
-    expr = "split(text, ' ')"
+    expr = _TOKENS
     for left, right in merges:
         expr = _merge_apply_expr(expr, left, right)
     return docs.select(

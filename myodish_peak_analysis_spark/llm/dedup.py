@@ -33,9 +33,7 @@ from .params import (
     SHINGLE_K,
     SIMHASH_BITS,
 )
-from .text import word_ngrams
-
-_TOKENS = "split(text, ' ')"
+from .text import _TOKENS, word_ngrams
 
 
 def _jaccard_expr(toks_a: str, toks_b: str):

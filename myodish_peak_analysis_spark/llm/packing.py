@@ -27,12 +27,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .text import _TOKENS
+
 #: Default training-sequence capacity in whitespace tokens. Small enough
 #: that the synthetic ~50-token documents straddle boundaries (the
 #: interesting case), realistic in shape (power of two).
 PACK_CAPACITY = 128
-
-_TOKENS = "split(text, ' ')"
 
 
 def pack_chunks(
@@ -184,7 +184,7 @@ def chunk_overlap(
     """
     if not (0 < stride <= size):
         raise ValueError(f"need 0 < stride ({stride}) <= size ({size})")
-    toks = "split(text, ' ')"
+    toks = _TOKENS
     n = f"size({toks})"
     # last full-window start: floor((n - size) / stride) * stride; the
     # tail chunk starts one stride later when tokens remain past the

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .text import word_ngrams
+from .text import _TOKENS, word_ngrams
 
 #: Knuth's multiplicative hash constant (2654435761 = 2^32 * phi^-1,
 #: public domain — TAOCP vol. 3 §6.4); doc_id * C % 1000 is a cheap,
@@ -362,16 +362,14 @@ def leakage_safe_split_sql(
 # aggregation order can never move a result; the bucket hash is the
 # md5-hex-prefix integer both engines compute identically.
 
-_DSIR_TK = "split(text, ' ')"
-
 #: unigrams ++ word-bigrams of the whitespace tokens (counts, not
 #: distinct — DSIR features are bag-of-ngram COUNTS). Single-token
 #: docs contribute their unigram only (slice(tk,1,0) is the typed
 #: empty array; sequence(1,0) would count DOWN in Spark).
 _DSIR_GRAMS = (
-    f"concat({_DSIR_TK}, "
-    f"CASE WHEN size({_DSIR_TK}) >= 2 THEN {word_ngrams(2)} "
-    f"ELSE slice({_DSIR_TK}, 1, 0) END)"
+    f"concat({_TOKENS}, "
+    f"CASE WHEN size({_TOKENS}) >= 2 THEN {word_ngrams(2)} "
+    f"ELSE slice({_TOKENS}, 1, 0) END)"
 )
 
 

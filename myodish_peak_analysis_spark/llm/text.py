@@ -27,6 +27,7 @@ from .params import (
     sql_in_list,
 )
 
+#: the one whitespace tokenizer expression of the LLM layer
 _TOKENS = "split(text, ' ')"
 
 

@@ -86,6 +86,31 @@ def with_raw_envelopes(
     ).withColumn(ceil_col, F.max(F.when(F.col("is_peak"), v)).over(w))
 
 
+def raw_envelope(
+    x: np.ndarray,
+    is_null: np.ndarray,
+    flag: np.ndarray,
+    kind: str,
+    window_size: int,
+    m: int,
+) -> np.ndarray:
+    """:func:`with_raw_envelopes`' floor (``kind="valley"``) or ceiling
+    (``kind="peak"``) at rows ``0..m-1`` of a channel, from its is_valley
+    or is_peak ``flag``, with NaN where Spark gives NULL or NaN. Row
+    ``i`` aggregates the flagged rows ``[i+1, i+window_size-2]``, so
+    ``m`` must leave that frame inside the channel."""
+    hi = window_size - 2
+    nan = flag & ~is_null & np.isnan(x)
+    v = np.where(flag & ~is_null & ~nan, x, np.nan)[1:]
+    roll = pd.Series(v).rolling(hi, min_periods=1)
+    # raw[i] is the trailing window ending at v[i+hi-1]
+    raw = (roll.max() if kind == "peak" else roll.min()).to_numpy()[hi - 1 : hi - 1 + m]
+    if kind == "peak":
+        n_nan = np.concatenate([[0], np.cumsum(nan[1:])])
+        raw[n_nan[hi : hi + m] > n_nan[:m]] = np.nan
+    return raw
+
+
 def smoothed_envelope(
     x: np.ndarray,
     is_null: np.ndarray,
@@ -98,17 +123,9 @@ def smoothed_envelope(
     pad`` rows, with NaN where the output is NULL. ``x``/``is_null`` are
     the smoothed signal, ``flag`` its is_peak (``kind="peak"``) or
     is_valley flags."""
-    n, hi, half = x.size, window_size - 2, coeffs.size // 2
+    n, half = x.size, coeffs.size // 2
     pad, m = window_size // 2, x.size - window_size
-    nan = flag & ~is_null & np.isnan(x)
-    v = np.where(flag & ~is_null & ~nan, x, np.nan)[1:]
-    roll = pd.Series(v).rolling(hi, min_periods=1)
-    # raw[i] aggregates rows [i+1, i+hi], the trailing window ending at
-    # v[i+hi-1]; for i < m the frame never reaches past the channel end.
-    raw = (roll.max() if kind == "peak" else roll.min()).to_numpy()[hi - 1 : hi - 1 + m]
-    if kind == "peak":
-        n_nan = np.concatenate([[0], np.cumsum(nan[1:])])
-        raw[n_nan[hi : hi + m] > n_nan[:m]] = np.nan
+    raw = raw_envelope(x, is_null, flag, kind, window_size, m)
     padded = np.concatenate([raw[:pad], raw, raw[m - pad :]])
     ypad = np.concatenate(
         [np.full(half, padded[0]), padded, np.full(half, padded[n - 1])]

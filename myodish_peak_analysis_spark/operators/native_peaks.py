@@ -7,8 +7,10 @@ on each whole channel inside a :func:`.windows.map_channels` call, from
 two existing rules:
 
 * the candidates are the ``is_peak`` rows of :func:`.windows.extrema_flags`,
-  the engine's one plateau-midpoint rule (Spark SQL comparison order; a
-  NULL row or the channel edge next to a run disqualifies it);
+  the engine's one plateau-midpoint rule and its one NULL rule (Spark SQL
+  comparison order; a NULL row joins the run before it, and a NULL row
+  or the channel edge next to a run disqualifies it), which the streaming
+  twin (``streaming.peaks.streaming_find_peaks``) follows too;
 * :func:`..functions.sigproc.constrain_peaks` then applies SciPy's
   conditions in SciPy's order, distance → prominence → width, the kernel
   the reference-exact route (:mod:`.fidelity`) runs too.
@@ -101,7 +103,8 @@ def native_find_peaks(
     """SciPy-ordered constrained peak detection per channel
     (:func:`constrained_peaks_step`). Returns ``(channel_id, peak_idx,
     peak_value, prominence, width)`` for the peaks passing every
-    requested condition."""
+    requested condition. A NULL sample joins the run before it, and a
+    NULL next to a run disqualifies it (:func:`.windows.extrema_flags`)."""
     step = constrained_peaks_step(
         "peak_value", distance, prominence, width, rel_height, wlen
     )

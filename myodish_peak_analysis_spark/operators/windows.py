@@ -101,22 +101,34 @@ def _lt(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return (a < b) | (np.isnan(b) & ~np.isnan(a))
 
 
+def run_starts(x: np.ndarray, is_null: np.ndarray) -> np.ndarray:
+    """Whether each row of a non-empty sorted channel starts a run of
+    :func:`extrema_flags`: the first row does, and a row does when the
+    row before it is NULL, or when both are non-NULL and differ (NaN
+    equals NaN, ``0.0 == -0.0``). A row's flag reads only that row and
+    the one before it."""
+    nan = np.isnan(x) & ~is_null
+    same = (x[1:] == x[:-1]) | (nan[1:] & nan[:-1])
+    return np.concatenate([[True], is_null[:-1] | ~(is_null[1:] | same)])
+
+
 def extrema_flags(
     x: np.ndarray, is_null: np.ndarray, idx: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """(is_peak, is_valley) of one channel sorted by ``idx``.
 
-    The channel splits into runs: a row starts one when the row before it
-    is NULL or absent, or when both are non-NULL and differ (NaN equals
-    NaN, ``0.0 == -0.0``); a NULL row joins the non-NULL run before it. A
-    run is a peak (valley) iff the values just before and just after it
-    are both lower (higher); NaN is above every number, and a NULL or the
-    channel edge disqualifies. The flag goes on the row whose ``idx`` is
-    ``(idx[first] + idx[last]) DIV 2`` — none if that falls in a gap.
+    This is the engine's one plateau and NULL rule, batch and streaming
+    (``streaming.peaks`` runs it on a carried tail). The channel splits
+    into runs (:func:`run_starts`): a row starts one when the row before
+    it is NULL or absent, or when both are non-NULL and differ (NaN
+    equals NaN, ``0.0 == -0.0``); a NULL row joins the non-NULL run
+    before it. A run is a peak (valley) iff the values just before and
+    just after it are both lower (higher); NaN is above every number,
+    and a NULL or the channel edge next to the run disqualifies it. The
+    flag goes on the row whose ``idx`` is ``(idx[first] + idx[last])
+    DIV 2`` — none if that falls in a gap or on a NULL row.
     """
-    nan = np.isnan(x) & ~is_null
-    same = (x[1:] == x[:-1]) | (nan[1:] & nan[:-1])
-    starts = np.concatenate([[True], is_null[:-1] | ~(is_null[1:] | same)])
+    starts = run_starts(x, is_null)
     run = np.cumsum(starts) - 1
     first = np.flatnonzero(starts)
     last = np.append(first[1:], x.size) - 1
@@ -150,8 +162,11 @@ def with_extrema_flags(df: DataFrame, value_col: str = "signal_value") -> DataFr
 def extrema_flags_sql(src: str, value_col: str = "signal_value") -> str:
     """DuckDB SQL mirroring :func:`extrema_flags` over CTE ``src``.
 
-    Returns a chain of CTE definitions ending in a relation named
-    ``flagged`` with is_peak / is_valley columns added.
+    The same NULL rule: a NULL row's ``<> _pl`` is NULL, so it joins the
+    run before it; a NULL just before or after a run makes its neighbour
+    value NULL, and the COALESCE turns the comparison into FALSE, as the
+    channel edge does. Returns a chain of CTE definitions ending in a
+    relation named ``flagged`` with is_peak / is_valley columns added.
     """
     return f"""
     lagged AS (

@@ -432,6 +432,14 @@ def _native_find_peaks_parts(
     below the peak (prom = pv - max(lb, rb) > 0), so the walk-empty
     edge case where Spark's aggregate keeps (pv, peak_idx) and SQL's
     MIN/MAX would pick a plateau member never reaches the width stage.
+
+    Open gap (NULL-holed channels): the engine's NULL rule is
+    :func:`.operators.windows.extrema_flags`' (a NULL joins the run
+    before it, and a NULL next to a run disqualifies it), which batch
+    and streaming peaks share. This mirror still differs there: its
+    run-length candidates and its base walks skip NULL samples. The
+    harness tables hold no NULL, so no hash sees it; an edge-input
+    sweep with NULL channels is where it is to be closed.
     """
     odd = wlen + 1 if wlen % 2 == 0 else wlen
     half = odd // 2

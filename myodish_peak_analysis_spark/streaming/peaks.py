@@ -13,10 +13,19 @@ brief asks for, built on the two canonical streaming patterns:
 * :func:`streaming_windowed_stats` — watermark + tumbling event-time
   window aggregation, the built-in route for late-data-tolerant rollups.
 
-Scale notes: state is O(1) per channel (three scalars), keyed by the
-same channel hash partitioning as the batch pipeline; the window agg is
-map-side combined before the state store. Both run identically on a
-1000-executor cluster — the state store shards by key.
+The envelope (:func:`streaming_raw_envelopes`) and the constrained
+detector (:func:`streaming_find_peaks`) run the batch kernels
+(``operators.windows.extrema_flags``) on a carried sample tail plus each
+micro-batch's rows and emit only the decided prefix, so they share the
+batch NULL rule; a NULL-mask column keeps NULL apart from NaN.
+
+Scale notes: the naive detector's state is O(1) per channel (three
+scalars); the envelope's is O(window + open-run length) and the
+constrained detector's O(wlen + open suppression component), both a
+sample tail. Every state is keyed by the same channel hash partitioning
+as the batch pipeline; the window agg is map-side combined before the
+state store. All run identically on a 1000-executor cluster — the state
+store shards by key.
 
 Ordering contract: samples must arrive in ``sample_idx`` order *within
 a micro-batch per channel* (guaranteed by sorting inside the UDF) and
@@ -29,9 +38,19 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..llm.text import _TOKENS
+from ..operators.envelopes import raw_envelope
+from ..operators.windows import CHANNEL, IDX, extrema_flags, run_starts
+
+#: the mask column :func:`streaming_raw_envelopes` and
+#: :func:`streaming_find_peaks` add (``signal_value IS NULL``), and the
+#: in-process frames of their stateful functions must carry
+NULL_MASK = "is_null"
 
 PEAK_OUT_SCHEMA = "channel_id long, peak_idx long, peak_value double"
 _STATE_SCHEMA = "prev double, curr double, curr_idx long"
@@ -107,124 +126,71 @@ def streaming_exact_dedup(
 
 
 _ENV_OUT_SCHEMA = "channel_id long, sample_idx long, floor_raw double, ceil_raw double"
-#: run-length + extrema-deque state for the streaming envelope:
-#: next_emit     — next sample index whose frame may be emitted
-#:                 (-1 = no sample seen yet)
-#: run_start     — first index of the currently OPEN equal-value run
-#:                 (-1 = no run yet; run_value is meaningless then)
-#: run_value     — the open run's value (may be a genuine NaN)
-#: has_prev / prev_run_value — value of the run before the open one
-#: ex_idx/ex_val/ex_valley — decided extrema still inside any future frame
+#: the streaming envelope's state, a sample tail and an emission cursor:
+#: buf_start        — sample index of buf[0]
+#: buf / buf_null   — the tail's values and NULL mask, from the first
+#:                    sample of the run before the run that holds
+#:                    next_emit + 1
+#: next_emit        — next sample index to emit
 _ENV_STATE_SCHEMA = (
-    "next_emit long, run_start long, run_value double, "
-    "has_prev boolean, prev_run_value double, "
-    "ex_idx array<long>, ex_val array<double>, ex_valley array<boolean>"
+    "buf_start long, buf array<double>, buf_null array<boolean>, next_emit long"
 )
 
 
-def _same(a: float, b: float) -> bool:
-    """Spark SQL equality for doubles: NaN = NaN is TRUE."""
-    return a == b or (math.isnan(a) and math.isnan(b))
+def _tail_plus_batch(state: GroupState, pdfs: Iterator[pd.DataFrame]):
+    """``(buf_start, values, is_null)``: the sample tail a channel's state
+    carries in its first three fields, followed by the micro-batch's rows,
+    which are concatenated and sorted once."""
+    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(IDX)
+    x, null = batch["signal_value"].to_numpy(np.float64), batch[NULL_MASK].to_numpy(bool)
+    if not state.exists:
+        return int(batch[IDX].iloc[0]), x, null
+    start, buf, buf_null = state.get[:3]
+    return start, np.concatenate([buf, x]), np.concatenate([buf_null, null])
 
 
-def _lt(a: float, b: float) -> bool:
-    """Spark SQL total order for doubles: NaN is GREATER than every
-    other value (so x < NaN is true for non-NaN x, NaN < x never)."""
-    if math.isnan(a):
-        return False
-    if math.isnan(b):
-        return True
-    return a < b
+def _masked(signal_stream: DataFrame) -> DataFrame:
+    """The stream's ``signal_value`` with its NULL mask: pandas reads a
+    NULL as NaN, so the stateful functions get the mask as a column."""
+    return signal_stream.select(
+        CHANNEL, IDX, "signal_value", F.col("signal_value").isNull().alias(NULL_MASK)
+    )
 
 
 def make_envelope_fn(window_size: int):
     """Build the stateful per-channel function for
     :func:`streaming_raw_envelopes` (closure over ``window_size``).
 
-    All value comparisons use Spark SQL double semantics (`_same`/`_lt`:
-    NaN equals NaN, NaN sorts greatest) so the emitted rows stay
-    bit-identical to the batch window operators even on NaN samples."""
-
+    Each micro-batch runs the batch kernels on the carried tail plus the
+    new rows: :func:`..operators.windows.extrema_flags` for the flags and
+    :func:`..operators.envelopes.raw_envelope` for the frame aggregates,
+    so the emitted rows follow the batch NULL and NaN rules. Input frames
+    carry ``signal_value`` and its NULL mask (:data:`NULL_MASK`)."""
     hi = window_size - 2  # frame interior is [i+1, i+hi]
-    nan_last = lambda x: (math.isnan(x), x)  # noqa: E731  Spark sort key
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (channel_id,) = key
-        if state.exists:
-            (
-                next_emit,
-                run_start,
-                run_value,
-                has_prev,
-                prev_run_value,
-                ex_idx,
-                ex_val,
-                ex_valley,
-            ) = state.get
-            ex = list(zip(ex_idx, ex_val, ex_valley))
-        else:
-            next_emit, run_start, run_value, has_prev, prev_run_value, ex = (
-                -1,
-                -1,
-                0.0,
-                False,
-                0.0,
-                [],
-            )
-
-        def close_run(end_idx: int, next_value: float) -> None:
-            # The open run [run_start, end_idx] closed by a differing
-            # next_value: decide its plateau-midpoint flag. A channel-
-            # leading run (no previous run) never flags — matching the
-            # batch rule where a NULL border comparison coalesces False.
-            if not has_prev:
-                return
-            mid = (run_start + end_idx) // 2
-            if _lt(prev_run_value, run_value) and _lt(next_value, run_value):
-                ex.append((mid, run_value, False))
-            elif _lt(run_value, prev_run_value) and _lt(run_value, next_value):
-                ex.append((mid, run_value, True))
-
-        out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("sample_idx")
-            for idx, v in zip(pdf["sample_idx"], pdf["signal_value"]):
-                idx, v = int(idx), float(v)
-                if next_emit < 0:
-                    next_emit = idx  # channel may start at any index
-                if run_start < 0:
-                    run_start, run_value = idx, v
-                elif not _same(v, run_value):
-                    close_run(idx - 1, v)
-                    has_prev, prev_run_value = True, run_value
-                    run_start, run_value = idx, v
-            # Emit every i whose frame interior [i+1, i+hi] lies strictly
-            # before the open run (all its flags are decided).
-            while 0 <= next_emit and next_emit + hi < run_start:
-                i = next_emit
-                valleys = [val for j, val, isv in ex if isv and i + 1 <= j <= i + hi]
-                peaks = [val for j, val, isv in ex if not isv and i + 1 <= j <= i + hi]
-                floor = min(valleys, key=nan_last) if valleys else None
-                ceil = max(peaks, key=nan_last) if peaks else None
-                out_rows.append((int(channel_id), i, floor, ceil))
-                next_emit += 1
-            ex = [(j, val, isv) for j, val, isv in ex if j >= next_emit + 1]
-
-        state.update(
-            (
-                next_emit,
-                run_start,
-                run_value,
-                has_prev,
-                prev_run_value,
-                [j for j, _, _ in ex],
-                [val for _, val, _ in ex],
-                [isv for _, _, isv in ex],
-            )
+        start, x, null = _tail_plus_batch(state, pdfs)
+        lo = (state.get[3] if state.exists else start) - start
+        starts = run_starts(x, null)
+        first = np.flatnonzero(starts)
+        # flags are decided on every run but the open (last) one; emit
+        # each i whose frame interior lies before it
+        stop = int(max(lo, first[-1] - hi))
+        peak, valley = extrema_flags(x, null, start + np.arange(x.size))
+        out = pd.DataFrame(
+            {
+                "channel_id": int(channel_id),
+                "sample_idx": start + np.arange(lo, stop),
+                "floor_raw": raw_envelope(x, null, valley, "valley", window_size, stop)[lo:],
+                "ceil_raw": raw_envelope(x, null, peak, "peak", window_size, stop)[lo:],
+            }
         )
-        yield pd.DataFrame(
-            out_rows, columns=["channel_id", "sample_idx", "floor_raw", "ceil_raw"]
-        )
+        # keep the run before the one holding the next frame's first row
+        run = np.cumsum(starts) - 1
+        keep = int(first[max(run[min(stop + 1, x.size - 1)] - 1, 0)])
+        state.update((start + keep, x[keep:].tolist(), null[keep:].tolist(), start + stop))
+        yield out
 
     return fn
 
@@ -232,29 +198,33 @@ def make_envelope_fn(window_size: int):
 def streaming_raw_envelopes(signal_stream: DataFrame, window_size: int = 350) -> DataFrame:
     """Streaming analogue of the batch raw envelope (W1/W2,
     ``operators.envelopes.with_raw_envelopes``): per position ``i``, the
-    min over decided valleys / max over decided peaks in the forward
-    frame interior ``[i+1, i+window_size-2]`` — plateau-midpoint flags
-    included, via an online run-length algorithm.
+    min over valleys / max over peaks in the forward frame interior
+    ``[i+1, i+window_size-2]``, plateau midpoints and the NULL rule of
+    :func:`..operators.windows.extrema_flags` included (a NULL sample
+    joins the run before it; a NULL or the channel edge next to a run
+    disqualifies it). ``signal_value IS NULL`` is projected as a mask
+    column before the ``groupBy``, since the pandas frames would read a
+    NULL as NaN.
 
     Emits exactly the positions whose frame is fully decided (interior
     flags need the next *differing* sample, so emission trails the open
     run); those rows are bit-identical to the batch operator's output on
     the same prefix — see ``test_streaming.py``.
 
-    State is O(window_size) per channel: four scalars plus the decided
-    extrema still inside any future frame (≤ window_size entries, ~8 KB
-    at the 350 default). At 100 TB the state store shards by channel
-    exactly like the batch hash partitioning. Samples must arrive in
-    ``sample_idx`` order per channel across micro-batches with
-    contiguous indices (any start offset — the batch frames are
-    row-based, so a gap would desynchronize them); an arbitrarily long
+    State is O(window_size + open-run length) per channel: the sample
+    tail from the run before the oldest undecided frame through the open
+    run (~``window_size`` samples on a signal without long plateaus). At
+    100 TB the state store shards by channel exactly like the batch hash
+    partitioning. Samples must arrive in ``sample_idx`` order per channel
+    across micro-batches with contiguous indices (any start offset — the
+    batch frames are row-based, so a gap would desynchronize them); an
+    arbitrarily long
     plateau stalls (never corrupts) emission, because its flag is
     undecidable until a differing sample arrives. NaN samples follow
-    Spark SQL double semantics for every run/flag/extremum decision
-    (NaN = NaN, NaN sorts greatest — so a NaN-valued peak correctly
-    shadows lower real peaks); the one representational difference vs
-    the batch operator is at the Arrow boundary, which surfaces a
-    NaN-valued envelope as NULL (verified empirically) — the same
+    Spark SQL double semantics (NaN = NaN, NaN sorts greatest — so a
+    NaN-valued peak shadows lower real peaks); the one representational
+    difference vs the batch operator is at the Arrow boundary, which
+    surfaces a NaN-valued envelope as NULL — the same
     NULL-for-reference-NaN convention the fidelity route uses.
 
     Deliberate absence — the SMOOTHED envelope (the batch W1/W2
@@ -270,7 +240,7 @@ def streaming_raw_envelopes(signal_stream: DataFrame, window_size: int = 350) ->
     batch/window-close operation — run the batch operator per closed
     window (foreachBatch) when streaming smoothed envelopes are
     genuinely needed."""
-    return signal_stream.groupBy("channel_id").applyInPandasWithState(
+    return _masked(signal_stream).groupBy(CHANNEL).applyInPandasWithState(
         make_envelope_fn(window_size),
         _ENV_OUT_SCHEMA,
         _ENV_STATE_SCHEMA,
@@ -361,17 +331,17 @@ CONSTRAINED_OUT_SCHEMA = (
     "channel_id long, peak_idx long, peak_value double, "
     "prominence double, width double"
 )
-#: buf_start/buf — contiguous trailing sample window (indices implicit);
-#: run machinery as in the envelope operator; pend — candidates of the
-#: OPEN distance-suppression component (pend_e: already-emitted
-#: "blocker" survivors retained only as suppression context — see
-#: the compaction notes in :func:`make_constrained_peaks_fn`); surv —
-#: suppression survivors awaiting their right wlen-neighborhood.
+#: buf_start/buf/buf_null — contiguous trailing sample window and its NULL
+#: mask (indices implicit); scan_from — start of the open run, the first
+#: index whose flags the next micro-batch scans; surv — suppression
+#: survivors awaiting their right wlen-neighborhood; pend — candidates of
+#: the OPEN distance-suppression component (pend_e: already-emitted
+#: "blocker" survivors retained only as suppression context — see the
+#: compaction notes in :func:`make_constrained_peaks_fn`).
 _CONSTRAINED_STATE_SCHEMA = (
-    "buf_start long, buf array<double>, "
-    "run_start long, run_value double, has_prev boolean, prev_run_value double, "
-    "pend_p array<long>, pend_v array<double>, pend_e array<boolean>, "
-    "surv_p array<long>, surv_v array<double>"
+    "buf_start long, buf array<double>, buf_null array<boolean>, scan_from long, "
+    "surv_p array<long>, surv_v array<double>, "
+    "pend_p array<long>, pend_v array<double>, pend_e array<boolean>"
 )
 
 
@@ -390,8 +360,13 @@ def make_constrained_peaks_fn(
 
     Why it streams at all: every constraint is provably LOCAL.
 
-    * Plateau candidates need only the enclosing runs (online RLE, three
-      scalars — same machinery as the envelope operator).
+    * Plateau candidates are the batch ones: each micro-batch runs
+      :func:`..operators.windows.extrema_flags` on the carried sample
+      tail plus the new rows and takes the ``is_peak`` rows from the
+      previous batch's open run on (its NULL rule included: a NULL
+      sample joins the run before it, and a NULL or the channel edge
+      next to a run disqualifies it). Input frames carry
+      ``signal_value`` and its NULL mask (:data:`NULL_MASK`).
     * Greedy distance suppression interacts only between candidates
       closer than ``distance``, so candidates split into components at
       gaps ≥ ``distance``; the global priority-order greedy restricted
@@ -402,7 +377,7 @@ def make_constrained_peaks_fn(
     * Prominence/width walks are ``wlen``-bounded: a survivor is decided
       once samples through ``p + wlen//2`` have arrived, against the
       buffered trailing window (the same NumPy kernels as the batch
-      fidelity route, on the same values).
+      route, on the same values).
 
     State per channel is O(wlen + open component): the trailing sample
     buffer is pruned to ``min(undecided peak, open run) − wlen//2``.
@@ -449,11 +424,10 @@ def make_constrained_peaks_fn(
     operator, reachable only on adversarial value ramps, never on
     smoothed or plain-noise signals.
     """
-    import numpy as np
-
     from ..functions.sigproc import (
         _select_by_distance,
         peak_prominences,
+        peak_widths,
     )
 
     if wlen is None:
@@ -465,28 +439,13 @@ def make_constrained_peaks_fn(
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (channel_id,) = key
+        buf_start, buf, null = _tail_plus_batch(state, pdfs)
         if state.exists:
-            (
-                buf_start,
-                buf,
-                run_start,
-                run_value,
-                has_prev,
-                prev_run_value,
-                pend_p,
-                pend_v,
-                pend_e,
-                surv_p,
-                surv_v,
-            ) = state.get
-            buf = list(buf)
-            pend = list(zip(pend_p, pend_v, pend_e))
+            scan_from, surv_p, surv_v, pend_p, pend_v, pend_e = state.get[3:]
             surv = list(zip(surv_p, surv_v))
+            pend = list(zip(pend_p, pend_v, pend_e))
         else:
-            buf_start, buf = -1, []
-            run_start, run_value = -1, 0.0
-            has_prev, prev_run_value = False, 0.0
-            pend, surv = [], []
+            scan_from, surv, pend = buf_start, [], []
 
         def greedy_into_surv(items) -> None:
             # blockers (emitted=True) participate in the greedy but are
@@ -530,11 +489,12 @@ def make_constrained_peaks_fn(
             greedy_into_surv(pend[:split])
             del pend[:split]
 
-        def compact() -> None:
+        def compact(frontier: int) -> None:
             # tier-1 EXACT compaction (see docstring): drop
             # killed-final candidates, emit survivor-finals left of
             # the taint region (retaining near ones as blockers).
-            if dist is None or len(pend) < 2 or run_start < 0:
+            # Future plateau midpoints are >= frontier.
+            if dist is None or len(pend) < 2:
                 return
             n = len(pend)
             pos = [p for p, _, _ in pend]
@@ -545,12 +505,11 @@ def make_constrained_peaks_fn(
                 dist,
             )
             # taint fixpoint: status may still change with future
-            # arrivals. Base: within dist of the open frontier (future
-            # plateau midpoints are >= run_start). Step: a tainted
-            # neighbor closer than dist that the greedy would process
-            # first (higher value; equal value only from the right —
-            # stable argsort processes equal values right-first).
-            taint = [p > run_start - dist for p in pos]
+            # arrivals. Base: within dist of the open frontier. Step: a
+            # tainted neighbor closer than dist that the greedy would
+            # process first (higher value; equal value only from the
+            # right — stable argsort processes equal values right-first).
+            taint = [p > frontier - dist for p in pos]
             changed = True
             while changed:
                 changed = False
@@ -600,44 +559,34 @@ def make_constrained_peaks_fn(
                     new_pend.append(pend[i])
             pend[:] = new_pend
 
-        out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("sample_idx")
-            for idx, v in zip(pdf["sample_idx"], pdf["signal_value"]):
-                idx, v = int(idx), float(v)
-                if buf_start < 0:
-                    buf_start = idx
-                buf.append(v)
-                if run_start < 0:
-                    run_start, run_value = idx, v
-                elif v != run_value:
-                    # run [run_start, idx-1] closed by a differing value
-                    if has_prev and prev_run_value < run_value and v < run_value:
-                        p = (run_start + idx - 1) // 2
-                        if dist is not None and pend and p - pend[-1][0] >= dist:
-                            flush_pend()
-                        pend.append((p, run_value, False))
-                        # per-candidate span guard (split-invariant:
-                        # depends only on the sample sequence). Tier-1
-                        # exact compaction first; force-seal only if
-                        # the TAINT REGION itself outgrew the guard.
-                        if dist is not None and pend[-1][0] - pend[0][0] > max_span:
-                            compact()
-                            if len(pend) > 1 and pend[-1][0] - pend[0][0] > max_span:
-                                force_seal()
-                    has_prev, prev_run_value = True, run_value
-                    run_start, run_value = idx, v
+        starts = run_starts(buf, null)
+        run_first = np.flatnonzero(starts)[np.cumsum(starts) - 1]
+        is_peak = extrema_flags(buf, null, buf_start + np.arange(buf.size))[0]
+        for j in np.flatnonzero(is_peak[scan_from - buf_start :]) + (scan_from - buf_start):
+            p = buf_start + int(j)
+            if dist is not None and pend and p - pend[-1][0] >= dist:
+                flush_pend()
+            pend.append((p, float(buf[j]), False))
+            # per-candidate span guard (split-invariant: depends only on
+            # the sample sequence). Tier-1 exact compaction first, from
+            # the candidate's run; force-seal only if the TAINT REGION
+            # itself outgrew the guard.
+            if dist is not None and pend[-1][0] - pend[0][0] > max_span:
+                compact(buf_start + int(run_first[j]))
+                if len(pend) > 1 and pend[-1][0] - pend[0][0] > max_span:
+                    force_seal()
+        scan_from = buf_start + int(run_first[-1])
 
         # Seal the open component if nothing ahead can reach it: future
-        # candidate midpoints are >= run_start (plateau midpoint >= its
+        # candidate midpoints are >= scan_from (plateau midpoint >= its
         # left edge, and runs open in index order).
-        if dist is not None and pend and run_start >= pend[-1][0] + dist:
+        if dist is not None and pend and scan_from >= pend[-1][0] + dist:
             flush_pend()
         elif dist is None:
             flush_pend()
         # Tier-1 exact compaction of whatever stays open (no-op when the
         # component is small or sealed).
-        compact()
+        compact(scan_from)
 
         # Emit survivors. In the suppression-only config (no prominence,
         # no width) a sealed survivor needs no neighborhood at all —
@@ -645,15 +594,16 @@ def make_constrained_peaks_fn(
         # gather entirely in that mode (waiting for p + wlen//2 would
         # also strand every end-of-stream peak for no reason).
         # Otherwise wait until the wlen-neighborhood is fully buffered.
+        out_rows = []
         need_nb = prominence is not None or width is not None
-        buf_end = buf_start + len(buf) - 1  # inclusive; -2 when empty
+        buf_end = buf_start + buf.size - 1  # inclusive
         while surv and ((not need_nb) or surv[0][0] + half <= buf_end):
             p, pv = surv.pop(0)
             if not need_nb:
                 out_rows.append((int(channel_id), int(p), float(pv), None, None))
                 continue
             lo = max(buf_start, p - half)
-            y = np.asarray(buf[lo - buf_start : p + half - buf_start + 1])
+            y = buf[lo - buf_start : p + half - buf_start + 1]
             lp = np.asarray([p - lo], dtype=np.intp)
             # slice edges == the wlen window (or the channel start), so
             # the unwindowed kernel walks exactly the batch route's range
@@ -662,62 +612,28 @@ def make_constrained_peaks_fn(
                 continue
             w_val = None
             if width is not None:
-                # Width walk in GLOBAL index coordinates (values read
-                # from the slice): the interpolated crossing points are
-                # float(global_idx) ± fraction, and the final ulp of
-                # right_ip - left_ip depends on the magnitude the
-                # rounding happened at — local indices would drift a ulp
-                # from the batch/golden routes on ~1-in-few peaks.
-                h = y[lp[0]] - proms[0] * rel_height
-                i, lbg, rbg = p, int(lb[0]) + lo, int(rb[0]) + lo
-                while lbg < i and h < y[i - lo]:
-                    i -= 1
-                left_ip = float(i)
-                if y[i - lo] < h:
-                    left_ip += (h - y[i - lo]) / (y[i + 1 - lo] - y[i - lo])
-                i = p
-                while i < rbg and h < y[i - lo]:
-                    i += 1
-                right_ip = float(i)
-                if y[i - lo] < h:
-                    right_ip -= (h - y[i - lo]) / (y[i - 1 - lo] - y[i - lo])
-                w_val = float(right_ip - left_ip)
+                # crossings in channel coordinates, as the batch route
+                # rounds them
+                w_val = float(peak_widths(y, lp, rel_height, proms, lb, rb, origin=lo)[0])
                 if w_val < width:
                     continue
-            out_rows.append(
-                (
-                    int(channel_id),
-                    int(p),
-                    float(pv),
-                    float(proms[0]) if (prominence is not None or width is not None) else None,
-                    w_val,
-                )
-            )
+            out_rows.append((int(channel_id), int(p), float(pv), float(proms[0]), w_val))
 
         # Prune the buffer to what any undecided peak or future
         # candidate can still reach.
-        if buf:
-            needs = [run_start] if run_start >= 0 else []
-            needs += [p for p, _, _ in pend] + [p for p, _ in surv]
-            min_keep = (min(needs) if needs else buf_end + 1) - half
-            if min_keep > buf_start:
-                drop = min(len(buf), min_keep - buf_start)
-                buf = buf[drop:]
-                buf_start += drop
-
+        needs = [scan_from] + [p for p, _, _ in pend] + [p for p, _ in surv]
+        drop = max(0, min(needs) - half - buf_start)
         state.update(
             (
-                buf_start,
-                buf,
-                run_start,
-                run_value,
-                has_prev,
-                prev_run_value,
+                buf_start + drop,
+                buf[drop:].tolist(),
+                null[drop:].tolist(),
+                scan_from,
+                [p for p, _ in surv],
+                [v for _, v in surv],
                 [p for p, _, _ in pend],
                 [v for _, v, _ in pend],
                 [e for _, _, e in pend],
-                [p for p, _ in surv],
-                [v for _, v in surv],
             )
         )
         yield pd.DataFrame(
@@ -743,14 +659,15 @@ def streaming_find_peaks(
     emitted as soon as their suppression component seals and their
     ``wlen`` neighborhood arrives, bit-identical to the batch
     ``native_find_peaks`` on every decided peak (cross-batch parity in
-    ``test_streaming.py``). State is O(wlen + max_component_span) per
-    channel by construction — see :func:`make_constrained_peaks_fn`
-    for the span guard (default ``4·wlen``) that bounds it even on
-    candidate-dense raw signals."""
-    sig = signal_stream.select(
-        "channel_id", "sample_idx", F.col(value_col).alias("signal_value")
-    )
-    return sig.groupBy("channel_id").applyInPandasWithState(
+    ``test_streaming.py``), NULL samples included: ``value_col IS NULL``
+    is projected as a mask column before the ``groupBy`` and the
+    candidates follow :func:`..operators.windows.extrema_flags`' NULL
+    rule. State is O(wlen + max_component_span) per channel by
+    construction — see :func:`make_constrained_peaks_fn` for the span
+    guard (default ``4·wlen``) that bounds it even on candidate-dense raw
+    signals."""
+    sig = signal_stream.select(CHANNEL, IDX, F.col(value_col).alias("signal_value"))
+    return _masked(sig).groupBy(CHANNEL).applyInPandasWithState(
         make_constrained_peaks_fn(
             distance, prominence, width, rel_height, wlen, max_component_span
         ),
@@ -828,7 +745,7 @@ def streaming_pack_chunks(doc_stream: DataFrame, capacity: int = 128) -> DataFra
     toks = doc_stream.select(
         F.col("source").alias("shard"),
         "doc_id",
-        F.expr("size(split(text, ' '))").cast("long").alias("n_tok"),
+        F.expr(f"size({_TOKENS})").cast("long").alias("n_tok"),
     )
     return toks.groupBy("shard").applyInPandasWithState(
         make_pack_fn(capacity),
@@ -1065,7 +982,6 @@ def streaming_neardup_gate(
     """
     from ..llm.dedup import (
         _jaccard_expr,
-        _TOKENS,
         band_structs,
         minhash_band_keys,
         minhash_signatures,

@@ -205,44 +205,14 @@ def test_compute_rotation_fresh_clone_uses_registry_order(monkeypatch):
     assert head == names[:50] and tail == names[50:]
 
 
-def test_compute_rotation_backlog_has_slot_priority(monkeypatch):
-    """45 stale + 10 changed-fresh: all 45 backlog make the head, only
-    5 changed entries fit, filler fills nothing (cap already hit)."""
-    mod = _entry()
-    names = [f"s{i:02d}" for i in range(45)] + [f"c{i:02d}" for i in range(10)]
-    newest = {n: (1 if n.startswith("s") else 3) for n in names}
-    monkeypatch.setattr(mod, "_newest_driver_rows", lambda: (newest, 3))
-    monkeypatch.setattr(
-        mod, "_CHANGED_THIS_ROUND", [f"c{i:02d}" for i in range(10)]
-    )
-    head, tail = mod._compute_rotation(names)
-    assert len(head) == 50
-    assert {n for n in head if n.startswith("s")} == set(names[:45])
-    assert sum(n.startswith("c") for n in head) == 5
-    # changed entries keep their declared order in the head prefix
-    assert head[:5] == ["c00", "c01", "c02", "c03", "c04"]
-
-
 def test_compute_rotation_overflowing_backlog_fills_head_entirely(monkeypatch):
     mod = _entry()
     names = [f"s{i:02d}" for i in range(70)]
     monkeypatch.setattr(mod, "_newest_driver_rows", lambda: ({}, 5))
-    monkeypatch.setattr(mod, "_CHANGED_THIS_ROUND", ["s69"])
     head, tail = mod._compute_rotation(names)
     assert len(head) == 50 and len(tail) == 20
     # never-verified rows sort oldest-first by (round=0, name)
     assert head == sorted(names)[:50]
-
-
-def test_compute_rotation_changed_in_backlog_not_duplicated(monkeypatch):
-    mod = _entry()
-    names = ["a", "b", "c", "d"]
-    newest = {"a": 1, "b": 5, "c": 5, "d": 5}
-    monkeypatch.setattr(mod, "_newest_driver_rows", lambda: (newest, 5))
-    monkeypatch.setattr(mod, "_CHANGED_THIS_ROUND", ["a", "b"])
-    head, tail = mod._compute_rotation(names)
-    assert head == ["b", "a", "c", "d"][: len(head)]
-    assert len(head) == len(set(head)) == 4 and tail == []
 
 
 # --- DSIR importance resampling (round-10 addition) -----------------------

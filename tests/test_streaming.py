@@ -203,6 +203,50 @@ def test_streaming_envelopes_match_batch_on_decided_prefix(spark, tmp_path):
         assert pair == expect[i], f"idx {i}: {pair} != {expect[i]}"
 
 
+def test_streaming_envelopes_null_golden_channel(spark, tmp_path):
+    """A NULL sample joins the run before it, in batch and stream alike:
+    on this channel (window 6) the run [1, NULL] is a valley and the 5
+    at sample 1 the one peak in sample 0's frame, so both give ceil_raw
+    5.0 there. Read as NaN, the NULL would be a NaN peak at sample 3."""
+    from myodish_peak_analysis_spark.operators.envelopes import with_raw_envelopes
+    from myodish_peak_analysis_spark.streaming.peaks import streaming_raw_envelopes
+
+    vals = [0, 5, 1, None, 3, 2, 0, 4, 1, 1, 1, 2, 0, 0]
+    rows = [(0, i, None if v is None else float(v)) for i, v in enumerate(vals)]
+    src = _write_batches(spark, str(tmp_path), [rows[:6], rows[6:]])
+    stream = (
+        spark.readStream.schema(SIG_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    q = (
+        streaming_raw_envelopes(stream, window_size=6)
+        .writeStream.format("memory")
+        .queryName("env_null_sink")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        got = {
+            r.sample_idx: (r.floor_raw, r.ceil_raw)
+            for r in spark.sql("select * from env_null_sink").collect()
+        }
+    finally:
+        q.stop()
+
+    batch = with_raw_envelopes(
+        spark.createDataFrame(rows, SIG_SCHEMA), value_col="signal_value",
+        window_size=6,
+    )
+    expect = {r.sample_idx: (r.floor_raw, r.ceil_raw) for r in batch.collect()}
+    assert expect[0][1] == 5.0 and got[0][1] == 5.0
+    # everything before the open run [0, 0] minus the frame is decided
+    assert set(got) == set(range(8))
+    for i, pair in got.items():
+        assert pair == expect[i], (i, pair, expect[i])
+
+
 def test_streaming_sessionize(spark, tmp_path):
     import datetime as dt
 
@@ -268,9 +312,10 @@ def test_stream_static_enrich(spark, tmp_path):
 
 def test_streaming_envelope_fn_property_vs_batch(spark):
     """Drive the stateful function directly (stub GroupState) over many
-    random signals — plateaus, NaN-free monotone runs, random splits —
-    and require bit-equality with the batch operator on every emitted
-    row. One multi-channel batch job covers all cases."""
+    random signals — plateaus, NaN-free monotone runs, NULL samples
+    (with their mask), random splits — and require bit-equality with
+    the batch operator on every emitted row. One multi-channel batch
+    job covers all cases."""
     import numpy as np
     import pandas as pd
 
@@ -294,10 +339,24 @@ def test_streaming_envelope_fn_property_vs_batch(spark):
         else:  # sprinkle NaNs (runs of them too) -> Spark NaN semantics
             vals = np.round(rng.standard_normal(n), 1)
             vals[rng.random(n) < 0.25] = float("nan")
-        cases.append((c, vals))
+        cases.append((c, vals, np.zeros(n, bool)))
+    # NULL-holed channels (single NULLs and NULL runs, next to plateaus
+    # and NaN); their own generator keeps the cases above as they were
+    rng_null = np.random.default_rng(43)
+    for c in range(16, 24):
+        n = int(rng_null.integers(15, 120))
+        vals = rng_null.integers(0, 4, n).astype(float)
+        if c % 2:
+            vals[rng_null.random(n) < 0.2] = float("nan")
+        null = rng_null.random(n) < 0.15
+        null[n // 3 : n // 3 + 2] = True
+        vals[null] = float("nan")
+        cases.append((c, vals, null))
 
     rows = [
-        (c, i, float(v)) for c, vals in cases for i, v in enumerate(vals)
+        (c, i, None if nl else float(v))
+        for c, vals, null in cases
+        for i, (v, nl) in enumerate(zip(vals, null))
     ]
     batch = with_raw_envelopes(
         spark.createDataFrame(rows, SIG_SCHEMA),
@@ -311,7 +370,7 @@ def test_streaming_envelope_fn_property_vs_batch(spark):
 
     fn = make_envelope_fn(W)
     total_emitted = 0
-    for c, vals in cases:
+    for c, vals, null in cases:
         state = StubState()
         cut = int(rng.integers(1, len(vals)))  # random micro-batch split
         emitted = []
@@ -321,6 +380,7 @@ def test_streaming_envelope_fn_property_vs_batch(spark):
                     "channel_id": c,
                     "sample_idx": range(lo, hi),
                     "signal_value": vals[lo:hi],
+                    "is_null": null[lo:hi],
                 }
             )
             for out in fn((c,), iter([pdf]), state):
@@ -643,13 +703,20 @@ def test_streaming_zscores_causal_and_cross_batch(spark):
 def test_streaming_find_peaks_matches_batch_across_boundary(spark, tmp_path):
     """Constrained streaming peaks (P1): a peak whose wlen-neighborhood
     and suppression component span the micro-batch split must come out
-    bit-identical to the batch native_find_peaks row."""
+    bit-identical to the batch native_find_peaks row; on a NULL-holed
+    channel the stateful function keeps the batch peaks at every split."""
     import math
+
+    import numpy as np
+    import pandas as pd
 
     from myodish_peak_analysis_spark.operators.native_peaks import (
         native_find_peaks,
     )
-    from myodish_peak_analysis_spark.streaming.peaks import streaming_find_peaks
+    from myodish_peak_analysis_spark.streaming.peaks import (
+        make_constrained_peaks_fn,
+        streaming_find_peaks,
+    )
 
     # three clean bumps on a flat floor; the one at 30 straddles the split
     def bump(i, c):
@@ -695,6 +762,38 @@ def test_streaming_find_peaks_matches_batch_across_boundary(spark, tmp_path):
     assert set(batch) == {10, 30, 50}
     for p in got:
         assert got[p] == batch[p], (p, got[p], batch[p])
+
+    # NULL rule, every constraint off: the NULL joins the run [2.9] before
+    # it, which the 1.0 after the NULL fences, so 2.9 stays a peak. Read
+    # as NaN, the NULL would be a higher sample and 2.9 no peak.
+    null_vals = [0.0, 1.0, 1.8, 2.9, None, 1.0, 0.5, 2.0, 0.1, 0.0, 0.0]
+    off = dict(distance=None, prominence=None, width=None)
+    batch_null = {
+        r.peak_idx
+        for r in native_find_peaks(
+            spark.createDataFrame(
+                [(1, i, v) for i, v in enumerate(null_vals)], SIG_SCHEMA
+            ),
+            value_col="signal_value",
+            **off,
+        ).collect()
+    }
+    assert batch_null == {3, 7}
+    for cut in range(1, len(null_vals)):
+        fn, state, got_null = make_constrained_peaks_fn(**off), StubState(), set()
+        for lo, hi in ((0, cut), (cut, len(null_vals))):
+            part = null_vals[lo:hi]
+            pdf = pd.DataFrame(
+                {
+                    "channel_id": 1,
+                    "sample_idx": range(lo, hi),
+                    "signal_value": [np.nan if v is None else v for v in part],
+                    "is_null": [v is None for v in part],
+                }
+            )
+            for out in fn((1,), iter([pdf]), state):
+                got_null |= set(out.peak_idx)
+        assert got_null == batch_null, cut
 
 
 def test_streaming_find_peaks_fn_split_invariant_vs_golden(spark):
@@ -746,6 +845,7 @@ def test_streaming_find_peaks_fn_split_invariant_vs_golden(spark):
                     "channel_id": 0,
                     "sample_idx": range(lo, hi),
                     "signal_value": vals[lo:hi],
+                    "is_null": False,
                 }
             )
             for out in fn((0,), iter([pdf]), state):
@@ -898,7 +998,11 @@ def test_streaming_find_peaks_suppression_only_emits_immediately(spark):
     got = []
     for lo, hi in ((0, 150), (150, 400)):
         pdf = pd.DataFrame(
-            {"sample_idx": np.arange(lo, hi), "signal_value": y[lo:hi]}
+            {
+                "sample_idx": np.arange(lo, hi),
+                "signal_value": y[lo:hi],
+                "is_null": False,
+            }
         )
         (out,) = fn((1,), iter([pdf]), state)
         got += [(r.peak_idx, r.peak_value) for r in out.itertuples()]
@@ -965,6 +1069,7 @@ def test_streaming_find_peaks_state_bounded_and_exact_on_raw_noise(spark):
                     "channel_id": 0,
                     "sample_idx": range(lo, hi),
                     "signal_value": y[lo:hi],
+                    "is_null": False,
                 }
             )
             for out in fn((0,), iter([pdf]), state):
@@ -1033,6 +1138,7 @@ def test_streaming_find_peaks_span_guard_on_adversarial_ramp(spark):
                     "channel_id": 0,
                     "sample_idx": range(lo, hi),
                     "signal_value": y[lo:hi],
+                    "is_null": False,
                 }
             )
             for out in fn((0,), iter([pdf]), state):

@@ -32,16 +32,13 @@ def main() -> None:
         )
 
     backlog = [q for q in names if newest.get(q, 0) <= latest - 2]
-    changed = [q for q in entry._CHANGED_THIS_ROUND if q in set(names)]
     in_head = set(head)
     print(f"registry: {len(names)} queries; latest artifact: r{latest}")
     print(f"staleness now: {hist(newest)}")
+    n_backlog = sum(q in set(backlog) for q in head)
     print(
-        f"head ({len(head)} slots): "
-        f"{sum(q in set(changed) and q not in set(backlog) for q in head)} "
-        f"changed-fresh + {sum(q in set(backlog) for q in head)} backlog + "
-        f"{sum(q not in set(changed) and q not in set(backlog) for q in head)} "
-        f"filler"
+        f"head ({len(head)} slots): {n_backlog} backlog + "
+        f"{len(head) - n_backlog} filler"
     )
     missed = [q for q in backlog if q not in in_head]
     print(f"backlog outside head: {missed if missed else 'none'}")
